@@ -22,9 +22,6 @@ object TextFns {
   def tokens(c: Column): Column =
     filter(split(trim(c), "\\s+"), t => length(t) > 0)
 
-  /** Word count over whitespace runs. */
-  def wordCount(c: Column): Column = size(tokens(c))
-
   /** Character n-gram shingles of a string as a distinct array.
     * Used by near-dup operators (MinHash / Jaccard). Pure SQL-function
     * composition: sequence + transform + substring — stays codegen'd. */
@@ -40,10 +37,6 @@ object TextFns {
       .otherwise(transform(
         sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-
-  /** Word n-gram shingles as a distinct set (for Jaccard/MinHash). */
-  def wordShingles(toks: Column, n: Int): Column =
-    array_distinct(wordNgrams(toks, n))
 
   /** Punctuation ratio: punctuation chars / total chars (0 for empty). */
   def punctRatio(c: Column): Column = {

@@ -263,11 +263,20 @@ object Newsmaper {
     } finally { fresh.unpersist(); () }
   }
 
+  private val maintenanceTieBreak: Seq[String] = newsColumns.filterNot(naturalKey.contains)
+
   /** O2 — dedup-repair maintenance (/root/reference/dags/Main.py:28-47):
     * keep the lowest-id row per natural key; expressed as
-    * retained-rows overwrite since parquet has no row DELETE. */
+    * retained-rows overwrite since parquet has no row DELETE. A table
+    * without an `id` column (what [[loadToCommitted]] writes) keeps
+    * instead the first row ordered by the fact's non-key columns
+    * (id_country, link, description, media), each ascending with NULLs
+    * first: every committed news table carries them, and rows tied on
+    * all of them are identical, so the repaired table is the same
+    * whichever copy survives. */
   def maintenance(news: DataFrame): DataFrame =
-    Dedup.keepFirst(news, naturalKey, "id")
+    if (news.columns.contains("id")) Dedup.keepFirst(news, naturalKey, "id")
+    else Dedup.keepFirst(news, naturalKey, maintenanceTieBreak.head, maintenanceTieBreak.tail: _*)
 
   /** K3 — the reference's per-row DELETE repair
     * (/root/reference/dags/Main.py:44-47) as a retained-rows overwrite:

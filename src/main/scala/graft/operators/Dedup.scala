@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.graft.Shim
 import graft.functions.TextFns
+import graft.plans.GraftExtensions
 
 /** Deduplication operators: exact, keep-first, anti-join-vs-base,
   * MinHash+LSH, SimHash, and n-gram Jaccard near-dup.
@@ -19,9 +20,11 @@ import graft.functions.TextFns
 object Dedup {
 
   /** Keep-first-by-`orderCol` per `keys` group — deterministic version
-    * of pandas `drop_duplicates()` (Main.py:35-36 keeps lowest id). */
-  def keepFirst(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol))
+    * of pandas `drop_duplicates()` (Main.py:35-36 keeps lowest id);
+    * `thenBy` columns break ties in `orderCol`. */
+  def keepFirst(df: DataFrame, keys: Seq[String], orderCol: String,
+      thenBy: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy((orderCol +: thenBy).map(col): _*)
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
       .drop("__rn")
@@ -82,22 +85,18 @@ object Dedup {
 
   /** MinHash + LSH banding near-dup candidate pairs.
     *
-    * shingle(text, n) → one 32-bit base hash per shingle (md5-hex
-    * prefix) → k signature entries via `(aᵢ·h + bᵢ) mod P` linear
-    * permutations → b bands of r rows → band-key bucket join. Only
-    * documents sharing a band bucket are compared, so the candidate
-    * join is |buckets|-bounded instead of O(N²) — the property that
-    * makes near-dup feasible at 100 TB.
+    * shingle(text, n) → one 32-bit base hash per shingle (md5 prefix)
+    * → k signature entries via `(aᵢ·h + bᵢ) mod P` linear permutations
+    * → b bands of r rows → band-key bucket join. Only documents sharing
+    * a band bucket are compared, so the candidate join is
+    * |buckets|-bounded instead of O(N²) — the property that makes
+    * near-dup feasible at 100 TB. Signatures come from
+    * [[bandedSignatures]]; a NULL text has no shingles and pairs with
+    * nothing.
     *
     * The identical integer derivation exists in DuckDB
     * ('0x'||substr(md5(s),1,8) cast + the same coefficient list), so
-    * the oracle matches bit-for-bit. Physically the shingles are
-    * EXPLODED and the minima taken by a hash aggregate rather than
-    * per-row `transform`/`array_min`: higher-order array functions are
-    * interpreted (outside whole-stage codegen), and a LONG min gets a
-    * fixed-width HashAggregate buffer (a STRING min would fall back to
-    * SortAggregate and sort the whole shingle stream) while the
-    * shuffle carries one 12×8-byte signature row per document.
+    * the oracle matches bit-for-bit.
     *
     * A band-key frequency cap (`maxBandFreq`) drops degenerate buckets
     * (e.g. near-empty documents sharing a signature): one hot key would
@@ -125,31 +124,30 @@ object Dedup {
     * document per band — the STORED side of incremental near-dedup.
     * Factored from [[minhashLsh]] (identical derivation); at scale
     * this table is computed once per corpus, written bucketed on
-    * (band, bkey), and probed by every arriving batch. */
+    * (band, bkey), and probed by every arriving batch.
+    *
+    * Each document's `numHashes` minima come from one
+    * [[graft.plans.MinHashSignature]] call: a codegen'd single pass
+    * over the normalized text that md5s every `shingleN`-character
+    * window straight from its UTF-8 bytes (a text shorter than
+    * `shingleN`, the empty one included, is its own single shingle).
+    * The hash aggregate then sees one row per document, not one per
+    * shingle, and takes the per-id minimum of each entry, so a
+    * repeated id gets the signature of the union of its texts. A NULL
+    * text has no shingles and gets no row — the SQL twins' `len(hs) >
+    * 0` filter. */
   def bandedSignatures(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 5, numHashes: Int = 12, bands: Int = 4): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(numHashes <= minhashCoeffs.size, s"at most ${minhashCoeffs.size} hashes")
     val rows = numHashes / bands
-    // Positions exploded and shingles cut with scalar substr — no
-    // higher-order array functions (those run interpreted) and no
-    // distinct: min over a multiset equals min over its set, so
-    // duplicate shingles can't change any signature entry. The md5 is
-    // computed ONCE per shingle; the k permutations are integer-only.
-    val based = graft.sources.Tables.widen(df)
-      .select(col(idCol), TextFns.normalize(col(textCol)).as("__t"))
-      .select(col(idCol), col("__t"),
-        explode(sequence(lit(1), greatest(length(col("__t")) - (shingleN - 1), lit(1))))
-          .as("__i"))
-      .select(col(idCol),
-        conv(substring(md5(col("__t").substr(col("__i"), lit(shingleN))), 1, 8), 16, 10)
-          .cast("long").as("__h"))
-    val mins = (0 until numHashes).map { i =>
-      val (a, b) = minhashCoeffs(i)
-      min((col("__h") * a + b) % minhashP).as(s"h$i")
-    }
-    val sigs = based.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
+    val signed = graft.sources.Tables.widen(df)
+      .where(col(textCol).isNotNull)
+      .select(col(idCol), GraftExtensions.minhashSignature(TextFns.normalize(col(textCol)),
+        shingleN, minhashCoeffs.take(numHashes), minhashP).as("__sig"))
+    val mins = (0 until numHashes).map(i => min(col("__sig")(i)).as(s"h$i"))
+    val sigs = signed.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
     // band key = 60-bit md5 prefix of the concatenated band signatures
     // (a LONG join key, not the 32-char hex string — fixed-width
     // shuffle rows and cheaper hash-join compares)
@@ -176,8 +174,9 @@ object Dedup {
     * resurrect members the capped table already forgot), so the cap
     * stays a READ-time guard (`capBands` rides the probe's own
     * (band, bkey) exchange, exactly like [[nearDupsVsIndex]]). Rows
-    * with a NULL `textCol` carry no shingles and are not indexed —
-    * the same semantics the SQL side's `len(hs) > 0` filter encodes.
+    * with a NULL `textCol` carry no shingles and are not indexed
+    * ([[bandedSignatures]] skips them, like the SQL side's
+    * `len(hs) > 0` filter).
     * Maintained ≡ re-banding the live snapshot (oracle-hashed, q129). */
   def applyBandFeed(index: DataFrame, feed: DataFrame,
       idCol: String, textCol: String,
@@ -185,8 +184,7 @@ object Dedup {
     val ct = col("change_type")
     val removed = feed.where(ct === "delete" || ct === "update_preimage")
       .select(col(idCol)).distinct()
-    val added = feed.where((ct === "insert" || ct === "update_postimage") &&
-      col(textCol).isNotNull)
+    val added = feed.where(ct === "insert" || ct === "update_postimage")
     index.join(removed, Seq(idCol), "left_anti")
       .unionByName(
         bandedSignatures(added, idCol, textCol, shingleN, numHashes, bands))

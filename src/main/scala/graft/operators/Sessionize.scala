@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * The reference has no streaming/windowing surface (SURVEY.md §2.6,
   * §2.8) — its "streaming" is a 20-minute Airflow re-run. This operator
   * provides the batch-checkable session semantics; the Structured
-  * Streaming twin (`session_window`) lives in [[graft.streaming]].
+  * Streaming twin (`Streams.statefulSessions`) lives in
+  * [[graft.streaming]].
   *
   * Classic two-window formulation: flag rows whose gap from the
   * previous event exceeds the timeout, running-sum the flags into a

@@ -250,6 +250,8 @@ object GraftExtensions {
     Shim.column(CosineSimilarity(Shim.expression(a), Shim.expression(b)))
   def rollingHash(c: Column): Column =
     Shim.column(RollingHash(Shim.expression(c)))
+  def minhashSignature(c: Column, shingleN: Int, coeffs: Seq[(Long, Long)], modulus: Long): Column =
+    Shim.column(MinHashSignature(Shim.expression(c), shingleN, coeffs, modulus))
   def ln(c: Column): Column =
     Shim.column(LibmLn(Shim.expression(c)))
 }

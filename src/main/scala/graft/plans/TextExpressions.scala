@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial rolling hash (Rabin–Karp) of a string's bytes:
@@ -53,4 +55,99 @@ case class RollingHash(child: Expression, base: Long = 31L, mod: Long = 10000000
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** MinHash signature of one document in a single pass over its UTF-8
+  * bytes: every `shingleN`-code-point window (or the whole document
+  * when it is shorter, including the empty one) is md5'd straight from
+  * the bytes, the first 4 digest bytes are the unsigned 32-bit base
+  * hash `h`, and each `(aᵢ·h + bᵢ) mod p` permutation folds into a
+  * running minimum. Returns `coeffs.size` minima; NULL in, NULL out.
+  *
+  * This is exactly the SQL derivation `min((conv(substr(md5(
+  * substr(t, i, n)), 1, 8), 16, 10) · a + b) % p)` over
+  * `i ∈ 1..max(length(t) − n + 1, 1)` — code points are delimited the
+  * way `UTF8String.substring` delimits them — without materializing a
+  * row, a substring or a hex string per shingle. Overflow-free for
+  * `h < 2³²`, `a < 2³⁰`, `b < p` (the caller's coefficient contract).
+  */
+case class MinHashSignature(
+    child: Expression, shingleN: Int, coeffs: Seq[(Long, Long)], modulus: Long)
+    extends UnaryExpression {
+  require(shingleN >= 1, s"shingleN must be >= 1, got $shingleN")
+  require(coeffs.nonEmpty, "at least one (a, b) permutation")
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "graft_minhash"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires STRING input, got ${t.simpleString}")
+  }
+
+  // one kernel (digest + reused buffers) per deserialized task copy
+  @transient private lazy val kernel =
+    new MinHashKernel(shingleN, coeffs.map(_._1).toArray, coeffs.map(_._2).toArray, modulus)
+
+  override def nullSafeEval(s: Any): Any = kernel.signature(s.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[MinHashKernel].getName
+    def longs(xs: Seq[Long]) = xs.map(x => s"${x}L").mkString("new long[]{", ", ", "}")
+    // one kernel per generated-class instance, i.e. per task
+    val k = ctx.addMutableState(cls, "minhash", v =>
+      s"$v = new $cls($shingleN, ${longs(coeffs.map(_._1))}, " +
+        s"${longs(coeffs.map(_._2))}, ${modulus}L);")
+    defineCodeGen(ctx, ev, s => s"$k.signature($s)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The per-task state and loop behind [[MinHashSignature]]: one md5
+  * `MessageDigest`, one digest buffer, and reused buffers for the
+  * document bytes and code-point offsets that grow to the longest
+  * document seen. The only allocation per document is the result. */
+final class MinHashKernel(shingleN: Int, a: Array[Long], b: Array[Long], p: Long) {
+  private val md5 = java.security.MessageDigest.getInstance("MD5")
+  private val digest = new Array[Byte](16)
+  private val mins = new Array[Long](a.length)
+  private var bytes = new Array[Byte](256)
+  // starts(c) = byte offset of code point c; starts(numChars) = end
+  private var starts = new Array[Int](257)
+
+  def signature(s: UTF8String): ArrayData = {
+    val nb = s.numBytes
+    if (bytes.length < nb) bytes = new Array[Byte](nb)
+    if (starts.length < nb + 1) starts = new Array[Int](nb + 1)
+    s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    var nc = 0
+    var i = 0
+    while (i < nb) {
+      starts(nc) = i
+      nc += 1
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+    }
+    starts(nc) = math.min(i, nb)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    val windows = math.max(nc - shingleN + 1, 1)
+    var w = 0
+    while (w < windows) {
+      val from = starts(w)
+      md5.update(bytes, from, starts(math.min(w + shingleN, nc)) - from)
+      md5.digest(digest, 0, 16)
+      val h = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
+        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
+      var k = 0
+      while (k < mins.length) {
+        val v = (a(k) * h + b(k)) % p
+        if (v < mins(k)) mins(k) = v
+        k += 1
+      }
+      w += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
 }

@@ -22,8 +22,6 @@ final case class Q(
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
     Q(name, run, Some(oracle))
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None)
 
   /** One suffix per JVM so two concurrent Verify/Bench invocations (or
     * a crashed prior run's leftovers) never share a scratch table path:

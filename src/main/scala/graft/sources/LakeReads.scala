@@ -739,20 +739,10 @@ private[graft] trait LakeReads { this: Lake.type =>
       dvsOfBody(lines))
   }
 
-  /** The scan set for a predicate read of the live snapshot:
-    * (paths to read — dirs, or explicit files where file stats pruned
-    * inside a kept dir; skipped dirs; skipped files). Exposed for the
-    * spec to assert skipping actually happens. */
   /** Partition a kept dir's parquet files by its manifest file-level
     * stats: (kept, skipped). The actual listing is authoritative — a
     * file the manifest doesn't know is always kept (never trust stats
     * lines for absence). */
-  private[sources] def splitDirFiles(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      d: String, byFile: Map[String, String], preds: Seq[Pred]):
-      (Seq[org.apache.hadoop.fs.FileStatus], Seq[org.apache.hadoop.fs.FileStatus]) =
-    splitDirFilesTree(fs, r, d, byFile,
-      if (preds.isEmpty) PUnknown else PAnd(preds.map(PLeaf)))
-
   private[sources] def splitDirFilesTree(fs: org.apache.hadoop.fs.FileSystem,
       r: Path, d: String, byFile: Map[String, String], tree: PredTree):
       (Seq[org.apache.hadoop.fs.FileStatus], Seq[org.apache.hadoop.fs.FileStatus]) =
@@ -766,6 +756,10 @@ private[graft] trait LakeReads { this: Lake.type =>
         }
       }
 
+  /** The scan set for a predicate read of the live snapshot:
+    * (paths to read — dirs, or explicit files where file stats pruned
+    * inside a kept dir; skipped dirs; skipped files). Exposed for the
+    * spec to assert skipping actually happens. */
   private[graft] def resolveWhere(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column):
       (Seq[String], Seq[String], Seq[String]) = {

@@ -1435,32 +1435,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     out.result()
   }
 
-  /** Paths whose identity CHANGED between two trees: ids that moved
-    * (renamed / re-parented / re-keyed physically), ids that dropped,
-    * and paths the newer tree serves from a DIFFERENT id than the
-    * older one did (drop + re-add). Empty = the newer tree only ADDS
-    * fields — the one mapping change a cross-version consumer can read
-    * through safely. */
-  private[sources] def colMap2CrossedPaths(a: ColMapV2, b: ColMapV2): Seq[String] = {
-    val ap = colMap2Paths(a)
-    val bp = colMap2Paths(b)
-    val bById = b.fields.map(f => f.id -> f).toMap
-    val moved = a.fields.flatMap { f =>
-      bById.get(f.id) match {
-        case None => Some(ap(f.id))
-        case Some(g) if g.container != f.container ||
-            g.logical != f.logical || g.phys != f.phys => Some(ap(f.id))
-        case _ => None
-      }
-    }
-    val aIdByPath = ap.map(_.swap)
-    val rekeyed = b.fields.flatMap { g =>
-      val p = bp(g.id)
-      aIdByPath.get(p).filter(_ != g.id).map(_ => p)
-    }
-    (moved ++ rekeyed).distinct
-  }
-
   /** Evolve the committed schema TOWARD `incoming` by the APPEND rule
     * (add nullable columns — nested included via struct merge — and
     * lossless type widening; anything lossy refuses loudly) in ONE

@@ -76,19 +76,6 @@ object Streams {
         col("window.end").as("window_end"),
         col("event_type"), col("n"))
 
-  /** Session windows with a gap timeout — the built-in incremental
-    * equivalent of [[graft.operators.Sessionize]]. */
-  def sessionAgg(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"))
-
   /** Streaming dedup on the natural key, state bounded by the
     * watermark — the incremental form of the reference's anti-join
     * load dedup (/root/reference/dags/Load.py:21-25): instead of

@@ -59,6 +59,42 @@ class DedupSpec extends SparkSpec {
     assert(out === Map((1L, 2L) -> 4L))
   }
 
+  test("NULL text gets no signature row: NULL docs never pair and all survive") {
+    val docs = Seq(
+      (1L, null.asInstanceOf[String]),
+      (2L, "a real document with words"),
+      (3L, null.asInstanceOf[String]),
+      (4L, ""),
+      (5L, null.asInstanceOf[String]),
+      // a repeated id bands as its non-NULL text alone
+      (6L, null.asInstanceOf[String]),
+      (6L, "another document entirely")
+    ).toDF("doc_id", "text")
+    val banded = Dedup.bandedSignatures(docs, "doc_id", "text")
+    assert(banded.select("doc_id").distinct().as[Long].collect().sorted.toSeq ===
+      Seq(2L, 4L, 6L))
+    // the empty string keeps its single "" shingle: one row per band
+    assert(banded.where(col("doc_id") === 4L).count() === 4)
+    assert(rows(banded.where(col("doc_id") === 6L)) === rows(Dedup.bandedSignatures(
+      Seq((6L, "another document entirely")).toDF("doc_id", "text"), "doc_id", "text")))
+    assert(Dedup.minhashLsh(docs, "doc_id", "text").count() === 0)
+    assert(Dedup.nearDedupCorpus(docs, "doc_id", "text").select("doc_id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L, 6L, 6L))
+  }
+
+  test("bandedSignatures plan: no Generate below the signature aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    val docs = Seq((1L, "the quick brown fox"), (2L, "jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val qe = Dedup.bandedSignatures(docs, "doc_id", "text").queryExecution
+    val aggs = qe.optimizedPlan.collect { case a: Aggregate => a }
+    assert(aggs.nonEmpty)
+    aggs.foreach { a =>
+      assert(a.child.collectFirst { case g: Generate => g }.isEmpty,
+        s"a per-shingle explode feeds the signature aggregate:\n${qe.optimizedPlan}")
+    }
+  }
+
   test("nearDupsVsBase: cross pairs only — base-internal dups never reported") {
     val base = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),

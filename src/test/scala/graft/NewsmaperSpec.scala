@@ -123,4 +123,28 @@ class NewsmaperSpec extends SparkSpec {
     val out = Newsmaper.maintenance(news)
     assert(rows(out.select("id")) === Set(Seq(1L), Seq(3L)))
   }
+
+  test("maintainCommitted repairs a loadToCommitted table: one row per natural key") {
+    import graft.sources.Lake
+    val root = java.nio.file.Files.createTempDirectory("graft-k3-committed").resolve("t").toString
+    val batch = Seq(
+      (44L, 1L, 12L, "t1", "l1", "d1", null.asInstanceOf[String]),
+      (44L, 1L, 13L, "t2", "l2", "d2", null.asInstanceOf[String])
+    ).toDF(Newsmaper.newsColumns: _*)
+    assert(Newsmaper.loadToCommitted(batch, root) === 2L)
+    // inject a duplicate natural key loadToCommitted itself would refuse
+    Lake.commitAppend(Seq(
+      (44L, 1L, 12L, "t1", "l0", "d0", null.asInstanceOf[String])
+    ).toDF(Newsmaper.newsColumns: _*), root)
+    assert(Lake.readCommitted(spark, root).count() === 3L)
+    Newsmaper.maintainCommitted(spark, root)
+    val out = Lake.readCommitted(spark, root)
+    assert(out.groupBy(Newsmaper.naturalKey.map(col): _*).count()
+      .where(col("count") > 1).count() === 0)
+    // the tie-break keeps the lowest link within the duplicated key
+    assert(rows(out.select("title", "link")) === Set(Seq("t1", "l0"), Seq("t2", "l2")))
+    // idempotent: a second repair keeps the same rows
+    Newsmaper.maintainCommitted(spark, root)
+    assert(rows(Lake.readCommitted(spark, root)) === rows(out))
+  }
 }

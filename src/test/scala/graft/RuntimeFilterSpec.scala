@@ -21,16 +21,6 @@ import graft.sources.Tables
 class RuntimeFilterSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("a selective dim filter plants a bloom might_contain on the fact scan side") {
     withConfs(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force shuffle join

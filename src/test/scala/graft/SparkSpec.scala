@@ -35,4 +35,15 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Collect in result order. */
   def orderedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** Run `body` with session confs set, restoring the previous values. */
+  def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
