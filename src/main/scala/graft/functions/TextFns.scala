@@ -22,14 +22,6 @@ object TextFns {
   def tokens(c: Column): Column =
     filter(split(trim(c), "\\s+"), t => length(t) > 0)
 
-  /** Character n-gram shingles of a string as a distinct array.
-    * Used by near-dup operators (MinHash / Jaccard). Pure SQL-function
-    * composition: sequence + transform + substring — stays codegen'd. */
-  def charShingles(c: Column, n: Int): Column = {
-    val s = sequence(lit(1), greatest(length(c) - (n - 1), lit(1)))
-    array_distinct(transform(s, i => c.substr(i, lit(n))))
-  }
-
   /** All word n-grams (joined with a space), in document order; empty
     * when the document has fewer than n tokens. */
   def wordNgrams(toks: Column, n: Int): Column =

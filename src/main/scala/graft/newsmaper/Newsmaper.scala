@@ -160,41 +160,23 @@ object Newsmaper {
   }
 
   /** A2/A3/J5 — country classification by keyword majority vote
-    * (/root/reference/dags/Transform.py:14-33), via the shared
-    * [[graft.operators.Classify]] operator; default id 1 = France /
-    * unclassified (Transform.py:14). */
+    * (/root/reference/dags/Transform.py:14-33), one vote per article
+    * row like the reference's `df.apply(axis=1)`: each row's label
+    * comes from its own title and description through the shared
+    * [[graft.operators.Classify.vote]] kernel, so duplicate articles
+    * get identical labels without being grouped. Default id 1 =
+    * France / unclassified (Transform.py:14). */
   def findCountry(articles: DataFrame, references: DataFrame): DataFrame = {
-    // Deterministic classification key: a content hash, NOT
-    // monotonically_increasing_id — the latter is nondeterministic, so
-    // a task retry / AQE replan recomputing one branch of the self-join
-    // could assign different ids per branch and attach wrong labels.
-    // The hash covers every classification input (title, description),
-    // so duplicate articles collapse to one classified doc and fan back
-    // out with identical labels on the join. The concat separator is
-    // \u0001 (cannot appear in feed text), so field-boundary shifts
-    // like (id=1, title="2x") vs (id=12, title="x") cannot collide.
-    // Each field is coalesced to "" because concat_ws SKIPS nulls
-    // (no empty slot): without it, (title=NULL, link="x") and
-    // (title="x", link=NULL) would produce the same key.
-    val withKey = articles.withColumn(
-      "__doc", md5(concat_ws("\u0001",
-        Seq(col("id_source"), col("title"), col("link"), col("description"))
-          .map(c => coalesce(c.cast("string"), lit(""))): _*)))
     val dict = references.select(
       explode(col("words")).as("word"),
-      // zero-pad so lexicographic tie-break = numeric asc (Classify
+      // zero-pad so lexicographic tie-break = numeric asc (the vote
       // orders labels as strings); 19 digits covers the full positive
       // Long range — lpad TRUNCATES longer inputs, which would corrupt
       // both the id round-trip and the tie order
       lpad(col("id").cast("string"), 19, "0").as("label"))
-    val docs = withKey
-      .select(col("__doc"), concat_ws(" ", col("title"), col("description")).as("__text"))
-      .distinct() // content hash ⇒ duplicates are true duplicates
-    val labeled = Classify.byKeywords(docs, "__doc", "__text", dict,
+    val country = Classify.vote(concat_ws(" ", col("title"), col("description")), dict,
       default = "0" * 18 + "1") // id 1 (France) in the same 19-digit pad
-    withKey.join(labeled, Seq("__doc"))
-      .withColumn("id_country", col("label").cast(LongType))
-      .drop("__doc", "label")
+    articles.withColumn("id_country", country.cast(LongType))
   }
 
   /** P1/P2 — final projection to the news-fact shape

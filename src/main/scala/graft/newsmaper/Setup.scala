@@ -1,9 +1,9 @@
 package graft.newsmaper
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Ranking
 
 /** One-shot setup: seed sources / dictionaries / calendar — the
   * reference's `setup_newsmaper_pipeline` DAG
@@ -30,8 +30,8 @@ object Setup {
     * deterministic by ordering on `name` instead (surrogate values are
     * arbitrary as long as they are stable and dense). */
   def readSourcesCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).schema(sourcesCsvSchema).csv(path)
-      .withColumn("id", row_number().over(Window.orderBy(col("name"))).cast(LongType))
+    Ranking.boundedRowNumber(
+        spark.read.option("header", true).schema(sourcesCsvSchema).csv(path), "id", col("name"))
       .select("id", "name", "website", "rss")
 
   /** S5 — the keyword dictionary: a multiLine JSON array of objects

@@ -1,30 +1,48 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import graft.functions.TextFns
+import graft.plans.KeywordVote
 
 /** Keyword-dictionary majority-vote classification.
   *
   * Generalizes the reference's country classifier
   * (/root/reference/dags/Transform.py:14-33): concat text fields →
-  * normalize → tokenize → match tokens against a keyword dictionary →
-  * per-document vote count → argmax with deterministic tie-break →
-  * default class when nothing matched (Transform.py:14 `default id=1`).
+  * normalize → tokenize → count each token's dictionary labels →
+  * argmax with deterministic tie-break → default class when nothing
+  * matched (Transform.py:14 `default id=1`).
   *
-  * The reference runs this as an interpreted O(rows × tokens × dict)
-  * triple loop (Transform.py:19-26). Here the dictionary is exploded
-  * once to (word → class) pairs and the match becomes a broadcast hash
-  * equi-join on the token — the one real theta→equi rewrite this
-  * workload needs (SURVEY.md §4). At 100 TB the fact side streams
-  * through codegen'd map tasks; the dictionary side stays a broadcast,
-  * so there is exactly one shuffle (the per-doc vote aggregation).
+  * The reference votes row by row (`df.apply(axis=1)`) with an
+  * interpreted O(tokens × dict) loop (Transform.py:19-26). Here the
+  * dictionary — small, the side a join would broadcast — is collected
+  * once on the driver into a [[graft.plans.KeywordVote]] expression
+  * that hashes each token of a row into it. The vote is map-only: no
+  * join, aggregate, window or shuffle, so at 100 TB the fact side
+  * streams through map tasks and keeps its partitioning.
   */
 object Classify {
 
-  /** @param docs     input with an `idCol` key and a `textCol` string
-    * @param dict     (word, label) dictionary — small, broadcast
+  /** The label of `text` as a column: the [[byKeywords]] vote over
+    * `TextFns.tokens(TextFns.normalize(text))`. Collects `dict`
+    * (word STRING, label STRING) when called. */
+  def vote(text: Column, dict: DataFrame, default: String): Column = {
+    val entries = dict.select(col("word"), col("label")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    Shim.column(KeywordVote(
+      Shim.expression(TextFns.tokens(TextFns.normalize(text))), entries, default))
+  }
+
+  /** One label per input row, from that row's text, as the reference
+    * labels each article: the label with the most token hits, ties to
+    * the smallest label (pandas idxmax is positional — we pin a total
+    * order instead, SURVEY.md §2.5 A3), `default` when nothing
+    * matched. When `idCol` is unique this equals voting over all the
+    * text sharing an id; every catalog caller keys on a unique
+    * `doc_id`.
+    * @param docs     input with an `idCol` key and a `textCol` string
+    * @param dict     (word, label) dictionary — small, collected
     * @param default  label when no keyword matches
     * @return (idCol, label)
     */
@@ -33,24 +51,6 @@ object Classify {
       idCol: String,
       textCol: String,
       dict: DataFrame, // columns: word STRING, label STRING
-      default: String): DataFrame = {
-    val toks = docs
-      .select(col(idCol), explode(TextFns.tokens(TextFns.normalize(col(textCol)))).as("tok"))
-    val votes = toks
-      .join(broadcast(dict), toks("tok") === dict("word"))
-      .groupBy(col(idCol), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-    // Deterministic argmax: highest count wins, ties to the
-    // lexicographically smallest label (pandas idxmax is positional —
-    // we pin a total order instead, SURVEY.md §2.5 A3).
-    val w = Window.partitionBy(col(idCol)).orderBy(desc("cnt"), asc("label"))
-    val top = votes
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col(idCol), col("label"))
-    docs
-      .select(col(idCol))
-      .join(top, Seq(idCol), "left_outer")
-      .select(col(idCol), coalesce(col("label"), lit(default)).as("label"))
-  }
+      default: String): DataFrame =
+    docs.select(col(idCol), vote(col(textCol), dict, default).as("label"))
 }

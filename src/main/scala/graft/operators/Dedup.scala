@@ -31,9 +31,11 @@ object Dedup {
   }
 
   /** Rows of `incoming` whose `keys` combination is absent from
-    * `existing` — the Load.is_in_base anti-join (Load.py:8-9). */
+    * `existing` — the Load.is_in_base anti-join (Load.py:8-9). The
+    * build side is not deduplicated: its duplicate keys cannot change
+    * an anti-join's output, and a `distinct` would cost a shuffle. */
   def newRows(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** The dedup-append read side shared by the batch sink
     * ([[graft.newsmaper.Newsmaper.loadTo]]) and the streaming sink

@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Ascending, NullsFirst, SortOrder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Exact global / per-group ranking WITHOUT a single-reducer window.
@@ -315,5 +317,44 @@ object Ranking {
       .select((g :+ posexplode(col("__top"))): _*)
       .select((g ++ Seq((col("pos") + 1).cast("long").as(rankName),
         col("col._2").as(idName), col("col._1").as(scoreName))): _*)
+  }
+
+  /** `row_number() OVER (ORDER BY orderBy)` of a BOUNDED input — a
+    * top-k list, a per-year dimension, a ten-row file — appended as
+    * the LONG column `rankName`.
+    *
+    * The whole input meets in one task, which is right only because it
+    * is small by construction; unbounded inputs use [[rankByScore]].
+    * The plain unpartitioned window would log WindowExec's
+    * single-partition warning on every run (a constant partition key
+    * does not help: the optimizer strips it), so instead a global
+    * aggregate collects the rows into one array, `array_sort` orders
+    * it exactly as `orderBy` does — each key's direction and NULL
+    * placement, compared with SQL `<`, so NaN sorts as the largest
+    * value — and `posexplode` numbers it. */
+  def boundedRowNumber(df: DataFrame, rankName: String, orderBy: Column*): DataFrame = {
+    // (key, ascending, nulls first) per order column; a bare column is ASC NULLS FIRST
+    val keys = orderBy.map(c => Shim.catalystTree(c) match {
+      case s: SortOrder => (Shim.column(s.child), s.direction == Ascending, s.nullOrdering == NullsFirst)
+      case _ => (c, true, true)
+    })
+    def compare(l: Column, r: Column, asc: Boolean, nullsFirst: Boolean): Column = {
+      val before = lit(-1); val after = lit(1)
+      val (lt, gt) = if (asc) (before, after) else (after, before)
+      when(l.isNull && r.isNull, 0)
+        .when(l.isNull, if (nullsFirst) before else after)
+        .when(r.isNull, if (nullsFirst) after else before)
+        .when(l < r, lt).when(l > r, gt).otherwise(0)
+    }
+    val row = struct(keys.zipWithIndex.map { case ((k, _, _), i) => k.as(s"k$i") } :+
+      struct(df.columns.map(c => col(s"`$c`")): _*).as("row"): _*)
+    val sorted = array_sort(collect_list(row), (l, r) =>
+      keys.zipWithIndex.foldRight(lit(0)) { case (((_, asc, nullsFirst), i), rest) =>
+        val c = compare(l.getField(s"k$i"), r.getField(s"k$i"), asc, nullsFirst)
+        when(c =!= 0, c).otherwise(rest)
+      })
+    df.agg(sorted.as("__sorted"))
+      .select(posexplode(col("__sorted")))
+      .select(col("col.row.*"), (col("pos") + 1).cast(LongType).as(rankName))
   }
 }

@@ -36,8 +36,13 @@ object TextAnalysis {
     * BigDecimal; DuckDB rounds a double product), so float rounding
     * cannot hash-match an oracle. Integer-exact rounding is also the
     * scale-safe choice: bit-identical regardless of partitioning. */
-  def quality(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
+  def quality(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    qualityWith(df, idCol, textCol)
+
+  /** [[quality]], with `carry` — document-row columns, functions of the
+    * row — grouped beside the id and passed through to the output. */
+  private def qualityWith(
+      df: DataFrame, idCol: String, textCol: String, carry: String*): DataFrame = {
     // Per-token metrics via explode + HashAggregate, not array HOFs:
     // the single-projection form computed `toks = tokens(normalize(t))`
     // and then referenced it from ~6 derived expressions — and
@@ -64,27 +69,6 @@ object TextAnalysis {
     // row, aggregating to nw=sl=ns=0 rather than dropping out. Like
     // simhashFingerprints, output is one row per distinct id — ids are
     // expected unique.
-    val agg = markerExplode(df, idCol, textCol)
-      .groupBy(col(idCol))
-      .agg(
-        max(col("__enc")).as("__nc"),
-        max(col("__enp")).as("__np"),
-        sum(when(col("__tok").isNotNull, 1L).otherwise(0L)).as("__nw"),
-        coalesce(sum(length(col("__tok")).cast("long")), lit(0L)).as("__sl"),
-        sum(when(col("__tok").isin(stopwords("en").map(lit): _*), 1L)
-          .otherwise(0L)).as("__ns"))
-    qualityProjection(agg, idCol)
-  }
-
-  /** The shared [marker ++ token structs] explode feeding [[quality]]
-    * and [[corpusGate]] — ONE definition so the marker-row semantics
-    * (doc metrics ride the array data, computed once per doc;
-    * token-less docs keep their marker row) can never drift between
-    * the plain and fused gates.
-    * @return (idCol, __tok, __enc, __enp) rows: one NULL-token marker
-    *         carrying n_chars/punct-count, then one row per token */
-  private def markerExplode(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
     val toks = TextFns.tokens(TextFns.normalize(t))
     val marker = struct(
@@ -95,23 +79,18 @@ object TextAnalysis {
       coalesce(toks, array().cast("array<string>")),
       tok => struct(tok.as("tok"),
         lit(null).cast("long").as("nc"), lit(null).cast("long").as("np")))
-    df.select(col(idCol), explode(concat(array(marker), tokRows)).as("__e"))
-      .select(col(idCol), col("__e.tok").as("__tok"),
-        col("__e.nc").as("__enc"), col("__e.np").as("__enp"))
-  }
-
-  /** round(num/den, 4) half-up, exact: numerators stay < 2^53 so the
-    * single double division is correctly rounded and floor is exact. */
-  private def r4(num: Column, den: Column): Column =
-    when(den === lit(0L), lit(0.0))
-      .otherwise(floor((num * 20000 + den) / (den * 2)).cast("double") / 10000.0)
-
-  /** The quality ratio/score projection over an aggregate carrying
-    * (__nc, __np, __nw, __sl, __ns) — shared by [[quality]] and
-    * [[corpusGate]] so the two can never drift. `extra` columns ride
-    * along unchanged (the gate appends its language label). */
-  private def qualityProjection(
-      agg: DataFrame, idCol: String, extra: Column*): DataFrame = {
+    val keys = (idCol +: carry).map(col)
+    val agg = df.select(keys :+ explode(concat(array(marker), tokRows)).as("__e"): _*)
+      .select(keys ++ Seq(col("__e.tok").as("__tok"),
+        col("__e.nc").as("__enc"), col("__e.np").as("__enp")): _*)
+      .groupBy(keys: _*)
+      .agg(
+        max(col("__enc")).as("__nc"),
+        max(col("__enp")).as("__np"),
+        sum(when(col("__tok").isNotNull, 1L).otherwise(0L)).as("__nw"),
+        coalesce(sum(length(col("__tok")).cast("long")), lit(0L)).as("__sl"),
+        sum(when(col("__tok").isin(stopwords("en").map(lit): _*), 1L)
+          .otherwise(0L)).as("__ns"))
     val nw = col("__nw"); val sl = col("__sl"); val nc = col("__nc")
     val np = col("__np"); val ns = col("__ns")
     // composite = min(nw,100)/100·0.4 + [3 ≤ sl/nw ≤ 10]·0.3
@@ -127,74 +106,37 @@ object TextAnalysis {
       r4(sl, nw).as("mean_word_len"),
       r4(np, nc).as("punct_ratio"),
       r4(ns, nw).as("stopword_ratio"),
-      r4(scoreNum, nw * 500).as("quality_score")) ++ extra: _*)
+      r4(scoreNum, nw * 500).as("quality_score")) ++ carry.map(col): _*)
   }
 
-  /** Quality metrics AND keyword-vote label in ONE token pass — the
-    * fused corpus gate a preprocessing pipeline runs before anything
-    * else. Running [[quality]] and [[Classify.byKeywords]] separately
-    * scans and explodes the corpus twice; at 100 TB the text scan +
-    * split IS the cost, so the gate pays it once.
+  /** round(num/den, 4) half-up, exact: numerators stay < 2^53 so the
+    * single double division is correctly rounded and floor is exact. */
+  private def r4(num: Column, den: Column): Column =
+    when(den === lit(0L), lit(0.0))
+      .otherwise(floor((num * 20000 + den) / (den * 2)).cast("double") / 10000.0)
+
+  /** Quality metrics AND keyword-vote label in ONE scan — the corpus
+    * gate a preprocessing pipeline runs before anything else. Running
+    * [[quality]] and [[Classify.byKeywords]] separately scans the
+    * corpus twice; at 100 TB the text scan IS the cost, so the gate
+    * pays it once.
     *
-    * Fusion shape:
-    *  - one explode of the marker+token array (identical to
-    *    [[quality]]'s — token-less docs still emit the marker row);
-    *  - a broadcast LEFT join against the dictionary. One word may
-    *    carry several labels (the fr/es stopword lists share 'de',
-    *    'la', 'un'), which duplicates that token's row per label —
-    *    correct for voting, but it would double-count the token in the
-    *    quality sums. The dictionary therefore pre-marks ONE canonical
-    *    row per word (min label — computed on the broadcast side,
-    *    dictionary-sized) and the quality sums count a token only on
-    *    its canonical (or unmatched) row. Integer-exact: no fractional
-    *    de-duplication weights;
-    *  - aggregate per (id, label): map-side combine collapses to at
-    *    most |languages|+1 rows per doc BEFORE the shuffle — the wire
-    *    moves per-doc counters, never tokens;
-    *  - aggregate per id: sum the quality counters across label
-    *    groups; the label argmax is min(struct(-cnt, label)) — highest
-    *    count, ties to the smallest label, byKeywords' exact order —
-    *    with no-vote docs defaulting.
+    * The label is [[Classify.vote]] on the document row (the same
+    * per-row kernel as byKeywords), computed below the explode and
+    * carried through [[quality]]'s explode and per-doc aggregate as a
+    * grouping column — a function of the row, so it adds no group.
+    * The quality sums see each token exactly once, whatever the
+    * dictionary holds.
     *
-    * Output: [[quality]]'s columns plus `label`. Hash-equivalent to
-    * quality ⋈ byKeywords by construction (q70's oracle is the proof).
+    * Output: [[quality]]'s columns plus `label`; equal to
+    * quality ⋈ byKeywords on a unique id (q70's oracle is the proof).
     */
   def corpusGate(
       df: DataFrame, idCol: String, textCol: String,
       dict: DataFrame, // columns: word STRING, label STRING
-      default: String): DataFrame = {
-    val exploded = markerExplode(df, idCol, textCol)
-    val canonical = dict.select(col("word"), col("label"),
-      (col("label") === min(col("label")).over(Window.partitionBy(col("word"))))
-        .as("__canon"))
-    val joined = exploded.join(broadcast(canonical),
-      exploded("__tok") === canonical("word"), "left")
-    // countMe: this row represents the token once (its canonical dict
-    // row, or the unmatched/marker row) — quality sums gate on it
-    val countMe = coalesce(col("__canon"), lit(true))
-    val perLabel = joined
-      .groupBy(col(idCol), col("label"))
-      .agg(
-        max(col("__enc")).as("__pnc"),
-        max(col("__enp")).as("__pnp"),
-        sum(when(col("__tok").isNotNull && countMe, 1L).otherwise(0L)).as("__pnw"),
-        sum(when(countMe, length(col("__tok"))).cast("long")).as("__psl"),
-        sum(when(countMe && col("__tok").isin(stopwords("en").map(lit): _*), 1L)
-          .otherwise(0L)).as("__pns"),
-        count(lit(1)).as("__pcnt"))
-    val agg = perLabel
-      .groupBy(col(idCol))
-      .agg(
-        max(col("__pnc")).as("__nc"),
-        max(col("__pnp")).as("__np"),
-        sum(col("__pnw")).as("__nw"),
-        coalesce(sum(col("__psl")), lit(0L)).as("__sl"),
-        sum(col("__pns")).as("__ns"),
-        min(when(col("label").isNotNull,
-          struct((-col("__pcnt")).as("neg"), col("label").as("lbl")))).as("__best"))
-    qualityProjection(agg, idCol,
-      coalesce(col("__best").getField("lbl"), lit(default)).as("label"))
-  }
+      default: String): DataFrame =
+    qualityWith(df.withColumn("label", Classify.vote(col(textCol), dict, default)),
+      idCol, textCol, "label")
 
   /** Overlapping fixed-size token chunks — the passage-extraction step
     * a retrieval/embedding pipeline runs before encoding (windows of

@@ -1,7 +1,8 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -149,5 +150,103 @@ final class MinHashKernel(shingleN: Int, a: Array[Long], b: Array[Long], p: Long
       w += 1
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
+  }
+}
+
+/** Keyword majority vote over one document's tokens: the reference's
+  * per-row classifier (Transform.py:14-33) as one expression. `entries`
+  * are the dictionary's (word, label) rows, duplicates included: a
+  * token casts one vote for every entry carrying its word. The winner
+  * has the highest count, ties going to the smallest label in binary
+  * UTF-8 order with a NULL label first; `default` when no token
+  * matched, when the NULL label wins, or when the token array is NULL.
+  *
+  * This is exactly the join-and-rank formulation — `tokens ⋈ dict` on
+  * `tok = word`, `count(*)` per (document, label), `row_number()` over
+  * `cnt DESC, label ASC`, coalesced to `default` — without a row per
+  * token. Evaluated through `CodegenFallback`: the per-row work is
+  * one hash-map lookup per token.
+  */
+case class KeywordVote(child: Expression, entries: Seq[(String, String)], default: String)
+    extends UnaryExpression with CodegenFallback {
+  require(default != null, "the default label must not be NULL")
+
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_keyword_vote"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ARRAY<STRING> input, got ${t.simpleString}")
+  }
+
+  // the dictionary can be large: plans show its size, not its rows
+  override protected def flatArguments: Iterator[Any] =
+    Iterator(child, s"${entries.size} entries", default)
+
+  // one lookup table and count buffer per deserialized task copy
+  @transient private lazy val kernel = new KeywordVoteKernel(entries, default)
+
+  override def eval(input: InternalRow): Any =
+    kernel.vote(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The lookup table and loop behind [[KeywordVote]]. Labels are slots
+  * numbered in vote order — the NULL label (if any) first, then the
+  * distinct labels in binary order — so the argmax is the
+  * highest-count, lowest-numbered slot. Counts are reset through the
+  * list of slots a document touched, not the whole buffer. */
+final class KeywordVoteKernel(entries: Seq[(String, String)], default: String) {
+  private val labels: Array[UTF8String] = {
+    val (nulls, named) = entries.map(_._2).distinct.partition(_ == null)
+    (nulls.map(_ => null: UTF8String) ++
+      named.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0)).toArray
+  }
+  private val slots: java.util.HashMap[UTF8String, Array[Int]] = {
+    val slotOf = labels.zipWithIndex.map { case (l, i) => Option(l).map(_.toString) -> i }.toMap
+    val m = new java.util.HashMap[UTF8String, Array[Int]]()
+    entries.filter(_._1 != null).groupBy(_._1).foreach { case (w, es) =>
+      m.put(UTF8String.fromString(w), es.map(e => slotOf(Option(e._2))).toArray)
+    }
+    m
+  }
+  private val dflt = UTF8String.fromString(default)
+  private val counts = new Array[Int](labels.length)
+  private val touched = new Array[Int](labels.length)
+
+  def vote(toks: ArrayData): UTF8String = {
+    if (toks == null) return dflt
+    var nTouched = 0
+    var i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i)) {
+        val hit = slots.get(toks.getUTF8String(i))
+        if (hit != null) {
+          var j = 0
+          while (j < hit.length) {
+            val k = hit(j)
+            if (counts(k) == 0) { touched(nTouched) = k; nTouched += 1 }
+            counts(k) += 1
+            j += 1
+          }
+        }
+      }
+      i += 1
+    }
+    var best = -1
+    var j = 0
+    while (j < nTouched) {
+      val k = touched(j)
+      if (best < 0 || counts(k) > counts(best) || (counts(k) == counts(best) && k < best))
+        best = k
+      j += 1
+    }
+    j = 0
+    while (j < nTouched) { counts(touched(j)) = 0; j += 1 }
+    if (best < 0 || labels(best) == null) dflt else labels(best)
   }
 }

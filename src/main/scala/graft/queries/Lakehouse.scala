@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFns
-import graft.operators.{Dedup, Incremental}
+import graft.operators.{Dedup, Incremental, Ranking}
 import graft.sources.{Lake, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1420,11 +1420,11 @@ object Lakehouse {
         col("o_totalprice"))
       Lake.commitOverwrite(orders, root, retain = 0,
         partitionBy = Seq("o_year"))
-      val dim = orders.groupBy("o_year")
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-          .as("year_total"))
-        .withColumn("rk", row_number().over(
-          Window.orderBy(desc("year_total"), asc("o_year"))).cast("long"))
+      val dim = Ranking.boundedRowNumber(
+        orders.groupBy("o_year")
+          .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
+            .as("year_total")),
+        "rk", desc("year_total"), asc("o_year"))
       Lake.commitOverwrite(dim, dimRoot, retain = 0)
       Lake.registerSql(s, "dpp_orders", root)
       Lake.registerSql(s, "dpp_years", dimRoot)

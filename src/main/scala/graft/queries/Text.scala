@@ -925,11 +925,10 @@ object Text {
     // hash-matches bit-exactly.
     Q("q82_hybrid_rrf",
       Text.hybridRrfOracle) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val lex = Retrieval.bm25(Tables.documents(s, d), "doc_id", "text",
-          queryTerms = Seq("join", "stream", "window", "sort", "dup"), k = 20)
-        .withColumn("rank", row_number()
-          .over(Window.orderBy(desc("score"), col("doc_id"))).cast("long"))
+      val lex = Ranking.boundedRowNumber(
+          Retrieval.bm25(Tables.documents(s, d), "doc_id", "text",
+            queryTerms = Seq("join", "stream", "window", "sort", "dup"), k = 20),
+          "rank", desc("score"), col("doc_id"))
         .select(col("doc_id"), col("rank"))
       val emb = Tables.embeddings(s, d)
       val sem = Similarity.bruteForceTopK(
@@ -949,7 +948,6 @@ object Text {
     // the feed, queries serve from them, and serving from the index
     // changes NOTHING in the answer.
     Q("q130_stored_df_hybrid", Text.hybridRrfOracle) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
       def toks(side: org.apache.spark.sql.DataFrame) = side.select(col("doc_id"),
         explode(TextFns.tokens(TextFns.normalize(col("text")))).as("term"))
@@ -962,11 +960,11 @@ object Text {
             Seq("term"), "doc_id"),
           Seq("term"), "doc_id"),
         Seq("term"), "df")
-      val lex = Retrieval.bm25(docs, "doc_id", "text",
-          queryTerms = Seq("join", "stream", "window", "sort", "dup"), k = 20,
-          dfSource = Some(dfT))
-        .withColumn("rank", row_number()
-          .over(Window.orderBy(desc("score"), col("doc_id"))).cast("long"))
+      val lex = Ranking.boundedRowNumber(
+          Retrieval.bm25(docs, "doc_id", "text",
+            queryTerms = Seq("join", "stream", "window", "sort", "dup"), k = 20,
+            dfSource = Some(dfT)),
+          "rank", desc("score"), col("doc_id"))
         .select(col("doc_id"), col("rank"))
       val emb = Tables.embeddings(s, d)
       val sem = Similarity.bruteForceTopK(
@@ -1024,7 +1022,7 @@ object Text {
          |  CAST(strt % 1024 AS BIGINT) AS tok_offset
          |FROM cc ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
-      // quality + language in ONE token pass (corpusGate) — the fused
+      // quality + language in ONE scan (corpusGate) — the fused
       // form of the quality ⋈ byKeywords pair this query originally
       // composed; the unchanged oracle is the fusion-correctness proof
       val gate = TextAnalysis.corpusGate(docs, "doc_id", "text",

@@ -8,7 +8,8 @@ import graft.newsmaper.Newsmaper
   * media content/enclosure/absent fallback (Extract.py:21-24), country
   * tie-break + default (Transform.py:14,27-29), and the natural-key
   * dedup pair (Load.py:21-25). */
-class NewsmaperSpec extends SparkSpec {
+class NewsmaperSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val feedXml =
@@ -101,6 +102,18 @@ class NewsmaperSpec extends SparkSpec {
     // calendar join: UTC hour 12 on 2025-08-12 → id = hour index 12
     assert(byLink("http://ex.test/1").getAs[Long]("id_date") === 12L)
     assert(byLink("http://ex.test/2").getAs[Long]("id_date") === 14L)
+  }
+
+  test("pipeline plan: the feed XML is parsed once and nothing shuffles") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val plan = Newsmaper.pipeline(feeds, dateDim, references).queryExecution.executedPlan
+    // the other Generate is the calendar dim's posexplode
+    val xmlParses = collect(plan) {
+      case g: GenerateExec if g.generator.toString.contains("from_xml") => g
+    }
+    assert(xmlParses.size === 1, plan.toString)
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan.toString)
   }
 
   test("load anti-joins on the natural key; re-load is a no-op (idempotence)") {

@@ -24,6 +24,27 @@ class RankingSpec extends SparkSpec {
     assert(rows(ours.select("id", "rank")) === rows(naive.select("id", "rank")))
   }
 
+  test("boundedRowNumber ≡ row_number() OVER (ORDER BY …): directions, NULLs, NaN, strings") {
+    val small = Seq[(java.lang.Double, String, Long)](
+      (1.5, "b", 1L), (null, "a", 2L), (Double.NaN, "c", 3L), (1.5, null, 4L),
+      (-0.0, "é", 5L), (0.0, "e", 6L), (null, null, 7L), (2.0, "b", 8L), (1.5, "b", 9L))
+      .toDF("s", "t", "id")
+    val orders = Seq(
+      Seq(desc("s"), col("id")),
+      Seq(asc("s"), desc("t"), col("id")),
+      Seq(col("t"), desc_nulls_first("s"), desc("id")),
+      Seq(asc_nulls_last("t"), asc_nulls_last("s"), col("id")))
+    for (o <- orders) {
+      val naive = small.withColumn("rk", row_number().over(Window.orderBy(o: _*)).cast("long"))
+      val ours = Ranking.boundedRowNumber(small, "rk", o: _*)
+      assert(ours.columns.toSeq === naive.columns.toSeq)
+      // compared as text: NaN never equals itself
+      def shown(df: org.apache.spark.sql.DataFrame) = df.orderBy("rk").collect().map(_.toString).toSeq
+      assert(shown(ours) === shown(naive), o.toString)
+    }
+    assert(Ranking.boundedRowNumber(small.limit(0), "rk", col("id")).count() === 0)
+  }
+
   test("ascending global rank ranks the smallest score 1") {
     val ours = Ranking.rankByScore(docs, Seq.empty, "score", "id", "rank",
       ascending = true)

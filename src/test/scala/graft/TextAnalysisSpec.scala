@@ -20,9 +20,8 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("corpusGate equals quality ⋈ byKeywords, including shared dict words") {
-    // 'de' votes for BOTH fr and es (list overlap) — the fused join
-    // duplicates that token's row per label; the canonical-row gate
-    // must still count it once in the quality sums
+    // 'de' votes for BOTH fr and es (list overlap) — the quality sums
+    // must still count it once
     val docs = Seq(
       (1L, "the cat sat on the mat."),
       (2L, "de la de un o."),        // overlap-heavy: every word in fr AND es
@@ -36,6 +35,22 @@ class TextAnalysisSpec extends SparkSpec {
     val expected = expectQ.join(expectL, "doc_id")
     assert(gate.columns.toSeq === expected.columns.toSeq)
     assert(rows(gate) === rows(expected))
+  }
+
+  test("corpusGate plan: the keyword vote runs once per document, below the explode") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.plans.KeywordVote
+    // repartitioned: over a local relation the optimizer would fold the vote away
+    val docs = Seq((1L, "de la de un o."), (2L, "the cat")).toDF("doc_id", "text").repartition(2)
+    val dict = graft.queries.Text.langDict.toDF("word", "label")
+    val plan = TextAnalysis.corpusGate(docs, "doc_id", "text", dict, "und")
+      .queryExecution.optimizedPlan
+    val voting = plan.collect {
+      case n if n.expressions.exists(_.find(_.isInstanceOf[KeywordVote]).isDefined) => n
+    }
+    assert(voting.size === 1, plan.toString)
+    val explode = plan.collectFirst { case g: Generate => g }.get
+    assert(explode.child.find(_ eq voting.head).isDefined, plan.toString)
   }
 
   test("chunkDocuments: overlap grid covers every token; short tail; empty docs drop") {

@@ -19,11 +19,6 @@ class TextFnsSpec extends SparkSpec {
     assert(one(TextFns.tokens(col("t")), "   ") === Seq())
   }
 
-  test("charShingles yields distinct n-grams; short strings give the whole string") {
-    assert(one(TextFns.charShingles(col("t"), 3), "abab") === Seq("aba", "bab"))
-    assert(one(TextFns.charShingles(col("t"), 5), "ab") === Seq("ab"))
-  }
-
   test("wordNgrams in order; fewer than n tokens gives empty array") {
     val toks = TextFns.tokens(col("t"))
     assert(one(TextFns.wordNgrams(toks, 2), "a b c") === Seq("a b", "b c"))
