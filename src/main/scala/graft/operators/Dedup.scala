@@ -404,21 +404,18 @@ object Dedup {
       .union(pairs.select(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")))
       .distinct()
       .persist()
-    // Loop shuffle-width hygiene is the shared [[IterativeConf]]
-    // policy (measured here at sf0.1: 4.5s → 2.7s for the loop); the
-    // repartitioned edge cache is built INSIDE the narrowed region so
-    // its partitioning matches the loop's exchanges.
-    // byte-scaled pre-loop count (it feeds the loop width, so the row
-    // form cannot cover it — see IterativeConf.withByteScaledWidth)
-    val m = IterativeConf.withByteScaledWidth(spark, Seq(edgesWide))(
-      edgesWide.count())
+    // Loop shuffle-width hygiene is the shared [[ShuffleWidth]] policy
+    // (measured here at sf0.1: 4.5s → 2.7s for the loop); the
+    // repartitioned edge cache is built on the narrowed session so its
+    // partitioning matches the loop's exchanges.
+    val m = ShuffleWidth.narrowedCount(edgesWide)
     // strict sentinel: localEdgeLimit = 0 pins the distributed loop
     // even for an empty edge set (specs rely on it)
     if (localEdgeLimit > 0 && m <= localEdgeLimit) {
       try return localComponents(spark, edgesWide)
       finally edgesWide.unpersist()
     }
-    IterativeConf.withLoopShuffleWidth(spark, m) {
+    val loop = ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m))
     // unpersisted in the finally — a mid-loop job failure must not
     // strand the repartitioned copy in the block manager for the
     // session lifetime
@@ -430,7 +427,7 @@ object Dedup {
     // InMemoryTableScan preserves outputPartitioning across rounds.
     // (distinct alone leaves hashpartitioning(src, dst), which the join
     // cannot reuse.)
-    val edges = edgesWide
+    val edges = Shim.rebind(loop, edgesWide)
       .repartition(col("dst"))
       .persist()
     edgesCache = Some(edges)
@@ -512,12 +509,11 @@ object Dedup {
     }
     if (!converged)
       throw new IllegalStateException(s"connectedComponents: not converged after $maxIter rounds")
-    labels.select(col("id"), col("comp").as("cluster_id"))
+    Shim.rebind(spark, labels.select(col("id"), col("comp").as("cluster_id")))
     } finally {
       edgesCache.foreach(_.unpersist())
       edgesWide.unpersist()
       ()
-    }
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics: click-transition edge derivation and integer
@@ -73,48 +74,47 @@ object Graph {
       s"dampPct must be in [0, 100], got $dampPct")
     val scale = 1000000000000L
     val spark = edges.sparkSession
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // Loop shuffle-width hygiene is the shared [[IterativeConf]]
+      // Loop shuffle-width hygiene is the shared [[ShuffleWidth]]
       // policy (measured here: 5.5s → 4.1s isolated at sf0.1). The e2
-      // cache is built INSIDE the narrowed region so its partitioning
+      // cache is built on the narrowed session so its partitioning
       // matches the width the loop's per-round exchanges plan with —
       // a cache built at session width would force either a re-exchange
       // of the edge side every round or full-width rank shuffles.
-      // The pre-loop count itself runs byte-scaled (it feeds the row
-      // width, so the row form cannot cover it).
-      val m = IterativeConf.withByteScaledWidth(spark, Seq(e))(e.count())
-      IterativeConf.withLoopShuffleWidth(spark, m) {
-        var e2Cache: Option[DataFrame] = None
-        try {
-          val nodes = e.select(col("src").as("p"))
-            .unionByName(e.select(col("dst").as("p"))).distinct()
-          val n = nodes.count()
-          // empty edge set: no nodes, empty result (0-row partitions
-          // at 100 TB must not throw) — skip the iteration entirely
-          val init = if (n == 0) scale else scale / n
-          val base = ((100L - dampPct) * init) / 100L
-          val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-          // out-degree rides the cached edge rows: the per-iteration
-          // join touches ONE build side, not two; the uniform restart
-          // base rides every node's single self-loop row (`sb`), the
-          // exact shape [[personalizedPageRank]] uses for seed bases
-          val linked = e.join(deg, Seq("src"))
-            .withColumn("w", lit(1)).withColumn("sb", lit(0L))
-          val loops = nodes.select(col("p").as("src"), col("p").as("dst"),
-            lit(null).cast("long").as("outdeg"), lit(0).as("w"),
-            lit(base).as("sb"))
-          val e2 = linked.unionByName(loops)
-            .repartition(col("src"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          e2Cache = Some(e2)
-          val ranks0 = nodes.select(col("p"), lit(init).as("r"))
+      val m = ShuffleWidth.narrowedCount(e0)
+      val e = Shim.rebind(
+        ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m)), e0)
+      var e2Cache: Option[DataFrame] = None
+      try {
+        val nodes = e.select(col("src").as("p"))
+          .unionByName(e.select(col("dst").as("p"))).distinct()
+        val n = nodes.count()
+        // empty edge set: no nodes, empty result (0-row partitions
+        // at 100 TB must not throw) — skip the iteration entirely
+        val init = if (n == 0) scale else scale / n
+        val base = ((100L - dampPct) * init) / 100L
+        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+        // out-degree rides the cached edge rows: the per-iteration
+        // join touches ONE build side, not two; the uniform restart
+        // base rides every node's single self-loop row (`sb`), the
+        // exact shape [[personalizedPageRank]] uses for seed bases
+        val linked = e.join(deg, Seq("src"))
+          .withColumn("w", lit(1)).withColumn("sb", lit(0L))
+        val loops = nodes.select(col("p").as("src"), col("p").as("dst"),
+          lit(null).cast("long").as("outdeg"), lit(0).as("w"),
+          lit(base).as("sb"))
+        val e2 = linked.unionByName(loops)
+          .repartition(col("src"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        e2Cache = Some(e2)
+        val ranks0 = nodes.select(col("p"), lit(init).as("r"))
+        Shim.rebind(spark,
           if (n == 0) ranks0.select(col("p"), col("r").as("rank"))
-          else dampedRankLoop(e2, ranks0, iterations, dampPct)
-        } finally { e2Cache.foreach(_.unpersist()); () }
-      }
-    } finally { e.unpersist(); () }
+          else dampedRankLoop(e2, ranks0, iterations, dampPct))
+      } finally { e2Cache.foreach(_.unpersist()); () }
+    } finally { e0.unpersist(); () }
   }
 
   /** The shared damped-rank round loop over an e2 table of (src, dst,
@@ -216,56 +216,57 @@ object Graph {
       s"dampPct must be in [0, 100], got $dampPct")
     val scale = 1000000000000L
     val spark = edges.sparkSession
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val m = IterativeConf.withByteScaledWidth(spark, Seq(e))(e.count())
-      IterativeConf.withLoopShuffleWidth(spark, m) {
-        var e2Cache: Option[DataFrame] = None
-        try {
-          // the caller's seed plan is arbitrary (often derived from
-          // these very edges) and is consumed three times below —
-          // materialize the small id list ONCE, or every use replays
-          // the caller's full lineage
-          val s = seeds.select(col("p").cast("long"))
-            .where(col("p").isNotNull).distinct().localCheckpoint(true)
-          val nodes = e.select(col("src").as("p"))
-            .unionByName(e.select(col("dst").as("p")))
-            .unionByName(s).distinct()
-          val nSeeds = s.count()
-          val seedInit = if (nSeeds == 0) 0L else scale / nSeeds
-          val seedBase = ((100L - dampPct) * seedInit) / 100L
-          val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-          val linked = e.join(deg, Seq("src"))
-            .withColumn("w", lit(1)).withColumn("sb", lit(0L))
-          // the seed flag RIDES the loop rows' `w` column (-1 = seed
-          // loop, 0 = plain loop; the round aggregate only tests
-          // w = 1, so loop rows may carry anything else): both the
-          // restart bases AND the initial ranks then derive from the
-          // ONE cached e2 build — no separate flagged-nodes join or
-          // extra eager checkpoint. (`sb` alone could not flag seeds:
-          // dampPct=100 makes every seedBase 0 while seedInit is not.)
-          val loops = nodes.join(s.withColumn("__s", lit(1)), Seq("p"), "left")
-            .select(col("p").as("src"), col("p").as("dst"),
-              lit(null).cast("long").as("outdeg"),
-              when(col("__s").isNotNull, lit(-1)).otherwise(lit(0)).as("w"),
-              when(col("__s").isNotNull, lit(seedBase)).otherwise(lit(0L)).as("sb"))
-          val e2 = linked.unionByName(loops)
-            .repartition(col("src"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          e2Cache = Some(e2)
-          // initial ranks read back out of the cached loop rows — the
-          // first evaluation (ranks0's checkpoint inside the loop)
-          // populates the e2 cache as a side effect
-          val ranks0 = e2.where(col("w") =!= 1).select(col("src").as("p"),
-            when(col("w") === -1, lit(seedInit)).otherwise(lit(0L)).as("r"))
+      val m = ShuffleWidth.narrowedCount(e0)
+      val loop = ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m))
+      val e = Shim.rebind(loop, e0)
+      var e2Cache: Option[DataFrame] = None
+      try {
+        // the caller's seed plan is arbitrary (often derived from
+        // these very edges) and is consumed three times below —
+        // materialize the small id list ONCE, or every use replays
+        // the caller's full lineage
+        val s = Shim.rebind(loop, seeds).select(col("p").cast("long"))
+          .where(col("p").isNotNull).distinct().localCheckpoint(true)
+        val nodes = e.select(col("src").as("p"))
+          .unionByName(e.select(col("dst").as("p")))
+          .unionByName(s).distinct()
+        val nSeeds = s.count()
+        val seedInit = if (nSeeds == 0) 0L else scale / nSeeds
+        val seedBase = ((100L - dampPct) * seedInit) / 100L
+        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+        val linked = e.join(deg, Seq("src"))
+          .withColumn("w", lit(1)).withColumn("sb", lit(0L))
+        // the seed flag RIDES the loop rows' `w` column (-1 = seed
+        // loop, 0 = plain loop; the round aggregate only tests
+        // w = 1, so loop rows may carry anything else): both the
+        // restart bases AND the initial ranks then derive from the
+        // ONE cached e2 build — no separate flagged-nodes join or
+        // extra eager checkpoint. (`sb` alone could not flag seeds:
+        // dampPct=100 makes every seedBase 0 while seedInit is not.)
+        val loops = nodes.join(s.withColumn("__s", lit(1)), Seq("p"), "left")
+          .select(col("p").as("src"), col("p").as("dst"),
+            lit(null).cast("long").as("outdeg"),
+            when(col("__s").isNotNull, lit(-1)).otherwise(lit(0)).as("w"),
+            when(col("__s").isNotNull, lit(seedBase)).otherwise(lit(0L)).as("sb"))
+        val e2 = linked.unionByName(loops)
+          .repartition(col("src"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        e2Cache = Some(e2)
+        // initial ranks read back out of the cached loop rows — the
+        // first evaluation (ranks0's checkpoint inside the loop)
+        // populates the e2 cache as a side effect
+        val ranks0 = e2.where(col("w") =!= 1).select(col("src").as("p"),
+          when(col("w") === -1, lit(seedInit)).otherwise(lit(0L)).as("r"))
+        Shim.rebind(spark,
           if (m == 0 && nSeeds == 0)
             ranks0.select(col("p"), col("r").as("rank"))
-          else dampedRankLoop(e2, ranks0, iterations, dampPct)
-        } finally { e2Cache.foreach(_.unpersist()); () }
-      }
-    } finally { e.unpersist(); () }
+          else dampedRankLoop(e2, ranks0, iterations, dampPct))
+      } finally { e2Cache.foreach(_.unpersist()); () }
+    } finally { e0.unpersist(); () }
   }
 
   /** Multi-source BFS over directed (src, dst) edges: the minimum hop
@@ -294,36 +295,36 @@ object Graph {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-    val m = IterativeConf.withByteScaledWidth(spark, Seq(e))(e.count())
-    IterativeConf.withLoopShuffleWidth(spark, m) {
-      var adjCache: Option[DataFrame] = None
-      try {
-        val adj = e.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-        adjCache = Some(adj)
-        var dist = seeds.select(col("p").cast("long"))
-          .where(col("p").isNotNull).distinct()
-          .select(col("p"), lit(0L).as("dist")).localCheckpoint(true)
-        var frontier = dist.select("p").localCheckpoint(true)
-        var depth = 0L
-        var done = frontier.isEmpty || m == 0
-        while (depth < maxDepth && !done) {
-          depth += 1
-          val next = adj
-            .join(frontier.withColumnRenamed("p", "src"), Seq("src"))
-            .select(col("dst").as("p")).distinct()
-            .join(dist, Seq("p"), "left_anti")
+    val m = ShuffleWidth.narrowedCount(e)
+    val loop = ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m))
+    var adjCache: Option[DataFrame] = None
+    try {
+      val adj = Shim.rebind(loop, e).repartition(col("src"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      adjCache = Some(adj)
+      var dist = Shim.rebind(loop, seeds).select(col("p").cast("long"))
+        .where(col("p").isNotNull).distinct()
+        .select(col("p"), lit(0L).as("dist")).localCheckpoint(true)
+      var frontier = dist.select("p").localCheckpoint(true)
+      var depth = 0L
+      var done = frontier.isEmpty || m == 0
+      while (depth < maxDepth && !done) {
+        depth += 1
+        val next = adj
+          .join(frontier.withColumnRenamed("p", "src"), Seq("src"))
+          .select(col("dst").as("p")).distinct()
+          .join(dist, Seq("p"), "left_anti")
+          .localCheckpoint(true)
+        done = next.isEmpty
+        if (!done) {
+          dist = dist
+            .unionByName(next.select(col("p"), lit(depth).as("dist")))
             .localCheckpoint(true)
-          done = next.isEmpty
-          if (!done) {
-            dist = dist
-              .unionByName(next.select(col("p"), lit(depth).as("dist")))
-              .localCheckpoint(true)
-            frontier = next
-          }
+          frontier = next
         }
-        dist
-      } finally { adjCache.foreach(_.unpersist()); () }
-    }
+      }
+      Shim.rebind(spark, dist)
+    } finally { adjCache.foreach(_.unpersist()); () }
   }
 
   /** Synchronous LABEL-PROPAGATION community detection over the
@@ -346,35 +347,35 @@ object Graph {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
     val spark = edges.sparkSession
-    val e = edges
+    val e0 = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .distinct()
-    val m = IterativeConf.withByteScaledWidth(spark, Seq(e))(e.count())
-    IterativeConf.withLoopShuffleWidth(spark, m) {
-      var symCache: Option[DataFrame] = None
-      try {
-        val sym = e.select(col("a").as("u"), col("b").as("v"))
-          .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-          .repartition(col("v"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        symCache = Some(sym)
-        var labels = sym.select(col("u").as("p")).distinct()
-          .select(col("p"), col("p").as("label"))
-          .localCheckpoint(true)
-        for (i <- 1 to iterations if m > 0) {
-          labels = sym.join(labels.withColumnRenamed("p", "v"), Seq("v"))
-            .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
-            .groupBy(col("u").as("p"))
-            // argmax cnt, tie -> smallest label: lexicographic struct
-            // max over (cnt, -label), all integral
-            .agg(max(struct(col("cnt"), (lit(0L) - col("label")).as("negl"))).as("m"))
-            .select(col("p"), (lit(0L) - col("m.negl")).as("label"))
-          if (i % 3 == 0 || i == iterations) labels = labels.localCheckpoint(true)
-        }
-        labels
-      } finally { symCache.foreach(_.unpersist()); () }
-    }
+    val m = ShuffleWidth.narrowedCount(e0)
+    val e = Shim.rebind(
+      ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m)), e0)
+    var symCache: Option[DataFrame] = None
+    try {
+      val sym = e.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+        .repartition(col("v"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      symCache = Some(sym)
+      var labels = sym.select(col("u").as("p")).distinct()
+        .select(col("p"), col("p").as("label"))
+        .localCheckpoint(true)
+      for (i <- 1 to iterations if m > 0) {
+        labels = sym.join(labels.withColumnRenamed("p", "v"), Seq("v"))
+          .groupBy(col("u"), col("label")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("u").as("p"))
+          // argmax cnt, tie -> smallest label: lexicographic struct
+          // max over (cnt, -label), all integral
+          .agg(max(struct(col("cnt"), (lit(0L) - col("label")).as("negl"))).as("m"))
+          .select(col("p"), (lit(0L) - col("m.negl")).as("label"))
+        if (i % 3 == 0 || i == iterations) labels = labels.localCheckpoint(true)
+      }
+      Shim.rebind(spark, labels)
+    } finally { symCache.foreach(_.unpersist()); () }
   }
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Shim
+import graft.operators.ShuffleWidth
 
 /** Commit engines: batch staging, the manifest writer (one atomic put-if-absent publish), append/overwrite with their OCC rebase rules, and retention pruning.
   *
@@ -120,58 +122,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
       }
       futures.map(_.get())
     } finally { pool.shutdown() }
-  }
-
-  /** Scale-adaptive shuffle/AQE hygiene for a commit path's INTERNAL
-    * jobs — the [[graft.operators.IterativeConf]] discipline extended
-    * to the write path. A commit runs a handful of metadata-scale
-    * actions (empty probes, key probes, identity/stats aggregations,
-    * the staging write, CDC folds): at batch sizes far below one
-    * shuffle partition's worth of data, full-width exchanges are
-    * dozens of near-empty tasks, and AQE's stage-by-stage loop parks
-    * the driver between every micro-stage (measured round 20: 85% of
-    * a tiny merge's wall clock sat in AdaptiveSparkPlanExec's
-    * withFinalPlanUpdate queue, ~0.45 s of driver wait per ~0.27 s of
-    * actual job time). Width derives from the op's ESTIMATED input
-    * bytes (~64 MB per post-shuffle partition, AQE's own advisory
-    * target): a 100 TB-scale op estimates past the session width and
-    * runs exactly as before (full width, AQE on — skew handling
-    * intact); only provably-small ops narrow. Conf is session-scoped
-    * and restored in a finally, the IterativeConf contract (commits
-    * from concurrent threads of one session share it — fine, staging
-    * is writer-unique and the narrowed width is correct for both).
-    * Unknown estimates (Long.MaxValue defaults) never narrow. */
-  private[sources] def narrowCommitJobConf(spark: SparkSession,
-      estBytes: BigInt): () => Unit = {
-    val origParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val origAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val perPart = BigInt(64L << 20)
-    val target =
-      if (estBytes < 0) origParts.toInt
-      else ((estBytes + perPart - 1) / perPart).max(1)
-        .min(BigInt(origParts.toInt)).toInt
-    if (target >= origParts.toInt) () => ()
-    else {
-      spark.conf.set("spark.sql.shuffle.partitions", target.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      () => {
-        spark.conf.set("spark.sql.shuffle.partitions", origParts)
-        spark.conf.set("spark.sql.adaptive.enabled", origAqe)
-      }
-    }
-  }
-
-  /** [[narrowCommitJobConf]] with the estimate summed from the input
-    * plans' optimizer statistics (parquet scans estimate their file
-    * bytes; an unestimable plan contributes Long.MaxValue and keeps
-    * the session conf untouched). Callers restore in a finally. */
-  private[sources] def narrowCommitJobConf(spark: SparkSession,
-      inputs: Seq[org.apache.spark.sql.DataFrame]): () => Unit = {
-    val est = inputs.foldLeft(BigInt(0)) { (acc, df) =>
-      acc + (try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) })
-    }
-    narrowCommitJobConf(spark, est)
   }
 
   /** Stage a batch under writer-unique dirs: ONE dir when `partCols`
@@ -1303,7 +1253,10 @@ private[graft] trait LakeCommits { this: Lake.type =>
       rowTracking: Boolean = false): Long = {
     require(retain >= -1,
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
-    val spark = df0.sparkSession
+    // internal probe/staging jobs plan at the batch estimate's width
+    val spark = ShuffleWidth.narrowed(df0.sparkSession,
+      ShuffleWidth.bytesWidth(Seq(df0)))
+    val batch = Shim.rebind(spark, df0)
     val fs = fsFor(spark, root)
     val r = new Path(root)
     // ONE root listing for the pre-staging metadata-inheritance reads
@@ -1311,11 +1264,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // resolution past staging lists fresh).
     val preV: Seq[Long] = committedVersions(fs, r)
     val preLast: Option[Long] = preV.lastOption
-    // internal probe/staging jobs width-scale to the batch estimate
-    // (narrowCommitJobConf); restored by the finally at method end —
-    // braces deliberately do not reindent the body
-    val restoreConf = narrowCommitJobConf(spark, Seq(df0))
-    try {
     // IDENTITY: materialize FIRST (a generated/partition column may
     // derive from the key). An establishing batch may SEED the
     // sequence with its own unique values; afterwards the column is
@@ -1342,7 +1290,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // all-NULL identity/generated copy means omitted (see
     // dropAllNullSpecials) — only an ESTABLISHING seed carries real
     // identity values past this point
-    val dfPre = dropAllNullSpecials(df0, effGen0,
+    val dfPre = dropAllNullSpecials(batch, effGen0,
       effIdCol.map(c => (c, prevHwm.getOrElse(1L))),
       establishing = preV.isEmpty)
     val (dfId, idNext): (org.apache.spark.sql.DataFrame, Option[Long]) =
@@ -1475,7 +1423,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
           "re-derive against the current table and retry")
     }
     next
-    } finally restoreConf()
   }
 
   /** Append `df` to the table at `root` WITHOUT rewriting it: the new
@@ -1507,7 +1454,10 @@ private[graft] trait LakeCommits { this: Lake.type =>
     require(retain >= -1,
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
     require(!op.contains("\n"), "op must be a single manifest line")
-    val spark = df0.sparkSession
+    // internal probe/staging jobs plan at the batch estimate's width
+    val spark = ShuffleWidth.narrowed(df0.sparkSession,
+      ShuffleWidth.bytesWidth(Seq(df0)))
+    val batch = Shim.rebind(spark, df0)
     val fs = fsFor(spark, root)
     val r = new Path(root)
     // ONE root listing serves every pre-staging metadata-inheritance
@@ -1517,11 +1467,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // listing is ~10^2 ms, and this function used to take ~11 of them.
     val preV: Seq[Long] = committedVersions(fs, r)
     val preLast: Option[Long] = preV.lastOption
-    // internal probe/staging jobs width-scale to the batch estimate
-    // (narrowCommitJobConf); restored by the finally at method end —
-    // braces deliberately do not reindent the body
-    val restoreConf = narrowCommitJobConf(spark, Seq(df0))
-    try {
     val effGen = effectiveGenParts(fs, r, generatedColumns)
     val genTzEst =
       if (generatedColumns.nonEmpty && preLast
@@ -1548,7 +1493,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val idByDefault = effId.isDefined &&
       preLast
         .flatMap(v => manifestIdMode(fs, r, v)).contains("bydefault")
-    val dfDropped = dropAllNullSpecials(df0, effGen, effId,
+    val dfDropped = dropAllNullSpecials(batch, effGen, effId,
       establishing = preV.isEmpty)
     effId.foreach { case (c, _) =>
       require(idByDefault || !dfDropped.columns.contains(c),
@@ -1852,7 +1797,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
             "pathological contention; back off and retry")
       }
     }
-    } finally restoreConf()
     -1L // unreachable
   }
 

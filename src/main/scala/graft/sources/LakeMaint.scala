@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.operators.ShuffleWidth
 
 /** Maintenance: VACUUM, compaction, z-order clustering, REORG purge, in-place parquet adoption, and layout reports.
   *
@@ -457,18 +458,16 @@ private[graft] trait LakeMaint { this: Lake.type =>
     require(total > 0 || minBytes > 0L,
       s"no parquet data in the live snapshot at $root")
     if (total == 0L) return cur // only empty dirs in scope
-    // internal jobs width-scale to the compacted bytes
-    // (narrowCommitJobConf); restored by the finally at method end
-    val restoreConf = narrowCommitJobConf(spark, BigInt(total))
-    try {
+    // internal jobs plan at the compacted bytes' width
+    val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(BigInt(total)))
     val n = Math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
     val carried = manifestSchema(fs, r, cur)
     val base =
       // RAW read: a layout rewrite must carry the hidden row-id
       // through (the stability contract the keyless feed pairs on)
-      if (carriedDirs.isEmpty) readCommittedAtRaw(spark, root, cur)
+      if (carriedDirs.isEmpty) readCommittedAtRaw(narrow, root, cur)
       // DV-aware: compaction materializes the collapsed dirs' vectors
-      else readDirsWithDv(spark, fs, r, cur, smallDirs, carried)
+      else readDirsWithDv(narrow, fs, r, cur, smallDirs, carried)
     val df = base.repartition(n)
     val next = pinSlot(fs, r, cur)
     val effStats = effectiveStatsCols(fs, r, Nil)
@@ -481,7 +480,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // survives maintenance instead of degrading to a full scan
     val effPart = manifestPartCols(fs, r, cur)
     val (newDirs, stats, blooms, parts) =
-      stageBatch(spark, fs, r, df, effStats, effBloom, effPart,
+      stageBatch(narrow, fs, r, df, effStats, effBloom, effPart,
         maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
         colMap = manifestColMap(fs, r, cur))
     // the collapsed dirs hand their streaming-fold replay markers to
@@ -522,7 +521,6 @@ private[graft] trait LakeMaint { this: Lake.type =>
       pubRows = rb._4
     }
     nextV
-    } finally restoreConf()
   }
 
   /** CLUSTER the live snapshot for data skipping: rewrite it into one
@@ -621,18 +619,14 @@ private[graft] trait LakeMaint { this: Lake.type =>
       return cur // nothing in scope: the snapshot is already optimal
     require(total > 0, s"no parquet data in the live snapshot at $root")
     // internal jobs (tuple/span collect, clustered writes, batched
-    // stats, blooms) width-scale to the rewritten bytes
-    // (narrowCommitJobConf); the try opens immediately so no refusal
-    // path between here and the staging loop can leak the narrow —
-    // braces deliberately do not reindent the body
-    val restoreConf = narrowCommitJobConf(spark, BigInt(total))
-    try {
+    // stats, blooms) plan at the rewritten bytes' width
+    val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(BigInt(total)))
     val carried = manifestSchema(fs, r, cur)
     val dfLogical =
       // RAW read: the rewrite must carry the hidden row-id through
-      if (carriedDirs.isEmpty) readCommittedAtRaw(spark, root, cur)
+      if (carriedDirs.isEmpty) readCommittedAtRaw(narrow, root, cur)
       // DV-aware: z-order materializes the rewritten dirs' vectors
-      else readDirsWithDv(spark, fs, r, cur, rewriteDirs, carried)
+      else readDirsWithDv(narrow, fs, r, cur, rewriteDirs, carried)
     cols.foreach(c => require(dfLogical.columns.contains(c),
       s"cluster column '$c' not in the table schema"))
     // this function writes its clustered dirs DIRECTLY (not through
@@ -705,10 +699,10 @@ private[graft] trait LakeMaint { this: Lake.type =>
       // one pass yields per-file + dir ranges AND the row count the
       // bloom builder needs — no separate count job per rewritten dir
       val (dirJson, fileJsons, nRows) =
-        fileStatsJsonN(spark, new Path(r, dir).toString, effStats)
+        fileStatsJsonN(narrow, new Path(r, dir).toString, effStats)
           .getOrElse(("{}", Map.empty[String, String], -1L))
       (dir, dirJson, fileJsons,
-        dirBloomJson(spark, new Path(r, dir).toString, effBloom,
+        dirBloomJson(narrow, new Path(r, dir).toString, effBloom,
           Some(nRows).filter(_ >= 0)))
     }
     def filesFor(bytes: Long): Int =
@@ -801,10 +795,10 @@ private[graft] trait LakeMaint { this: Lake.type =>
           }
           writeRes.collectFirst { case Left(t) => t }.foreach(throw _)
           val newDirsSeq = writeRes.map(_.toOption.get)
-          val statsByDir = fileStatsJsonBatched(spark, r, newDirsSeq, effStats)
+          val statsByDir = fileStatsJsonBatched(narrow, r, newDirsSeq, effStats)
           val bloomRes = stageConcurrently(newDirsSeq.length) { i =>
             val n = statsByDir.get(newDirsSeq(i)).map(_._3).getOrElse(-1L)
-            dirBloomJson(spark, new Path(r, newDirsSeq(i)).toString,
+            dirBloomJson(narrow, new Path(r, newDirsSeq(i)).toString,
               effBloom, Some(n).filter(_ >= 0))
           }
           bloomRes.collectFirst { case Left(t) => t }.foreach(throw _)
@@ -857,7 +851,6 @@ private[graft] trait LakeMaint { this: Lake.type =>
         staged.foreach(d => scala.util.Try(fs.delete(new Path(r, d), true)))
         throw t
     } finally { cached.unpersist(); () }
-    } finally restoreConf()
   }
 
   /** Number of parquet data files currently under `path`. */

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Shim
+import graft.operators.ShuffleWidth
 
 /** Row-level mutation engines: CDC merge, MERGE INTO, DELETE and UPDATE — copy-on-write with the deletion-vector fast path.
   *
@@ -66,19 +68,18 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
     val dvEff = effDvMaxRows(fs, r, dvMaxRows)
-    val base = readCommittedAt(spark, root, cur)
+    val base0 = readCommittedAt(spark, root, cur)
     // the merge's internal jobs (empty/key probes, CDC fold, rewrite
-    // staging) run width-scaled to base+batch size — see
-    // narrowCommitJobConf; a 100 TB base estimates past the session
-    // width and leaves the conf untouched
-    val restoreConf = narrowCommitJobConf(spark, Seq(base, changes))
-    // the narrow window opens HERE: everything after it (including
-    // lastChanges' eager schema requires) sits inside the try so no
-    // refusal path can leak the narrowed conf into the session
+    // staging) plan at the base+batch estimate's width; a 100 TB base
+    // estimates past the session width and keeps it
+    val narrow = ShuffleWidth.narrowed(spark,
+      ShuffleWidth.bytesWidth(Seq(base0, changes)))
+    val base = Shim.rebind(narrow, base0)
     var latestOpt: Option[org.apache.spark.sql.DataFrame] = None
     try {
-      val latest = graft.operators.Cdc.lastChanges(
-        base, changes, keyCols, versionCol, deleteCol, guardVersions).persist()
+      val latest = graft.operators.Cdc.lastChanges(base,
+        Shim.rebind(narrow, changes), keyCols, versionCol, deleteCol,
+        guardVersions).persist()
       latestOpt = Some(latest)
       if (latest.isEmpty) return cur
       val touchedKeys = broadcast(latest.select(keyCols.map(col): _*))
@@ -104,7 +105,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val touchedBase =
         if (touchedDirs.isEmpty) base.limit(0)
         // DV-aware: the rewrite materializes any existing vector
-        else readDirsWithDv(spark, fs, r, cur, touchedDirs, carried)
+        else readDirsWithDv(narrow, fs, r, cur, touchedDirs, carried)
       val upserts = latest.where(!coalesce(col(deleteCol), lit(false)))
         .drop(deleteCol)
       // CDC SCHEMA DRIFT (Delta's merge autoMerge, opt-in): a batch
@@ -133,7 +134,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       if (dvEff > 0 && touchedDirs.nonEmpty) {
         val prevDvs = manifestDvsRaw(fs, r, cur)
         // metadata columns do not survive a join — materialize first
-        val hits = readDirsWithDv(spark, fs, r, cur, touchedDirs, carried)
+        val hits = readDirsWithDv(narrow, fs, r, cur, touchedDirs, carried)
           .withColumn("__dv_key",
             substring_index(col("_metadata.file_path"), "/", -2))
           .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -184,7 +185,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
                 Map.empty[String, String])
             else {
               validateChecks(fs, r, winners, "merge")
-              stageBatch(spark, fs, r, winners, effStats, effBloom,
+              stageBatch(narrow, fs, r, winners, effStats, effBloom,
                 manifestPartCols(fs, r, cur),
                 bucketBy = manifestBucketBy(fs, r, cur), colMap = stageMap)
             }
@@ -242,7 +243,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val stageMap = allocPhysical(evolved, manifestColMap(fs, r, cur),
         manifestRetired(fs, r, cur), next)
       val (newDirs, stats, blooms, parts) =
-        stageBatch(spark, fs, r, rewritten, effStats, effBloom, effPart,
+        stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
           colMap = stageMap)
       // replaced dirs may hold streaming-fold replay markers — carry
@@ -261,7 +262,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
             "one-writer-at-a-time, Delta's OPTIMIZE conflict rule)")
       }
       next
-    } finally { latestOpt.foreach(_.unpersist()); restoreConf() }
+    } finally { latestOpt.foreach(_.unpersist()) }
   }
 
   /** Predicate DELETE on a committed table — `DELETE FROM t WHERE p`
@@ -390,13 +391,11 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val dropped = byClass.getOrElse(Drop, Nil)
     val rewrite = byClass.getOrElse(Rewrite, Nil)
     if (dropped.isEmpty && rewrite.isEmpty) return cur // nothing can match
-    // internal jobs (DV hit probe, rewrite staging) width-scale to the
-    // rewritten dirs' on-disk bytes (narrowCommitJobConf); restored by
-    // the finally at method end — braces do not reindent the body
-    val restoreConf = narrowCommitJobConf(spark,
+    // internal jobs (DV hit probe, rewrite staging) plan at the width
+    // of the rewritten dirs' on-disk bytes
+    val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(
       BigInt(rewrite.map(d => fs.listStatus(new Path(r, d)).toSeq
-        .filter(_.isFile).map(_.getLen).sum).sum))
-    try {
+        .filter(_.isFile).map(_.getLen).sum).sum)))
     // MERGE-ON-READ fast path (deletion vectors): no whole-dir drop in
     // play → soft-delete the matching rows as `#dv_` position lines
     // against the UNCHANGED dir set. One metadata-cost commit; the
@@ -405,7 +404,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     if (rewrite.nonEmpty && dropped.isEmpty && dvEff > 0) {
       import org.apache.spark.sql.functions.{col, substring_index}
       val prevDvs = manifestDvsRaw(fs, r, cur)
-      val hits = readDirsWithDv(spark, fs, r, cur, rewrite, carried)
+      val hits = readDirsWithDv(narrow, fs, r, cur, rewrite, carried)
         .where(coalesce(predicate, lit(false)))
         .select(
           substring_index(col("_metadata.file_path"), "/", -2).as("__dv_key"),
@@ -460,9 +459,9 @@ private[graft] trait LakeMutations { this: Lake.type =>
       if (rewrite.nonEmpty) {
         // DV-aware read: a rewrite MATERIALIZES any existing vector
         // (soft-deleted rows excluded here never reach the new dir)
-        val base = readDirsWithDv(spark, fs, r, cur, rewrite, carried)
+        val base = readDirsWithDv(narrow, fs, r, cur, rewrite, carried)
         val surviving = base.where(!coalesce(predicate, lit(false)))
-        val staged = stageBatch(spark, fs, r, surviving, effStats, effBloom, effPart,
+        val staged = stageBatch(narrow, fs, r, surviving, effStats, effBloom, effPart,
           maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
           colMap = cmap)
         preserveMarkers(fs, r, rewrite ++ dropped, staged._1)
@@ -472,11 +471,11 @@ private[graft] trait LakeMutations { this: Lake.type =>
         // manifest is unrepresentable (an empty dirs body reads as the
         // body-less back-compat form [v<version>]) — deleting the
         // whole table still commits one readable empty snapshot
-        val schema = carried.getOrElse(spark.read.parquet(
+        val schema = carried.getOrElse(narrow.read.parquet(
           dropped.map(d => new Path(r, d).toString): _*).schema)
-        val empty = spark.createDataFrame(
+        val empty = narrow.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        val staged = stageBatch(spark, fs, r, empty, effStats, effBloom, Nil,
+        val staged = stageBatch(narrow, fs, r, empty, effStats, effBloom, Nil,
           bucketBy = manifestBucketBy(fs, r, cur), colMap = cmap)
         preserveMarkers(fs, r, dropped, staged._1)
         staged
@@ -494,7 +493,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
           "re-run against the current table")
     }
     next
-    } finally restoreConf()
   }
 
   /** Predicate UPDATE on a committed table — `UPDATE t SET c = expr
@@ -577,13 +575,11 @@ private[graft] trait LakeMutations { this: Lake.type =>
       treeExcludes(updTree, leafExcl)
     }
     if (touched.isEmpty) return cur
-    // internal jobs (DV hit probe, copy/rewrite staging) width-scale
-    // to the touched dirs' on-disk bytes (narrowCommitJobConf);
-    // restored by the finally at method end — braces do not reindent
-    val restoreConf = narrowCommitJobConf(spark,
+    // internal jobs (DV hit probe, copy/rewrite staging) plan at the
+    // width of the touched dirs' on-disk bytes
+    val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(
       BigInt(touched.map(d => fs.listStatus(new Path(r, d)).toSeq
-        .filter(_.isFile).map(_.getLen).sum).sum))
-    try {
+        .filter(_.isFile).map(_.getLen).sum).sum)))
     // MERGE-ON-READ fast path (deletion vectors, Delta's DV update):
     // when the hit count stays under the bound, the matched rows
     // soft-delete via `#dv_` position lines against the UNCHANGED dir
@@ -600,7 +596,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     if (dvEff > 0 && deterministic) {
       import org.apache.spark.sql.functions.substring_index
       val prevDvs = manifestDvsRaw(fs, r, cur)
-      val hits = readDirsWithDv(spark, fs, r, cur, touched, carried)
+      val hits = readDirsWithDv(narrow, fs, r, cur, touched, carried)
         .where(coalesce(predicate, lit(false)))
         .select(
           substring_index(col("_metadata.file_path"), "/", -2).as("__dv_key"),
@@ -625,7 +621,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         // the updated COPIES of the matched rows, computed
         // distributively and staged as one O(matched) dir (layout- and
         // bucket-preserving, like every staged write)
-        val copies0 = readDirsWithDv(spark, fs, r, cur, touched, carried)
+        val copies0 = readDirsWithDv(narrow, fs, r, cur, touched, carried)
           .where(coalesce(predicate, lit(false)))
         val copies = set0.foldLeft(copies0) { case (df, (c, expr)) =>
           df.withColumn(c, expr.cast(
@@ -635,7 +631,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         val effStatsDv = effectiveStatsCols(fs, r, Nil)
         val effBloomDv = effectiveBloomCols(fs, r, Nil)
         val (newDirs, freshStats, freshBlooms, freshParts) =
-          stageBatch(spark, fs, r, copies, effStatsDv, effBloomDv,
+          stageBatch(narrow, fs, r, copies, effStatsDv, effBloomDv,
             manifestPartCols(fs, r, cur),
             bucketBy = manifestBucketBy(fs, r, cur), colMap = cmap)
         // row-preserving: every killed row has exactly one live copy
@@ -654,7 +650,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // over the bound: fall through to the copy-on-write rewrite
     }
     // DV-aware read: the rewrite materializes any existing vector
-    val base = readDirsWithDv(spark, fs, r, cur, touched, carried)
+    val base = readDirsWithDv(narrow, fs, r, cur, touched, carried)
     val hit = coalesce(predicate, lit(false))
     val updated = set0.foldLeft(base) { case (df, (c, expr)) =>
       val field = schema(c)
@@ -671,7 +667,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val effPart = manifestPartCols(fs, r, cur)
     validateChecks(fs, r, updated, "update")
     val (newDirs, freshStats, freshBlooms, freshParts) =
-      stageBatch(spark, fs, r, updated, effStats, effBloom, effPart,
+      stageBatch(narrow, fs, r, updated, effStats, effBloom, effPart,
           maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
           colMap = cmap)
     preserveMarkers(fs, r, touched, newDirs)
@@ -687,7 +683,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
           "against the current table")
     }
     next
-    } finally restoreConf()
   }
 
   /** General SQL-semantics MERGE INTO a committed table — the
@@ -745,8 +740,8 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
     val carried = manifestSchema(fs, r, cur)
-    val base = readCommittedAt(spark, root, cur)
-    val schema = carried.getOrElse(base.schema)
+    val base0 = readCommittedAt(spark, root, cur)
+    val schema = carried.getOrElse(base0.schema)
     // canonicalize assignment keys to the SCHEMA's spelling under the
     // session resolver — the branch application below looks maps up by
     // exact schema field name, so a case-varied `SET Meta = …` would
@@ -787,9 +782,10 @@ private[graft] trait LakeMutations { this: Lake.type =>
         org.apache.spark.sql.expressions.Window.partitionBy(on.map(_._2): _*)))
       .withColumn("__s_present", lit(true))
       .persist()
-    // internal probe/rewrite jobs width-scale to base+batch size
-    // (narrowCommitJobConf); restored in the finally below
-    val restoreConf = narrowCommitJobConf(spark, Seq(base, source))
+    // internal probe/rewrite jobs plan at the base+batch estimate's width
+    val narrow = ShuffleWidth.narrowed(spark,
+      ShuffleWidth.bytesWidth(Seq(base0, source)))
+    val base = Shim.rebind(narrow, base0)
     try {
       val joinCond = on.zipWithIndex.map { case ((t, _), i) =>
         t === col(s"s.__sk_$i")
@@ -797,8 +793,8 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // materialize the source-side key exprs as columns BEFORE the
       // alias (they must resolve against the bare source, and stay
       // unambiguous under the join)
-      val srcKeyed = on.zipWithIndex.foldLeft(srcW) { case (d, ((_, s), i)) =>
-        d.withColumn(s"__sk_$i", s)
+      val srcKeyed = on.zipWithIndex.foldLeft(Shim.rebind(narrow, srcW)) {
+        case (d, ((_, s), i)) => d.withColumn(s"__sk_$i", s)
       }.alias("s")
       val touchedDirNames: Set[String] =
         if (notMatchedBySource.nonEmpty) snapDirs.toSet
@@ -813,7 +809,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val touchedBase =
         if (touchedDirs.isEmpty) base.limit(0)
         // DV-aware: the rewrite materializes any existing vector
-        else readDirsWithDv(spark, fs, r, cur, touchedDirs, carried)
+        else readDirsWithDv(narrow, fs, r, cur, touchedDirs, carried)
       val present = coalesce(col("s.__s_present"), lit(false))
       // ordered branch list: (guard, Some(assignments) = update /
       // None = delete). Matched and by-source groups are disjoint on
@@ -906,7 +902,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val effBucket = manifestBucketBy(fs, r, cur)
       validateChecks(fs, r, rewritten, "merge")
       val (newDirs, stats, blooms, parts) =
-        stageBatch(spark, fs, r, rewritten, effStats, effBloom, effPart,
+        stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
           colMap = manifestColMap(fs, r, cur))
       preserveMarkers(fs, r, touchedDirs, newDirs)
@@ -922,6 +918,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
             "one-writer-at-a-time, Delta's OPTIMIZE conflict rule)")
       }
       next
-    } finally { srcW.unpersist(); restoreConf() }
+    } finally { srcW.unpersist(); () }
   }
 }

@@ -396,8 +396,10 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
   }
 
   /** [[fileStatsJsonN]] for SEVERAL freshly-written sibling dirs in ONE
-    * column-pruned pass — the per-dir semantics (per-file ranges, dir
-    * merge rule, row counts, `present` resolution) are byte-identical,
+    * column-pruned pass. PRECONDITION: the dirs share one schema
+    * (`present` resolves once, against the merged schema, where the
+    * per-dir pass resolves per dir); under it the per-dir semantics
+    * (per-file ranges, dir merge rule, row counts) are identical and
     * only the job count changes: a partitioned OPTIMIZE that staged T
     * tuple dirs pays one stats job instead of T (each a fixed-overhead
     * scan of a fresh tiny-to-medium dir). Keys of the returned map are
@@ -596,21 +598,11 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
       .map(v => manifestStatsCols(fs, r, v)).getOrElse(Nil)
   }
 
-  /** min/max stats of the freshly-written dir on `cols`, as the
-    * manifest JSON. Cost is O(this dir): the read enables parquet
-    * MIN/MAX aggregate pushdown, so on supported types it answers from
-    * the footers the write just produced — metadata, not a re-scan.
-    * Columns absent from the dir's schema, all-NULL, or with
-    * un-normalizable extremes (NaN/Infinity) drop out (kept dirs are
-    * the safe default). */
   /** Fold interleaved (min, max) external values — `get(2i)`/`get(2i+1)`
-    * for `present(i)` — into the manifest stats JSON. The ONE
-    * normalization used by both the read-back path ([[dirStatsJson]])
-    * and the staging write's piggybacked `observe` metrics
-    * (LakeCommits.stageBatch), so the two can never drift: identical
-    * normExternal/cmpNorm/boundedStat policy, columns with
-    * un-normalizable extremes drop out (kept dirs are the safe
-    * default). */
+    * for `present(i)` — into the manifest stats JSON: the staging
+    * write's piggybacked `observe` metrics (LakeCommits.stageBatch).
+    * Columns with un-normalizable extremes drop out (kept dirs are the
+    * safe default). */
   private[sources] def statsJsonFromMinMax(present: Seq[String],
       get: Int => Any): String = {
     val m = present.zipWithIndex.flatMap { case (c, i) =>
@@ -622,26 +614,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
       } yield c -> bounded
     }.toMap
     statsJson(m)
-  }
-
-  private[sources] def dirStatsJson(spark: SparkSession, dirPath: String,
-      cols: Seq[String]): Option[String] = {
-    import org.apache.spark.sql.functions.{max, min}
-    if (cols.isEmpty) return None
-    val key = "spark.sql.parquet.aggregatePushDown"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val df = spark.read.parquet(dirPath)
-      val present = cols.filter(c => resolveField(df.schema, c).isDefined)
-      if (present.isEmpty) return Some("{}")
-      val aggs = present.flatMap(c => Seq(min(df(c)), max(df(c))))
-      val row = df.agg(aggs.head, aggs.drop(1): _*).collect().head
-      Some(statsJsonFromMinMax(present, i => row.get(i)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   // ---- ANALYZE TABLE (optimizer statistics) ------------------------

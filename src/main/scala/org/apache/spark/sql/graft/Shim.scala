@@ -4,13 +4,18 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` surface: Column ⇄ catalyst
-  * Expression conversion for the engine's native expressions
-  * (graft.plans). Everything else of the engine lives in the `graft`
-  * namespace; only this 2-method shim needs to sit inside
-  * `org.apache.spark.sql` (same technique as every third-party
-  * expression library, since Spark 4 made the converters package-
-  * private). */
+/** The engine's bridge into Spark's `private[sql]` surface; everything
+  * else of the engine lives in the `graft` namespace, and only this
+  * object sits inside `org.apache.spark.sql` (the technique every
+  * third-party expression library uses since Spark 4 made these
+  * package-private). It bridges:
+  *  - Column ⇄ catalyst Expression for the native expressions
+  *    (graft.plans) and the lake stats pruner;
+  *  - nullable relaxation of schemas and types;
+  *  - an already-planned rdd as a batch or streaming logical plan;
+  *  - LogicalPlan -> DataFrame ([[ofRows]]);
+  *  - the narrow-width session pair ([[cloneSession]], [[rebind]])
+  *    that [[graft.operators.ShuffleWidth]] builds on. */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -72,4 +77,41 @@ object Shim {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A session sharing `spark`'s context, cache and catalog with a
+    * COPY of its conf (and temp views, functions, listeners) plus
+    * `confs`, so nothing set here is visible to `spark`.
+    *
+    * Its tasks run in the executors' default state, not in one of
+    * their own: an own state is a fresh executor classloader, under
+    * which every generated class compiles again (tens of ms per stage)
+    * and stays cached beside the earlier copies. Artifact isolation is
+    * fixed when a session is built, so it is switched off on an
+    * intermediate clone that the returned one copies. A session that
+    * may hold session-scoped artifacts keeps it: one with added jars,
+    * or one that always applies its artifact classloader (a Spark
+    * Connect session). */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession,
+      confs: Map[String, String]): org.apache.spark.sql.SparkSession = {
+    import org.apache.spark.sql.internal.SQLConf
+    val parent = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val base = parent.cloneSession()
+    if (parent.artifactManager.getAddedJars.isEmpty &&
+        !parent.conf.get(SQLConf.ARTIFACTS_SESSION_ISOLATION_ALWAYS_APPLY_CLASSLOADER))
+      base.conf.set(SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+    confs.foreach { case (k, v) => base.conf.set(k, v) }
+    base.cloneSession()
+  }
+
+  /** `df` as a DataFrame of `spark`: a Dataset plans (width, AQE) under
+    * its own session, so moving a plan across sessions takes a new
+    * Dataset. Reuses the analyzed plan with any command already run,
+    * so a rebound INSERT never runs twice and a rebound scan never
+    * re-lists its files. `df` itself when it already belongs to
+    * `spark`. */
+  def rebind(spark: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    if (df.sparkSession eq spark) df
+    else ofRows(spark,
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan)
 }

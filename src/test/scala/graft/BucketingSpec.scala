@@ -9,28 +9,27 @@ class BucketingSpec extends SparkSpec {
 
   test("matching bucketed tables join without any shuffle exchange") {
     val d = "/root/testdata/sf0.001"
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       Bucketing.writeBucketed(Tables.orders(spark, d), "b_orders", "o_orderkey", 4)
       Bucketing.writeBucketed(Tables.lineitem(spark, d), "b_lineitem", "l_orderkey", 4)
       // force the shuffle-join path so the assertion is about bucketing,
       // not about a broadcast hiding the exchange
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("b_lineitem")
-        .join(spark.table("b_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-      assert(joined.count() > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-      // the aggregation on o_orderstatus (a different key) still
-      // shuffles; the JOIN subtree must not — both inputs arrive
-      // bucket-aligned from the scans
-      val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
-      assert(plan.contains("Bucketed: true"))
-      assert(!joinSubtree.contains("Exchange"),
-        s"bucketed join sides must not shuffle:\n$plan")
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = spark.table("b_lineitem")
+          .join(spark.table("b_orders"),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
+        assert(joined.count() > 0)
+        val plan = joined.queryExecution.executedPlan.toString
+        // the aggregation on o_orderstatus (a different key) still
+        // shuffles; the JOIN subtree must not — both inputs arrive
+        // bucket-aligned from the scans
+        val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
+        assert(plan.contains("Bucketed: true"))
+        assert(!joinSubtree.contains("Exchange"),
+          s"bucketed join sides must not shuffle:\n$plan")
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
@@ -38,90 +37,86 @@ class BucketingSpec extends SparkSpec {
 
   test("incremental dedup-load vs a bucketed base shuffles only the batch, not the base") {
     val d = "/root/testdata/sf0.001"
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // the base fact is huge at 100 TB — bucket it on the natural key
       // once at write time and every nightly anti-join stops paying a
       // full-base shuffle (the batch side still shuffles: it's O(batch))
       Bucketing.writeBucketed(Tables.orders(spark, d), "b_base", "o_orderkey", 4)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val batch = Tables.orders(spark, d).limit(500)
-      val fresh = graft.operators.Dedup.newRows(
-        batch, spark.table("b_base"), Seq("o_orderkey"))
-      assert(fresh.collect().length === 0) // every batch key exists in the base
-      // AQE's toString appends the pre-adaptive "Initial Plan" — audit
-      // only the final one
-      val plan = fresh.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
-      assert(joinSubtree.contains("LeftAnti"), s"expected anti-join:\n$plan")
-      // the base-side branch — from its Sort down to the bucketed scan —
-      // must contain no Exchange: the join's partitioning requirement is
-      // met straight off the bucketed scan. The batch side shuffles
-      // (that's O(batch), fine).
-      val scanAt = joinSubtree.indexOf("Bucketed: true")
-      assert(scanAt >= 0, s"base must read as a bucketed scan:\n$plan")
-      val baseBranch = joinSubtree.substring(
-        joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
-      assert(!baseBranch.contains("Exchange"),
-        s"base side must not shuffle:\n$plan")
-      assert(plan.contains("SelectedBucketsCount"))
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val batch = Tables.orders(spark, d).limit(500)
+        val fresh = graft.operators.Dedup.newRows(
+          batch, spark.table("b_base"), Seq("o_orderkey"))
+        assert(fresh.collect().length === 0) // every batch key exists in the base
+        // AQE's toString appends the pre-adaptive "Initial Plan" — audit
+        // only the final one
+        val plan = fresh.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
+        assert(joinSubtree.contains("LeftAnti"), s"expected anti-join:\n$plan")
+        // the base-side branch — from its Sort down to the bucketed scan —
+        // must contain no Exchange: the join's partitioning requirement is
+        // met straight off the bucketed scan. The batch side shuffles
+        // (that's O(batch), fine).
+        val scanAt = joinSubtree.indexOf("Bucketed: true")
+        assert(scanAt >= 0, s"base must read as a bucketed scan:\n$plan")
+        val baseBranch = joinSubtree.substring(
+          joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
+        assert(!baseBranch.contains("Exchange"),
+          s"base side must not shuffle:\n$plan")
+        assert(plan.contains("SelectedBucketsCount"))
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_base")
     }
   }
 
   test("composed layout: date partitions AND buckets prune and join shuffle-free in ONE query") {
     val d = "/root/testdata/sf0.001"
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try {
       // both asserted properties (partition pruning, bucket-aligned
       // join) are PLANNING-time facts; AQE only wraps the plan in stage
       // nodes that hide the scan from collectLeaves, so turn it off for
       // a directly inspectable plan
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // the fact: date-partitioned (scan prunes to the queried day) and
-      // bucketed on the join key (the join needs no exchange) — both
-      // properties must hold on the SAME scan of the SAME query
-      val events = Tables.events(spark, d)
-        .withColumn("event_date", to_date(col("ts")))
-      Bucketing.writePartitionedBucketed(events, "pb_events", "event_date", "user_id", 4)
-      // the dimension: bucketed on the same key, same bucket count
-      val users = events.groupBy(col("user_id"))
-        .agg(min(col("ts")).as("first_seen"))
-      Bucketing.writeBucketed(users, "pb_users", "user_id", 4)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      withConfs("spark.sql.adaptive.enabled" -> "false") {
+        // the fact: date-partitioned (scan prunes to the queried day) and
+        // bucketed on the join key (the join needs no exchange) — both
+        // properties must hold on the SAME scan of the SAME query
+        val events = Tables.events(spark, d)
+          .withColumn("event_date", to_date(col("ts")))
+        Bucketing.writePartitionedBucketed(events, "pb_events", "event_date", "user_id", 4)
+        // the dimension: bucketed on the same key, same bucket count
+        val users = events.groupBy(col("user_id"))
+          .agg(min(col("ts")).as("first_seen"))
+        Bucketing.writeBucketed(users, "pb_users", "user_id", 4)
+        withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+          val dates = spark.table("pb_events").select("event_date")
+            .distinct().collect().map(_.getDate(0)).sorted
+          assert(dates.length > 1, "test data must span several dates for a pruning proof")
+          val oneDay = spark.table("pb_events")
+            .where(col("event_date") === lit(dates(0)))
+            .join(spark.table("pb_users"), Seq("user_id"))
+            .select(col("user_id"), col("event_id"), col("first_seen"))
+          assert(oneDay.collect().length > 0)
 
-      val dates = spark.table("pb_events").select("event_date")
-        .distinct().collect().map(_.getDate(0)).sorted
-      assert(dates.length > 1, "test data must span several dates for a pruning proof")
-      val oneDay = spark.table("pb_events")
-        .where(col("event_date") === lit(dates(0)))
-        .join(spark.table("pb_users"), Seq("user_id"))
-        .select(col("user_id"), col("event_id"), col("first_seen"))
-      assert(oneDay.collect().length > 0)
-
-      val exec = oneDay.queryExecution.executedPlan
-      val plan = exec.toString.split("== Initial Plan ==")(0)
-      // (a) partition pruning reached the fact scan: 1 of N date dirs
-      val factScan = exec.collectLeaves().collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec
-          if s.metadata.get("PartitionFilters").exists(_.contains("event_date")) => s
-      }.getOrElse(fail(s"no partition-filtered scan in plan:\n$plan"))
-      assert(factScan.metrics("numPartitions").value === 1,
-        s"expected 1 of ${dates.length} partition dirs read")
-      assert(factScan.metadata("Bucketed") === "true",
-        s"fact scan must also be bucketed: ${factScan.metadata}")
-      // (b) the join subtree has NO exchange on either side: both scans
-      // arrive bucket-aligned on user_id
-      val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
-      assert(!joinSubtree.contains("Exchange"),
-        s"composed-layout join must not shuffle either side:\n$plan")
+          val exec = oneDay.queryExecution.executedPlan
+          val plan = exec.toString.split("== Initial Plan ==")(0)
+          // (a) partition pruning reached the fact scan: 1 of N date dirs
+          val factScan = exec.collectLeaves().collectFirst {
+            case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.metadata.get("PartitionFilters").exists(_.contains("event_date")) => s
+          }.getOrElse(fail(s"no partition-filtered scan in plan:\n$plan"))
+          assert(factScan.metrics("numPartitions").value === 1,
+            s"expected 1 of ${dates.length} partition dirs read")
+          assert(factScan.metadata("Bucketed") === "true",
+            s"fact scan must also be bucketed: ${factScan.metadata}")
+          // (b) the join subtree has NO exchange on either side: both scans
+          // arrive bucket-aligned on user_id
+          val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
+          assert(!joinSubtree.contains("Exchange"),
+            s"composed-layout join must not shuffle either side:\n$plan")
+        }
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql("DROP TABLE IF EXISTS pb_events")
       spark.sql("DROP TABLE IF EXISTS pb_users")
     }
@@ -129,7 +124,6 @@ class BucketingSpec extends SparkSpec {
 
   test("q103 shape: a stored LSH band index bucketed on (band, bkey) probes shuffle-free") {
     val d = "/root/testdata/sf0.001"
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val docs = Tables.documents(spark, d)
       val base = docs.where(pmod(col("doc_id"), lit(10)) < 8)
@@ -139,34 +133,33 @@ class BucketingSpec extends SparkSpec {
       graft.sources.Bucketing.writeBucketed(
         graft.operators.Dedup.bandIndex(base, "doc_id", "text"),
         "b_bandidx", Seq("band", "bkey"), 4)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val probed = graft.operators.Dedup.nearDupsVsIndex(
-        batch, spark.table("b_bandidx"), "doc_id", "text")
-      // identical results to the inline two-sided form q103 verifies
-      assert(rows(probed) === rows(graft.operators.Dedup.nearDupsVsBase(
-        batch, base, "doc_id", "text")))
-      val plan = probed.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
-      val scanAt = joinSubtree.indexOf("Bucketed: true")
-      assert(scanAt >= 0, s"index must read as a bucketed scan:\n$plan")
-      // the index branch — its Sort down to the bucketed scan — must
-      // contain no Exchange: the probe join's (band, bkey) requirement
-      // is met straight off the stored layout, so a batch probe
-      // shuffles ONLY the batch's bands
-      val idxBranch = joinSubtree.substring(
-        joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
-      assert(!idxBranch.contains("Exchange"),
-        s"stored band index must not shuffle:\n$plan")
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val probed = graft.operators.Dedup.nearDupsVsIndex(
+          batch, spark.table("b_bandidx"), "doc_id", "text")
+        // identical results to the inline two-sided form q103 verifies
+        assert(rows(probed) === rows(graft.operators.Dedup.nearDupsVsBase(
+          batch, base, "doc_id", "text")))
+        val plan = probed.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
+        val scanAt = joinSubtree.indexOf("Bucketed: true")
+        assert(scanAt >= 0, s"index must read as a bucketed scan:\n$plan")
+        // the index branch — its Sort down to the bucketed scan — must
+        // contain no Exchange: the probe join's (band, bkey) requirement
+        // is met straight off the stored layout, so a batch probe
+        // shuffles ONLY the batch's bands
+        val idxBranch = joinSubtree.substring(
+          joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
+        assert(!idxBranch.contains("Exchange"),
+          s"stored band index must not shuffle:\n$plan")
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_bandidx")
     }
   }
 
   test("q105 shape: a stored df multiset bucketed on (term, doc_id) folds a batch shuffle-free") {
     val d = "/root/testdata/sf0.001"
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val docs = Tables.documents(spark, d)
       def toks(side: org.apache.spark.sql.DataFrame) = side.select(col("doc_id"),
@@ -180,24 +173,24 @@ class BucketingSpec extends SparkSpec {
         toks(batch), Seq("term"), "doc_id")
       graft.sources.Bucketing.writeBucketed(
         stored, "b_dfidx", Seq("term", "doc_id"), 4)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val folded = graft.operators.Incremental.mergeDistinctStored(
-        spark.table("b_dfidx"), batchPart, Seq("term"), "doc_id")
-      // join-form fold == union-form fold (the q105-verified semantics)
-      assert(rows(folded) === rows(graft.operators.Incremental.mergeDistinct(
-        stored, batchPart, Seq("term"), "doc_id")))
-      val plan = folded.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
-      assert(joinSubtree.contains("FullOuter"), s"expected full-outer fold:\n$plan")
-      val scanAt = joinSubtree.indexOf("Bucketed: true")
-      assert(scanAt >= 0, s"stored multiset must read as a bucketed scan:\n$plan")
-      val storedBranch = joinSubtree.substring(
-        joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
-      assert(!storedBranch.contains("Exchange"),
-        s"stored df index must not shuffle on refresh:\n$plan")
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val folded = graft.operators.Incremental.mergeDistinctStored(
+          spark.table("b_dfidx"), batchPart, Seq("term"), "doc_id")
+        // join-form fold == union-form fold (the q105-verified semantics)
+        assert(rows(folded) === rows(graft.operators.Incremental.mergeDistinct(
+          stored, batchPart, Seq("term"), "doc_id")))
+        val plan = folded.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        val joinSubtree = plan.substring(plan.indexOf("SortMergeJoin"))
+        assert(joinSubtree.contains("FullOuter"), s"expected full-outer fold:\n$plan")
+        val scanAt = joinSubtree.indexOf("Bucketed: true")
+        assert(scanAt >= 0, s"stored multiset must read as a bucketed scan:\n$plan")
+        val storedBranch = joinSubtree.substring(
+          joinSubtree.lastIndexOf("Sort", scanAt), scanAt)
+        assert(!storedBranch.contains("Exchange"),
+          s"stored df index must not shuffle on refresh:\n$plan")
+      }
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_dfidx")
     }
   }
@@ -207,21 +200,19 @@ class BucketingSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val root = java.nio.file.Files.createTempDirectory("graft-lake-bidx")
       .resolve("t").toString
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      val docs = Tables.documents(spark, d)
-      val base1 = docs.where(pmod(col("doc_id"), lit(10)) < 4)
-      val base2 = docs.where(pmod(col("doc_id"), lit(10)).between(4, 7))
-      val batch = docs.where(pmod(col("doc_id"), lit(10)) >= 8)
-      val idx1 = graft.operators.Dedup.bandIndex(base1, "doc_id", "text")
-      val idx2 = graft.operators.Dedup.bandIndex(base2, "doc_id", "text")
-      // the stored index is a REAL lake table now: OCC commit, time
-      // travel, change feed — AND the co-located probe layout
-      Lake.commitOverwrite(idx1, root, retain = 8,
-        bucketBy = Some((4, Seq("band", "bkey"))))
-      // the append INHERITS the declared layout (no bucketBy repeated)
-      Lake.commitAppend(idx2, root, retain = 8)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val docs = Tables.documents(spark, d)
+    val base1 = docs.where(pmod(col("doc_id"), lit(10)) < 4)
+    val base2 = docs.where(pmod(col("doc_id"), lit(10)).between(4, 7))
+    val batch = docs.where(pmod(col("doc_id"), lit(10)) >= 8)
+    val idx1 = graft.operators.Dedup.bandIndex(base1, "doc_id", "text")
+    val idx2 = graft.operators.Dedup.bandIndex(base2, "doc_id", "text")
+    // the stored index is a REAL lake table now: OCC commit, time
+    // travel, change feed — AND the co-located probe layout
+    Lake.commitOverwrite(idx1, root, retain = 8,
+      bucketBy = Some((4, Seq("band", "bkey"))))
+    // the append INHERITS the declared layout (no bucketBy repeated)
+    Lake.commitAppend(idx2, root, retain = 8)
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def probe() = graft.operators.Dedup.nearDupsVsIndex(
         batch, Lake.readBucketed(spark, root), "doc_id", "text")
       def assertStoredSideShuffleFree(
@@ -281,8 +272,6 @@ class BucketingSpec extends SparkSpec {
           bucketBy = Some((4, Seq("k"))))
       }
       assert(late.getMessage.contains("cannot declare a bucket layout"))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }
 
@@ -293,20 +282,18 @@ class BucketingSpec extends SparkSpec {
       .resolve("t").toString
     val dimRoot = java.nio.file.Files.createTempDirectory("graft-lake-pbdim")
       .resolve("t").toString
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // the standard 100 TB fact layout: date-ish partitions (scan
-      // prunes to the queried range) AND hash buckets on the join key
-      // (the join needs no exchange) — on LAKE tables now, so OCC,
-      // time travel and COW maintenance ride along
-      val fact = (1L to 400L).map(k => (k, 1995L + k % 4, k % 37))
-        .toDF("k", "y", "u")
-      Lake.commitOverwrite(fact, factRoot, retain = 8,
-        partitionBy = Seq("y"), bucketBy = Some((4, Seq("u"))))
-      val dim = (0L until 37L).map(u => (u, s"user$u")).toDF("u", "name")
-      Lake.commitOverwrite(dim, dimRoot, retain = 8,
-        bucketBy = Some((4, Seq("u"))))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the standard 100 TB fact layout: date-ish partitions (scan
+    // prunes to the queried range) AND hash buckets on the join key
+    // (the join needs no exchange) — on LAKE tables now, so OCC,
+    // time travel and COW maintenance ride along
+    val fact = (1L to 400L).map(k => (k, 1995L + k % 4, k % 37))
+      .toDF("k", "y", "u")
+    Lake.commitOverwrite(fact, factRoot, retain = 8,
+      partitionBy = Seq("y"), bucketBy = Some((4, Seq("u"))))
+    val dim = (0L until 37L).map(u => (u, s"user$u")).toDF("u", "name")
+    Lake.commitOverwrite(dim, dimRoot, retain = 8,
+      bucketBy = Some((4, Seq("u"))))
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def joined() = Lake.sqlTable(spark, factRoot)
         .where(col("y") === 1996L)
         .join(Lake.readBucketed(spark, dimRoot), Seq("u"))
@@ -338,8 +325,6 @@ class BucketingSpec extends SparkSpec {
       }
       assertShape(joined(), expect2)
       assert(Lake.partitionValues(spark, factRoot).count() === 4L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
   }
 
