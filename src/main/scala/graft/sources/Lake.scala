@@ -214,16 +214,10 @@ object Lake
   }
 
   // Manifest body = newline-separated data-dir names, plus optional
-  // `#`-prefixed metadata lines. `#schema=<DataType json>` records the
-  // committed table schema: appends MERGE it (add-nullable-column
-  // evolution) and readers pass it to the scan explicitly — which both
-  // makes mixed-schema snapshots read correctly (files missing a
-  // column yield NULLs) and skips footer-based schema inference
-  // entirely (at 100 TB, one manifest read instead of a
-  // list-and-read-footers job). Manifests written before this line
-  // existed read as before (inferred schema).
-  private[sources] val SchemaPrefix = "#schema="
-
+  // `#`-prefixed metadata lines: TABLE-LEVEL ones ([[TableMeta]] — the
+  // committed schema, layout, constraints, properties, allocator
+  // marks) and PER-DIR ones (stats, blooms, partition values, DVs).
+  //
   // A manifest (`_commit_<v>`) is IMMUTABLE once published — the
   // protocol renames it in atomically and only ever DELETES it — but
   // the accessors below each parse it independently, so one relation
@@ -302,7 +296,6 @@ object Lake
   // forward-compat channel for OPTIONAL metadata (stats, blooms,
   // props — losing them degrades performance, never correctness).
   // Legacy manifests have no `#require=` line and read unchanged.
-  private[sources] val RequirePrefix = "#require="
 
   /** Reader/writer features this build understands: merge-on-read
     * deletion vectors, column mapping (rename/drop as metadata),
@@ -317,29 +310,17 @@ object Lake
       "bucket", "partevo", "ingest", "default", "gencol", "rowtracking",
       "seg")
 
-  private[sources] def checkRequiredFeatures(p: Path, lines: Seq[String]): Unit =
-    lines.find(_.startsWith(RequirePrefix)).foreach { l =>
-      val unknown = l.stripPrefix(RequirePrefix).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).filterNot(SupportedFeatures).toSeq
-      if (unknown.nonEmpty) throw new UnsupportedOperationException(
-        s"the manifest $p requires table feature(s) " +
-          unknown.sorted.mkString("[", ", ", "]") +
-          " this build does not support — reading (or committing on " +
-          "top) would silently misinterpret the snapshot, e.g. " +
-          "resurrect soft-deleted rows or misread remapped columns; " +
-          "upgrade the engine to one that lists them in " +
-          "Lake.SupportedFeatures")
-    }
-
-  /** The features a manifest declares REQUIRED (empty for legacy /
-    * feature-free snapshots) — the readable face of the gate, surfaced
-    * by DESCRIBE DETAIL. */
-  private[sources] def manifestRequires(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(RequirePrefix))
-      .map(_.stripPrefix(RequirePrefix).split(",").iterator
-        .map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+  private[sources] def checkRequiredFeatures(p: Path, lines: Seq[String]): Unit = {
+    val unknown = TableMeta.requiresOf(lines).filterNot(SupportedFeatures)
+    if (unknown.nonEmpty) throw new UnsupportedOperationException(
+      s"the manifest $p requires table feature(s) " +
+        unknown.sorted.mkString("[", ", ", "]") +
+        " this build does not support — reading (or committing on " +
+        "top) would silently misinterpret the snapshot, e.g. " +
+        "resurrect soft-deleted rows or misread remapped columns; " +
+        "upgrade the engine to one that lists them in " +
+        "Lake.SupportedFeatures")
+  }
 
   // ---- tiered manifests (the Iceberg manifest-list shape) -----------
   //
@@ -494,15 +475,22 @@ object Lake
     lines
   }
 
-  /** TABLE-LEVEL manifest lines (`#schema=`, `#prop_`, `#check=`,
-    * `#identity=`, …). Segments carry ONLY per-dir metadata, so every
-    * table-level line lives INLINE in the marker body — reading them
-    * through the raw body keeps metadata lookups O(batch + log n) on
-    * tiered tables instead of forcing the O(dirs) segment expansion
-    * [[manifestBody]] pays. Per-dir accessors (stats/blooms/parts/dvs/
-    * dirs) MUST keep reading the expanded body. */
-  private[sources] def manifestMeta(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[String] = manifestBodyRaw(fs, r, v)
+  /** The table-level state of snapshot `v`: ONE [[TableMeta]] parse
+    * of the RAW body per manifest (table-level lines live inline, so
+    * tiered tables never pay the segment expansion for it), memoized
+    * and validated like the derived views. Per-dir accessors (stats/
+    * blooms/parts/dvs/dirs) MUST keep reading the expanded body. */
+  private[graft] def tableMeta(fs: org.apache.hadoop.fs.FileSystem,
+      r: Path, v: Long): TableMeta =
+    memoOf(tableMetaCache, fs, r, v, "meta")(
+      TableMeta.parse(manifestBodyRaw(fs, r, v)))
+
+  /** The LIVE (latest committed) snapshot's table-level state; empty
+    * when the root holds no commit yet. */
+  private[sources] def liveMeta(fs: org.apache.hadoop.fs.FileSystem,
+      r: Path): TableMeta =
+    committedVersions(fs, r).lastOption.map(tableMeta(fs, r, _))
+      .getOrElse(TableMeta.empty)
 
   // expanded bodies cached separately: validated by the MANIFEST's
   // (modTime, length) — the segments it references are immutable.
@@ -614,20 +602,31 @@ object Lake
       kind: String): String =
     fs.getUri.toString + "::" + fs.makeQualified(p).toUri.getPath + "::" + kind
 
-  private[sources] def derivedOf[T <: AnyRef](
+  // parsed table-level state, one small entry per manifest — kept
+  // apart from the derived views so it never competes with their
+  // O(dirs) budget
+  private[graft] val tableMetaCache =
+    new MetaCache[AnyRef](manifestCacheMax, manifestCacheMax.toLong, _ => 1L)
+
+  private def memoOf[T <: AnyRef](cache: MetaCache[AnyRef],
       fs: org.apache.hadoop.fs.FileSystem, r: Path, v: Long, kind: String)(
-      build: Seq[String] => T): T = {
+      build: => T): T = {
     val p = new Path(r, s"_commit_$v")
     val st = fs.getFileStatus(p)
     val key = derivedKey(fs, p, kind)
-    derivedCache.get(key, st.getModificationTime, st.getLen) match {
+    cache.get(key, st.getModificationTime, st.getLen) match {
       case Some(hit) => return hit.asInstanceOf[T]
       case None =>
     }
-    val out = build(manifestBody(fs, r, v))
-    derivedCache.put(key, st.getModificationTime, st.getLen, out)
+    val out = build
+    cache.put(key, st.getModificationTime, st.getLen, out)
     out
   }
+
+  private[sources] def derivedOf[T <: AnyRef](
+      fs: org.apache.hadoop.fs.FileSystem, r: Path, v: Long, kind: String)(
+      build: Seq[String] => T): T =
+    memoOf(derivedCache, fs, r, v, kind)(build(manifestBody(fs, r, v)))
 
   /** Seed the derived-view memo for a version the COMMIT path just
     * published, with views derived INCREMENTALLY from the previous
@@ -655,6 +654,7 @@ object Lake
     manifestCache.clear()
     expandedCache.clear()
     derivedCache.clear()
+    tableMetaCache.clear()
   }
 
   /** TEST SEAM: the six derived views of one snapshot, as the
@@ -676,11 +676,4 @@ object Lake
       val dirs = body.filterNot(_.startsWith("#"))
       if (dirs.isEmpty) Seq(s"v$v") else dirs // body-less back-compat
     }
-
-  private[sources] def manifestSchema(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestMeta(fs, r, v).find(_.startsWith(SchemaPrefix))
-      .map(l => org.apache.spark.sql.types.DataType
-        .fromJson(l.stripPrefix(SchemaPrefix))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
 }

@@ -41,7 +41,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
   private def maybeAutoCompact(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: Path, root: String): Unit =
     try {
-      liveProps(fs, r).get(PropAutoCompact).flatMap(_.toIntOption)
+      liveMeta(fs, r).props.get(PropAutoCompact).flatMap(_.toIntOption)
         .foreach { threshold =>
           val small = committedVersions(fs, r).lastOption.map { v =>
             manifestDirs(fs, r, v).count { d =>
@@ -62,15 +62,13 @@ private[graft] trait LakeCommits { this: Lake.type =>
           .warn(s"auto-compact after append on $root skipped: $e")
     }
 
-  private[sources] def effectivePartCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+  private[sources] def effectivePartCols(prev: TableMeta,
       want: Seq[String]): Seq[String] = {
     // same grammar guard as stats/bloom columns: the list rides a
     // comma-separated manifest line, so these characters would write a
     // malformed #partcols line (a newline even injects a bogus body line)
     want.foreach(c => require(!c.exists("=,\n#".contains(_)),
       s"partition column name '$c' may not contain '=', ',', '#', or newline"))
-    val prev = committedVersions(fs, r).lastOption
-      .map(v => manifestPartCols(fs, r, v)).getOrElse(Nil)
     // FORWARD-ONLY partition evolution (Iceberg's spec evolution,
     // without a rewrite): a commit may RE-DECLARE the layout — the new
     // `#partcols` governs how THIS and future commits stage, while
@@ -84,7 +82,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // under the CURRENT declaration. Old builds read evolved tables
     // safely through the same keep-when-untupled rule, so evolution
     // stamps no `#require=` feature.
-    if (want.isEmpty) prev else want
+    if (want.isEmpty) prev.partCols else want
   }
 
   /** Types a partition value can normalize to (the [[normLit]] set) —
@@ -161,7 +159,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // bucket args, which come from the manifest) are PHYSICAL. Under
     // id-mode the tree additionally stamps each known field's
     // parquet.field.id into the staged files (write-side provenance).
-    val df = toPhysicalDf(df0, colMap, liveColMap2(fs, r))
+    val df = toPhysicalDf(df0, colMap, liveMeta(fs, r).colMap2)
     // optimize-write (Delta's): with the table property on, each
     // slice coalesces to ceil(est/128 MB) files instead of one file
     // per shuffle partition — a 32-thread tiny append stages ONE
@@ -170,7 +168,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // huge size estimate leaves the slice untouched (never funnel a
     // big batch into too few write tasks on a bad estimate).
     val optimizeWrite = bucketBy.isEmpty &&
-      liveProps(fs, r).get(PropOptimizeWrite).contains("true")
+      liveMeta(fs, r).props.get(PropOptimizeWrite).contains("true")
     def sized(slice: org.apache.spark.sql.DataFrame):
         org.apache.spark.sql.DataFrame =
       if (!optimizeWrite) slice
@@ -545,17 +543,18 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // depends on, so refuse up front instead of corrupting reads
     val ffs = fsFor(spark, root)
     committedVersions(ffs, new Path(root)).lastOption.foreach { last =>
-      require(manifestBucketBy(ffs, new Path(root), last).isEmpty,
+      val m = tableMeta(ffs, new Path(root), last)
+      require(m.bucketBy.isEmpty,
         s"the table at $root declares a bucket layout — fold commits " +
           "pre-write plain version dirs and cannot preserve it; fold " +
           "into an unbucketed table (or use the append/CDC-merge sinks, " +
           "which stage through the bucketed writer)")
-      require(manifestColMap(ffs, new Path(root), last).isEmpty,
+      require(m.colMap.isEmpty,
         s"the table at $root carries a column mapping (renamed/dropped " +
           "columns) — fold commits pre-write data dirs under the " +
           "stream's own column names and cannot apply the map; fold " +
           "into an unmapped table")
-      require(manifestRowId(ffs, new Path(root), last).isEmpty,
+      require(m.rowId.isEmpty,
         s"the table at $root carries row tracking — fold commits " +
           "pre-write data dirs outside the allocator choke point and " +
           "would commit rows with no ids (breaking keyless-feed " +
@@ -600,140 +599,69 @@ private[graft] trait LakeCommits { this: Lake.type =>
     * then pruned), false when a concurrent writer committed `version`
     * first — the caller decides whether to rebase-and-retry (append),
     * refuse (overwrite/maintenance), or treat it as a protocol
-    * violation (single-writer folds). */
+    * violation (single-writer folds).
+    *
+    * Table-level state starts from the previous snapshot's
+    * [[TableMeta]] and passes through `meta`: the commit's own changes
+    * (a layout declaration, a constraint, an advanced allocator mark,
+    * a restore's target state); whatever it leaves alone inherits.
+    * `schema`, `rows` and `op` are per-commit and never inherit — a
+    * `None` writes no line. */
   private[sources] def commitManifest(fs: org.apache.hadoop.fs.FileSystem, r: Path,
       version: Long, dirs: Seq[String], retain: Int,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       rows: Option[Long] = None,
       newStats: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil,
       newFileStats: Map[String, Map[String, String]] = Map.empty,
       newBlooms: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil,
       newParts: Map[String, String] = Map.empty,
-      partCols: Seq[String] = Nil,
-      bucketBy: Option[(Int, Seq[String])] = None,
-      checks: Option[Seq[(String, String)]] = None,
       newDvs: Map[String, String] = Map.empty,
       dvsReplace: Boolean = false,
-      colMap: Option[Map[String, String]] = None,
+      meta: TableMeta => TableMeta = identity,
       colMap2Carry: Map[String, String] = Map.empty,
       colMap2Establish: Boolean = false,
-      colMap2Replace: Option[Option[ColMapV2]] = None,
-      retiredCols: Option[Seq[String]] = None,
-      genParts: Option[Seq[(String, String)]] = None,
-      genTz: Option[String] = None,
-      statsColsReplace: Option[Seq[String]] = None,
-      bloomColsReplace: Option[Seq[String]] = None,
-      partColsReplace: Option[Seq[String]] = None,
-      genCols: Option[Seq[(String, String)]] = None,
-      props: Option[Map[String, String]] = None,
-      identity: Option[Option[(String, Long)]] = None,
-      idMode: Option[Option[String]] = None,
-      ingested: Option[Seq[String]] = None,
-      rowId: Option[Long] = None,
-      rowIdReplace: Boolean = false,
+      colMap2Replace: Boolean = false,
       op: String = "commit"): Boolean = {
     // stats carry: a dir REUSED from the previous snapshot keeps its
     // stats line verbatim (immutable dir, immutable range); only dirs
     // this commit wrote get fresh lines. Resolved BEFORE the rename
-    // makes this version the latest.
+    // makes this version the latest. Bloom, file-stat and partition
+    // lines carry exactly the same way.
     val prevV = committedVersions(fs, r).lastOption
     val prevStats = prevV
       .map(v => manifestStatsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
     val prevFileStats = prevV
       .map(v => manifestFileStatsRaw(fs, r, v))
       .getOrElse(Map.empty[String, Map[String, String]])
-    // the stat-column line itself inherits too, so a commit path that
-    // computes no stats (e.g. the streaming fold's commitVersion)
-    // doesn't sever the chain — its new dir is merely unstat'd
-    val effCols = statsColsReplace.getOrElse(
-      if (statsCols.nonEmpty) statsCols
-      else prevV.map(v => manifestStatsCols(fs, r, v)).getOrElse(Nil))
-    // bloom lines carry exactly like stats lines: reused dirs keep
-    // their serialized filters verbatim (immutable dir, immutable
-    // membership), only dirs this commit wrote get fresh ones
     val prevBlooms = prevV
       .map(v => manifestBloomsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
-    val effBloom = bloomColsReplace.getOrElse(
-      if (bloomCols.nonEmpty) bloomCols
-      else prevV.map(v => manifestBloomCols(fs, r, v)).getOrElse(Nil))
-    // partition lines carry exactly like stats lines (immutable dir,
-    // immutable values); the column line inherits so COW rewrites and
-    // folds never sever the table's declared layout
     val prevParts = prevV
       .map(v => manifestPartsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
-    val effPart = partColsReplace.getOrElse(
-      if (partCols.nonEmpty) partCols
-      else prevV.map(v => manifestPartCols(fs, r, v)).getOrElse(Nil))
-    // the bucket layout inherits like the other table-property lines
-    val effBucket = bucketBy.orElse(prevV.flatMap(v => manifestBucketBy(fs, r, v)))
-    // CHECK constraints inherit too; Some(…) replaces (add/drop)
-    val effChecks = checks.getOrElse(
-      prevV.map(v => manifestChecks(fs, r, v)).getOrElse(Nil))
-    // the column map and retired-physical-name set inherit like every
-    // table-property line; Some(…) replaces (rename/drop/evolution)
-    val effColMap = colMap.getOrElse(
-      prevV.map(v => manifestColMap(fs, r, v)).getOrElse(Map.empty))
-    val effRetired = retiredCols.getOrElse(
-      prevV.map(v => manifestRetired(fs, r, v)).getOrElse(Nil))
+    val upd = meta(prevV.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty))
     // the id-mode field tree (#colmap2) RECONCILES at this one choke
     // point: fields of the committed schema keep their ids (matched by
     // container + logical name, or through the rename carry), new
     // fields mint, vanished fields tombstone — so every schema-shaping
     // path (append evolution, overwrite, merge, DDL) maintains the
-    // tree without knowing it exists. RESTORE/clone pass the target
-    // version's tree AUTHORITATIVELY.
-    val prevV2 = prevV.flatMap(v => manifestColMap2(fs, r, v))
-    val effV2: Option[ColMapV2] = colMap2Replace match {
-      case Some(v2) => v2
-      case None =>
-        if (prevV2.isEmpty && !colMap2Establish) None
-        else schema match {
-          case Some(s) =>
-            Some(reconcileColMap2(prevV2, s, effColMap, colMap2Carry))
-          case None => prevV2
-        }
-    }
-    // generated columns inherit like every table-property line
-    val effGen = genParts.getOrElse(
-      prevV.map(v => manifestGenParts(fs, r, v)).getOrElse(Nil))
-    // plain (non-partition) generated columns: same inheritance
-    val effGenCols = genCols.getOrElse(
-      prevV.map(v => manifestGenCols(fs, r, v)).getOrElse(Nil))
-    val effGenTz = genTz.orElse(prevV.flatMap(v => manifestGenTz(fs, r, v)))
-    // user/table properties inherit; Some(…) replaces (the DDL)
-    val effProps = props.getOrElse(
-      prevV.map(v => manifestProps(fs, r, v)).getOrElse(Map.empty))
-    // the identity declaration + high-water mark inherit; Some(…)
-    // replaces (allocating commits advance the mark ATOMICALLY with
-    // the rows that consumed it; restore re-points both)
-    val effIdentity = identity.getOrElse(
-      prevV.flatMap(v => manifestIdentity(fs, r, v)))
-    // the identity MODE (GENERATED ALWAYS vs BY DEFAULT) inherits with
-    // the declaration; Some(…) replaces (declaration / restore)
-    val effIdMode = idMode.getOrElse(
-      prevV.flatMap(v => manifestIdMode(fs, r, v)))
-      .filter(_ => effIdentity.nonEmpty)
-    // the COPY INTO file ledger inherits (a plain append between two
-    // COPYs must not amnesia the loaded set); Some(…) replaces
-    val effIngested = ingested.getOrElse(
-      prevV.map(v => manifestIngested(fs, r, v)).getOrElse(Nil))
-    // the row-id high-water mark inherits (metadata commits and COW
-    // rewrites allocate nothing); Some(n) advances it atomically with
-    // the rows that consumed the block. `rowIdReplace` (RESTORE) makes
-    // the passed value AUTHORITATIVE — including None, so restoring to
-    // a pre-tracking version restores to untracked (the identity rule:
-    // marks consumed by restored-away rows become reusable)
-    val effRowId =
-      if (rowIdReplace) rowId
-      else rowId.orElse(prevV.flatMap(v => manifestRowId(fs, r, v)))
+    // tree without knowing it exists. `colMap2Establish` starts a tree
+    // on a table without one. RESTORE/clone pass the target version's
+    // tree AUTHORITATIVELY (`colMap2Replace`).
+    val effV2: Option[ColMapV2] =
+      if (colMap2Replace) upd.colMap2
+      else if (upd.colMap2.isEmpty && !colMap2Establish) None
+      else schema match {
+        case Some(s) =>
+          Some(reconcileColMap2(upd.colMap2, s, upd.colMap, colMap2Carry))
+        case None => upd.colMap2
+      }
+    val m = upd.copy(schema = schema, rows = rows, op = Some(op),
+      colMap2 = effV2, idMode = upd.idMode.filter(_ => upd.identity.nonEmpty))
     // retention is TABLE state (graft.retain) unless this call passed
-    // an explicit override — resolved against effProps, so a commit
-    // that SETS the property is already governed by it
+    // an explicit override — resolved against the committed props, so
+    // a commit that SETS the property is already governed by it
     val retainEff =
       if (retain >= 0) retain
-      else effProps.get(PropRetain).flatMap(_.toIntOption)
+      else m.props.get(PropRetain).flatMap(_.toIntOption)
         .filter(_ >= 0).getOrElse(1)
     // deletion vectors: the one MUTABLE per-dir line. Normal commits
     // carry a reused dir's vector (new deletes pass the merged set in
@@ -767,28 +695,18 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // that materializes a feature away — REORG purging the last DV,
     // say — drops the requirement with it). Readers that don't
     // recognize a named feature refuse the manifest instead of
-    // misreading it; see RequirePrefix.
+    // misreading it; why each one bears semantics is on its
+    // [[TableMeta]] field.
     val features =
       (if (hasDv) Seq("dv") else Nil) ++
-      (if (effColMap.nonEmpty || effRetired.nonEmpty) Seq("colmap") else Nil) ++
-      // the id tree is semantics-bearing: a build without it would
-      // drop the tree on commit-on-top, losing the tombstones that
-      // keep dropped nested bytes unreachable on re-add
-      (if (effV2.nonEmpty) Seq("colmap2") else Nil) ++
-      (if (effIdentity.nonEmpty) Seq("identity") else Nil) ++
-      // BY DEFAULT mode: an old build committing on top would drop the
-      // #idmode line and silently revert the allocator to ALWAYS
-      (if (effIdMode.nonEmpty) Seq("idmode") else Nil) ++
-      (if (effGen.nonEmpty) Seq("genpart") else Nil) ++
-      // plain generated columns are semantics-bearing the same way:
-      // an old build's omitting append would commit them NULL
-      (if (effGenCols.nonEmpty) Seq("gencol") else Nil) ++
-      (if (effBucket.nonEmpty) Seq("bucket") else Nil) ++
-      // the #ingested= ledger is SEMANTICS-BEARING for COPY INTO
-      // idempotency: a pre-ingest build committing on top would
-      // rebuild the manifest body without the ledger, after which a
-      // re-run COPY INTO re-loads every landing file and doubles rows
-      (if (effIngested.nonEmpty) Seq("ingest") else Nil) ++
+      (if (m.colMap.nonEmpty || m.retired.nonEmpty) Seq("colmap") else Nil) ++
+      (if (m.colMap2.nonEmpty) Seq("colmap2") else Nil) ++
+      (if (m.identity.nonEmpty) Seq("identity") else Nil) ++
+      (if (m.idMode.nonEmpty) Seq("idmode") else Nil) ++
+      (if (m.genParts.nonEmpty) Seq("genpart") else Nil) ++
+      (if (m.genCols.nonEmpty) Seq("gencol") else Nil) ++
+      (if (m.bucketBy.nonEmpty) Seq("bucket") else Nil) ++
+      (if (m.ingested.nonEmpty) Seq("ingest") else Nil) ++
       // column DEFAULTs ride as field metadata inside #schema: a
       // pre-default build would read files predating the column as
       // NULL and append omitted columns as NULL — wrong rows, not
@@ -797,9 +715,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
           f.metadata.contains(DefaultExistsKey) ||
           f.metadata.contains(DefaultCurrentKey)))) Seq("default")
        else Nil) ++
-      // row tracking: an old build's append would not stamp ids,
-      // silently breaking keyless update pairing for every consumer
-      (if (effRowId.nonEmpty) Seq("rowtracking") else Nil)
+      (if (m.rowId.nonEmpty) Seq("rowtracking") else Nil)
     // ---- tiered layout (the protocol note in Lake.scala) -------------
     //
     // Decide whether this snapshot's per-dir metadata rides inline
@@ -808,11 +724,11 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // table size. All decisions run on SET logic over cached lines —
     // no per-dir string building except for dirs this commit actually
     // touched.
-    val segThreshold = effProps.get(PropSegThreshold).flatMap(_.toIntOption)
+    val segThreshold = m.props.get(PropSegThreshold).flatMap(_.toIntOption)
       .filter(_ > 0).getOrElse(2048)
-    val segMax = effProps.get(PropSegMax).flatMap(_.toIntOption)
+    val segMax = m.props.get(PropSegMax).flatMap(_.toIntOption)
       .filter(_ > 1).getOrElse(64)
-    val segWaste = effProps.get(PropSegWaste).flatMap(_.toDoubleOption)
+    val segWaste = m.props.get(PropSegWaste).flatMap(_.toDoubleOption)
       .filter(w => w > 0 && w <= 1).getOrElse(0.3)
     // plain java.util.HashSet, not dirs.toSet: at 10^6 dirs the scala
     // immutable builder + boxed-equality lookups were the commit's
@@ -980,40 +896,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val tmp = new Path(r, s"_commit_$version." +
       java.util.UUID.randomUUID().toString.take(8) + ".tmp")
     val out = fs.create(tmp, true)
-    val body = (if (tiered) Nil else dirs) ++ Seq(OpPrefix + op) ++
-      Seq(TsPrefix + System.currentTimeMillis()) ++
-      schema.map(s => SchemaPrefix + s.json) ++
-      rows.map(n => RowsPrefix + n) ++
-      (if (effCols.nonEmpty) Seq(StatsColsPrefix + effCols.mkString(","))
-       else Nil) ++
-      (if (effBloom.nonEmpty) Seq(BloomColsPrefix + effBloom.mkString(","))
-       else Nil) ++
-      (if (effPart.nonEmpty) Seq(PartColsPrefix + effPart.mkString(","))
-       else Nil) ++
-      effBucket.map { case (n, cols) =>
-        BucketByPrefix + n + ":" + cols.mkString(",")
-      } ++
-      effChecks.map { case (n, e) => CheckPrefix + n + ":" + e } ++
-      // under id-mode the flat map is DERIVED from the tree on read —
-      // writing both would be a dual source of truth
-      (if (effColMap.nonEmpty && effV2.isEmpty)
-        Seq(ColMapPrefix + effColMap.toSeq.sorted
-          .map { case (l, p) => s"$l:$p" }.mkString(","))
-       else Nil) ++
-      effV2.map(v2 => ColMap2Prefix + colMap2Json(v2)).toSeq ++
-      (if (effRetired.nonEmpty) Seq(ColRetiredPrefix + effRetired.mkString(","))
-       else Nil) ++
-      effGen.map { case (c, e) => GenPartPrefix + c + ":" + e } ++
-      effGenCols.map { case (c, e) => GenColPrefix + c + ":" + e } ++
-      (if (effGen.nonEmpty || effGenCols.nonEmpty)
-        effGenTz.map(GenTzPrefix + _).toSeq else Nil) ++
-      effProps.toSeq.sortBy(_._1).map { case (k, v) => PropPrefix + k + "=" + v } ++
-      effIdentity.map { case (c, n) => IdentityPrefix + c + ":" + n } ++
-      effIdMode.map(IdModePrefix + _).toSeq ++
-      effRowId.map(RowIdPrefix + _) ++
-      effIngested.map(IngestedPrefix + _) ++
-      (if (featuresAll.nonEmpty) Seq(RequirePrefix + featuresAll.mkString(","))
-       else Nil) ++
+    val body = (if (tiered) Nil else dirs) ++
+      TableMeta.render(m.copy(ts = Some(System.currentTimeMillis()),
+        requires = featuresAll)) ++
       (if (!tiered) dirs.flatMap(linesFor)
        else carriedSegs.map(c => SegPrefix + c.name + ":" + c.liveDirs.size) ++
          newSegName.map(n => SegPrefix + n + ":" + residual.size).toSeq ++
@@ -1071,6 +956,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
     true
   }
 
+  /** The table-level state a layout-only rewrite's staged files
+    * FREEZE under: column map and id tree, retired names, stat / bloom
+    * / partition column lists, bucket layout, generated columns — and
+    * allocator PRESENCE (a rewrite staged on an untracked /
+    * identity-free base carries no id columns; retrying onto a
+    * snapshot that enabled either would commit id-less rows). */
+  private def frozenLayout(m: TableMeta) =
+    (m.colMap, m.colMap2, m.retired, m.statsCols, m.bloomCols, m.partCols,
+      m.bucketBy, m.genParts, m.genCols, m.rowId.isDefined, m.identity.isDefined)
+
   /** Layout-only maintenance OCC rebase (Delta's disjoint-file
     * conflict rule): a compaction / z-order / REORG purge that lost
     * its version slot may RETRY on top of the interleaved commits —
@@ -1082,8 +977,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     *  - the source dirs' deletion vectors are unchanged (the rewrite
     *    materialized the vector it READ);
     *  - the table-level metadata the staged files froze under is
-    *    unchanged (column map / retired names / stat, bloom and
-    *    partition column lists / bucket layout / generated columns).
+    *    unchanged ([[frozenLayout]]).
     *
     * Anything else — plain appends above all, but also disjoint
     * maintenance — composes: the retry publishes (current live dirs −
@@ -1114,28 +1008,13 @@ private[graft] trait LakeCommits { this: Lake.type =>
         "raced a deletion-vector commit on its source dirs — the " +
           "rewrite materialized a vector that is no longer current; " +
           "re-run against the current table")
-      val metaSame =
-        manifestColMap(fs, r, curV) == manifestColMap(fs, r, baseV) &&
-          manifestColMap2(fs, r, curV) == manifestColMap2(fs, r, baseV) &&
-          manifestRetired(fs, r, curV) == manifestRetired(fs, r, baseV) &&
-          manifestStatsCols(fs, r, curV) == manifestStatsCols(fs, r, baseV) &&
-          manifestBloomCols(fs, r, curV) == manifestBloomCols(fs, r, baseV) &&
-          manifestPartCols(fs, r, curV) == manifestPartCols(fs, r, baseV) &&
-          manifestBucketBy(fs, r, curV) == manifestBucketBy(fs, r, baseV) &&
-          manifestGenParts(fs, r, curV) == manifestGenParts(fs, r, baseV) &&
-          manifestGenCols(fs, r, curV) == manifestGenCols(fs, r, baseV) &&
-          // allocator PRESENCE: a rewrite staged on an untracked /
-          // identity-free base carries no id columns — retrying onto a
-          // snapshot that enabled either would commit id-less rows
-          manifestRowId(fs, r, curV).isDefined ==
-            manifestRowId(fs, r, baseV).isDefined &&
-          manifestIdentity(fs, r, curV).isDefined ==
-            manifestIdentity(fs, r, baseV).isDefined
+      val curMeta = tableMeta(fs, r, curV)
+      val metaSame = frozenLayout(curMeta) == frozenLayout(tableMeta(fs, r, baseV))
       if (!metaSame) throw cme(
         "raced a metadata commit (mapping/layout DDL) — the staged " +
           "files froze under the previous metadata; re-run against the " +
           "current table")
-      (curV + 1, live, manifestSchema(fs, r, curV), manifestRows(fs, r, curV))
+      (curV + 1, live, curMeta.schema, curMeta.rows)
     } catch {
       case _: java.io.FileNotFoundException => throw cme(
         "raced a retention prune past its base snapshot — the " +
@@ -1263,19 +1142,17 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // (same discipline and rationale as commitAppend's preV; the slot
     // resolution past staging lists fresh).
     val preV: Seq[Long] = committedVersions(fs, r)
-    val preLast: Option[Long] = preV.lastOption
+    val pre = preV.lastOption.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
     // IDENTITY: materialize FIRST (a generated/partition column may
     // derive from the key). An establishing batch may SEED the
     // sequence with its own unique values; afterwards the column is
     // GENERATED ALWAYS — batches omit it, the allocator owns it.
-    val effIdCol = effectiveIdentityCol(fs, r, identity)
-    val prevHwm = preLast
-      .flatMap(v => manifestIdentity(fs, r, v)).map(_._2)
+    val effIdCol = effectiveIdentityCol(r, pre, identity)
+    val prevHwm = pre.identity.map(_._2)
     // identity MODE: declared with the column (GENERATED BY DEFAULT =
     // allocator fills only omitted/NULL values), inherited afterwards,
     // divergent re-declaration refused — one mode per table
-    val prevIdMode = preLast
-      .flatMap(v => manifestIdMode(fs, r, v))
+    val prevIdMode = pre.idMode
     val wantIdMode = if (identityByDefault) Some("bydefault") else None
     require(identity.isDefined || !identityByDefault,
       "identityByDefault needs an identity declaration on this commit")
@@ -1285,7 +1162,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
           "a commit cannot re-declare it — one mode per table")
     val effIdMode = if (identity.isDefined) wantIdMode else prevIdMode
     val idByDefault = effIdCol.isDefined && effIdMode.contains("bydefault")
-    val effGen0 = effectiveGenParts(fs, r, generatedColumns)
+    val effGen0 = effectiveGenParts(r, pre, generatedColumns)
     // SQL INSERT OVERWRITE pads unnamed columns with NULL: an
     // all-NULL identity/generated copy means omitted (see
     // dropAllNullSpecials) — only an ESTABLISHING seed carries real
@@ -1349,15 +1226,13 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // the evaluation zone is pinned at ESTABLISHMENT — later commits
     // inherit it (a different writer session must not re-date it)
     val genTzEst =
-      if (generatedColumns.nonEmpty && preLast
-          .forall(v => manifestGenAll(fs, r, v).isEmpty))
+      if (generatedColumns.nonEmpty && pre.genAll.isEmpty)
         Some(spark.sessionState.conf.sessionLocalTimeZone)
       else None
     // row tracking: an overwrite's rows are all NEW — allocate a
     // fresh block past the inherited mark (ids never reuse across
     // history, so a time-traveling diff can't alias two generations)
-    val prevRidMark = preLast
-      .flatMap(v => manifestRowId(fs, r, v))
+    val prevRidMark = pre.rowId
     val ridEnabled = rowTracking || prevRidMark.isDefined
     if (ridEnabled) require(!dfId.columns.contains(RowIdCol),
       s"'$RowIdCol' is engine-owned under row tracking — the batch " +
@@ -1375,14 +1250,11 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // the surviving columns' physical names (its fresh files must
     // agree with the inherited property lines) and drops map entries
     // whose logical column the new schema no longer carries.
-    val liveMap = liveColMap(fs, r)
-    val retired0 =
-      preLast.map(v => manifestRetired(fs, r, v))
-        .getOrElse(Nil)
-    val effStats = effectiveStatsCols(fs, r, colsToPhysical(statsCols, liveMap))
-    val effBloom = effectiveBloomCols(fs, r, colsToPhysical(bloomCols, liveMap))
-    val effPart = effectivePartCols(fs, r, colsToPhysical(partitionBy, liveMap))
-    val effBucket = effectiveBucketBy(fs, r,
+    val liveMap = pre.colMap
+    val effStats = effectiveStatsCols(pre, colsToPhysical(statsCols, liveMap))
+    val effBloom = effectiveBloomCols(pre, colsToPhysical(bloomCols, liveMap))
+    val effPart = effectivePartCols(pre, colsToPhysical(partitionBy, liveMap))
+    val effBucket = effectiveBucketBy(r, pre,
       bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, liveMap)) })
     // CHECK constraints gate every row-introducing commit: one
     // aggregate job over the batch, BEFORE anything stages
@@ -1390,7 +1262,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val allocV = preV.maxOption.map(_ + 1).getOrElse(0L)
     val newMap = allocPhysical(df.schema,
       liveMap.filter { case (l, _) => df.columns.contains(l) },
-      retired0, allocV)
+      pre.retired, allocV)
     // data first, completely, under dirs no other writer contests
     // (one per partition-value tuple when the table is partitioned)
     val (staged, stats, blooms, parts) =
@@ -1403,18 +1275,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // state — so (unlike the pinSlot commits) a freshest-marker
     // allocation loses nothing to an interleaved commit it supersedes.
     val next = committedVersions(fs, r).maxOption.map(_ + 1).getOrElse(0L)
+    val (genParts, genCols) =
+      effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     if (!commitManifest(fs, r, next, staged, retain, Some(df.schema),
-        rowCount, stats, effStats, newBlooms = blooms, bloomCols = effBloom,
-        newParts = parts, partCols = effPart, bucketBy = effBucket,
-        colMap = Some(newMap),
-        genParts = Some(effGen.filter { case (c, _) =>
-          effPart.contains(physName(newMap, c)) }),
-        genCols = Some(effGen.filterNot { case (c, _) =>
-          effPart.contains(physName(newMap, c)) }),
-        genTz = genTzEst,
-        identity = effIdCol.map(c => Some((c, idNext.getOrElse(1L)))),
-        idMode = if (identity.isDefined) Some(effIdMode) else None,
-        rowId = ridNext,
+        rowCount, stats, newBlooms = blooms, newParts = parts,
+        meta = m => m.declaring(effStats, effBloom, effPart, effBucket).copy(
+          colMap = newMap, genParts = genParts, genCols = genCols,
+          genTz = genTzEst.orElse(m.genTz),
+          identity = effIdCol.fold(m.identity)(c => Some((c, idNext.getOrElse(1L)))),
+          idMode = if (identity.isDefined) effIdMode else m.idMode,
+          rowId = ridNext.orElse(m.rowId)),
         op = "overwrite")) {
       staged.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
@@ -1466,18 +1336,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // depends on freshness, these reads don't). At 10^5+ dirs a root
     // listing is ~10^2 ms, and this function used to take ~11 of them.
     val preV: Seq[Long] = committedVersions(fs, r)
-    val preLast: Option[Long] = preV.lastOption
-    val effGen = effectiveGenParts(fs, r, generatedColumns)
+    val pre = preV.lastOption.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
+    val effGen = effectiveGenParts(r, pre, generatedColumns)
     val genTzEst =
-      if (generatedColumns.nonEmpty && preLast
-          .forall(v => manifestGenAll(fs, r, v).isEmpty))
+      if (generatedColumns.nonEmpty && pre.genAll.isEmpty)
         Some(spark.sessionState.conf.sessionLocalTimeZone)
       else None
     // IDENTITY: a declared table allocates [mark, mark + n) here and
     // advances the mark in the SAME manifest write; the batch must
     // omit the column (GENERATED ALWAYS)
-    val effId = preLast
-      .flatMap(v => manifestIdentity(fs, r, v))
+    val effId = pre.identity
     // SQL `INSERT INTO t (named, cols)` pads every unnamed column
     // with NULL — an all-NULL identity/generated column therefore
     // means OMITTED (recompute/allocate, Delta's rule), while any
@@ -1490,9 +1358,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // (uniqueness against explicit values is NOT guaranteed — the
     // documented BY DEFAULT rule; it exists for migrations seeding
     // existing SERIAL keys)
-    val idByDefault = effId.isDefined &&
-      preLast
-        .flatMap(v => manifestIdMode(fs, r, v)).contains("bydefault")
+    val idByDefault = effId.isDefined && pre.idMode.contains("bydefault")
     val dfDropped = dropAllNullSpecials(batch, effGen, effId,
       establishing = preV.isEmpty)
     effId.foreach { case (c, _) =>
@@ -1533,8 +1399,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       } else (dfIn.count(), -1L)
     // row tracking: stamp the hidden id block like the identity block
     // (same allocator protocol, same OCC rebase below)
-    val ridMark0 = preLast
-      .flatMap(v => manifestRowId(fs, r, v))
+    val ridMark0 = pre.rowId
     if (ridMark0.isDefined) require(!dfIn.columns.contains(RowIdCol),
       s"'$RowIdCol' is engine-owned under row tracking — the append " +
         "batch must omit it")
@@ -1564,17 +1429,14 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // physical — and a batch adding NEW columns allocates them
     // physical names that can never collide with a mapped or retired
     // one (a re-add after rename/drop must not read old bytes)
-    val liveMap = liveColMap(fs, r)
-    val retired0 =
-      preLast.map(v => manifestRetired(fs, r, v))
-        .getOrElse(Nil)
-    val newMap = allocPhysical(df.schema, liveMap, retired0,
+    val liveMap = pre.colMap
+    val newMap = allocPhysical(df.schema, liveMap, pre.retired,
       preV.maxOption.map(_ + 1).getOrElse(0L))
-    val effStats = effectiveStatsCols(fs, r, colsToPhysical(statsCols, newMap))
-    val effBloom = effectiveBloomCols(fs, r, colsToPhysical(bloomCols, newMap))
+    val effStats = effectiveStatsCols(pre, colsToPhysical(statsCols, newMap))
+    val effBloom = effectiveBloomCols(pre, colsToPhysical(bloomCols, newMap))
     // a partitioned table's layout is a TABLE property: appends
     // inherit it and stage one dir per partition-value tuple
-    val effPart = effectivePartCols(fs, r, colsToPhysical(partitionBy, newMap))
+    val effPart = effectivePartCols(pre, colsToPhysical(partitionBy, newMap))
     // the bucket layout is a table property too: appends inherit it
     // and stage through the bucketed writer. A NEW declaration on an
     // append to an existing UNBUCKETED table refuses: earlier dirs
@@ -1582,14 +1444,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // to every bucketed scan — declare bucketBy on the table's first
     // commit, or re-layout the whole snapshot with commitOverwrite
     if (bucketBy.isDefined && preV.nonEmpty)
-      require(preLast
-          .flatMap(v => manifestBucketBy(fs, r, v)).isDefined,
+      require(pre.bucketBy.isDefined,
         s"an append cannot declare a bucket layout on the existing " +
           s"unbucketed table at $root — earlier dirs lack bucket file " +
           "naming; re-layout with commitOverwrite(bucketBy = …)")
-    val effBucket = effectiveBucketBy(fs, r,
+    val effBucket = effectiveBucketBy(r, pre,
       bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, newMap)) })
     validateChecks(fs, r, df, "append", effGen)
+    val (genParts, genCols) =
+      effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     // O(batch): stats only for the new dirs; reused dirs' lines carry
     var (staged, stats, blooms, parts) =
       stageBatch(spark, fs, r, df, effStats, effBloom, effPart,
@@ -1644,7 +1507,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
               // else that removed dirs (overwrite/merge/delete/
               // restore) changed ROWS this append may have derived
               // from: refuse.
-              lazy val rowPreserving = manifestOp(fs, r, b).exists(o =>
+              lazy val rowPreserving = tableMeta(fs, r, b).op.exists(o =>
                 o.startsWith("compact") || o.startsWith("zorder") ||
                   o.startsWith("reorg"))
               if (removed.nonEmpty && !rowPreserving) {
@@ -1675,8 +1538,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
       // entries merges; a concurrent rename/drop that moved a name
       // this batch staged under — or retired/claimed a physical name
       // this batch allocated — refuses (the staged bytes would lie).
-      val curMap = cur.map(v => manifestColMap(fs, r, v)).getOrElse(Map.empty)
-      val curRetired = cur.map(v => manifestRetired(fs, r, v)).getOrElse(Nil)
+      val curMeta = cur.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
+      val curMap = curMeta.colMap
+      val curRetired = curMeta.retired
       val ourNew = newMap -- liveMap.keys
       val mergedMap = curMap ++ ourNew
       // every staged column's PHYSICAL name — including identity-
@@ -1707,8 +1571,8 @@ private[graft] trait LakeCommits { this: Lake.type =>
       // the key column moves; this is what makes concurrent appends
       // to an identity table allocate disjoint ranges instead of
       // refusing)
-      val curMark = cur.flatMap(v => manifestIdentity(fs, r, v)).map(_._2)
-      val curRidMark = cur.flatMap(v => manifestRowId(fs, r, v))
+      val curMark = curMeta.identity.map(_._2)
+      val curRidMark = curMeta.rowId
       // allocator PRESENCE must match what this append staged under:
       // an enableRowTracking / identity-declaring overwrite (or a
       // RESTORE dropping either) that lands between this append's
@@ -1750,7 +1614,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       // without a schema line infers its schema once here, so its
       // first post-upgrade append migrates the table to
       // carried-schema reads.
-      val prevSchema = cur.flatMap(v => manifestSchema(fs, r, v))
+      val prevSchema = curMeta.schema
         .orElse(cur.map(v => spark.read.parquet(
           manifestDirs(fs, r, v).map(d => new Path(r, d).toString): _*).schema))
       val schema = prevSchema.map(mergeSchemas(_, df.schema)).getOrElse(df.schema)
@@ -1759,7 +1623,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       // (bootstrap: the batch count alone)
       val rows = rowCount.flatMap { n =>
         cur match {
-          case Some(v) => manifestRows(fs, r, v).map(_ + n)
+          case Some(_) => curMeta.rows.map(_ + n)
           case None    => Some(n)
         }
       }
@@ -1771,19 +1635,17 @@ private[graft] trait LakeCommits { this: Lake.type =>
         try commit catch {
           case e: IllegalStateException => dropStaged(); throw e
         }
+      val idMark = effId.map { case (c, _) =>
+        (c, math.max(idStart + idN, idMaxExplicit + 1L)) }
+      val ridMark = if (ridMark0.isDefined) Some(ridStart + ridN) else None
       if (publishOrClean(commitManifest(fs, r, next, prevDirs ++ staged, retain, Some(schema),
-          rows, stats, effStats, newBlooms = blooms, bloomCols = effBloom,
-          newParts = parts, partCols = effPart,
-          colMap = Some(mergedMap),
-          genParts = Some(effGen.filter { case (c, _) =>
-            effPart.contains(physName(newMap, c)) }),
-          genCols = Some(effGen.filterNot { case (c, _) =>
-            effPart.contains(physName(newMap, c)) }),
-          genTz = genTzEst,
-          identity = effId.map { case (c, _) =>
-            Some((c, math.max(idStart + idN, idMaxExplicit + 1L))) },
-          ingested = ingested,
-          rowId = if (ridMark0.isDefined) Some(ridStart + ridN) else None,
+          rows, stats, newBlooms = blooms, newParts = parts,
+          meta = m => m.declaring(effStats, effBloom, effPart).copy(
+            colMap = mergedMap, genParts = genParts, genCols = genCols,
+            genTz = genTzEst.orElse(m.genTz),
+            identity = idMark.orElse(m.identity),
+            ingested = ingested.getOrElse(m.ingested),
+            rowId = ridMark.orElse(m.rowId)),
           op = op))) {
         maybeAutoCompact(spark, fs, r, root)
         return next

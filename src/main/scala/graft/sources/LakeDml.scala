@@ -615,7 +615,7 @@ case class GraftCreateLakeTableCommand(nameParts: Seq[String], root: String,
         if (!Lake.commitManifest(fs, r, cur + 1,
             Lake.snapshotDirNames(session, root, cur), -1,
             Lake.snapshotSchema(session, root, cur), None,
-            identity = Some(Some((name, start))),
+            meta = _.copy(identity = Some((name, start))),
             op = s"identity start $start"))
           throw new java.util.ConcurrentModificationException(
             s"setting IDENTITY START WITH on $root lost its slot — " +

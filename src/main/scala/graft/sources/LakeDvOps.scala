@@ -183,7 +183,7 @@ private[graft] trait LakeDvOps { this: Lake.type =>
     // files store PHYSICAL names; the returned view serves LOGICAL
     // ones (the DV filter runs below the rename — it reads only
     // `_metadata`, and metadata columns propagate through the alias)
-    val map = manifestColMap(fs, r, version)
+    val map = tableMeta(fs, r, version).colMap
     val base = schema match {
       case Some(s) => spark.read.schema(physSchema(s, map)).parquet(paths: _*)
       case None    => spark.read.parquet(paths: _*)

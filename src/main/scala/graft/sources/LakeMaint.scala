@@ -49,7 +49,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // the raw -1 sentinel must never reach the splitAt arithmetic
     val retainEff =
       if (retain >= 0) retain
-      else liveProps(fs, r).get(PropRetain).flatMap(_.toIntOption)
+      else liveMeta(fs, r).props.get(PropRetain).flatMap(_.toIntOption)
         .filter(_ >= 0).getOrElse(1)
     val (pruned, swept) = pruneRetention(fs, r, retainEff, dryRun)
     val live = committedVersions(fs, r)
@@ -140,17 +140,18 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val r = new Path(root)
     val v = version.getOrElse(currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root")))
-    val partCols = manifestPartCols(fs, r, v)
+    val meta = tableMeta(fs, r, v)
+    val partCols = meta.partCols
     require(partCols.nonEmpty,
       s"table at $root declares no partition columns — partitionValues " +
         "reports the #partcols layout; commit with partitionBy to establish one")
-    val schema = manifestSchema(fs, r, v).getOrElse(
+    val schema = meta.schema.getOrElse(
       throw new java.util.NoSuchElementException(
         s"version $v at $root carries no schema line (legacy manifest) — " +
           "partition values cannot be typed"))
     // #partcols and #part_ keys are PHYSICAL; the schema (and this
     // function's output columns) use the LOGICAL names
-    val inv = manifestColMap(fs, r, v).map(_.swap)
+    val inv = meta.colMap.map(_.swap)
     def logical(c: String): String = inv.getOrElse(c, c)
     def fieldOf(c: String) = schema(logical(c))
     def decode(c: String, nv: Option[NormVal]): Any = nv match {
@@ -227,12 +228,13 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    val curMeta = tableMeta(fs, r, cur)
     val snapDirs = manifestDirs(fs, r, cur)
     // maintenance OCC: slot pinned before any job (see deleteWhere)
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
     val dvs = manifestDvsRaw(fs, r, cur)
-    val cmap = manifestColMap(fs, r, cur)
+    val cmap = curMeta.colMap
     // the predicate SHAPE gate runs even on a vector-free table (a
     // statement that would silently widen must refuse consistently):
     // an un-prunable predicate scopes NOTHING out and purges every
@@ -257,8 +259,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // automatically; the tombstone BOOKKEEPING stays (re-mint safety
     // is id-based, not byte-based).
     val deadPhys: Seq[Seq[String]] = {
-      val top = manifestRetired(fs, r, cur).map(Seq(_))
-      val nested = manifestColMap2(fs, r, cur).toSeq.flatMap { v2 =>
+      val top = curMeta.retired.map(Seq(_))
+      val nested = curMeta.colMap2.toSeq.flatMap { v2 =>
         val pp = scala.collection.mutable.Map(0 -> Seq.empty[String])
         v2.fields.foreach(f =>
           pp(f.id) = pp.getOrElse(f.container, Seq.empty) :+ f.phys)
@@ -302,16 +304,16 @@ private[graft] trait LakeMaint { this: Lake.type =>
         candidates.filter(in)
     }
     if (scoped.isEmpty) return cur
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     // DV-aware read: the rewrite MATERIALIZES the vectors (this is
     // the whole point) and re-stages layout-preserving
     val base = readDirsWithDv(spark, fs, r, cur, scoped, carried)
-    val effStats = effectiveStatsCols(fs, r, Nil)
-    val effBloom = effectiveBloomCols(fs, r, Nil)
-    val effPart = manifestPartCols(fs, r, cur)
+    val effStats = liveMeta(fs, r).statsCols
+    val effBloom = liveMeta(fs, r).bloomCols
+    val effPart = curMeta.partCols
     val (newDirs, stats, blooms, parts) =
       stageBatch(spark, fs, r, base, effStats, effBloom, effPart,
-        maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
+        maintenance = true, bucketBy = curMeta.bucketBy,
         colMap = cmap)
     preserveMarkers(fs, r, scoped, newDirs)
     // the purged dirs leave the dirs list, so their `#dv_` lines stop
@@ -322,12 +324,11 @@ private[graft] trait LakeMaint { this: Lake.type =>
     var nextV = next
     var pubDirs = snapDirs.filterNot(srcSet)
     var pubSchema = carried
-    var pubRows = manifestRows(fs, r, cur)
+    var pubRows = curMeta.rows
     var attempt = 0
     while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stats, effStats,
-        newBlooms = blooms, bloomCols = effBloom, newParts = parts,
-        op = "reorg purge")) {
+        pubSchema, pubRows, stats, newBlooms = blooms, newParts = parts,
+        meta = _.declaring(effStats, effBloom), op = "reorg purge")) {
       attempt += 1
       val rb =
         try maintenanceRebase(fs, r, root, cur, srcSet, "REORG purge")
@@ -400,11 +401,11 @@ private[graft] trait LakeMaint { this: Lake.type =>
       else fileStatsJson(spark, dir.toString, effStats)
         .getOrElse(("{}", Map.empty[String, String]))
     if (!commitManifest(fs, r, 0L, Seq("v0"), retain, Some(schema),
-        None, Map("v0" -> dirJson), effStats,
+        None, Map("v0" -> dirJson),
         newFileStats = Map("v0" -> fileJsons),
         newBlooms = dirBloomJson(spark, dir.toString, effBloom)
           .map("v0" -> _).toMap,
-        bloomCols = effBloom, op = "convert"))
+        meta = _.declaring(effStats, effBloom), op = "convert"))
       throw new java.util.ConcurrentModificationException(
         s"CONVERT of $root lost version 0 to a concurrent bootstrap — " +
           "the directory is already becoming a lake table; re-check it")
@@ -444,6 +445,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    val curMeta = tableMeta(fs, r, cur)
     val liveDirs = manifestDirs(fs, r, cur)
     def dirBytes(d: String): Long =
       fs.listStatus(new Path(r, d)).toSeq
@@ -461,7 +463,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // internal jobs plan at the compacted bytes' width
     val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(BigInt(total)))
     val n = Math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     val base =
       // RAW read: a layout rewrite must carry the hidden row-id
       // through (the stability contract the keyless feed pairs on)
@@ -470,19 +472,19 @@ private[graft] trait LakeMaint { this: Lake.type =>
       else readDirsWithDv(narrow, fs, r, cur, smallDirs, carried)
     val df = base.repartition(n)
     val next = pinSlot(fs, r, cur)
-    val effStats = effectiveStatsCols(fs, r, Nil)
-    val effBloom = effectiveBloomCols(fs, r, Nil)
+    val effStats = liveMeta(fs, r).statsCols
+    val effBloom = liveMeta(fs, r).bloomCols
     // compaction PRESERVES the declared partition layout: on a
     // partitioned table the collapse is per-value-tuple (small-files
     // cleanup within each partition; a partition hotter than
     // targetBytes stays one dir — split it by re-partitioning the
     // table key, not by breaking the layout), so partition pruning
     // survives maintenance instead of degrading to a full scan
-    val effPart = manifestPartCols(fs, r, cur)
+    val effPart = curMeta.partCols
     val (newDirs, stats, blooms, parts) =
       stageBatch(narrow, fs, r, df, effStats, effBloom, effPart,
-        maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
-        colMap = manifestColMap(fs, r, cur))
+        maintenance = true, bucketBy = curMeta.bucketBy,
+        colMap = curMeta.colMap)
     // the collapsed dirs hand their streaming-fold replay markers to
     // their replacements; carried dirs keep their own in place
     preserveMarkers(fs, r, smallDirs, newDirs)
@@ -497,12 +499,11 @@ private[graft] trait LakeMaint { this: Lake.type =>
     var nextV = next
     var pubDirs = carriedDirs
     var pubSchema = carried.orElse(Some(df.schema))
-    var pubRows = manifestRows(fs, r, cur)
+    var pubRows = curMeta.rows
     var attempt = 0
     while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stats, effStats,
-        newBlooms = blooms, bloomCols = effBloom,
-        newParts = parts, op = "compact")) {
+        pubSchema, pubRows, stats, newBlooms = blooms, newParts = parts,
+        meta = _.declaring(effStats, effBloom), op = "compact")) {
       attempt += 1
       val rb =
         try maintenanceRebase(fs, r, root, cur, srcSet, "compaction")
@@ -578,7 +579,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    require(manifestBucketBy(fs, r, cur).isEmpty,
+    val curMeta = tableMeta(fs, r, cur)
+    require(curMeta.bucketBy.isEmpty,
       s"table at $root is hash-bucketed — a clustered rewrite would " +
         "destroy the bucket placement and file naming the co-located-join " +
         "contract depends on; bucketed tables compact with " +
@@ -586,7 +588,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val liveDirs = manifestDirs(fs, r, cur)
     // predicate scope: dirs the manifest proves hold no matching row
     // carry by reference; the rest rewrite (with ALL their rows)
-    val cmap = manifestColMap(fs, r, cur)
+    val cmap = curMeta.colMap
     val (rewriteDirs, carriedDirs) = where match {
       case None => (liveDirs, Seq.empty[String])
       case Some(p) =>
@@ -599,7 +601,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
             "(column-vs-literal =, <, <=, >, >=, IN, IS [NOT] NULL, " +
             "AND) — it would rewrite the whole table; omit `where` for " +
             "a full rewrite")
-        manifestSchema(fs, r, cur).map(_.fieldNames.toSet).foreach { sc =>
+        curMeta.schema.map(_.fieldNames.toSet).foreach { sc =>
           preds.map(_.col).distinct.foreach(c => require(sc.contains(c),
             s"OPTIMIZE WHERE references column '$c' which is not in the " +
               "committed schema — nothing would be excluded and the whole " +
@@ -621,7 +623,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // internal jobs (tuple/span collect, clustered writes, batched
     // stats, blooms) plan at the rewritten bytes' width
     val narrow = ShuffleWidth.narrowed(spark, ShuffleWidth.bytesWidth(BigInt(total)))
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     val dfLogical =
       // RAW read: the rewrite must carry the hidden row-id through
       if (carriedDirs.isEmpty) readCommittedAtRaw(narrow, root, cur)
@@ -685,9 +687,9 @@ private[graft] trait LakeMaint { this: Lake.type =>
           .drop("__graft_z")
       }
     val next = pinSlot(fs, r, cur)
-    val effStats = (effectiveStatsCols(fs, r, Nil) ++ cols0).distinct
-    val effBloom = effectiveBloomCols(fs, r, Nil)
-    val effPart = manifestPartCols(fs, r, cur)
+    val effStats = (liveMeta(fs, r).statsCols ++ cols0).distinct
+    val effBloom = liveMeta(fs, r).bloomCols
+    val effPart = curMeta.partCols
     /** Write one clustered dir for `slice`; returns its manifest
       * pieces. ONE column-pruned pass over the fresh dir yields
       * per-file AND dir ranges — the whole point of the rewrite. */
@@ -822,12 +824,12 @@ private[graft] trait LakeMaint { this: Lake.type =>
       var pubDirs = carriedDirs
       var pubSchema: Option[org.apache.spark.sql.types.StructType] =
         Some(logicalSchema)
-      var pubRows = manifestRows(fs, r, cur)
+      var pubRows = curMeta.rows
       var attempt = 0
       while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-          pubSchema, pubRows, dirStats, effStats, fileStats,
-          newBlooms = blooms, bloomCols = effBloom,
-          newParts = parts, op = "zorder")) {
+          pubSchema, pubRows, dirStats, fileStats, newBlooms = blooms,
+          newParts = parts, meta = _.declaring(effStats, effBloom),
+          op = "zorder")) {
         attempt += 1
         val rb =
           try maintenanceRebase(fs, r, root, cur, srcSet, "clustering")

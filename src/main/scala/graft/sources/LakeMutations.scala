@@ -52,6 +52,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root — bootstrap with commitOverwrite/commitAppend"))
+    val curMeta = tableMeta(fs, r, cur)
     val snapDirs = manifestDirs(fs, r, cur)
     // a CDC batch never carries the hidden row-id: survivors keep
     // theirs (read from the stored files) and winners allocate fresh —
@@ -101,7 +102,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       if (touchedDirs.isEmpty &&
           latest.where(!coalesce(col(deleteCol), lit(false))).isEmpty)
         return cur
-      val carried = manifestSchema(fs, r, cur)
+      val carried = curMeta.schema
       val touchedBase =
         if (touchedDirs.isEmpty) base.limit(0)
         // DV-aware: the rewrite materializes any existing vector
@@ -174,10 +175,10 @@ private[graft] trait LakeMutations { this: Lake.type =>
           // delete+insert, the honest reading of a key-replacing merge)
           val (winners, ridNextDv) =
             assignFreshRowIds(fs, r, aligned(upserts))
-          val effStats = effectiveStatsCols(fs, r, Nil)
-          val effBloom = effectiveBloomCols(fs, r, Nil)
-          val stageMap = allocPhysical(evolved, manifestColMap(fs, r, cur),
-            manifestRetired(fs, r, cur), next)
+          val effStats = liveMeta(fs, r).statsCols
+          val effBloom = liveMeta(fs, r).bloomCols
+          val stageMap = allocPhysical(evolved, curMeta.colMap,
+            curMeta.retired, next)
           // a pure-delete batch appends nothing — only vectors commit
           val (newDirs, stats, blooms, parts) =
             if (winners.isEmpty)
@@ -186,14 +187,15 @@ private[graft] trait LakeMutations { this: Lake.type =>
             else {
               validateChecks(fs, r, winners, "merge")
               stageBatch(narrow, fs, r, winners, effStats, effBloom,
-                manifestPartCols(fs, r, cur),
-                bucketBy = manifestBucketBy(fs, r, cur), colMap = stageMap)
+                curMeta.partCols,
+                bucketBy = curMeta.bucketBy, colMap = stageMap)
             }
           if (!commitManifest(fs, r, next, snapDirs ++ newDirs, retain,
-              Some(evolved), None, stats, effStats,
-              newBlooms = blooms, bloomCols = effBloom,
+              Some(evolved), None, stats, newBlooms = blooms,
               newParts = parts, newDvs = fresh,
-              colMap = Some(stageMap), rowId = ridNextDv, op = "merge")) {
+              meta = m => m.declaring(effStats, effBloom).copy(
+                colMap = stageMap, rowId = ridNextDv.orElse(m.rowId)),
+              op = "merge")) {
             newDirs.foreach(d => fs.delete(new Path(r, d), true))
             throw new java.util.ConcurrentModificationException(
               s"merge into $root lost version $next to a concurrent " +
@@ -211,7 +213,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // touchedBase's columns); winners are NEW row versions and get
       // fresh ids below — aligned() gives them the typed NULL slot.
       val upsertsRid =
-        if (manifestRowId(fs, r, cur).isDefined)
+        if (curMeta.rowId.isDefined)
           upserts.withColumn(RowIdCol,
             lit(null).cast(org.apache.spark.sql.types.LongType))
         else upserts
@@ -228,20 +230,20 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // takes the pinned number and our publish must then lose
       // (computing `next` later would let us publish a dirs list that
       // silently drops the interloper's data)
-      val effStats = effectiveStatsCols(fs, r, Nil)
+      val effStats = liveMeta(fs, r).statsCols
       // the rewrite stages under writer-unique dirs like every other
       // data write (one per partition tuple on a partitioned table —
       // COW maintenance preserves the declared layout): concurrent
       // writers never contest them, the version slot is claimed by the
       // manifest publish alone
-      val effBloom = effectiveBloomCols(fs, r, Nil)
-      val effPart = manifestPartCols(fs, r, cur)
-      val effBucket = manifestBucketBy(fs, r, cur)
+      val effBloom = liveMeta(fs, r).bloomCols
+      val effPart = curMeta.partCols
+      val effBucket = curMeta.bucketBy
       validateChecks(fs, r, rewritten, "merge")
       // evolution may introduce columns whose names collide with a
       // mapped or retired physical name — allocate like appends do
-      val stageMap = allocPhysical(evolved, manifestColMap(fs, r, cur),
-        manifestRetired(fs, r, cur), next)
+      val stageMap = allocPhysical(evolved, curMeta.colMap,
+        curMeta.retired, next)
       val (newDirs, stats, blooms, parts) =
         stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
@@ -250,9 +252,9 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // them into the replacement before the commit makes it live
       preserveMarkers(fs, r, touchedDirs, newDirs)
       if (!commitManifest(fs, r, next, untouched ++ newDirs, retain,
-          Some(evolved), None, stats, effStats,
-          newBlooms = blooms, bloomCols = effBloom,
-          newParts = parts, colMap = Some(stageMap), rowId = ridNext,
+          Some(evolved), None, stats, newBlooms = blooms, newParts = parts,
+          meta = m => m.declaring(effStats, effBloom).copy(
+            colMap = stageMap, rowId = ridNext.orElse(m.rowId)),
           op = "merge")) {
         newDirs.foreach(d => fs.delete(new Path(r, d), true))
         throw new java.util.ConcurrentModificationException(
@@ -316,6 +318,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    val curMeta = tableMeta(fs, r, cur)
     val snapDirs = manifestDirs(fs, r, cur)
     // the slot is pinned HERE, before the classify/hits/staging jobs
     // run: a concurrent commit landing during those jobs takes this
@@ -326,9 +329,9 @@ private[graft] trait LakeMutations { this: Lake.type =>
     afterSlotPin()
     val dvEff = effDvMaxRows(fs, r, dvMaxRows)
     val stats = manifestStatsRaw(fs, r, cur)
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     // user predicates name LOGICAL columns; per-dir lines are physical
-    val cmap = manifestColMap(fs, r, cur)
+    val cmap = curMeta.colMap
     val (preds0, exact) = extractPredsExact(
       org.apache.spark.sql.graft.Shim.catalystTree(predicate))
     // generated-column derivation: the derived conjuncts are IMPLIED
@@ -429,7 +432,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         // positions are NEW deletions (the read pre-filtered existing
         // vectors), so the metadata count stays exact through the chain
         if (!commitManifest(fs, r, next, snapDirs, retain, carried,
-            manifestRows(fs, r, cur).map(_ - hits.length),
+            curMeta.rows.map(_ - hits.length),
             newDvs = fresh, op = "delete"))
           throw new java.util.ConcurrentModificationException(
             s"delete on $root lost version $next to a concurrent " +
@@ -439,7 +442,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       }
       // over the bound: fall through to the copy-on-write rewrite
     }
-    val effStats = effectiveStatsCols(fs, r, Nil)
+    val effStats = liveMeta(fs, r).statsCols
     // a dropped dir may hold streaming-fold replay markers: they must
     // survive the delete or a checkpoint replay double-folds. A
     // rewrite dir gives them a home; a pure-drop commit writes an
@@ -447,12 +450,12 @@ private[graft] trait LakeMutations { this: Lake.type =>
     def hasMarkers(dirs: Seq[String]): Boolean =
       dirs.map(d => new Path(r, d)).filter(fs.exists)
         .exists(d => fs.listStatus(d).exists(_.getPath.getName.startsWith("_applied_")))
-    val effBloom = effectiveBloomCols(fs, r, Nil)
+    val effBloom = liveMeta(fs, r).bloomCols
     // rewrites PRESERVE the table's declared partition layout: on a
     // partitioned table the surviving rows re-stage one dir per value
     // tuple with fresh #part_ lines, so partition pruning never
     // degrades under COW maintenance
-    val effPart = manifestPartCols(fs, r, cur)
+    val effPart = curMeta.partCols
     // staged writer-unique dirs (see mergeCommitted): the slot is
     // claimed by the publish, never by the dir names
     val (newDirs, freshStats, freshBlooms, freshParts) =
@@ -462,7 +465,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         val base = readDirsWithDv(narrow, fs, r, cur, rewrite, carried)
         val surviving = base.where(!coalesce(predicate, lit(false)))
         val staged = stageBatch(narrow, fs, r, surviving, effStats, effBloom, effPart,
-          maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
+          maintenance = true, bucketBy = curMeta.bucketBy,
           colMap = cmap)
         preserveMarkers(fs, r, rewrite ++ dropped, staged._1)
         staged
@@ -476,16 +479,16 @@ private[graft] trait LakeMutations { this: Lake.type =>
         val empty = narrow.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         val staged = stageBatch(narrow, fs, r, empty, effStats, effBloom, Nil,
-          bucketBy = manifestBucketBy(fs, r, cur), colMap = cmap)
+          bucketBy = curMeta.bucketBy, colMap = cmap)
         preserveMarkers(fs, r, dropped, staged._1)
         staged
       } else // the metadata-only partition drop: no job at all
         (Nil, Map.empty[String, String], Map.empty[String, String],
           Map.empty[String, String])
     if (!commitManifest(fs, r, next, kept ++ newDirs, retain,
-        carried, None, freshStats, effStats,
-        newBlooms = freshBlooms, bloomCols = effBloom,
-        newParts = freshParts, op = "delete")) {
+        carried, None, freshStats, newBlooms = freshBlooms,
+        newParts = freshParts, meta = _.declaring(effStats, effBloom),
+        op = "delete")) {
       newDirs.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
         s"delete on $root lost version $next to a concurrent commit — " +
@@ -518,6 +521,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    val curMeta = tableMeta(fs, r, cur)
     val snapDirs = manifestDirs(fs, r, cur)
     // slot pinned before any job runs — see deleteWhere: a concurrent
     // commit during the hits/staging jobs takes this number and our
@@ -527,7 +531,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     afterSlotPin()
     val dvEff = effDvMaxRows(fs, r, dvMaxRows)
     val stats = manifestStatsRaw(fs, r, cur)
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     val schema = carried.getOrElse(spark.read.parquet(
       snapDirs.map(d => new Path(r, d).toString): _*).schema)
     // canonicalize SET keys to the SCHEMA's spelling under the session
@@ -549,7 +553,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       publicSchema(schema).fieldNames.contains(c),
       s"SET column '$c' is not in the table schema " +
         publicSchema(schema).fieldNames.mkString("[", ", ", "]")))
-    manifestIdentity(fs, r, cur).foreach { case (idCol, _) =>
+    curMeta.identity.foreach { case (idCol, _) =>
       require(!set0.contains(idCol),
         s"identity column '$idCol' is GENERATED ALWAYS — UPDATE cannot " +
           "assign it (keys are allocator-owned)")
@@ -558,7 +562,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // The TREE keeps the predicate's AND/OR shape — a selective
     // `k = 5 OR k = 9000005` UPDATE rewrites only the two dirs that
     // can hold matches, not the table (same round-16 rule as reads).
-    val cmap = manifestColMap(fs, r, cur)
+    val cmap = curMeta.colMap
     val updTree = enrichTree(spark, fs, r, cur,
       extractTree(org.apache.spark.sql.graft.Shim.catalystTree(predicate)))
     val bloomsRaw = manifestBloomsRaw(fs, r, cur)
@@ -628,17 +632,17 @@ private[graft] trait LakeMutations { this: Lake.type =>
             org.apache.spark.sql.graft.Shim.asNullableType(schema(c).dataType)))
         }
         validateChecks(fs, r, copies, "update")
-        val effStatsDv = effectiveStatsCols(fs, r, Nil)
-        val effBloomDv = effectiveBloomCols(fs, r, Nil)
+        val effStatsDv = liveMeta(fs, r).statsCols
+        val effBloomDv = liveMeta(fs, r).bloomCols
         val (newDirs, freshStats, freshBlooms, freshParts) =
           stageBatch(narrow, fs, r, copies, effStatsDv, effBloomDv,
-            manifestPartCols(fs, r, cur),
-            bucketBy = manifestBucketBy(fs, r, cur), colMap = cmap)
+            curMeta.partCols,
+            bucketBy = curMeta.bucketBy, colMap = cmap)
         // row-preserving: every killed row has exactly one live copy
         if (!commitManifest(fs, r, next, snapDirs ++ newDirs, retain,
-            carried, manifestRows(fs, r, cur), freshStats, effStatsDv,
-            newBlooms = freshBlooms, bloomCols = effBloomDv,
-            newParts = freshParts, newDvs = fresh, op = "update")) {
+            carried, curMeta.rows, freshStats,
+            newBlooms = freshBlooms, newParts = freshParts, newDvs = fresh,
+            meta = _.declaring(effStatsDv, effBloomDv), op = "update")) {
           newDirs.foreach(d => fs.delete(new Path(r, d), true))
           throw new java.util.ConcurrentModificationException(
             s"update on $root lost version $next to a concurrent " +
@@ -658,24 +662,24 @@ private[graft] trait LakeMutations { this: Lake.type =>
         org.apache.spark.sql.graft.Shim.asNullableType(field.dataType)))
         .otherwise(col(c)))
     }
-    val effStats = effectiveStatsCols(fs, r, Nil)
-    val effBloom = effectiveBloomCols(fs, r, Nil)
+    val effStats = liveMeta(fs, r).statsCols
+    val effBloom = liveMeta(fs, r).bloomCols
     // layout-preserving rewrite (see deleteWhere): note an UPDATE may
     // move rows BETWEEN partitions (SET on a partition column) — the
     // re-staging splits by the post-update values, so the layout stays
     // exact either way
-    val effPart = manifestPartCols(fs, r, cur)
+    val effPart = curMeta.partCols
     validateChecks(fs, r, updated, "update")
     val (newDirs, freshStats, freshBlooms, freshParts) =
       stageBatch(narrow, fs, r, updated, effStats, effBloom, effPart,
-          maintenance = true, bucketBy = manifestBucketBy(fs, r, cur),
+          maintenance = true, bucketBy = curMeta.bucketBy,
           colMap = cmap)
     preserveMarkers(fs, r, touched, newDirs)
     // updates are row-preserving: the metadata count carries over
     if (!commitManifest(fs, r, next, kept ++ newDirs, retain,
-        carried, manifestRows(fs, r, cur), freshStats, effStats,
-        newBlooms = freshBlooms, bloomCols = effBloom,
-        newParts = freshParts, op = "update")) {
+        carried, curMeta.rows, freshStats,
+        newBlooms = freshBlooms, newParts = freshParts,
+        meta = _.declaring(effStats, effBloom), op = "update")) {
       newDirs.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
         s"update on $root lost version $next to a concurrent commit — " +
@@ -735,11 +739,12 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root — bootstrap with commitOverwrite/commitAppend"))
+    val curMeta = tableMeta(fs, r, cur)
     val snapDirs = manifestDirs(fs, r, cur)
     // slot pinned before the probe/rewrite jobs — see mergeCommitted
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
-    val carried = manifestSchema(fs, r, cur)
+    val carried = curMeta.schema
     val base0 = readCommittedAt(spark, root, cur)
     val schema = carried.getOrElse(base0.schema)
     // canonicalize assignment keys to the SCHEMA's spelling under the
@@ -894,22 +899,24 @@ private[graft] trait LakeMutations { this: Lake.type =>
         assignFreshRowIds(fs, r, keptRewritten.unionByName(inserts))
       // nothing matched, nothing to insert → the table is unchanged
       if (touchedDirs.isEmpty && rewritten.isEmpty) return cur
-      val effStats = effectiveStatsCols(fs, r, Nil)
-      val effBloom = effectiveBloomCols(fs, r, Nil)
+      val effStats = liveMeta(fs, r).statsCols
+      val effBloom = liveMeta(fs, r).bloomCols
       // layout-preserving (see deleteWhere): partitioned tables
       // re-stage the rewrite one dir per value tuple
-      val effPart = manifestPartCols(fs, r, cur)
-      val effBucket = manifestBucketBy(fs, r, cur)
+      val effPart = curMeta.partCols
+      val effBucket = curMeta.bucketBy
       validateChecks(fs, r, rewritten, "merge")
       val (newDirs, stats, blooms, parts) =
         stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
-          colMap = manifestColMap(fs, r, cur))
+          colMap = curMeta.colMap)
       preserveMarkers(fs, r, touchedDirs, newDirs)
       if (!commitManifest(fs, r, next, untouched ++ newDirs, retain,
-          carried.orElse(Some(rewritten.schema)), None, stats, effStats,
-          newBlooms = blooms, bloomCols = effBloom,
-          newParts = parts, rowId = ridNext, op = "merge")) {
+          carried.orElse(Some(rewritten.schema)), None, stats,
+          newBlooms = blooms, newParts = parts,
+          meta = m => m.declaring(effStats, effBloom).copy(
+            rowId = ridNext.orElse(m.rowId)),
+          op = "merge")) {
         newDirs.foreach(d => fs.delete(new Path(r, d), true))
         throw new java.util.ConcurrentModificationException(
           s"merge into $root lost version $next to a concurrent commit — " +

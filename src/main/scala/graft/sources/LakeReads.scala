@@ -462,7 +462,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       fs: org.apache.hadoop.fs.FileSystem, r: Path, v: Long,
       x: PXform): Option[Pred] = {
     import org.apache.spark.sql.types._
-    val schema = manifestSchema(fs, r, v).getOrElse(return None)
+    val schema = tableMeta(fs, r, v).schema.getOrElse(return None)
     val res = org.apache.spark.sql.internal.SQLConf.get.resolver
     def typeAt(st: StructType, segs: Seq[String]): Option[DataType] =
       segs match {
@@ -503,7 +503,8 @@ private[graft] trait LakeReads { this: Lake.type =>
   private[sources] def enrichTree(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: Path, v: Long,
       t: PredTree): PredTree = {
-    val map = manifestColMap(fs, r, v)
+    val meta = tableMeta(fs, r, v)
+    val map = meta.colMap
     def phys(p: Pred): Pred =
       if (map.isEmpty) p else p.copy(col = physName(map, p.col))
     def go(t: PredTree): PredTree = t match {
@@ -527,11 +528,11 @@ private[graft] trait LakeReads { this: Lake.type =>
         // when the SOURCE column carries no evidence. Zone guard: the
         // stored values froze under the establishing session's zone
         // (#genparttz), so derive only when the reading zone matches.
-        val tzOk = manifestGenTz(fs, r, v).forall(
+        val tzOk = meta.genTz.forall(
           _ == spark.sessionState.conf.sessionLocalTimeZone)
         val viaGen =
           if (!tzOk) None
-          else manifestGenAll(fs, r, v).collectFirst {
+          else meta.genAll.collectFirst {
             case (p, text) if scala.util.Try(
                 spark.sessionState.sqlParser.parseExpression(text))
                 .toOption.flatMap(xformShape)
@@ -833,9 +834,10 @@ private[graft] trait LakeReads { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    val curMeta = tableMeta(fs, r, cur)
     val (paths, _, _, dvs) = resolveWhereWithDvs(spark, root, predicate)
-    val schemaOpt = manifestSchema(fs, r, cur)
-    val map = manifestColMap(fs, r, cur)
+    val schemaOpt = curMeta.schema
+    val map = curMeta.colMap
     if (paths.isEmpty) {
       val s = schemaOpt.getOrElse(spark.read.parquet(
         manifestDirs(fs, r, cur).map(d => new Path(r, d).toString): _*).schema)
@@ -865,37 +867,13 @@ private[graft] trait LakeReads { this: Lake.type =>
     if (out.columns.contains(RowIdCol)) out.drop(RowIdCol) else out
   }
 
-  // `#rows=<n>` — the snapshot's exact row count, carried when the
-  // writer knows it (a load counts its fresh rows anyway; an append
-  // adds the batch to the previous snapshot's count; compaction is
-  // row-preserving). Metadata-only `count(*)`: on a 100 TB table the
-  // count answers from ONE manifest read instead of a full scan.
-  // Absent when a writer could not know it cheaply (e.g. a merge with
-  // deletes) — honesty over a counting job; the chain resumes at the
-  // next counted commit.
-  private[sources] val RowsPrefix = "#rows="
-  private[sources] val OpPrefix = "#op="
-
-  // `#ts=<epoch millis>` — the commit instant, stamped INTO the
-  // manifest body at publish. `TIMESTAMP AS OF` / `startingTimestamp`
-  // / DESCRIBE HISTORY resolve from this line, NOT from the marker
-  // file's mtime: a table-root backup/restore, `cp -r` migration, or
-  // object-store copy rewrites mtimes and would silently re-date the
-  // whole history (re-resolving past time-travel queries to different
-  // versions). The line travels with the bytes. Pre-existing manifests
-  // without the line fall back to mtime — same answer they always gave.
-  private[sources] val TsPrefix = "#ts="
-
-  private[sources] def manifestTsMillis(fs: org.apache.hadoop.fs.FileSystem,
+  /** The commit instant of snapshot `v` in epoch millis: its `#ts=`
+    * line ([[TableMeta.ts]]), else — for manifests predating the line —
+    * the marker file's mtime. */
+  private[sources] def commitMillis(fs: org.apache.hadoop.fs.FileSystem,
       r: Path, v: Long): Long =
-    manifestMeta(fs, r, v).find(_.startsWith(TsPrefix))
-      .flatMap(_.stripPrefix(TsPrefix).toLongOption)
-      .getOrElse(fs.getFileStatus(new Path(r, s"_commit_$v")).getModificationTime)
-
-  private[sources] def manifestRows(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Option[Long] =
-    manifestMeta(fs, r, v).find(_.startsWith(RowsPrefix))
-      .flatMap(_.stripPrefix(RowsPrefix).toLongOption)
+    tableMeta(fs, r, v).ts.getOrElse(
+      fs.getFileStatus(new Path(r, s"_commit_$v")).getModificationTime)
 
   /** Highest committed version at `root` whose snapshot is fully
     * present, if any. Manifests referencing lost data dirs are
@@ -951,11 +929,6 @@ private[graft] trait LakeReads { this: Lake.type =>
       .filter(v => manifestDirs(fs, r, v).forall(present))
   }
 
-  private[sources] def manifestOp(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Option[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(OpPrefix))
-      .map(_.stripPrefix(OpPrefix))
-
   /** DESCRIBE HISTORY: one row per readable version with the operation
     * that committed it (`#op=` manifest line: overwrite / append /
     * merge / delete / update / compact / zorder / fold), its snapshot
@@ -975,7 +948,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       // TIMESTAMP AS OF / startingTimestamp resolve against); older
       // manifests without one fall back to the marker file's mtime
       val ts = scala.util.Try(new java.sql.Timestamp(
-        manifestTsMillis(fs, r, v))).getOrElse(null)
+        commitMillis(fs, r, v))).getOrElse(null)
       // deletion-vector DEBT per version: dirs still carrying `#dv_`
       // lines and the total soft-deleted position count — what REORG
       // … APPLY (PURGE) exists to pay down; surfaced so the cost is
@@ -984,9 +957,9 @@ private[graft] trait LakeReads { this: Lake.type =>
       val dvRows = dvs.values.iterator
         .map(j => parseDvJson(j).values.iterator.map(_.length.toLong).sum)
         .sum
-      org.apache.spark.sql.Row(v, ts, manifestOp(fs, r, v).orNull,
+      org.apache.spark.sql.Row(v, ts, tableMeta(fs, r, v).op.orNull,
         manifestDirs(fs, r, v).size,
-        manifestRows(fs, r, v).map(java.lang.Long.valueOf).orNull,
+        tableMeta(fs, r, v).rows.map(java.lang.Long.valueOf).orNull,
         dvs.size, dvRows)
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1035,21 +1008,21 @@ private[graft] trait LakeReads { this: Lake.type =>
     val dvRows = dvs.values.iterator
       .map(j => parseDvJson(j).values.iterator.map(_.length.toLong).sum)
       .sum
-    val props = manifestProps(fs, r, v)
+    val meta = tableMeta(fs, r, v)
     val ts = scala.util.Try(new java.sql.Timestamp(
-      manifestTsMillis(fs, r, v))).getOrElse(null)
+      commitMillis(fs, r, v))).getOrElse(null)
     val row = org.apache.spark.sql.Row(
       "graft-lake", root, v, ts,
       dirs.size, files, bytes,
-      manifestRows(fs, r, v).map(java.lang.Long.valueOf).orNull,
-      manifestPartCols(fs, r, v).mkString(","),
-      manifestBucketBy(fs, r, v)
+      meta.rows.map(java.lang.Long.valueOf).orNull,
+      meta.partCols.mkString(","),
+      meta.bucketBy
         .map { case (n, cs) => s"$n:${cs.mkString(",")}" }.orNull,
-      props.toSeq.sortBy(_._1).map { case (k, pv) => s"$k=$pv" }
+      meta.props.toSeq.sortBy(_._1).map { case (k, pv) => s"$k=$pv" }
         .mkString(";"),
       dvs.size, dvRows,
       manifestSegRefs(fs, r, v).size,
-      manifestRequires(fs, r, v).mkString(","))
+      meta.requires.mkString(","))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("format",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -1096,7 +1069,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     * live, byte-identical, because snapshots are immutable: a commit
     * only ever ADDS a version dir, and pruning deletes strictly
     * outside the retention horizon. Versions carry their OWN schema
-    * (see [[SchemaPrefix]]), so a snapshot from before a schema
+    * (see [[TableMeta.schema]]), so a snapshot from before a schema
     * evolution reads back with its original columns.
     *
     * Fails fast with the readable horizon when `version` was pruned
@@ -1121,7 +1094,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       root: String): org.apache.spark.sql.DataFrame = {
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    require(manifestRowId(fsFor(spark, root), new Path(root), cur).isDefined,
+    require(tableMeta(fsFor(spark, root), new Path(root), cur).rowId.isDefined,
       s"the table at $root does not carry row tracking — enable it " +
         "(Lake.enableRowTracking / commitOverwrite(rowTracking = true))")
     readCommittedAtRaw(spark, root, cur)
@@ -1145,7 +1118,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       throw new java.util.NoSuchElementException(
         s"version $version at $root references lost data dirs " +
           s"${missing.mkString(", ")} (readable: $horizon)")
-    manifestSchema(fs, r, version) match {
+    tableMeta(fs, r, version).schema match {
       // index-planned read: the scan's file set resolves through the
       // LakeFileIndex at PLANNING time (lazily, with whatever filters
       // the query pushes), not through an eager spark.read listing of
@@ -1182,7 +1155,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     val r = new Path(root)
     val Parsed = """stream-append lineage=(\S+) batch=(\d+)""".r
     committedVersions(fs, r).reverseIterator
-      .flatMap(v => manifestOp(fs, r, v))
+      .flatMap(v => tableMeta(fs, r, v).op)
       .collectFirst { case Parsed(l, b) if l == lineage => b.toLong }
   }
 
@@ -1196,7 +1169,7 @@ private[graft] trait LakeReads { this: Lake.type =>
 
   private[sources] def snapshotSchema(spark: SparkSession, root: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestSchema(fsFor(spark, root), new Path(root), version)
+    tableMeta(fsFor(spark, root), new Path(root), version).schema
 
   private[sources] def committedVersionList(spark: SparkSession,
       root: String): Seq[Long] =
@@ -1204,7 +1177,7 @@ private[graft] trait LakeReads { this: Lake.type =>
 
   private[sources] def snapshotOp(spark: SparkSession, root: String,
       version: Long): Option[String] =
-    manifestOp(fsFor(spark, root), new Path(root), version)
+    tableMeta(fsFor(spark, root), new Path(root), version).op
 
   /** ZERO-COPY SHALLOW CLONE: commit a NEW table at `dstRoot` whose
     * v0 manifest references snapshot `version` of `srcRoot` BY
@@ -1268,42 +1241,33 @@ private[graft] trait LakeReads { this: Lake.type =>
     val srcBlooms = manifestBloomsRaw(fs, sr, v)
     val dr = new Path(dstRoot)
     dfs.mkdirs(dr)
+    val src = tableMeta(fs, sr, v)
     if (!commitManifest(dfs, dr, 0L, abs, retain,
-        schema = manifestSchema(fs, sr, v),
-        rows = manifestRows(fs, sr, v),
+        schema = src.schema,
+        rows = src.rows,
         newStats = srcStats.map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        statsCols = manifestStatsCols(fs, sr, v),
         newBlooms = srcBlooms.map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        bloomCols = manifestBloomCols(fs, sr, v),
         newParts = manifestPartsRaw(fs, sr, v)
           .map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        partCols = manifestPartCols(fs, sr, v),
-        // the bucket layout carries: the referenced dirs ARE
-        // bucket-named (written through the bucketed writer), so the
-        // clone keeps co-located probes and its own appends stage
-        // bucketed under the inherited property
-        bucketBy = manifestBucketBy(fs, sr, v),
         // the source snapshot's deletion vectors carry under the
         // absolute dir names (read-side keys are dir BASEnames, so
         // relative/absolute entries resolve alike)
         newDvs = manifestDvsRaw(fs, sr, v)
           .map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        // the source's column map carries verbatim: the referenced
-        // dirs store the SOURCE's physical names
-        colMap = Some(manifestColMap(fs, sr, v)),
-        colMap2Replace = Some(manifestColMap2(fs, sr, v)),
-        retiredCols = Some(manifestRetired(fs, sr, v)),
-        genParts = Some(manifestGenParts(fs, sr, v)),
-        genCols = Some(manifestGenCols(fs, sr, v)),
-        genTz = manifestGenTz(fs, sr, v),
-        // allocator state carries: a clone of an identity / row-
-        // tracked table keeps allocating past the source's mark —
-        // without these lines the clone's appends would stop stamping
-        // while the schema still carries the columns
-        identity = Some(manifestIdentity(fs, sr, v)),
-        idMode = Some(manifestIdMode(fs, sr, v)),
-        rowId = manifestRowId(fs, sr, v),
         dvsReplace = true,
+        // the source's layout and mapping carry: the referenced dirs
+        // store the SOURCE's physical names and ARE bucket-named
+        // (written through the bucketed writer), so the clone keeps
+        // co-located probes and its own appends stage bucketed under
+        // the inherited property. Allocator state carries too: a clone
+        // of an identity / row-tracked table keeps allocating past the
+        // source's mark — without these lines the clone's appends
+        // would stop stamping while the schema still carries the
+        // columns. Constraints, properties and the COPY INTO ledger
+        // stay the new root's own.
+        meta = m => src.copy(checks = m.checks, props = m.props,
+          ingested = m.ingested),
+        colMap2Replace = true,
         op = s"clone $srcRoot@v$v"))
       throw new IllegalStateException(
         s"committed table already exists at $dstRoot — a concurrent writer " +
@@ -1363,7 +1327,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     // column may lack it; reading is always nullable, matching what
     // `spark.read.schema(...)` does on the readCommitted path
     val schema = org.apache.spark.sql.graft.Shim.asNullable(
-      manifestSchema(fs, r, v).getOrElse(
+      tableMeta(fs, r, v).schema.getOrElse(
         spark.read.parquet(dirs.map(d => new Path(r, d).toString): _*).schema))
     // the hidden row-id never reaches a user-facing relation
     (v, publicSchema(schema))
@@ -1410,56 +1374,49 @@ private[graft] trait LakeReads { this: Lake.type =>
     // commit the RAW target schema: resolveSnapshot serves the
     // user-facing view, but the restored manifest must keep the
     // hidden row-tracking column the target's files physically carry
+    val target = tableMeta(fs, r, version)
     val schema = org.apache.spark.sql.graft.Shim.asNullable(
-      manifestSchema(fs, r, version).getOrElse(pubSchema))
-    require(manifestBucketBy(fs, r, version) == manifestBucketBy(fs, r, cur),
+      target.schema.getOrElse(pubSchema))
+    require(target.bucketBy == tableMeta(fs, r, cur).bucketBy,
       s"the bucket layout changed between v$version and the live " +
         s"v$cur — restored dirs would not satisfy the current bucketed " +
         "read contract; re-layout with commitOverwrite instead")
     val dirs = manifestDirs(fs, r, version)
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, dirs, retain,
-        Some(schema), manifestRows(fs, r, version),
+        Some(schema), target.rows,
         newStats = manifestStatsRaw(fs, r, version),
         newFileStats = manifestFileStatsRaw(fs, r, version),
         newBlooms = manifestBloomsRaw(fs, r, version),
         newParts = manifestPartsRaw(fs, r, version),
-        // CHECK constraints restore to the TARGET version's set (Delta
-        // restores metadata with data): a constraint added after
-        // `version` was never validated against these rows and must
-        // not silently claim to hold over them
-        checks = Some(manifestChecks(fs, r, version)),
         // deletion vectors restore AUTHORITATIVELY: carrying the live
         // version's vectors would re-kill rows the restore revives
         newDvs = manifestDvsRaw(fs, r, version), dvsReplace = true,
-        // the column map (and retired set, and the stat/bloom column
-        // lists a drop may have shrunk) restore to the TARGET's — the
-        // restored dirs store the TARGET's physical names
-        colMap = Some(manifestColMap(fs, r, version)),
-        // the id tree restores AUTHORITATIVELY with the rest of the
-        // metadata: reconciling against the LIVE tree would refuse
-        // re-surfacing a field dropped after the target (its tombstone
-        // is not part of the restored state — the restored dirs' bytes
-        // ARE that field's bytes)
-        colMap2Replace = Some(manifestColMap2(fs, r, version)),
-        retiredCols = Some(manifestRetired(fs, r, version)),
-        statsColsReplace = Some(manifestStatsCols(fs, r, version)),
-        bloomColsReplace = Some(manifestBloomCols(fs, r, version)),
-        genParts = Some(manifestGenParts(fs, r, version)),
-        genCols = Some(manifestGenCols(fs, r, version)),
-        genTz = manifestGenTz(fs, r, version),
-        partColsReplace = Some(manifestPartCols(fs, r, version)),
-        // table properties and the identity mark restore to the
-        // TARGET's (restored-away rows' ids become reusable exactly
-        // because the rows that consumed them are gone)
-        props = Some(manifestProps(fs, r, version)),
-        identity = Some(manifestIdentity(fs, r, version)),
-        idMode = Some(manifestIdMode(fs, r, version)),
-        // the row-id mark restores AUTHORITATIVELY too (None clears:
-        // restoring to a pre-tracking version restores to untracked —
-        // the restored dirs carry no ids, so keeping the mark would
-        // leave a half-tracked table whose keyless feed can't pair)
-        rowId = manifestRowId(fs, r, version), rowIdReplace = true,
+        // table-level state restores to the TARGET's (Delta restores
+        // metadata with data):
+        //  - CHECK constraints: one added after `version` was never
+        //    validated against these rows and must not silently claim
+        //    to hold over them;
+        //  - the column map, retired set, and the stat/bloom/partition
+        //    column lists a drop may have shrunk: the restored dirs
+        //    store the TARGET's physical names;
+        //  - the id tree, AUTHORITATIVELY: reconciling against the
+        //    LIVE tree would refuse re-surfacing a field dropped after
+        //    the target (its tombstone is not part of the restored
+        //    state — the restored dirs' bytes ARE that field's bytes);
+        //  - properties and the identity mark (restored-away rows' ids
+        //    become reusable exactly because the rows that consumed
+        //    them are gone);
+        //  - the row-id mark, None included: restoring to a
+        //    pre-tracking version restores to untracked — the restored
+        //    dirs carry no ids, so keeping the mark would leave a
+        //    half-tracked table whose keyless feed can't pair.
+        // The bucket layout (required equal above), the COPY INTO
+        // ledger and an absent generated-column zone stay the live
+        // ones.
+        meta = m => target.copy(bucketBy = m.bucketBy, ingested = m.ingested,
+          genTz = target.genTz.orElse(m.genTz)),
+        colMap2Replace = true,
         op = s"restore v$version"))
       throw new java.util.ConcurrentModificationException(
         s"restore of $root to v$version lost version $next to a " +
@@ -1477,8 +1434,8 @@ private[graft] trait LakeReads { this: Lake.type =>
     val fs = fsFor(spark, root)
     // #bucketby stores PHYSICAL names; the relation's surface (and the
     // HashPartitioning its scan advertises) is LOGICAL
-    val inv = manifestColMap(fs, new Path(root), version).map(_.swap)
-    manifestBucketBy(fs, new Path(root), version).map { case (n, cols0) =>
+    val inv = tableMeta(fs, new Path(root), version).colMap.map(_.swap)
+    tableMeta(fs, new Path(root), version).bucketBy.map { case (n, cols0) =>
       val cols = cols0.map(c => inv.getOrElse(c, c))
       org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cols, cols)
     }
@@ -1507,7 +1464,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     * landed at or before `tsMicros` (epoch micros) — Delta's
     * commit-timestamp semantics, answered from the manifests' own
     * `#ts=` lines (mtime fallback for pre-line manifests — see
-    * [[TsPrefix]] for why mtimes alone are untrustworthy), no data
+    * [[TableMeta.ts]] for why mtimes alone are untrustworthy), no data
     * I/O. Refuses (with the readable horizon) when the timestamp
     * predates every retained commit. */
   def versionAsOf(spark: SparkSession, root: String, tsMicros: Long): Long = {
@@ -1516,7 +1473,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     val vs = committedVersions(fs, r)
     if (vs.isEmpty) throw new java.util.NoSuchElementException(
       s"no committed table at $root")
-    vs.filter(v => manifestTsMillis(fs, r, v) * 1000L <= tsMicros)
+    vs.filter(v => commitMillis(fs, r, v) * 1000L <= tsMicros)
       .maxOption.getOrElse(throw new java.util.NoSuchElementException(
         s"no version committed at or before timestamp $tsMicros micros at " +
           s"$root (readable: ${readableVersions(spark, root).mkString("[", ", ", "]")})"))
@@ -1584,7 +1541,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     // contract (Delta's row-tracking CDF). Without it, keys stay
     // required (pairing would otherwise degrade to insert+delete).
     val useRowId = keyCols.isEmpty
-    if (useRowId) require(manifestRowId(fs, r, toVersion).isDefined,
+    if (useRowId) require(tableMeta(fs, r, toVersion).rowId.isDefined,
       s"changesBetween without keyCols needs row tracking on $root — " +
         "enable it (Lake.enableRowTracking / commitOverwrite(rowTracking " +
         "= true)) or pass the natural key columns")
@@ -1597,7 +1554,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     // id entirely — a merge-allocated fresh id must not flag a
     // value-identical row as an update
     val toSchemaFull = org.apache.spark.sql.graft.Shim.asNullable(
-      manifestSchema(fs, r, toVersion).getOrElse(to.schema))
+      tableMeta(fs, r, toVersion).schema.getOrElse(to.schema))
     val toSchema =
       if (useRowId) toSchemaFull else publicSchema(toSchemaFull)
     effKeys.foreach(k => require(toSchema.fieldNames.contains(k),
@@ -1625,10 +1582,12 @@ private[graft] trait LakeReads { this: Lake.type =>
     // (drop + re-add: old rows hold real values at the path under the
     // dead id — NULL pre-images would misattribute). NAME-mode tables
     // keep the flat refusal (no ids to translate through).
-    val fromV2 = manifestColMap2(fs, r, fromVersion)
-    val toV2 = manifestColMap2(fs, r, toVersion)
-    val fromMap = manifestColMap(fs, r, fromVersion)
-    val toMap = manifestColMap(fs, r, toVersion)
+    val fromMeta = tableMeta(fs, r, fromVersion)
+    val toMeta = tableMeta(fs, r, toVersion)
+    val fromV2 = fromMeta.colMap2
+    val toV2 = toMeta.colMap2
+    val fromMap = fromMeta.colMap
+    val toMap = toMeta.colMap
     // a mid-range UPGRADE: ids were assigned at the first in-range
     // tree-carrying commit `u` to the names current THERE; when the
     // flat mapping state is unchanged between fromVersion and u, those
@@ -1636,23 +1595,19 @@ private[graft] trait LakeReads { this: Lake.type =>
     // old side's tree and renames after the upgrade still translate
     val fromTreeEff: Option[ColMapV2] = fromV2.orElse {
       if (toV2.isEmpty) None
-      else committedVersions(fs, r)
+      else committedVersions(fs, r).iterator
         .filter(v => v > fromVersion && v <= toVersion)
-        .find(v => manifestColMap2(fs, r, v).isDefined)
-        .flatMap { uv =>
-          if (manifestColMap(fs, r, uv) == fromMap &&
-              manifestRetired(fs, r, uv) ==
-                manifestRetired(fs, r, fromVersion))
-            manifestColMap2(fs, r, uv)
+        .map(tableMeta(fs, r, _)).find(_.colMap2.isDefined)
+        .flatMap { u =>
+          if (u.colMap == fromMap && u.retired == fromMeta.retired) u.colMap2
           else None
         }
     }
     val idMode = fromTreeEff.isDefined && toV2.isDefined
-    if (!idMode && (fromMap != toMap || manifestRetired(fs, r, fromVersion) !=
-        manifestRetired(fs, r, toVersion))) {
-      val fromNames = manifestSchema(fs, r, fromVersion)
+    if (!idMode && (fromMap != toMap || fromMeta.retired != toMeta.retired)) {
+      val fromNames = fromMeta.schema
         .map(_.fieldNames.toSet).getOrElse(Set.empty)
-      val fromPhys = manifestSchema(fs, r, fromVersion)
+      val fromPhys = fromMeta.schema
         .map(s => physSchema(s, fromMap).fieldNames.toSet)
         .getOrElse(Set.empty)
       val crossed = toSchema.fieldNames.filter { n =>
@@ -1720,7 +1675,7 @@ private[graft] trait LakeReads { this: Lake.type =>
                 case _ => Nil
               })
             }
-          manifestSchema(fs, r, fromVersion)
+          fromMeta.schema
             .map(sc => walk(sc, "").toSet).getOrElse(Set.empty)
         }
         def quoted(path: String): String =
@@ -1772,7 +1727,7 @@ private[graft] trait LakeReads { this: Lake.type =>
         // read the old side under ITS OWN schema (old logical names),
         // then translate to the current shape through the id tree
         val fromSchemaRead = org.apache.spark.sql.graft.Shim.asNullable(
-          manifestSchema(fs, r, fromVersion).getOrElse(toSchemaFull))
+          fromMeta.schema.getOrElse(toSchemaFull))
         bridge(readDirsWithDv(spark, fs, r, fromVersion, removed,
           Some(fromSchemaRead)))
     }
@@ -1832,12 +1787,12 @@ private[graft] trait LakeReads { this: Lake.type =>
     * the count (fall back to `readCommitted(...).count()`). */
   def countCommitted(spark: SparkSession, root: String): Option[Long] =
     currentVersion(spark, root)
-      .flatMap(v => manifestRows(fsFor(spark, root), new Path(root), v))
+      .flatMap(v => tableMeta(fsFor(spark, root), new Path(root), v).rows)
 
   /** [[countCommitted]] for a time-travel version. */
   def countCommittedAt(spark: SparkSession, root: String, version: Long): Option[Long] = {
     val fs = fsFor(spark, root)
     if (!fs.exists(new Path(new Path(root), s"_commit_$version"))) None
-    else manifestRows(fs, new Path(root), version)
+    else tableMeta(fs, new Path(root), version).rows
   }
 }

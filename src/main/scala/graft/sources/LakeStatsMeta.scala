@@ -35,7 +35,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
   // with executor-side semantics on non-ASCII data. NaN/Infinity
   // refuse normalization and simply drop that column's stats for the
   // dir (conservative, never wrong).
-  private[sources] val StatsColsPrefix = "#statscols="
   private[sources] val StatsPrefix = "#stats_"
 
   private[graft] sealed trait NormVal
@@ -472,25 +471,15 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
   // ~100k expected items (≈15 KB of bits at 2% FPP) per (dir, col) so
   // manifests stay planning-readable; beyond the cap the FPP rises
   // gracefully.
-  private[sources] val BloomColsPrefix = "#bloomcols="
   private[sources] val BloomPrefix = "#bloom_"
   private[sources] val BloomMaxItems = 100000L
   private[sources] val BloomFpp = 0.02
 
-  private[sources] def manifestBloomCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Seq[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(BloomColsPrefix))
-      .map(_.stripPrefix(BloomColsPrefix).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
-  private[sources] def effectiveBloomCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+  private[sources] def effectiveBloomCols(prev: TableMeta,
       bloomCols: Seq[String]): Seq[String] = {
     bloomCols.foreach(c => require(!c.exists("=,\n#".contains(_)),
       s"bloom column name '$c' may not contain '=', ',', '#', or newline"))
-    if (bloomCols.nonEmpty) bloomCols
-    else committedVersions(fs, r).lastOption
-      .map(v => manifestBloomCols(fs, r, v)).getOrElse(Nil)
+    if (bloomCols.nonEmpty) bloomCols else prev.bloomCols
   }
 
   /** `#bloom_` lines of a body, keyed by dir. */
@@ -578,24 +567,15 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
       }
     }
 
-  private[sources] def manifestStatsCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Seq[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(StatsColsPrefix))
-      .map(_.stripPrefix(StatsColsPrefix).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
   /** The table's established stat columns: `statsCols` when the caller
-    * names them on this commit, else inherited from the last committed
-    * manifest. Simple column names only — the list rides a
+    * names them on this commit, else inherited from `prev`, the last
+    * committed snapshot. Simple column names only — the list rides a
     * comma-separated manifest line. */
-  private[sources] def effectiveStatsCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+  private[sources] def effectiveStatsCols(prev: TableMeta,
       statsCols: Seq[String]): Seq[String] = {
     statsCols.foreach(c => require(!c.exists("=,\n#".contains(_)),
       s"stat column name '$c' may not contain '=', ',', '#', or newline"))
-    if (statsCols.nonEmpty) statsCols
-    else committedVersions(fs, r).lastOption
-      .map(v => manifestStatsCols(fs, r, v)).getOrElse(Nil)
+    if (statsCols.nonEmpty) statsCols else prev.statsCols
   }
 
   /** Fold interleaved (min, max) external values — `get(2i)`/`get(2i+1)`

@@ -32,7 +32,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // metadata, not hive path encoding), so every reader — time travel,
   // clone, compaction, COW rewrites — composes unchanged: a rewrite's
   // fresh dir simply carries no #part_ line and is always scanned.
-  private[sources] val PartColsPrefix = "#partcols="
   private[sources] val PartPrefix = "#part_"
 
   /** Per-BATCH distinct-partition-tuple cap for [[stageBatch]] (a dir
@@ -68,7 +67,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // preserves the layout by re-staging through the bucketed writer),
   // and an APPEND cannot introduce bucketing to an existing unbucketed
   // table (earlier dirs lack the naming — re-layout via overwrite).
-  private[sources] val BucketByPrefix = "#bucketby="
 
   // ---- CHECK constraints as a table property -----------------------
   //
@@ -82,21 +80,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // FALSE. Row-preserving maintenance (compact, z-order, restore) and
   // predicate DELETE skip validation — they cannot create a violating
   // row that did not already exist.
-  private[sources] val CheckPrefix = "#check="
-
-  private[graft] def manifestChecks(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[(String, String)] =
-    manifestMeta(fs, r, v).collect {
-      case l if l.startsWith(CheckPrefix) &&
-          l.indexOf(':', CheckPrefix.length) > CheckPrefix.length =>
-        val i = l.indexOf(':', CheckPrefix.length)
-        l.substring(CheckPrefix.length, i) -> l.substring(i + 1)
-    }
-
-  private[sources] def liveChecks(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path): Seq[(String, String)] =
-    committedVersions(fs, r).lastOption
-      .map(v => manifestChecks(fs, r, v)).getOrElse(Nil)
 
   /** ONE aggregate job over `df`: refuse (naming every violated
     * constraint and its row count) if any live CHECK constraint fails.
@@ -110,12 +93,11 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // SUPPLYING a generated column must agree with the expression
     // row-for-row (`<=>`: exact, never NULL), or the layout the
     // readers prune by would lie
-    val effGens = if (gens.nonEmpty) gens
-      else committedVersions(fs, r).lastOption
-        .map(v => manifestGenAll(fs, r, v)).getOrElse(Nil)
+    val live = liveMeta(fs, r)
+    val effGens = if (gens.nonEmpty) gens else live.genAll
     val genChecks = effGens.map { case (c, e) =>
       s"gen_$c" -> s"`$c` <=> ($e)" }
-    val cs = liveChecks(fs, r) ++ genChecks
+    val cs = live.checks ++ genChecks
     if (cs.isEmpty) return
     // a batch OMITTING a committed column evolves it NULL-backfilled
     // (mergeSchemas marks it nullable, old readers see NULL) — so the
@@ -125,9 +107,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // to hold over rows that read NULL. This IS the engine's NOT NULL
     // enforcement: declare `ADD CONSTRAINT … CHECK (c IS NOT NULL)`
     // and neither a NULL-carrying nor a column-omitting batch commits.
-    val committed = committedVersions(fs, r).lastOption
-      .flatMap(v => manifestSchema(fs, r, v))
-    val widened = committed match {
+    val widened = live.schema match {
       case Some(s) =>
         s.fields.filterNot(f => df.columns.contains(f.name))
           .foldLeft(df)((d, f) =>
@@ -165,7 +145,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root"))
-    val prev = manifestChecks(fs, r, cur)
+    val curMeta = tableMeta(fs, r, cur)
+    val prev = curMeta.checks
     require(!prev.exists(_._1 == name),
       s"constraint '$name' already exists on $root — drop it first")
     // the new constraint must hold on the existing rows
@@ -178,8 +159,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         s"`$sqlExpr` — clean the table first (Delta's ADD CONSTRAINT rule)")
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        manifestSchema(fs, r, cur), manifestRows(fs, r, cur),
-        checks = Some(prev :+ (name -> sqlExpr)),
+        curMeta.schema, curMeta.rows,
+        meta = _.copy(checks = prev :+ (name -> sqlExpr)),
         op = s"add constraint $name"))
       throw new java.util.ConcurrentModificationException(
         s"adding constraint '$name' on $root lost version $next to a " +
@@ -195,14 +176,15 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root"))
-    val prev = manifestChecks(fs, r, cur)
+    val curMeta = tableMeta(fs, r, cur)
+    val prev = curMeta.checks
     require(prev.exists(_._1 == name),
       s"no constraint '$name' on $root (have: " +
         prev.map(_._1).mkString("[", ", ", "]") + ")")
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        manifestSchema(fs, r, cur), manifestRows(fs, r, cur),
-        checks = Some(prev.filterNot(_._1 == name)),
+        curMeta.schema, curMeta.rows,
+        meta = _.copy(checks = prev.filterNot(_._1 == name)),
         op = s"drop constraint $name"))
       throw new java.util.ConcurrentModificationException(
         s"dropping constraint '$name' on $root lost version $next to a " +
@@ -212,7 +194,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
 
   /** The live CHECK constraints of a table: (name, sql expression). */
   def checkConstraints(spark: SparkSession, root: String): Seq[(String, String)] =
-    liveChecks(fsFor(spark, root), new Path(root))
+    liveMeta(fsFor(spark, root), new Path(root)).checks
 
   // ---- durable table properties (#prop_<key>=<value>) --------------
   //
@@ -230,7 +212,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   //
   // Each manifest version carries its own map, so time travel and
   // RESTORE see every version under the properties it had.
-  private[sources] val PropPrefix = "#prop_"
   final val PropRetain = "graft.retain"
   // tiered-manifest knobs (see the protocol note in Lake.scala): the
   // inline per-dir line count past which a commit spills to segments,
@@ -255,23 +236,9 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * and unknown/huge estimates leave the slice untouched. */
   final val PropOptimizeWrite = "graft.optimizeWrite"
 
-  private[graft] def manifestProps(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Map[String, String] =
-    manifestMeta(fs, r, v).collect {
-      case l if l.startsWith(PropPrefix) &&
-          l.indexOf('=', PropPrefix.length) > PropPrefix.length =>
-        val i = l.indexOf('=', PropPrefix.length)
-        l.substring(PropPrefix.length, i) -> l.substring(i + 1)
-    }.toMap
-
-  private[sources] def liveProps(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path): Map[String, String] =
-    committedVersions(fs, r).lastOption
-      .map(v => manifestProps(fs, r, v)).getOrElse(Map.empty)
-
   /** The live snapshot's table properties (empty when none set). */
   def tableProperties(spark: SparkSession, root: String): Map[String, String] =
-    liveProps(fsFor(spark, root), new Path(root))
+    liveMeta(fsFor(spark, root), new Path(root)).props
 
   /** Effective dvMaxRows: an explicit per-call value (>= 0) wins; the
     * omitted-arg sentinel -1 inherits the table's `graft.dvMaxRows`
@@ -282,7 +249,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       s"dvMaxRows must be >= 0 (or -1 = inherit $PropDvMaxRows), got $arg")
     val v =
       if (arg >= 0L) arg
-      else liveProps(fs, r).get(PropDvMaxRows).map { s =>
+      else liveMeta(fs, r).props.get(PropDvMaxRows).map { s =>
         s.toLongOption.filter(_ >= 0L).getOrElse(
           throw new IllegalArgumentException(
             s"table property $PropDvMaxRows='$s' is not a non-negative long"))
@@ -335,11 +302,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root"))
-    val merged = manifestProps(fs, r, cur) ++ props
+    val curMeta = tableMeta(fs, r, cur)
+    val merged = curMeta.props ++ props
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        manifestSchema(fs, r, cur), manifestRows(fs, r, cur),
-        props = Some(merged),
+        curMeta.schema, curMeta.rows,
+        meta = _.copy(props = merged),
         op = "set tblproperties " + props.keys.toSeq.sorted.mkString(",")))
       throw new java.util.ConcurrentModificationException(
         s"SET TBLPROPERTIES on $root lost version $next to a concurrent " +
@@ -358,15 +326,16 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"no committed table at $root"))
-    val have = manifestProps(fs, r, cur)
+    val curMeta = tableMeta(fs, r, cur)
+    val have = curMeta.props
     val missing = keys.filterNot(have.contains)
     if (!ifExists) require(missing.isEmpty,
       s"cannot UNSET absent table properties on $root: " +
         missing.sorted.mkString("[", ", ", "]") + " (use IF EXISTS)")
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        manifestSchema(fs, r, cur), manifestRows(fs, r, cur),
-        props = Some(have -- keys),
+        curMeta.schema, curMeta.rows,
+        meta = _.copy(props = have -- keys),
         op = "unset tblproperties " + keys.sorted.mkString(",")))
       throw new java.util.ConcurrentModificationException(
         s"UNSET TBLPROPERTIES on $root lost version $next to a concurrent " +
@@ -394,8 +363,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // session time zone, so the zone is recorded at establishment
   // (`#genparttz=`) and derivation quietly disables when a reading
   // session's zone differs — pruning weakens, never lies.
-  private[sources] val GenPartPrefix = "#genpart="
-  private[sources] val GenTzPrefix = "#genparttz="
   // `#gencol=<col>:<exprText>` — the SAME generated-column contract
   // (materialize omitting batches, validate supplying ones row-for-row)
   // for columns NOT participating in the partition layout. One
@@ -403,37 +370,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // lines by partition membership so partition-participating ones keep
   // their dir-tuple derivation and the rest stay plain derived columns
   // (still usable for stats/bloom skipping through deriveGenPreds).
-  private[sources] val GenColPrefix = "#gencol="
-
-  private[graft] def manifestGenParts(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[(String, String)] =
-    manifestMeta(fs, r, v).collect {
-      case l if l.startsWith(GenPartPrefix) &&
-          l.indexOf(':', GenPartPrefix.length) > GenPartPrefix.length =>
-        val i = l.indexOf(':', GenPartPrefix.length)
-        l.substring(GenPartPrefix.length, i) -> l.substring(i + 1)
-    }
-
-  private[graft] def manifestGenCols(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[(String, String)] =
-    manifestMeta(fs, r, v).collect {
-      case l if l.startsWith(GenColPrefix) &&
-          l.indexOf(':', GenColPrefix.length) > GenColPrefix.length =>
-        val i = l.indexOf(':', GenColPrefix.length)
-        l.substring(GenColPrefix.length, i) -> l.substring(i + 1)
-    }
-
-  /** EVERY generated column of snapshot `v`, partition-participating
-    * or not — the spelling the write-side contract (materialize +
-    * validate) and the DDL guards consume. */
-  private[graft] def manifestGenAll(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[(String, String)] =
-    manifestGenParts(fs, r, v) ++ manifestGenCols(fs, r, v)
-
-  private[sources] def manifestGenTz(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(GenTzPrefix))
-      .map(_.stripPrefix(GenTzPrefix))
 
   // ---- identity columns (GENERATED ALWAYS AS IDENTITY) -------------
   //
@@ -449,7 +385,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // under the new block, and retries — concurrent appends allocate
   // disjoint, gap-free-per-commit ranges with no coordinator beyond
   // the manifest slot itself.
-  private[sources] val IdentityPrefix = "#identity="
   // `#idmode=bydefault` — Delta's GENERATED BY DEFAULT AS IDENTITY:
   // the allocator fills ONLY rows omitting (or NULL-ing) the column;
   // explicit values pass through VERBATIM and the high-water mark
@@ -460,12 +395,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // (batches must omit the column). Semantics-bearing → `#require=
   // idmode`: an old build committing on top would drop the line and
   // silently revert the table to ALWAYS.
-  private[sources] val IdModePrefix = "#idmode="
-
-  private[graft] def manifestIdMode(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(IdModePrefix))
-      .map(_.stripPrefix(IdModePrefix))
 
   /** BY DEFAULT fill: rows whose identity value is NULL take the
     * contiguous block [start, start + nNull); explicit values pass
@@ -505,18 +434,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // it. Semantics-bearing → `#require=rowtracking` (an old build's
   // append would not stamp ids, silently breaking pairing).
   private[graft] val RowIdCol = "_row_id"
-  private[sources] val RowIdPrefix = "#rowid="
-
-  private[graft] def manifestRowId(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[Long] =
-    manifestMeta(fs, r, v).find(_.startsWith(RowIdPrefix))
-      .flatMap(_.stripPrefix(RowIdPrefix).toLongOption)
 
   /** Is row tracking live on the table (and if so, the next id)? */
   def rowTracking(spark: SparkSession, root: String): Option[Long] = {
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    committedVersions(fs, r).lastOption.flatMap(v => manifestRowId(fs, r, v))
+    liveMeta(fs, r).rowId
   }
 
   /** Strip the hidden row-id field from a user-facing schema. */
@@ -539,9 +462,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    if (manifestRowId(fs, r, cur).isDefined) return cur
+    val curMeta = tableMeta(fs, r, cur)
+    if (curMeta.rowId.isDefined) return cur
     requireNotFoldTable(fs, r, "enable row tracking on")
-    require(manifestSchema(fs, r, cur).isDefined,
+    require(curMeta.schema.isDefined,
       s"the table at $root predates carried schemas — commit once " +
         "(any append) to establish a #schema line, then enable row tracking")
     commitOverwrite(readCommittedAt(spark, root, cur), root,
@@ -559,8 +483,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       df: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, Option[Long]) = {
     import org.apache.spark.sql.functions.col
-    val mark = committedVersions(fs, r).lastOption
-      .flatMap(v => manifestRowId(fs, r, v))
+    val mark = liveMeta(fs, r).rowId
     mark match {
       case None => (df, None)
       case Some(m) if !df.columns.contains(RowIdCol) =>
@@ -576,29 +499,19 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     }
   }
 
-  private[graft] def manifestIdentity(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[(String, Long)] =
-    manifestMeta(fs, r, v).find(_.startsWith(IdentityPrefix)).flatMap { l =>
-      val body = l.stripPrefix(IdentityPrefix)
-      val i = body.lastIndexOf(':')
-      if (i <= 0) None
-      else body.drop(i + 1).toLongOption.map(n => (body.take(i), n))
-    }
-
   /** The live identity declaration: (column, next value to allocate). */
   def identityColumn(spark: SparkSession, root: String): Option[(String, Long)] = {
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    committedVersions(fs, r).lastOption.flatMap(v => manifestIdentity(fs, r, v))
+    liveMeta(fs, r).identity
   }
 
   /** Declaration resolution (the [[effectiveGenParts]] discipline):
     * `want` on the first declaring commit, inherited afterwards,
     * divergence refused. */
-  private[sources] def effectiveIdentityCol(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, want: Option[String]): Option[String] = {
-    val prev = committedVersions(fs, r).lastOption
-      .flatMap(v => manifestIdentity(fs, r, v)).map(_._1)
+  private[sources] def effectiveIdentityCol(r: Path, pre: TableMeta,
+      want: Option[String]): Option[String] = {
+    val prev = pre.identity.map(_._1)
     want match {
       case None => prev
       case Some(c) =>
@@ -662,8 +575,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * declaring commit, inherited afterwards, divergence refused —
     * a generated column is a TABLE property like the partition
     * layout. */
-  private[sources] def effectiveGenParts(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, want: Map[String, String]): Seq[(String, String)] = {
+  private[sources] def effectiveGenParts(r: Path, pre: TableMeta,
+      want: Map[String, String]): Seq[(String, String)] = {
     want.foreach { case (c, e) =>
       require(c.nonEmpty && !c.exists("=,:\n#".contains(_)),
         s"generated column name '$c' may not contain '=', ',', ':', '#', or newline")
@@ -673,8 +586,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // resolution covers EVERY generated column — partition-derived
     // (#genpart) and plain (#gencol) alike; the caller re-splits by
     // partition membership when it builds the commit lines
-    val prev = committedVersions(fs, r).lastOption
-      .map(v => manifestGenAll(fs, r, v)).getOrElse(Nil)
+    val prev = pre.genAll
     if (want.isEmpty) prev
     else {
       val w = want.toSeq.sortBy(_._1)
@@ -834,10 +746,11 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   private[sources] def deriveGenPreds(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: Path, v: Long,
       preds: Seq[Pred]): Seq[Pred] = {
-    val gens = manifestGenAll(fs, r, v)
+    val meta = tableMeta(fs, r, v)
+    val gens = meta.genAll
     if (gens.isEmpty || preds.isEmpty) return Nil
-    val schema = manifestSchema(fs, r, v).getOrElse(return Nil)
-    val tzOk = manifestGenTz(fs, r, v).forall(
+    val schema = meta.schema.getOrElse(return Nil)
+    val tzOk = meta.genTz.forall(
       _ == spark.sessionState.conf.sessionLocalTimeZone)
     gens.flatMap { case (p, text) =>
       classifyGenExpr(spark, text) match {
@@ -926,13 +839,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // rewritten in place is NOT reloaded — landing zones are
   // append-only by contract, and re-loading a mutated file would
   // double its rows.
-  private[sources] val IngestedPrefix = "#ingested="
-
-  private[graft] def manifestIngested(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[String] =
-    manifestMeta(fs, r, v).collect {
-      case l if l.startsWith(IngestedPrefix) => l.stripPrefix(IngestedPrefix)
-    }
 
   /** `COPY INTO <table> FROM '<dir>'`: append every parquet file of
     * the landing dir that is not yet in the table's ingestion ledger,
@@ -970,7 +876,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     landing.foreach { case (n, _) => require(!n.exists(":=,\n#".contains(_)),
       s"landing file name '$n' cannot ride the ingestion ledger") }
     val landingNames = landing.map(_._1).toSet
-    val prevLedger = manifestIngested(fs, r, cur)
+    val prevLedger = tableMeta(fs, r, cur).ingested
     val recordedNames = prevLedger.map(_.takeWhile(_ != ':')).toSet
     val newFiles = landing.filterNot { case (n, _) => recordedNames(n) }
     if (newFiles.isEmpty) return (cur, 0L)
@@ -1004,39 +910,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // version carries its own map, so time travel serves every version
   // under the names it had. Absent lines mean identity — pre-mapping
   // tables read and write exactly as before, at zero cost.
-  private[sources] val ColMapPrefix = "#colmap="
-  private[sources] val ColRetiredPrefix = "#colretired="
-
-  private[sources] def manifestColMap(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Map[String, String] =
-    // id-mode tables derive the flat translation from the field tree
-    // (#colmap2 is then the single source of truth and the v1 line is
-    // no longer written); name-mode tables parse the v1 line as ever
-    manifestColMap2(fs, r, v).map(flatColMap).getOrElse(
-      manifestMeta(fs, r, v).find(_.startsWith(ColMapPrefix))
-        .map(_.stripPrefix(ColMapPrefix).split(",").iterator
-          .map(_.trim).filter(_.nonEmpty).flatMap { e =>
-            val i = e.indexOf(':')
-            if (i <= 0) None else Some(e.take(i) -> e.drop(i + 1))
-          }.toMap)
-        .getOrElse(Map.empty))
-
-  private[sources] def manifestRetired(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Seq[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(ColRetiredPrefix))
-      .map(_.stripPrefix(ColRetiredPrefix).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
-  /** The live snapshot's column map (empty = identity). */
-  private[sources] def liveColMap(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path): Map[String, String] =
-    committedVersions(fs, r).lastOption
-      .map(v => manifestColMap(fs, r, v)).getOrElse(Map.empty)
 
   private[sources] def colMapAt(spark: SparkSession, root: String,
       version: Long): Map[String, String] =
-    manifestColMap(fsFor(spark, root), new Path(root), version)
+    tableMeta(fsFor(spark, root), new Path(root), version).colMap
 
   /** The physical (file) path of logical column path `c`: an exact
     * map hit wins (so a top-level column whose name contains a literal
@@ -1259,7 +1136,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // name mode). Semantics-bearing → `#require=colmap2`: an old build
   // committing on top would drop the tree and resurrect dropped
   // nested bytes on re-add.
-  private[sources] val ColMap2Prefix = "#colmap2="
 
   private[graft] final case class ColMapField(
       id: Int, container: Int, logical: String, phys: String)
@@ -1303,15 +1179,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       }
       ColMapV2(root.get("next").asInt, fields.result(), dead.result())
     }.toOption
-
-  private[graft] def manifestColMap2(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[ColMapV2] =
-    manifestMeta(fs, r, v).find(_.startsWith(ColMap2Prefix))
-      .flatMap(l => parseColMap2(l.stripPrefix(ColMap2Prefix)))
-
-  private[sources] def liveColMap2(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path): Option[ColMapV2] =
-    committedVersions(fs, r).lastOption.flatMap(v => manifestColMap2(fs, r, v))
 
   /** The flat logical-path → physical-path translation a tree implies:
     * one entry per field whose OWN name diverges, keyed by the full
@@ -1452,7 +1319,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then evolve"))
@@ -1465,13 +1333,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // new top-level names allocate physical names that can never
     // collide with a mapped or retired one, exactly like an evolving
     // append's staging would
-    val newMap = allocPhysical(merged, manifestColMap(fs, r, cur),
-      manifestRetired(fs, r, cur), cur + 1)
+    val newMap = allocPhysical(merged, curMeta.colMap,
+      curMeta.retired, cur + 1)
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(merged), manifestRows(fs, r, cur),
-        colMap = Some(newMap),
-        op = "evolve schema"))
+        Some(merged), curMeta.rows,
+        meta = _.copy(colMap = newMap), op = "evolve schema"))
       throw new java.util.ConcurrentModificationException(
         s"evolving the schema of $root lost version $next to a " +
           "concurrent commit — retry against the current table")
@@ -1498,14 +1365,15 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    if (manifestColMap2(fs, r, cur).isDefined) return cur
-    require(manifestSchema(fs, r, cur).isDefined,
+    val curMeta = tableMeta(fs, r, cur)
+    if (curMeta.colMap2.isDefined) return cur
+    require(curMeta.schema.isDefined,
       s"the table at $root predates carried schemas — commit once " +
         "(any append) to establish a #schema line, then upgrade")
     requireNotFoldTable(fs, r, "upgrade column mapping on")
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        manifestSchema(fs, r, cur), manifestRows(fs, r, cur),
+        curMeta.schema, curMeta.rows,
         colMap2Establish = true,
         op = "upgrade column mapping"))
       throw new java.util.ConcurrentModificationException(
@@ -1637,7 +1505,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then rename"))
@@ -1648,12 +1517,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         throw new IllegalArgumentException(
           s"cannot rename ${path.mkString(".")} at $root: ${e.getMessage}")
       }
-    val refs = refsOverlapping(spark, manifestChecks(fs, r, cur), oldCanon)
+    val refs = refsOverlapping(spark, curMeta.checks, oldCanon)
     require(refs.isEmpty,
       s"cannot rename ${oldCanon.mkString(".")}: CHECK constraint(s) " +
         refs.mkString("[", ", ", "]") + " reference it — drop them, " +
         "rename, and re-add them under the new name")
-    val genRefs = refsOverlapping(spark, manifestGenAll(fs, r, cur), oldCanon)
+    val genRefs = refsOverlapping(spark, curMeta.genAll, oldCanon)
     require(genRefs.isEmpty,
       s"cannot rename ${oldCanon.mkString(".")}: generated column(s) " +
         genRefs.mkString("[", ", ", "]") + " derive from (or through) it")
@@ -1662,14 +1531,15 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     beforeColMapUpgrade()
     upgradeColumnMapping(spark, root, retain)
     val base = currentVersion(spark, root).get
+    val baseMeta = tableMeta(fs, r, base)
     // the rename was validated against snapshot `cur`; a commit landing
     // before the upgrade would be silently folded over (stale schema
     // republished, its columns tombstoned) — refuse drift with the same
     // CME contract as the single-version pinSlot paths (the upgrade
     // itself changes none of the validated state)
-    if (base != cur && (manifestSchema(fs, r, base) != Some(schema) ||
-        manifestChecks(fs, r, base) != manifestChecks(fs, r, cur) ||
-        manifestGenAll(fs, r, base) != manifestGenAll(fs, r, cur)))
+    if (base != cur && (baseMeta.schema != Some(schema) ||
+        baseMeta.checks != curMeta.checks ||
+        baseMeta.genAll != curMeta.genAll))
       throw new java.util.ConcurrentModificationException(
         s"renaming ${oldCanon.mkString(".")} on $root raced a concurrent " +
           "commit that changed the table's schema or constraints between " +
@@ -1677,7 +1547,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
           "current table")
     val next = pinSlot(fs, r, base)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, base), retain,
-        Some(newSchema), manifestRows(fs, r, base),
+        Some(newSchema), baseMeta.rows,
         colMap2Carry = Map(newCanon.mkString(".") -> oldCanon.mkString(".")),
         op = s"rename column ${oldCanon.mkString(".")} -> " +
           newCanon.mkString(".")))
@@ -1708,7 +1578,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then rename"))
@@ -1718,19 +1589,19 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     require(!schema.fieldNames.contains(newName),
       s"column '$newName' already exists at $root")
     requireNotFoldTable(fs, r, "rename a column of")
-    val refs = checksReferencing(spark, manifestChecks(fs, r, cur), oldName)
+    val refs = checksReferencing(spark, curMeta.checks, oldName)
     require(refs.isEmpty,
       s"cannot rename '$oldName': CHECK constraint(s) " +
         refs.mkString("[", ", ", "]") + " reference it — drop them, " +
         "rename, and re-add them under the new name")
-    val genRefs = manifestGenAll(fs, r, cur).collect {
+    val genRefs = curMeta.genAll.collect {
       case (c, _) if c == oldName => c
-    } ++ checksReferencing(spark, manifestGenAll(fs, r, cur), oldName)
+    } ++ checksReferencing(spark, curMeta.genAll, oldName)
     require(genRefs.isEmpty,
       s"cannot rename '$oldName': generated column(s) " +
         genRefs.distinct.mkString("[", ", ", "]") + " are (or derive " +
         "from) it — the stored generation expression would stop binding")
-    val map = manifestColMap(fs, r, cur)
+    val map = curMeta.colMap
     val phys = physName(map, oldName)
     val newMap = (map - oldName) ++
       (if (phys == newName) Nil else Seq(newName -> phys))
@@ -1738,8 +1609,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       f => if (f.name == oldName) f.copy(name = newName) else f))
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), manifestRows(fs, r, cur),
-        colMap = Some(newMap),
+        Some(newSchema), curMeta.rows,
+        meta = _.copy(colMap = newMap),
         // id-mode: the renamed column KEEPS its id (the carry tells
         // the reconcile which previous path it came from)
         colMap2Carry = Map(newName -> oldName),
@@ -1779,7 +1650,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     def cur0 = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    def schemaAt(v: Long) = manifestSchema(fs, r, v).getOrElse(
+    def schemaAt(v: Long) = tableMeta(fs, r, v).schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then drop"))
@@ -1791,9 +1662,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // flat map, so the fold below stays valid across it)
     val cur = cur0
     val schema = schemaAt(cur)
-    val map = manifestColMap(fs, r, cur)
-    val checks = manifestChecks(fs, r, cur)
-    val gens = manifestGenAll(fs, r, cur)
+    val curMeta = tableMeta(fs, r, cur)
+    val map = curMeta.colMap
+    val checks = curMeta.checks
+    val gens = curMeta.genAll
     var folded = schema
     val droppedPhys = Seq.newBuilder[String] // full dotted phys paths
     val retiredTop = Seq.newBuilder[String]
@@ -1807,10 +1679,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
             folded.fieldNames.mkString("[", ", ", "]") + ")")
         require(folded.length > 1, s"cannot drop the only column of $root")
         val phys = physName(map, name)
-        require(!manifestPartCols(fs, r, cur).contains(phys),
+        require(!curMeta.partCols.contains(phys),
           s"cannot drop partition column '$name' — the partition layout is " +
             "a table property; re-layout with commitOverwrite to change it")
-        require(!manifestBucketBy(fs, r, cur).exists(_._2.contains(phys)),
+        require(!curMeta.bucketBy.exists(_._2.contains(phys)),
           s"cannot drop bucket column '$name' — the bucket layout is a " +
             "table property; re-layout with commitOverwrite to change it")
         val refs = checksReferencing(spark, checks, name)
@@ -1868,9 +1740,9 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         // here is a real interleaved commit: refuse with the same CME
         // contract as the single-version pinSlot paths.
         if (b != cur && (schemaAt(b) != schema ||
-            manifestColMap(fs, r, b) != map ||
-            manifestChecks(fs, r, b) != checks ||
-            manifestGenAll(fs, r, b) != gens))
+            tableMeta(fs, r, b).colMap != map ||
+            tableMeta(fs, r, b).checks != checks ||
+            tableMeta(fs, r, b).genAll != gens))
           throw new java.util.ConcurrentModificationException(
             s"dropping ${paths.map(_.mkString(".")).mkString(", ")} on " +
               s"$root raced a concurrent commit that changed the " +
@@ -1878,16 +1750,14 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
               "the id-mode upgrade — retry against the current table")
         b
       } else cur
-    val retired = manifestRetired(fs, r, base)
+    val baseMeta = tableMeta(fs, r, base)
     val slot = pinSlot(fs, r, base)
     if (!commitManifest(fs, r, slot, manifestDirs(fs, r, base), retain,
-        Some(folded), manifestRows(fs, r, base),
-        colMap = Some(newMap),
-        retiredCols = Some((retired ++ retiredTop.result()).distinct),
-        statsColsReplace =
-          Some(manifestStatsCols(fs, r, base).filterNot(droppedSet)),
-        bloomColsReplace =
-          Some(manifestBloomCols(fs, r, base).filterNot(droppedSet)),
+        Some(folded), baseMeta.rows,
+        meta = _.copy(colMap = newMap,
+          retired = (baseMeta.retired ++ retiredTop.result()).distinct,
+          statsCols = baseMeta.statsCols.filterNot(droppedSet),
+          bloomCols = baseMeta.bloomCols.filterNot(droppedSet)),
         op = s"drop column ${paths.map(_.mkString(".")).mkString(", ")}"))
       throw new java.util.ConcurrentModificationException(
         s"dropping ${paths.map(_.mkString(".")).mkString(", ")} on $root " +
@@ -1979,8 +1849,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   private[sources] def materializeDefaults(
       fs: org.apache.hadoop.fs.FileSystem, r: Path,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val committed = committedVersions(fs, r).lastOption
-      .flatMap(v => manifestSchema(fs, r, v))
+    val committed = liveMeta(fs, r).schema
     val res = org.apache.spark.sql.internal.SQLConf.get.resolver
     committed match {
       case Some(s) =>
@@ -2028,14 +1897,15 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then alter defaults"))
     requireNotFoldTable(fs, r, "alter column defaults on")
     val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    val identityDecl = manifestIdentity(fs, r, cur)
-    val gens = manifestGenAll(fs, r, cur)
+    val identityDecl = curMeta.identity
+    val gens = curMeta.genAll
     var fields = schema.fields
     cols.foreach { case (name, defOpt) =>
       val i = fields.indexWhere(f => res(f.name, name))
@@ -2061,7 +1931,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     if (newSchema == schema) return cur
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), manifestRows(fs, r, cur),
+        Some(newSchema), curMeta.rows,
         op = "alter column defaults " + cols.map { case (n, d) =>
           n + d.map(" = " + _).getOrElse(" drop") }.mkString(", ")))
       throw new java.util.ConcurrentModificationException(
@@ -2094,7 +1964,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then add columns"))
@@ -2116,12 +1987,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       schema.fields ++ cols.map { case (n, dt, md) =>
         org.apache.spark.sql.types.StructField(n, dt, nullable = true,
           metadata = md) })
-    val newMap = allocPhysical(newSchema, manifestColMap(fs, r, cur),
-      manifestRetired(fs, r, cur), cur + 1)
+    val newMap = allocPhysical(newSchema, curMeta.colMap,
+      curMeta.retired, cur + 1)
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), manifestRows(fs, r, cur),
-        colMap = Some(newMap),
+        Some(newSchema), curMeta.rows,
+        meta = _.copy(colMap = newMap),
         op = s"add columns ${cols.map(_._1).mkString(", ")}"))
       throw new java.util.ConcurrentModificationException(
         s"adding columns on $root lost version $next to a concurrent " +
@@ -2281,7 +2152,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then add columns"))
@@ -2315,17 +2187,17 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // physical name — EXCEPT, under id-mode, a leaf name the container
     // tombstoned (dropped-then-re-added), which allocates fresh so the
     // dropped bytes stay unreachable
-    val flat0 = manifestColMap(fs, r, cur)
+    val flat0 = curMeta.colMap
     val withTop =
       if (cols.exists(_._1.length == 1))
-        allocPhysical(newSchema, flat0, manifestRetired(fs, r, cur), cur + 1)
+        allocPhysical(newSchema, flat0, curMeta.retired, cur + 1)
       else flat0
-    val colMapOpt = Some(allocNestedPhys(manifestColMap2(fs, r, cur),
-      withTop, schema, cols.map(_._1), cur + 1))
+    val newMap = allocNestedPhys(curMeta.colMap2,
+      withTop, schema, cols.map(_._1), cur + 1)
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), manifestRows(fs, r, cur),
-        colMap = colMapOpt,
+        Some(newSchema), curMeta.rows,
+        meta = _.copy(colMap = newMap),
         op = s"add columns ${cols.map(_._1.mkString(".")).mkString(", ")}"))
       throw new java.util.ConcurrentModificationException(
         s"adding columns on $root lost version $next to a concurrent " +
@@ -2373,16 +2245,17 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     val r = new Path(root)
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val schema0 = manifestSchema(fs, r, cur).getOrElse(
+    val curMeta = tableMeta(fs, r, cur)
+    val schema0 = curMeta.schema.getOrElse(
       throw new IllegalArgumentException(
         s"the table at $root predates carried schemas — commit once " +
           "(any append) to establish a #schema line, then alter types"))
     // session-resolver lookup: `ALTER COLUMN Meta.V` must find
     // `meta.v` under the default case-insensitive resolver
     val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    val identityDecl = manifestIdentity(fs, r, cur)
-    val bucketDecl = manifestBucketBy(fs, r, cur)
-    val gens = manifestGenAll(fs, r, cur)
+    val identityDecl = curMeta.identity
+    val bucketDecl = curMeta.bucketBy
+    val gens = curMeta.genAll
     var schema = schema0
     var changed = false
     cols.foreach { case (path, newType) =>
@@ -2461,7 +2334,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     requireNotFoldTable(fs, r, "alter a column type on")
     val next = pinSlot(fs, r, cur)
     if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(schema), manifestRows(fs, r, cur),
+        Some(schema), curMeta.rows,
         op = "alter column " + cols.map { case (p, dt) =>
           s"${p.mkString(".")} type ${dt.simpleString}" }.mkString(", ")))
       throw new java.util.ConcurrentModificationException(
@@ -2492,26 +2365,15 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * point that applies the column map — refuse mapping DDL on them. */
   private[sources] def requireNotFoldTable(fs: org.apache.hadoop.fs.FileSystem,
       r: Path, what: String): Unit =
-    committedVersions(fs, r).lastOption
-      .flatMap(v => manifestOp(fs, r, v)).foreach(op =>
+    liveMeta(fs, r).op.foreach(op =>
         require(!op.startsWith("fold"),
           s"cannot $what a fold-maintained table at $r — the fold sink " +
             "pre-writes data dirs under the stream's own column names"))
 
-  private[graft] def manifestBucketBy(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Option[(Int, Seq[String])] =
-    manifestMeta(fs, r, v).find(_.startsWith(BucketByPrefix)).flatMap { l =>
-      val body = l.stripPrefix(BucketByPrefix)
-      val i = body.indexOf(':')
-      if (i <= 0) None
-      else body.take(i).toIntOption.map(n =>
-        (n, body.drop(i + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-    }
-
   /** The table's established bucket layout: `want` when this commit
     * declares one, else inherited — a divergent re-declaration
     * refuses (re-bucket by writing a new root). */
-  private[sources] def effectiveBucketBy(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+  private[sources] def effectiveBucketBy(r: Path, pre: TableMeta,
       want: Option[(Int, Seq[String])]): Option[(Int, Seq[String])] = {
     want.foreach { case (n, cols) =>
       require(n >= 1, s"bucket count must be >= 1, got $n")
@@ -2519,8 +2381,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       cols.foreach(c => require(!c.exists("=,\n#:".contains(_)),
         s"bucket column name '$c' may not contain '=', ',', ':', '#', or newline"))
     }
-    val prev = committedVersions(fs, r).lastOption
-      .flatMap(v => manifestBucketBy(fs, r, v))
+    val prev = pre.bucketBy
     want match {
       case None => prev
       case Some(w) =>
@@ -2531,15 +2392,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     }
   }
 
-  private[sources] def manifestPartCols(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Seq[String] =
-    manifestMeta(fs, r, v).find(_.startsWith(PartColsPrefix))
-      .map(_.stripPrefix(PartColsPrefix).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-
-  /** Raw `#part_<dir>=<json>` lines of a manifest, keyed by dir. */
-  /** `#part_` lines of a body, keyed by dir. */
+  /** `#part_<dir>=<json>` lines of a body, keyed by dir. */
   private[sources] def partsOfBody(body: Seq[String]): Map[String, String] =
     body.collect {
       case l if l.startsWith(PartPrefix) && l.indexOf('=') > PartPrefix.length =>
@@ -2640,18 +2493,19 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         Map[String, org.apache.spark.sql.catalyst.InternalRow])] = {
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val partCols = manifestPartCols(fs, r, version)
+    val meta = tableMeta(fs, r, version)
+    val partCols = meta.partCols
     if (partCols.isEmpty) return None
     // #partcols and #part_ keys are PHYSICAL; `schema` (and the
     // partition schema this returns) is LOGICAL
-    val inv = manifestColMap(fs, r, version).map(_.swap)
+    val inv = meta.colMap.map(_.swap)
     val pairs = partCols.map(c => c -> inv.getOrElse(c, c))
     val fieldsOpt = pairs.map { case (phys, log) =>
       schema.fields.find(_.name == log).map(phys -> _) }
     if (fieldsOpt.exists(_.isEmpty)) return None
     val fields = fieldsOpt.flatten
     if (fields.length == schema.length) return None // no data columns left
-    if (manifestBucketBy(fs, r, version)
+    if (meta.bucketBy
         .exists(_._2.exists(partCols.contains))) return None
     val partsRaw = manifestPartsRaw(fs, r, version)
     val dirs = manifestDirs(fs, r, version)

@@ -158,12 +158,12 @@ class LakeColMapV2Spec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     val r = new org.apache.hadoop.fs.Path(root)
-    val v2a = Lake.manifestColMap2(fs, r,
-      Lake.currentVersion(spark, root).get).get
+    val v2a = Lake.tableMeta(fs, r,
+      Lake.currentVersion(spark, root).get).colMap2.get
     val idOfK = v2a.fields.find(f => f.container == 0 && f.logical == "k").get.id
     Lake.renameNestedColumn(spark, root, Seq("meta", "v"), "score")
-    val v2b = Lake.manifestColMap2(fs, r,
-      Lake.currentVersion(spark, root).get).get
+    val v2b = Lake.tableMeta(fs, r,
+      Lake.currentVersion(spark, root).get).colMap2.get
     assert(v2b.fields.find(f => f.container == 0 && f.logical == "k")
       .get.id === idOfK, "ids are immutable across DDL")
     val metaId = v2b.fields.find(f => f.container == 0 && f.logical == "meta").get
@@ -173,8 +173,8 @@ class LakeColMapV2Spec extends SparkSpec {
     // TOP-LEVEL rename on an id-mode table also carries its id (the
     // rename carry reaches both engines) and freezes the physical name
     Lake.renameColumn(spark, root, "k", "key")
-    val v2c = Lake.manifestColMap2(fs, r,
-      Lake.currentVersion(spark, root).get).get
+    val v2c = Lake.tableMeta(fs, r,
+      Lake.currentVersion(spark, root).get).colMap2.get
     val keyEnt = v2c.fields.find(f => f.container == 0 && f.logical == "key").get
     assert(keyEnt.id === idOfK && keyEnt.phys === "k",
       "a top-level rename must keep the id and the frozen physical name")
