@@ -216,7 +216,8 @@ object Lake
   // Manifest body = newline-separated data-dir names, plus optional
   // `#`-prefixed metadata lines: TABLE-LEVEL ones ([[TableMeta]] — the
   // committed schema, layout, constraints, properties, allocator
-  // marks) and PER-DIR ones (stats, blooms, partition values, DVs).
+  // marks) and PER-DIR ones ([[DirMeta]] — stats, file stats, blooms,
+  // partition values, DVs).
   //
   // A manifest (`_commit_<v>`) is IMMUTABLE once published — the
   // protocol renames it in atomically and only ever DELETES it — but
@@ -270,7 +271,9 @@ object Lake
 
   // Budgets are sized so the FULL metadata of a few 10^6-dir
   // snapshots stays resident (a snapshot's segments ≈ 10^6 cached
-  // lines, its expansion ≈ 10^6 lines, its six derived views ≈ 6·10^6
+  // lines, its expansion ≈ 10^6 lines, its two derived views — the
+  // dir list and the per-dir [[DirMeta]] map, one weight unit per dir
+  // entry however many of its five line kinds it holds — ≈ 2·10^6
   // entries): ~1-3 GB worst case, vs tens of GB unbounded. Budgets
   // that fit LESS than one working set thrash — probe-measured: a 2M
   // derived budget at 10^6 dirs rebuilt views every access and nearly
@@ -422,31 +425,6 @@ object Lake
       r: Path, name: String): Seq[String] =
     readCachedLines(fs, new Path(r, name))
 
-  /** The container-relative dir a per-dir metadata line describes (the
-    * override/drop key of tiered expansion); None for table-level
-    * lines and dir names. */
-  private[sources] def perDirKey(l: String): Option[String] = {
-    def keyOf(prefix: String, stopAtSlash: Boolean): Option[String] = {
-      val eq = l.indexOf('=', prefix.length)
-      if (eq <= prefix.length) None
-      else {
-        val k = l.substring(prefix.length, eq)
-        if (stopAtSlash) {
-          val s = k.indexOf('/')
-          if (s > 0) Some(k.take(s)) else Some(k)
-        } else Some(k)
-      }
-    }
-    if (l.startsWith(FileStatsPrefix)) keyOf(FileStatsPrefix, true)
-    // #stats_ is a prefix of nothing else per-dir; #statscols= is a
-    // DIFFERENT prefix (no underscore) and never matches here
-    else if (l.startsWith(StatsPrefix)) keyOf(StatsPrefix, false)
-    else if (l.startsWith(BloomPrefix)) keyOf(BloomPrefix, false)
-    else if (l.startsWith(PartPrefix)) keyOf(PartPrefix, false)
-    else if (l.startsWith(DvPrefix)) keyOf(DvPrefix, false)
-    else None
-  }
-
   private def readCachedLines(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): Seq[String] = {
     val st = fs.getFileStatus(p)
@@ -478,8 +456,9 @@ object Lake
   /** The table-level state of snapshot `v`: ONE [[TableMeta]] parse
     * of the RAW body per manifest (table-level lines live inline, so
     * tiered tables never pay the segment expansion for it), memoized
-    * and validated like the derived views. Per-dir accessors (stats/
-    * blooms/parts/dvs/dirs) MUST keep reading the expanded body. */
+    * and validated like the derived views. The per-dir views
+    * ([[dirMeta]], [[manifestDirs]]) MUST keep reading the expanded
+    * body. */
   private[graft] def tableMeta(fs: org.apache.hadoop.fs.FileSystem,
       r: Path, v: Long): TableMeta =
     memoOf(tableMetaCache, fs, r, v, "meta")(
@@ -514,7 +493,7 @@ object Lake
     val drops = raw.iterator.filter(_.startsWith(SegDropPrefix))
       .map(_.stripPrefix(SegDropPrefix)).toSet
     // inline per-dir lines REPLACE the listed dir's whole segment set
-    val overridden = raw.iterator.flatMap(perDirKey).toSet
+    val overridden = raw.iterator.flatMap(DirMeta.perDirKey).toSet
     var unread = 0L
     val out = Seq.newBuilder[String]
     raw.foreach { l =>
@@ -523,7 +502,7 @@ object Lake
         if (!keepSeg(ref)) unread += ref._2
         else segmentLines(fs, r, ref._1).foreach { sl =>
           if (!sl.startsWith("#")) { if (!drops(sl)) out += sl }
-          else perDirKey(sl) match {
+          else DirMeta.perDirKey(sl) match {
             case Some(d) => if (!drops(d) && !overridden(d)) out += sl
             case None => // segments carry only per-dir lines; skip junk
           }
@@ -581,10 +560,10 @@ object Lake
     res
   }
 
-  // Derived-view memo: the per-dir metadata accessors (stats / fstats
-  // / bloom / part / dv maps, dir lists) each rebuild an O(dirs)
-  // structure from the body lines on EVERY call, and one relation
-  // assembly calls several of them — at probe scale (10^5-10^6 dirs)
+  // Derived-view memo: the per-dir views (the dir list and the
+  // [[DirMeta]] map) each rebuild an O(dirs) structure from the body
+  // lines on EVERY call, and one relation assembly calls both many
+  // times — at probe scale (10^5-10^6 dirs)
   // those rebuilds dominate planning. Keyed like the body caches and
   // validated by the manifest's (modTime, length); entries are derived
   // purely from the (immutable once published) body, so a hit is
@@ -657,18 +636,21 @@ object Lake
     tableMetaCache.clear()
   }
 
-  /** TEST SEAM: the six derived views of one snapshot, as the
+  /** TEST SEAM: the two derived views of one snapshot, as the
     * accessors serve them (seeded by the commit path when warm, parsed
-    * cold otherwise) — (dirs, stats, fstats, blooms, parts, dvs). */
+    * cold otherwise) — (dirs, per-dir metadata). */
   private[graft] def derivedViewsForTest(spark: SparkSession, root: String,
-      v: Long): (Seq[String], Map[String, String],
-        Map[String, Map[String, String]], Map[String, String],
-        Map[String, String], Map[String, String]) = {
+      v: Long): (Seq[String], Map[String, DirMeta]) = {
     val fs = fsFor(spark, root); val r = new Path(root)
-    (manifestDirs(fs, r, v), manifestStatsRaw(fs, r, v),
-      manifestFileStatsRaw(fs, r, v), manifestBloomsRaw(fs, r, v),
-      manifestPartsRaw(fs, r, v), manifestDvsRaw(fs, r, v))
+    (manifestDirs(fs, r, v), dirMeta(fs, r, v))
   }
+
+  /** The per-dir metadata of snapshot `v`, keyed by dir: ONE
+    * [[DirMeta]] parse of the expanded body, memoized like the dir
+    * list (and seeded by the commit path). */
+  private[sources] def dirMeta(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+      v: Long): Map[String, DirMeta] =
+    derivedOf(fs, r, v, "dirMeta")(DirMeta.parse(_))
 
   private[sources] def manifestDirs(fs: org.apache.hadoop.fs.FileSystem, r: Path,
       v: Long): Seq[String] =

@@ -124,7 +124,10 @@ private[graft] trait LakeCommits { this: Lake.type =>
 
   /** Stage a batch under writer-unique dirs: ONE dir when `partCols`
     * is empty, one dir PER distinct partition-value tuple otherwise.
-    * Returns (dirs, stats, blooms, parts) ready for [[commitManifest]].
+    * Returns (dirs, their [[DirMeta]] entries) ready for
+    * [[commitManifest]]. `base` is the table state the caller derived
+    * the batch against; the id tree and the optimize-write property
+    * are read from it.
     * The distinct-tuple collect is partition-count-sized (metadata
     * scale, like the k-means centroid sync) and capped — a batch with
     * thousands of distinct values wants a coarser partition key.
@@ -147,19 +150,19 @@ private[graft] trait LakeCommits { this: Lake.type =>
     * dirs under the table root. */
   private[sources] def stageBatch(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      df0: org.apache.spark.sql.DataFrame, effStats: Seq[String],
-      effBloom: Seq[String], partCols: Seq[String],
+      df0: org.apache.spark.sql.DataFrame, base: TableMeta,
+      effStats: Seq[String], effBloom: Seq[String], partCols: Seq[String],
       maintenance: Boolean = false,
       bucketBy: Option[(Int, Seq[String])] = None,
       colMap: Map[String, String] = Map.empty):
-      (Seq[String], Map[String, String], Map[String, String], Map[String, String]) = {
+      (Seq[String], Map[String, DirMeta]) = {
     import org.apache.spark.sql.functions.{col, lit}
     // batches arrive under LOGICAL names; files (and therefore every
     // per-dir stat/bloom/part key, and the partCols/effStats/effBloom/
     // bucket args, which come from the manifest) are PHYSICAL. Under
     // id-mode the tree additionally stamps each known field's
     // parquet.field.id into the staged files (write-side provenance).
-    val df = toPhysicalDf(df0, colMap, liveMeta(fs, r).colMap2)
+    val df = toPhysicalDf(df0, colMap, base.colMap2)
     // optimize-write (Delta's): with the table property on, each
     // slice coalesces to ceil(est/128 MB) files instead of one file
     // per shuffle partition — a 32-thread tiny append stages ONE
@@ -168,7 +171,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // huge size estimate leaves the slice untouched (never funnel a
     // big batch into too few write tasks on a bad estimate).
     val optimizeWrite = bucketBy.isEmpty &&
-      liveMeta(fs, r).props.get(PropOptimizeWrite).contains("true")
+      base.props.get(PropOptimizeWrite).contains("true")
     def sized(slice: org.apache.spark.sql.DataFrame):
         org.apache.spark.sql.DataFrame =
       if (!optimizeWrite) slice
@@ -202,7 +205,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // read-back path uses, over the same rows the write emits, so the
     // manifest line is byte-identical to the re-read form.
     val statsPresent = effStats.filter(c => resolveField(df.schema, c).isDefined)
-    def stageOne(slice: org.apache.spark.sql.DataFrame): (String, Option[String], Option[String]) = {
+    def stageOne(slice: org.apache.spark.sql.DataFrame): (String, DirMeta) = {
       val staged = stagedDirName()
       import org.apache.spark.sql.functions.{count => fcount, lit => flit, max => fmax, min => fmin}
       val wantObs = statsPresent.nonEmpty || effBloom.nonEmpty
@@ -237,9 +240,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
           // ranges anyway
           if (!fs.listStatus(new Path(r, staged)).exists(f =>
               f.isFile && f.getPath.getName.endsWith(".parquet")))
-            return (staged,
-              if (effStats.isEmpty) None else Some("{}"),
-              if (effBloom.isEmpty) None else Some("{}"))
+            return (staged, DirMeta(
+              stats = if (effStats.isEmpty) None else Some("{}"),
+              bloom = if (effBloom.isEmpty) None else Some("{}")))
         case None =>
           observed(sized(slice)).write.mode("overwrite")
             .parquet(new Path(r, staged).toString)
@@ -251,13 +254,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
         else Some(statsJsonFromMinMax(statsPresent, i =>
           metrics(if (i % 2 == 0) s"__lo_${i / 2}" else s"__hi_${i / 2}")))
       val nRows = metrics.get("__n").map(_.asInstanceOf[Long])
-      (staged, stats,
-        dirBloomJson(spark, new Path(r, staged).toString, effBloom, nRows))
+      (staged, DirMeta(stats = stats, bloom =
+        dirBloomJson(spark, new Path(r, staged).toString, effBloom, nRows)))
     }
-    if (partCols.isEmpty) {
-      val (d, st, bl) = stageOne(df)
-      (Seq(d), st.map(d -> _).toMap, bl.map(d -> _).toMap, Map.empty)
-    } else {
+    def single(slice: org.apache.spark.sql.DataFrame) = {
+      val (d, m) = stageOne(slice)
+      (Seq(d), Map(d -> m))
+    }
+    if (partCols.isEmpty) single(df)
+    else {
       partCols.foreach(c => require(df.columns.contains(c),
         s"partition column '$c' is not in the batch schema " +
           df.columns.mkString("[", ", ", "]") + " — every writer to a " +
@@ -276,17 +281,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
         if (tuples.length > cap && maintenance) {
           // whole-snapshot rewrite over an accumulated layout: succeed
           // unpartitioned rather than refuse the maintenance op
-          val (d, st, bl) = stageOne(batch)
-          return (Seq(d), st.map(d -> _).toMap, bl.map(d -> _).toMap, Map.empty)
+          return single(batch)
         }
         require(tuples.length <= cap,
           s"batch carries more than $cap distinct (${partCols.mkString(", ")}) " +
             "tuples — partition by a coarser key (a dir per tuple is the " +
             "layout contract)")
-        if (tuples.isEmpty) { // empty batch: one empty dir keeps the
-          val (d, st, bl) = stageOne(batch) // version/schema semantics
-          (Seq(d), st.map(d -> _).toMap, bl.map(d -> _).toMap, Map.empty)
-        } else {
+        // empty batch: one empty dir keeps the version/schema semantics
+        if (tuples.isEmpty) single(batch)
+        else {
           // validate every tuple BEFORE the first write: a value that
           // does not normalize refuses with zero dirs staged
           val tupleJsons = tuples.map { row =>
@@ -300,10 +303,6 @@ private[graft] trait LakeCommits { this: Lake.type =>
                 })
             })
           }
-          val dirs = Seq.newBuilder[String]
-          val stats = Map.newBuilder[String, String]
-          val blooms = Map.newBuilder[String, String]
-          val parts = Map.newBuilder[String, String]
           // per-tuple slices are INDEPENDENT tiny jobs against the
           // persisted batch — stage them concurrently so the next
           // slice's write back-fills the scheduler while the previous
@@ -324,20 +323,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
           val failure = results.collectFirst { case Left(t) => t }
           if (failure.isDefined) {
             results.foreach {
-              case Right((d, _, _)) =>
+              case Right((d, _)) =>
                 scala.util.Try(fs.delete(new Path(r, d), true)); ()
               case _ => ()
             }
             throw failure.get
           }
-          results.zip(tupleJsons).foreach { case (res, json) =>
-            val (d, st, bl) = res.toOption.get
-            dirs += d
-            st.foreach(j => stats += d -> j)
-            bl.foreach(j => blooms += d -> j)
-            parts += d -> json
-          }
-          (dirs.result(), stats.result(), blooms.result(), parts.result())
+          val staged = results.map(_.toOption.get).zip(tupleJsons)
+            .map { case ((d, m), json) => d -> m.copy(part = Some(json)) }
+          (staged.map(_._1), staged.toMap)
         }
       } finally { batch.unpersist(); () }
     }
@@ -606,38 +600,33 @@ private[graft] trait LakeCommits { this: Lake.type =>
     * (a layout declaration, a constraint, an advanced allocator mark,
     * a restore's target state); whatever it leaves alone inherits.
     * `schema`, `rows` and `op` are per-commit and never inherit — a
-    * `None` writes no line. */
+    * `None` writes no line.
+    *
+    * Per-dir state works the same way, dir by dir: `dirMeta` holds a
+    * WHOLE [[DirMeta]] entry for each dir this commit wrote or changed
+    * (fresh dirs' stats, a deletion-vector commit's `prev.copy(dv =
+    * …)`, a restore's target state); a dir without an entry carries its
+    * previous snapshot's lines verbatim (immutable dir, immutable
+    * ranges). */
   private[sources] def commitManifest(fs: org.apache.hadoop.fs.FileSystem, r: Path,
       version: Long, dirs: Seq[String], retain: Int,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       rows: Option[Long] = None,
-      newStats: Map[String, String] = Map.empty,
-      newFileStats: Map[String, Map[String, String]] = Map.empty,
-      newBlooms: Map[String, String] = Map.empty,
-      newParts: Map[String, String] = Map.empty,
-      newDvs: Map[String, String] = Map.empty,
-      dvsReplace: Boolean = false,
+      dirMeta: Map[String, DirMeta] = Map.empty,
       meta: TableMeta => TableMeta = identity,
       colMap2Carry: Map[String, String] = Map.empty,
       colMap2Establish: Boolean = false,
       colMap2Replace: Boolean = false,
       op: String = "commit"): Boolean = {
-    // stats carry: a dir REUSED from the previous snapshot keeps its
-    // stats line verbatim (immutable dir, immutable range); only dirs
-    // this commit wrote get fresh lines. Resolved BEFORE the rename
-    // makes this version the latest. Bloom, file-stat and partition
-    // lines carry exactly the same way.
+    // per-dir carry: a dir REUSED from the previous snapshot keeps its
+    // lines verbatim; only dirs this commit passes an entry for get
+    // fresh ones. Resolved BEFORE the rename makes this version the
+    // latest.
     val prevV = committedVersions(fs, r).lastOption
-    val prevStats = prevV
-      .map(v => manifestStatsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
-    val prevFileStats = prevV
-      .map(v => manifestFileStatsRaw(fs, r, v))
-      .getOrElse(Map.empty[String, Map[String, String]])
-    val prevBlooms = prevV
-      .map(v => manifestBloomsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
-    val prevParts = prevV
-      .map(v => manifestPartsRaw(fs, r, v)).getOrElse(Map.empty[String, String])
-    val upd = meta(prevV.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty))
+    val prevMeta = prevV.map(Lake.dirMeta(fs, r, _))
+      .getOrElse(Map.empty[String, DirMeta])
+    val prevTable = prevV.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
+    val upd = meta(prevTable)
     // the id-mode field tree (#colmap2) RECONCILES at this one choke
     // point: fields of the committed schema keep their ids (matched by
     // container + logical name, or through the rename carry), new
@@ -663,33 +652,30 @@ private[graft] trait LakeCommits { this: Lake.type =>
       if (retain >= 0) retain
       else m.props.get(PropRetain).flatMap(_.toIntOption)
         .filter(_ >= 0).getOrElse(1)
-    // deletion vectors: the one MUTABLE per-dir line. Normal commits
-    // carry a reused dir's vector (new deletes pass the merged set in
-    // `newDvs`); rewritten dirs materialize theirs away by renaming.
-    // RESTORE passes `dvsReplace` — the target version's vectors are
-    // authoritative, carrying the live ones would re-kill rows the
-    // restore revives (or keep alive rows it re-deletes).
-    val prevDvs = prevV.map(v => manifestDvsRaw(fs, r, v))
-      .getOrElse(Map.empty[String, String])
-    def dvFor(d: String): Option[String] =
-      if (dvsReplace) newDvs.get(d)
-      else newDvs.get(d).orElse(prevDvs.get(d))
-    // the per-dir effective metadata of one dir, in the body/segment
-    // line grammar and a CANONICAL order (stats, fstats sorted, bloom,
-    // part, dv) — the tiered carry logic relies on writers always
-    // emitting this order
-    def linesFor(d: String): Seq[String] =
-      newStats.get(d).orElse(prevStats.get(d))
-        .map(j => StatsPrefix + d + "=" + j).toSeq ++
-      newFileStats.get(d).orElse(prevFileStats.get(d)).toSeq
-        .flatMap(_.toSeq.sortBy(_._1)
-          .map { case (f, j) => FileStatsPrefix + d + "/" + f + "=" + j }) ++
-      newBlooms.get(d).orElse(prevBlooms.get(d))
-        .map(j => BloomPrefix + d + "=" + j).toSeq ++
-      newParts.get(d).orElse(prevParts.get(d))
-        .map(j => PartPrefix + d + "=" + j).toSeq ++
-      dvFor(d).map(j => DvPrefix + d + "=" + j).toSeq
-    val hasDv = dirs.exists(d => dvFor(d).nonEmpty)
+    // the effective per-dir metadata of one dir, and its lines in the
+    // body/segment grammar ([[DirMeta.render]]'s canonical order — the
+    // tiered carry logic relies on writers always emitting it)
+    def effective(d: String): DirMeta =
+      dirMeta.getOrElse(d, prevMeta.getOrElse(d, DirMeta.empty))
+    def linesFor(d: String): Seq[String] = DirMeta.render(d, effective(d))
+    // plain java.util.HashSet, not dirs.toSet: at 10^6 dirs the scala
+    // immutable builder + boxed-equality lookups were the commit's
+    // single hottest component (round-20 stack sampling: HashSetBuilder
+    // .update + BitmapIndexedSetNode.contains ≈ 60% of a 5.7 s commit)
+    val dirSet: String => Boolean = {
+      val s = new java.util.HashSet[String](math.max(16, dirs.size * 2))
+      dirs.foreach(s.add); s.contains(_)
+    }
+    // a carried vector is found by scanning the previous snapshot's
+    // entries (a lookup per dir costs ~1 s at 10^6 dirs), and only when
+    // it can hold one: a feature-stamped manifest names `dv` exactly
+    // when it does, an unstamped (feature-free or pre-gate) one may
+    val prevMayHaveDv =
+      prevTable.requires.isEmpty || prevTable.requires.contains("dv")
+    val hasDv =
+      dirMeta.exists { case (d, m) => m.dv.isDefined && dirSet(d) } ||
+      (prevMayHaveDv && prevMeta.exists { case (d, m) =>
+        m.dv.isDefined && dirSet(d) && !dirMeta.contains(d) })
     // protocol gate: name EXACTLY the semantics-bearing features this
     // snapshot carries (derived from the effective lines, so a commit
     // that materializes a feature away — REORG purging the last DV,
@@ -730,23 +716,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
       .filter(_ > 1).getOrElse(64)
     val segWaste = m.props.get(PropSegWaste).flatMap(_.toDoubleOption)
       .filter(w => w > 0 && w <= 1).getOrElse(0.3)
-    // plain java.util.HashSet, not dirs.toSet: at 10^6 dirs the scala
-    // immutable builder + boxed-equality lookups were the commit's
-    // single hottest component (round-20 stack sampling: HashSetBuilder
-    // .update + BitmapIndexedSetNode.contains ≈ 60% of a 5.7 s commit)
-    val dirSet: String => Boolean = {
-      val s = new java.util.HashSet[String](math.max(16, dirs.size * 2))
-      dirs.foreach(s.add); s.contains(_)
-    }
     // dirs whose effective lines may differ from what a previous
     // segment recorded: touched by this commit, overridden inline by a
     // previous commit (kept overridden until the segment rewrites), or
-    // DV-replaced wholesale (restore)
-    def touchedNow(d: String): Boolean =
-      newStats.contains(d) || newFileStats.contains(d) ||
-        newBlooms.contains(d) || newParts.contains(d) || newDvs.contains(d)
+    // brought back (restore) after a previous commit dropped them from
+    // their segment while it recorded a deletion vector for them
     val prevRawBody = prevV.map(v => manifestBodyRaw(fs, r, v)).getOrElse(Nil)
-    val prevOverKeys = prevRawBody.iterator.flatMap(perDirKey).toSet
+    val prevOverKeys = prevRawBody.iterator.flatMap(DirMeta.perDirKey).toSet
+    val prevDrops = prevRawBody.iterator.filter(_.startsWith(SegDropPrefix))
+      .map(_.stripPrefix(SegDropPrefix)).toSet
     // segment summaries carried from the previous marker, by seg name
     val prevSegSums = segSumsOfRaw(prevRawBody)
     val prevSegNames =
@@ -758,13 +736,15 @@ private[graft] trait LakeCommits { this: Lake.type =>
     prevSegNames.foreach { name =>
       val sl = segmentLines(fs, r, name)
       val segDirs = sl.filterNot(_.startsWith("#"))
-      val segDvDirs: Set[String] =
-        if (dvsReplace)
-          sl.iterator.filter(_.startsWith(DvPrefix)).flatMap(perDirKey).toSet
-        else Set.empty
       val (live, dead) = segDirs.partition(dirSet) // one membership pass
+      // the segment's vector for a revived dir is history, not state
+      val revived = if (prevDrops.isEmpty) Nil else live.filter(prevDrops)
+      val staleDv: Set[String] =
+        if (revived.isEmpty) Set.empty
+        else DirMeta.parse(sl, revived.toSet).collect {
+          case (d, m) if m.dv.isDefined => d }.toSet
       val over = live.filter(d =>
-        touchedNow(d) || prevOverKeys(d) || segDvDirs(d))
+        dirMeta.contains(d) || prevOverKeys(d) || staleDv(d))
       // a dir whose effective line set became EMPTY cannot be
       // expressed as an override (zero inline lines would leave the
       // segment's lines live) — fold the segment instead
@@ -784,28 +764,11 @@ private[graft] trait LakeCommits { this: Lake.type =>
         val sumLine = prevSegSums.get(name)
           .filter { _ =>
             over.isEmpty || {
-              val overSet = over.toSet
-              var recStats = Map.empty[String, String]
-              var recParts = Map.empty[String, String]
-              sl.foreach { l =>
-                if (l.startsWith(StatsPrefix) &&
-                    !l.startsWith(FileStatsPrefix)) {
-                  val i = l.indexOf('=')
-                  if (i > StatsPrefix.length) {
-                    val d = l.substring(StatsPrefix.length, i)
-                    if (overSet(d)) recStats += d -> l.substring(i + 1)
-                  }
-                } else if (l.startsWith(PartPrefix)) {
-                  val i = l.indexOf('=')
-                  if (i > PartPrefix.length) {
-                    val d = l.substring(PartPrefix.length, i)
-                    if (overSet(d)) recParts += d -> l.substring(i + 1)
-                  }
-                }
-              }
+              val rec = DirMeta.parse(sl, over.toSet)
               over.forall { d =>
-                newStats.get(d).orElse(prevStats.get(d)) == recStats.get(d) &&
-                newParts.get(d).orElse(prevParts.get(d)) == recParts.get(d)
+                val e = effective(d)
+                val was = rec.getOrElse(d, DirMeta.empty)
+                e.stats == was.stats && e.part == was.part
               }
             }
           }
@@ -854,14 +817,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val residual = dirs.filterNot(carriedDirSet)
     // the inline-line count only decides tiering when NO segment
     // carries (an already-tiered table short-circuits) — at 10^6 dirs
-    // the five per-dir map probes were ~5M lookups of dead weight
+    // the per-dir metadata probes are millions of lookups of dead weight
     val tiered = carriedSegs.nonEmpty || {
-      val inlineCount = dirs.size +
-        dirs.count(d => newStats.contains(d) || prevStats.contains(d)) +
-        dirs.count(d => newFileStats.contains(d) || prevFileStats.contains(d)) +
-        dirs.count(d => newBlooms.contains(d) || prevBlooms.contains(d)) +
-        dirs.count(d => newParts.contains(d) || prevParts.contains(d)) +
-        dirs.count(d => dvFor(d).nonEmpty)
+      val inlineCount = dirs.size + dirs.iterator.map(effective(_).kinds).sum
       inlineCount > segThreshold
     }
     val featuresAll =
@@ -882,9 +840,8 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // evidence — O(residual) once at write, amortized O(batch · log n)
     // by the binary-counter policy like the segment bytes themselves
     val newSegSum: Option[String] = newSegName.flatMap { name =>
-      val fold = foldSegSummary(residual.map(d => (
-        newStats.get(d).orElse(prevStats.get(d)),
-        newParts.get(d).orElse(prevParts.get(d)))))
+      val fold = foldSegSummary(residual.map { d =>
+        val e = effective(d); (e.stats, e.part) })
       if (fold.isEmpty) None
       else Some(SegSumPrefix + name + "=" + statsJson(fold))
     }
@@ -921,16 +878,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // ---- incremental carry: seed the derived-view memo ---------------
     //
     // Everything a COLD reader would re-derive from the new manifest's
-    // expanded body (dir list + the five per-dir maps) is known right
-    // here as (previous snapshot's cached maps) ± (this commit's own
-    // deltas). Seeding the memo with persistent-map diffs makes the
+    // expanded body (dir list + per-dir map) is known right here as
+    // (previous snapshot's cached views) ± (this commit's own entries).
+    // Seeding the memo with persistent-map diffs makes the
     // writer's NEXT commit — whose first act is reading these exact
     // views for the carry — O(removed + batch) map ops instead of the
     // O(dirs) string expansion + JSON-key parse the cold path pays
     // (~7-9 s per commit at 10^6 dirs, ManifestGrowthProbe round-18).
     // Equality with a cold parse is the invariant (spec-pinned): the
     // expanded body's per-dir lines ARE `linesFor(d)` for d ∈ dirs, so
-    // each seeded map mirrors one branch of `linesFor` exactly.
+    // the seeded map holds `effective(d)` wherever it renders a line.
     locally {
       val prevDirs = prevV.map(v => manifestDirs(fs, r, v)).getOrElse(Nil)
       val removed = prevDirs.filterNot(dirSet)
@@ -938,19 +895,10 @@ private[graft] trait LakeCommits { this: Lake.type =>
         if (tiered) carriedSegs.flatMap(_.liveDirs) ++ residual else dirs
       seedDerived(fs, r, version, "dirs",
         if (dirsOrdered.isEmpty) Seq(s"v$version") else dirsOrdered)
-      def restrict[V](m: Map[String, V]): Map[String, V] =
-        m.filter { case (k, _) => dirSet(k) }
-      seedDerived(fs, r, version, "stats",
-        (prevStats -- removed) ++ restrict(newStats))
-      seedDerived(fs, r, version, "fstats",
-        (prevFileStats -- removed) ++ restrict(newFileStats))
-      seedDerived(fs, r, version, "blooms",
-        (prevBlooms -- removed) ++ restrict(newBlooms))
-      seedDerived(fs, r, version, "parts",
-        (prevParts -- removed) ++ restrict(newParts))
-      seedDerived(fs, r, version, "dvs",
-        if (dvsReplace) restrict(newDvs)
-        else (prevDvs -- removed) ++ restrict(newDvs))
+      val (cleared, written) =
+        dirMeta.filter { case (d, _) => dirSet(d) }.partition(_._2.isEmpty)
+      seedDerived(fs, r, version, "dirMeta",
+        (prevMeta -- removed -- cleared.keys) ++ written)
     }
     pruneRetention(fs, r, retainEff)
     true
@@ -1002,8 +950,10 @@ private[graft] trait LakeCommits { this: Lake.type =>
           missing.toSeq.sorted.mkString("[", ", ", "]") +
           " — retrying would resurrect superseded rows; re-run against " +
           "the current table")
-      def srcDvs(v: Long) = manifestDvsRaw(fs, r, v)
-        .view.filterKeys(srcDirs).toMap
+      def srcDvs(v: Long) = {
+        val meta = dirMeta(fs, r, v)
+        srcDirs.iterator.flatMap(d => meta.get(d).flatMap(_.dv).map(d -> _)).toMap
+      }
       if (srcDvs(curV) != srcDvs(baseV)) throw cme(
         "raced a deletion-vector commit on its source dirs — the " +
           "rewrite materialized a vector that is no longer current; " +
@@ -1265,8 +1215,8 @@ private[graft] trait LakeCommits { this: Lake.type =>
       pre.retired, allocV)
     // data first, completely, under dirs no other writer contests
     // (one per partition-value tuple when the table is partitioned)
-    val (staged, stats, blooms, parts) =
-      stageBatch(spark, fs, r, df, effStats, effBloom, effPart,
+    val (staged, stagedMeta) =
+      stageBatch(spark, fs, r, df, pre, effStats, effBloom, effPart,
         bucketBy = effBucket, colMap = newMap)
     // allocate past EVERY committed marker, not just the live one: a
     // defensively-ignored manifest (data dirs lost) still owns its
@@ -1278,7 +1228,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val (genParts, genCols) =
       effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     if (!commitManifest(fs, r, next, staged, retain, Some(df.schema),
-        rowCount, stats, newBlooms = blooms, newParts = parts,
+        rowCount, stagedMeta,
         meta = m => m.declaring(effStats, effBloom, effPart, effBucket).copy(
           colMap = newMap, genParts = genParts, genCols = genCols,
           genTz = genTzEst.orElse(m.genTz),
@@ -1454,8 +1404,8 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val (genParts, genCols) =
       effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     // O(batch): stats only for the new dirs; reused dirs' lines carry
-    var (staged, stats, blooms, parts) =
-      stageBatch(spark, fs, r, df, effStats, effBloom, effPart,
+    var (staged, stagedMeta) =
+      stageBatch(spark, fs, r, df, pre, effStats, effBloom, effPart,
         bucketBy = effBucket, colMap = newMap)
     def dropStaged(): Unit = staged.foreach(d => fs.delete(new Path(r, d), true))
     afterAppendStage()
@@ -1600,10 +1550,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
         if (idMoved) idStart = curMark.get
         if (ridMoved) ridStart = curRidMark.get
         val restaged = stageBatch(spark, fs, r,
-          materializeDefaults(fs, r, withIds(idStart, ridStart)),
+          materializeDefaults(fs, r, withIds(idStart, ridStart)), curMeta,
           effStats, effBloom, effPart, bucketBy = effBucket, colMap = newMap)
-        staged = restaged._1; stats = restaged._2
-        blooms = restaged._3; parts = restaged._4
+        staged = restaged._1; stagedMeta = restaged._2
       }
       // number allocation vs committedVersions (see commitOverwrite);
       // the snapshot to extend is the LIVE one
@@ -1639,7 +1588,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
         (c, math.max(idStart + idN, idMaxExplicit + 1L)) }
       val ridMark = if (ridMark0.isDefined) Some(ridStart + ridN) else None
       if (publishOrClean(commitManifest(fs, r, next, prevDirs ++ staged, retain, Some(schema),
-          rows, stats, newBlooms = blooms, newParts = parts,
+          rows, stagedMeta,
           meta = m => m.declaring(effStats, effBloom, effPart).copy(
             colMap = mergedMap, genParts = genParts, genCols = genCols,
             genTz = genTzEst.orElse(m.genTz),

@@ -18,9 +18,9 @@ private[graft] trait LakeDvOps { this: Lake.type =>
   // the deterministic `_metadata.row_index` the scan regenerates
   // (Delta's DV foundation — row indices are absolute file positions,
   // stable under row-group/page skipping). This is the first MUTABLE
-  // per-dir manifest line: a later delete on the same dir REPLACES its
-  // line with the merged position set, and RESTORE replaces the whole
-  // line set with the target version's (`dvsReplace` — carry semantics
+  // per-dir manifest line ([[DirMeta.dv]]): a later delete on the same
+  // dir REPLACES its line with the merged position set, and RESTORE
+  // sets every dir's vector to the target version's (carry semantics
   // would resurrect or re-kill rows across the restore point).
   //
   // Readers conjoin `NOT DvContains(<dir-basename>/<file>, row_index)`
@@ -35,24 +35,6 @@ private[graft] trait LakeDvOps { this: Lake.type =>
   // CDC-delete workload commits manifest lines instead of rewriting
   // its hot dirs every batch, and the standing compaction cadence
   // folds the vectors into data.
-  private[sources] val DvPrefix = "#dv_"
-
-  /** Raw `#dv_<dir>=<json>` lines of a manifest, keyed by dir. */
-  /** `#dv_` lines of a body, keyed by dir. */
-  private[sources] def dvsOfBody(body: Seq[String]): Map[String, String] =
-    body.collect {
-      case l if l.startsWith(DvPrefix) && l.indexOf('=') > DvPrefix.length =>
-        val i = l.indexOf('=')
-        l.substring(DvPrefix.length, i) -> l.substring(i + 1)
-    }.toMap
-
-  private[graft] def manifestDvsRaw(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, v: Long): Map[String, String] =
-    derivedOf(fs, r, v, "dvs")(dvsOfBody)
-
-  private[sources] def snapshotDvs(spark: SparkSession, root: String,
-      version: Long): Map[String, String] =
-    manifestDvsRaw(fsFor(spark, root), new Path(root), version)
 
   private[sources] def dvJson(m: Map[String, Seq[Long]]): String = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -64,6 +46,29 @@ private[graft] trait LakeDvOps { this: Lake.type =>
       ()
     }
     om.writeValueAsString(root)
+  }
+
+  /** The [[DirMeta]] entries a deletion-vector commit passes: each hit
+    * dir's `prev` entry with its vector extended by `hits` — rows of
+    * (`<dir-basename>/<file>`, row position) over `dirs`. */
+  private[sources] def withDvHits(prev: Map[String, DirMeta],
+      dirs: Seq[String], hits: Seq[org.apache.spark.sql.Row]):
+      Map[String, DirMeta] = {
+    val bySeg = dirs.map(d => new Path(d).getName -> d).toMap
+    hits.map(h => (h.getString(0), h.getLong(1)))
+      .groupBy { case (k, _) => bySeg(k.takeWhile(_ != '/')) }
+      .map { case (dir, entries) =>
+        val was = prev.getOrElse(dir, DirMeta.empty)
+        val before = was.dv.map(parseDvJson)
+          .getOrElse(Map.empty[String, Array[Long]])
+        val merged = entries.foldLeft(
+          before.view.mapValues(_.toSet).toMap) { case (acc, (k, pos)) =>
+          val f = k.drop(k.indexOf('/') + 1)
+          acc + (f -> (acc.getOrElse(f, Set.empty[Long]) + pos))
+        }
+        dir -> was.copy(dv =
+          Some(dvJson(merged.view.mapValues(_.toSeq.sorted).toMap)))
+      }
   }
 
   private[graft] def parseDvJson(json: String): Map[String, Array[Long]] = {
@@ -168,7 +173,7 @@ private[graft] trait LakeDvOps { this: Lake.type =>
     * the resolved filter plan from it); None when vector-free. */
   private[sources] def dvSetFor(spark: SparkSession, root: String,
       version: Long): Option[DvSet] =
-    dvEntries(manifestDvsRaw(fsFor(spark, root), new Path(root), version))
+    dvEntries(DirMeta.dvs(dirMeta(fsFor(spark, root), new Path(root), version)))
 
   /** Raw-path read of `dirs` from snapshot `version` with that
     * snapshot's deletion vectors applied — EVERY maintenance / COW /
@@ -189,7 +194,8 @@ private[graft] trait LakeDvOps { this: Lake.type =>
       case None    => spark.read.parquet(paths: _*)
     }
     val want = dirs.toSet
-    val dvs = manifestDvsRaw(fs, r, version).filter { case (d, _) => want(d) }
+    val meta = dirMeta(fs, r, version)
+    val dvs = dirs.flatMap(d => meta.get(d).flatMap(_.dv).map(d -> _)).toMap
     // dir-subset reads key the broadcast cache by subset too — a full
     // snapshot read at the same version keeps its own entry
     val subKey = r.toString + "#" + want.toSeq.sorted.mkString(",").hashCode

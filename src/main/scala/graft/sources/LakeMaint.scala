@@ -182,9 +182,9 @@ private[graft] trait LakeMaint { this: Lake.type =>
         }
     }
     val live = manifestDirs(fs, r, v).toSet
-    val tuples = manifestPartsRaw(fs, r, v).toSeq
-      .filter { case (d, _) => live.contains(d) }
-      .map { case (_, json) =>
+    val tuples = dirMeta(fs, r, v).toSeq
+      .flatMap { case (d, m) => m.part.filter(_ => live.contains(d)) }
+      .map { json =>
         val m = parsePartJson(json)
         partCols.map(c => decode(c, m.get(c).flatten))
       }
@@ -233,7 +233,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // maintenance OCC: slot pinned before any job (see deleteWhere)
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
-    val dvs = manifestDvsRaw(fs, r, cur)
+    val dvs = DirMeta.dvs(dirMeta(fs, r, cur))
     val cmap = curMeta.colMap
     // the predicate SHAPE gate runs even on a vector-free table (a
     // statement that would silently widen must refuse consistently):
@@ -311,8 +311,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val effStats = liveMeta(fs, r).statsCols
     val effBloom = liveMeta(fs, r).bloomCols
     val effPart = curMeta.partCols
-    val (newDirs, stats, blooms, parts) =
-      stageBatch(spark, fs, r, base, effStats, effBloom, effPart,
+    val (newDirs, stagedMeta) =
+      stageBatch(spark, fs, r, base, curMeta, effStats, effBloom, effPart,
         maintenance = true, bucketBy = curMeta.bucketBy,
         colMap = cmap)
     preserveMarkers(fs, r, scoped, newDirs)
@@ -327,7 +327,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     var pubRows = curMeta.rows
     var attempt = 0
     while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stats, newBlooms = blooms, newParts = parts,
+        pubSchema, pubRows, stagedMeta,
         meta = _.declaring(effStats, effBloom), op = "reorg purge")) {
       attempt += 1
       val rb =
@@ -396,15 +396,11 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val schema = org.apache.spark.sql.graft.Shim.asNullable(df.schema)
     val effStats = statsCols.map(_.trim).filter(_.nonEmpty)
     val effBloom = bloomCols.map(_.trim).filter(_.nonEmpty)
-    val (dirJson, fileJsons) =
-      if (effStats.isEmpty) ("{}", Map.empty[String, String])
-      else fileStatsJson(spark, dir.toString, effStats)
-        .getOrElse(("{}", Map.empty[String, String]))
+    val (dirJson, fileJsons, _) = dirFileStats(spark, r, Seq("v0"), effStats)
+      .getOrElse("v0", ("{}", Map.empty[String, String], -1L))
     if (!commitManifest(fs, r, 0L, Seq("v0"), retain, Some(schema),
-        None, Map("v0" -> dirJson),
-        newFileStats = Map("v0" -> fileJsons),
-        newBlooms = dirBloomJson(spark, dir.toString, effBloom)
-          .map("v0" -> _).toMap,
+        None, Map("v0" -> DirMeta(stats = Some(dirJson), files = fileJsons,
+          bloom = dirBloomJson(spark, dir.toString, effBloom))),
         meta = _.declaring(effStats, effBloom), op = "convert"))
       throw new java.util.ConcurrentModificationException(
         s"CONVERT of $root lost version 0 to a concurrent bootstrap — " +
@@ -481,8 +477,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // table key, not by breaking the layout), so partition pruning
     // survives maintenance instead of degrading to a full scan
     val effPart = curMeta.partCols
-    val (newDirs, stats, blooms, parts) =
-      stageBatch(narrow, fs, r, df, effStats, effBloom, effPart,
+    val (newDirs, stagedMeta) =
+      stageBatch(narrow, fs, r, df, curMeta, effStats, effBloom, effPart,
         maintenance = true, bucketBy = curMeta.bucketBy,
         colMap = curMeta.colMap)
     // the collapsed dirs hand their streaming-fold replay markers to
@@ -502,7 +498,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     var pubRows = curMeta.rows
     var attempt = 0
     while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stats, newBlooms = blooms, newParts = parts,
+        pubSchema, pubRows, stagedMeta,
         meta = _.declaring(effStats, effBloom), op = "compact")) {
       attempt += 1
       val rb =
@@ -690,22 +686,22 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val effStats = (liveMeta(fs, r).statsCols ++ cols0).distinct
     val effBloom = liveMeta(fs, r).bloomCols
     val effPart = curMeta.partCols
-    /** Write one clustered dir for `slice`; returns its manifest
-      * pieces. ONE column-pruned pass over the fresh dir yields
+    /** Write one clustered dir for `slice`; returns it and its
+      * [[DirMeta]]. ONE column-pruned pass over the fresh dir yields
       * per-file AND dir ranges — the whole point of the rewrite. */
     def stageClustered(slice: org.apache.spark.sql.DataFrame, n: Int):
-        (String, String, Map[String, String], Option[String]) = {
+        (String, DirMeta) = {
       val dir = stagedDirName() // writer-unique, see mergeCommitted
       clusterLayout(slice, n, None).write.mode("overwrite")
         .parquet(new Path(r, dir).toString)
       // one pass yields per-file + dir ranges AND the row count the
       // bloom builder needs — no separate count job per rewritten dir
       val (dirJson, fileJsons, nRows) =
-        fileStatsJsonN(narrow, new Path(r, dir).toString, effStats)
-          .getOrElse(("{}", Map.empty[String, String], -1L))
-      (dir, dirJson, fileJsons,
-        dirBloomJson(narrow, new Path(r, dir).toString, effBloom,
-          Some(nRows).filter(_ >= 0)))
+        dirFileStats(narrow, r, Seq(dir), effStats)
+          .getOrElse(dir, ("{}", Map.empty[String, String], -1L))
+      (dir, DirMeta(stats = Some(dirJson), files = fileJsons,
+        bloom = dirBloomJson(narrow, new Path(r, dir).toString, effBloom,
+          Some(nRows).filter(_ >= 0))))
     }
     def filesFor(bytes: Long): Int =
       Math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -729,28 +725,23 @@ private[graft] trait LakeMaint { this: Lake.type =>
         else cached.groupBy(effPart.map(col): _*)
           .agg(spanAggs.head, spanAggs.tail: _*)
           .limit(stageTupleCap + 1).collect()
-      val (newDirs, dirStats, fileStats, blooms, parts) =
+      val (newDirs, newMeta) =
         if (effPart.isEmpty || tuples.isEmpty || tuples.length > stageTupleCap) {
           // unpartitioned table, or over-cap fallback: one global dir
-          val (d, dj, fj, bl) = stageClustered(cached, filesFor(total))
+          val (d, m) = stageClustered(cached, filesFor(total))
           staged += d
-          (Seq(d), Map(d -> dj), Map(d -> fj), bl.map(d -> _).toMap,
-            Map.empty[String, String])
+          (Seq(d), Map(d -> m))
         } else {
           // per-partition clustering: byte budget per tuple = its own
           // recorded dirs' bytes + an even share of value-less dirs
           // (legacy/global dirs whose rows re-home to their tuples here)
-          val partsRaw = manifestPartsRaw(fs, r, cur)
-          val valueless = rewriteDirs.filterNot(partsRaw.contains)
+          val curDirMeta = dirMeta(fs, r, cur)
+          def partOf(d: String) = curDirMeta.get(d).flatMap(_.part)
+          val valueless = rewriteDirs.filter(partOf(_).isEmpty)
             .map(bytesByDir).sum / tuples.length
           val bytesByJson = rewriteDirs.flatMap(d =>
-            partsRaw.get(d).map(_ -> bytesByDir(d)))
+            partOf(d).map(_ -> bytesByDir(d)))
             .groupBy(_._1).map { case (j, xs) => j -> xs.map(_._2).sum }
-          val dirs = Seq.newBuilder[String]
-          val ds = Map.newBuilder[String, String]
-          val fjs = Map.newBuilder[String, Map[String, String]]
-          val bls = Map.newBuilder[String, String]
-          val pls = Map.newBuilder[String, String]
           // validate every tuple BEFORE the first write (the
           // stageBatch discipline: a value that does not normalize
           // refuses with zero dirs staged)
@@ -771,9 +762,9 @@ private[graft] trait LakeMaint { this: Lake.type =>
           // partitioned loop; see stageConcurrently). Phase split: the
           // concurrent loop only WRITES (spans already rode the tuple
           // collect above); per-file stats for every fresh dir then
-          // batch into ONE column-pruned pass (fileStatsJsonBatched —
-          // was one scan job per dir), and the per-dir blooms reuse its
-          // row counts concurrently.
+          // batch into ONE column-pruned pass (dirFileStats — was one
+          // scan job per dir), and the per-dir blooms reuse its row
+          // counts concurrently.
           val writeRes = stageConcurrently(tuples.length) { i =>
             val row = tuples(i)
             val slice = effPart.zipWithIndex.foldLeft(cached) {
@@ -797,24 +788,20 @@ private[graft] trait LakeMaint { this: Lake.type =>
           }
           writeRes.collectFirst { case Left(t) => t }.foreach(throw _)
           val newDirsSeq = writeRes.map(_.toOption.get)
-          val statsByDir = fileStatsJsonBatched(narrow, r, newDirsSeq, effStats)
+          val statsByDir = dirFileStats(narrow, r, newDirsSeq, effStats)
           val bloomRes = stageConcurrently(newDirsSeq.length) { i =>
             val n = statsByDir.get(newDirsSeq(i)).map(_._3).getOrElse(-1L)
             dirBloomJson(narrow, new Path(r, newDirsSeq(i)).toString,
               effBloom, Some(n).filter(_ >= 0))
           }
           bloomRes.collectFirst { case Left(t) => t }.foreach(throw _)
-          newDirsSeq.zip(jsons).zipWithIndex.foreach { case ((d, json), i) =>
-            val (dj, fj) = statsByDir.get(d)
-              .map(s => (s._1, s._2)).getOrElse(("{}", Map.empty[String, String]))
-            dirs += d
-            ds += d -> dj
-            fjs += d -> fj
-            bloomRes(i).toOption.get.foreach(b => bls += d -> b)
-            pls += d -> json
-          }
-          (dirs.result(), ds.result(), fjs.result(), bls.result(),
-            pls.result())
+          (newDirsSeq, newDirsSeq.zip(jsons).zipWithIndex.map {
+            case ((d, json), i) =>
+              val (dj, fj) = statsByDir.get(d)
+                .map(s => (s._1, s._2)).getOrElse(("{}", Map.empty[String, String]))
+              d -> DirMeta(stats = Some(dj), files = fj,
+                bloom = bloomRes(i).toOption.get, part = Some(json))
+          }.toMap)
         }
       preserveMarkers(fs, r, rewriteDirs, newDirs)
       // slot loss rebases across disjoint interlopers instead of
@@ -827,8 +814,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
       var pubRows = curMeta.rows
       var attempt = 0
       while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-          pubSchema, pubRows, dirStats, fileStats, newBlooms = blooms,
-          newParts = parts, meta = _.declaring(effStats, effBloom),
+          pubSchema, pubRows, newMeta, meta = _.declaring(effStats, effBloom),
           op = "zorder")) {
         attempt += 1
         val rb =

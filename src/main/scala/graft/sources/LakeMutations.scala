@@ -133,7 +133,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // at-scale shape of the continuous-upsert workload. Over-bound
       // (or dvMaxRows = 0) falls through to the dir rewrite.
       if (dvEff > 0 && touchedDirs.nonEmpty) {
-        val prevDvs = manifestDvsRaw(fs, r, cur)
         // metadata columns do not survive a join — materialize first
         val hits = readDirsWithDv(narrow, fs, r, cur, touchedDirs, carried)
           .withColumn("__dv_key",
@@ -143,20 +142,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
           .select(col("__dv_key"), col("__dv_pos"))
           .limit(dvEff.toInt + 1).collect()
         if (hits.length <= dvEff) {
-          val bySeg = touchedDirs.map(d => new Path(d).getName -> d).toMap
-          val fresh: Map[String, String] = hits.toSeq
-            .map(h => (h.getString(0), h.getLong(1)))
-            .groupBy { case (k, _) => bySeg(k.takeWhile(_ != '/')) }
-            .map { case (dir, entries) =>
-              val prev = prevDvs.get(dir).map(parseDvJson)
-                .getOrElse(Map.empty[String, Array[Long]])
-              val merged = entries.foldLeft(
-                prev.view.mapValues(_.toSet).toMap) { case (acc, (k, pos)) =>
-                val f = k.drop(k.indexOf('/') + 1)
-                acc + (f -> (acc.getOrElse(f, Set.empty[Long]) + pos))
-              }
-              dir -> dvJson(merged.view.mapValues(_.toSeq.sorted).toMap)
-            }
+          val fresh = withDvHits(dirMeta(fs, r, cur), touchedDirs, hits.toSeq)
           // strict mode keeps the COW contract: a drifted batch
           // refuses by name instead of aligned() silently dropping it
           // (the hidden row-id is engine-owned — never part of the
@@ -180,19 +166,16 @@ private[graft] trait LakeMutations { this: Lake.type =>
           val stageMap = allocPhysical(evolved, curMeta.colMap,
             curMeta.retired, next)
           // a pure-delete batch appends nothing — only vectors commit
-          val (newDirs, stats, blooms, parts) =
-            if (winners.isEmpty)
-              (Nil, Map.empty[String, String], Map.empty[String, String],
-                Map.empty[String, String])
+          val (newDirs, stagedMeta) =
+            if (winners.isEmpty) (Nil, Map.empty[String, DirMeta])
             else {
               validateChecks(fs, r, winners, "merge")
-              stageBatch(narrow, fs, r, winners, effStats, effBloom,
+              stageBatch(narrow, fs, r, winners, curMeta, effStats, effBloom,
                 curMeta.partCols,
                 bucketBy = curMeta.bucketBy, colMap = stageMap)
             }
           if (!commitManifest(fs, r, next, snapDirs ++ newDirs, retain,
-              Some(evolved), None, stats, newBlooms = blooms,
-              newParts = parts, newDvs = fresh,
+              Some(evolved), None, stagedMeta ++ fresh,
               meta = m => m.declaring(effStats, effBloom).copy(
                 colMap = stageMap, rowId = ridNextDv.orElse(m.rowId)),
               op = "merge")) {
@@ -244,15 +227,15 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // mapped or retired physical name — allocate like appends do
       val stageMap = allocPhysical(evolved, curMeta.colMap,
         curMeta.retired, next)
-      val (newDirs, stats, blooms, parts) =
-        stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
+      val (newDirs, stagedMeta) =
+        stageBatch(narrow, fs, r, rewritten, curMeta, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
           colMap = stageMap)
       // replaced dirs may hold streaming-fold replay markers — carry
       // them into the replacement before the commit makes it live
       preserveMarkers(fs, r, touchedDirs, newDirs)
       if (!commitManifest(fs, r, next, untouched ++ newDirs, retain,
-          Some(evolved), None, stats, newBlooms = blooms, newParts = parts,
+          Some(evolved), None, stagedMeta,
           meta = m => m.declaring(effStats, effBloom).copy(
             colMap = stageMap, rowId = ridNext.orElse(m.rowId)),
           op = "merge")) {
@@ -328,7 +311,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
     val dvEff = effDvMaxRows(fs, r, dvMaxRows)
-    val stats = manifestStatsRaw(fs, r, cur)
+    val perDir = dirMeta(fs, r, cur)
     val carried = curMeta.schema
     // user predicates name LOGICAL columns; per-dir lines are physical
     val cmap = curMeta.colMap
@@ -355,8 +338,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // wrong metadata drop.
     val delTree = enrichTree(spark, fs, r, cur,
       extractTree(org.apache.spark.sql.graft.Shim.catalystTree(predicate)))
-    val bloomsRaw = manifestBloomsRaw(fs, r, cur)
-    val partsRaw = manifestPartsRaw(fs, r, cur)
     sealed trait C; case object Keep extends C; case object Drop extends C
     case object Rewrite extends C
     def classify(d: String): C = {
@@ -367,9 +348,10 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // `DELETE WHERE year = 1996` on a year-partitioned fact is
       // manifest surgery, zero data I/O, no nullability gate needed
       // (the tuple IS each row's value)
-      val pv = partsRaw.get(d).map(parsePartJson)
-      lazy val st = stats.get(d).map(parseStatsJson)
-      lazy val bf = bloomsRaw.get(d).map(parseBloomJson)
+      val m = perDir.getOrElse(d, DirMeta.empty)
+      val pv = m.part.map(parsePartJson)
+      lazy val st = m.stats.map(parseStatsJson)
+      lazy val bf = m.bloom.map(parseBloomJson)
       // exclusion through the TREE (partition tuples, ranges, blooms
       // as combined per-leaf evidence; OR keeps a dir unless BOTH
       // sides exclude): no row can match → the dir survives untouched
@@ -406,7 +388,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // to copy-on-write when the hit count exceeds the bound.
     if (rewrite.nonEmpty && dropped.isEmpty && dvEff > 0) {
       import org.apache.spark.sql.functions.{col, substring_index}
-      val prevDvs = manifestDvsRaw(fs, r, cur)
       val hits = readDirsWithDv(narrow, fs, r, cur, rewrite, carried)
         .where(coalesce(predicate, lit(false)))
         .select(
@@ -415,25 +396,11 @@ private[graft] trait LakeMutations { this: Lake.type =>
         .limit(dvEff.toInt + 1).collect()
       if (hits.isEmpty) return cur // no row actually matches
       if (hits.length <= dvEff) {
-        val bySeg = rewrite.map(d => new Path(d).getName -> d).toMap
-        val fresh: Map[String, String] = hits.toSeq
-          .map(h => (h.getString(0), h.getLong(1)))
-          .groupBy { case (k, _) => bySeg(k.takeWhile(_ != '/')) }
-          .map { case (dir, entries) =>
-            val prev = prevDvs.get(dir).map(parseDvJson)
-              .getOrElse(Map.empty[String, Array[Long]])
-            val merged = entries.foldLeft(
-              prev.view.mapValues(_.toSet).toMap) { case (acc, (k, p)) =>
-              val f = k.drop(k.indexOf('/') + 1)
-              acc + (f -> (acc.getOrElse(f, Set.empty[Long]) + p))
-            }
-            dir -> dvJson(merged.view.mapValues(_.toSeq.sorted).toMap)
-          }
         // positions are NEW deletions (the read pre-filtered existing
         // vectors), so the metadata count stays exact through the chain
         if (!commitManifest(fs, r, next, snapDirs, retain, carried,
             curMeta.rows.map(_ - hits.length),
-            newDvs = fresh, op = "delete"))
+            withDvHits(perDir, rewrite, hits.toSeq), op = "delete"))
           throw new java.util.ConcurrentModificationException(
             s"delete on $root lost version $next to a concurrent " +
               "commit — the delete classified a snapshot that is no " +
@@ -458,13 +425,14 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val effPart = curMeta.partCols
     // staged writer-unique dirs (see mergeCommitted): the slot is
     // claimed by the publish, never by the dir names
-    val (newDirs, freshStats, freshBlooms, freshParts) =
+    val (newDirs, stagedMeta) =
       if (rewrite.nonEmpty) {
         // DV-aware read: a rewrite MATERIALIZES any existing vector
         // (soft-deleted rows excluded here never reach the new dir)
         val base = readDirsWithDv(narrow, fs, r, cur, rewrite, carried)
         val surviving = base.where(!coalesce(predicate, lit(false)))
-        val staged = stageBatch(narrow, fs, r, surviving, effStats, effBloom, effPart,
+        val staged = stageBatch(narrow, fs, r, surviving, curMeta, effStats,
+          effBloom, effPart,
           maintenance = true, bucketBy = curMeta.bucketBy,
           colMap = cmap)
         preserveMarkers(fs, r, rewrite ++ dropped, staged._1)
@@ -478,16 +446,14 @@ private[graft] trait LakeMutations { this: Lake.type =>
           dropped.map(d => new Path(r, d).toString): _*).schema)
         val empty = narrow.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        val staged = stageBatch(narrow, fs, r, empty, effStats, effBloom, Nil,
+        val staged = stageBatch(narrow, fs, r, empty, curMeta, effStats, effBloom, Nil,
           bucketBy = curMeta.bucketBy, colMap = cmap)
         preserveMarkers(fs, r, dropped, staged._1)
         staged
       } else // the metadata-only partition drop: no job at all
-        (Nil, Map.empty[String, String], Map.empty[String, String],
-          Map.empty[String, String])
+        (Nil, Map.empty[String, DirMeta])
     if (!commitManifest(fs, r, next, kept ++ newDirs, retain,
-        carried, None, freshStats, newBlooms = freshBlooms,
-        newParts = freshParts, meta = _.declaring(effStats, effBloom),
+        carried, None, stagedMeta, meta = _.declaring(effStats, effBloom),
         op = "delete")) {
       newDirs.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
@@ -530,7 +496,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
     val dvEff = effDvMaxRows(fs, r, dvMaxRows)
-    val stats = manifestStatsRaw(fs, r, cur)
     val carried = curMeta.schema
     val schema = carried.getOrElse(spark.read.parquet(
       snapDirs.map(d => new Path(r, d).toString): _*).schema)
@@ -565,19 +530,8 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val cmap = curMeta.colMap
     val updTree = enrichTree(spark, fs, r, cur,
       extractTree(org.apache.spark.sql.graft.Shim.catalystTree(predicate)))
-    val bloomsRaw = manifestBloomsRaw(fs, r, cur)
-    val partsRaw = manifestPartsRaw(fs, r, cur)
-    val (kept, touched) = snapDirs.partition { d =>
-      lazy val pv = partsRaw.get(d).map(parsePartJson)
-      lazy val st = stats.get(d).map(parseStatsJson)
-      lazy val bf = bloomsRaw.get(d).map(parseBloomJson)
-      def leafExcl(p: Pred): Boolean =
-        pv.exists(m => m.get(p.col).exists(partValueExcludes(_, p))) ||
-        st.exists(m => m.get(p.col).exists {
-          case (lo, hi) => predExcludes(lo, hi, p) }) ||
-        bf.exists(bfs => bloomExcludes(bfs, p))
-      treeExcludes(updTree, leafExcl)
-    }
+    val perDir = dirMeta(fs, r, cur)
+    val (touched, kept) = partitionDirsTree(snapDirs, perDir, updTree)
     if (touched.isEmpty) return cur
     // internal jobs (DV hit probe, copy/rewrite staging) plan at the
     // width of the touched dirs' on-disk bytes
@@ -599,7 +553,6 @@ private[graft] trait LakeMutations { this: Lake.type =>
       .getOrElse(false)
     if (dvEff > 0 && deterministic) {
       import org.apache.spark.sql.functions.substring_index
-      val prevDvs = manifestDvsRaw(fs, r, cur)
       val hits = readDirsWithDv(narrow, fs, r, cur, touched, carried)
         .where(coalesce(predicate, lit(false)))
         .select(
@@ -608,20 +561,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         .limit(dvEff.toInt + 1).collect()
       if (hits.isEmpty) return cur // no row actually matches
       if (hits.length <= dvEff) {
-        val bySeg = touched.map(d => new Path(d).getName -> d).toMap
-        val fresh: Map[String, String] = hits.toSeq
-          .map(h => (h.getString(0), h.getLong(1)))
-          .groupBy { case (k, _) => bySeg(k.takeWhile(_ != '/')) }
-          .map { case (dir, entries) =>
-            val prev = prevDvs.get(dir).map(parseDvJson)
-              .getOrElse(Map.empty[String, Array[Long]])
-            val merged = entries.foldLeft(
-              prev.view.mapValues(_.toSet).toMap) { case (acc, (k, pos)) =>
-              val f = k.drop(k.indexOf('/') + 1)
-              acc + (f -> (acc.getOrElse(f, Set.empty[Long]) + pos))
-            }
-            dir -> dvJson(merged.view.mapValues(_.toSeq.sorted).toMap)
-          }
+        val fresh = withDvHits(perDir, touched, hits.toSeq)
         // the updated COPIES of the matched rows, computed
         // distributively and staged as one O(matched) dir (layout- and
         // bucket-preserving, like every staged write)
@@ -634,14 +574,13 @@ private[graft] trait LakeMutations { this: Lake.type =>
         validateChecks(fs, r, copies, "update")
         val effStatsDv = liveMeta(fs, r).statsCols
         val effBloomDv = liveMeta(fs, r).bloomCols
-        val (newDirs, freshStats, freshBlooms, freshParts) =
-          stageBatch(narrow, fs, r, copies, effStatsDv, effBloomDv,
+        val (newDirs, stagedMeta) =
+          stageBatch(narrow, fs, r, copies, curMeta, effStatsDv, effBloomDv,
             curMeta.partCols,
             bucketBy = curMeta.bucketBy, colMap = cmap)
         // row-preserving: every killed row has exactly one live copy
         if (!commitManifest(fs, r, next, snapDirs ++ newDirs, retain,
-            carried, curMeta.rows, freshStats,
-            newBlooms = freshBlooms, newParts = freshParts, newDvs = fresh,
+            carried, curMeta.rows, stagedMeta ++ fresh,
             meta = _.declaring(effStatsDv, effBloomDv), op = "update")) {
           newDirs.foreach(d => fs.delete(new Path(r, d), true))
           throw new java.util.ConcurrentModificationException(
@@ -670,15 +609,14 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // exact either way
     val effPart = curMeta.partCols
     validateChecks(fs, r, updated, "update")
-    val (newDirs, freshStats, freshBlooms, freshParts) =
-      stageBatch(narrow, fs, r, updated, effStats, effBloom, effPart,
+    val (newDirs, stagedMeta) =
+      stageBatch(narrow, fs, r, updated, curMeta, effStats, effBloom, effPart,
           maintenance = true, bucketBy = curMeta.bucketBy,
           colMap = cmap)
     preserveMarkers(fs, r, touched, newDirs)
     // updates are row-preserving: the metadata count carries over
     if (!commitManifest(fs, r, next, kept ++ newDirs, retain,
-        carried, curMeta.rows, freshStats,
-        newBlooms = freshBlooms, newParts = freshParts,
+        carried, curMeta.rows, stagedMeta,
         meta = _.declaring(effStats, effBloom), op = "update")) {
       newDirs.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
@@ -906,14 +844,13 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val effPart = curMeta.partCols
       val effBucket = curMeta.bucketBy
       validateChecks(fs, r, rewritten, "merge")
-      val (newDirs, stats, blooms, parts) =
-        stageBatch(narrow, fs, r, rewritten, effStats, effBloom, effPart,
-          maintenance = true, bucketBy = effBucket,
+      val (newDirs, stagedMeta) =
+        stageBatch(narrow, fs, r, rewritten, curMeta, effStats, effBloom,
+          effPart, maintenance = true, bucketBy = effBucket,
           colMap = curMeta.colMap)
       preserveMarkers(fs, r, touchedDirs, newDirs)
       if (!commitManifest(fs, r, next, untouched ++ newDirs, retain,
-          carried.orElse(Some(rewritten.schema)), None, stats,
-          newBlooms = blooms, newParts = parts,
+          carried.orElse(Some(rewritten.schema)), None, stagedMeta,
           meta = m => m.declaring(effStats, effBloom).copy(
             rowId = ridNext.orElse(m.rowId)),
           op = "merge")) {

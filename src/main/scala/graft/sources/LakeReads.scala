@@ -658,14 +658,13 @@ private[graft] trait LakeReads { this: Lake.type =>
     pruneDirsTreeAt(spark, root, version,
       if (preds.isEmpty) PUnknown else PAnd(preds.map(PLeaf)))
 
-  /** THE per-dir pruning decision, over whatever evidence maps the
+  /** THE per-dir pruning decision, over whatever per-dir metadata the
     * caller assembled — the full path hands it the memoized whole-
-    * snapshot maps, the partial scan path the maps of the segments a
+    * snapshot map, the partial scan path the map of the segments a
     * summary could not exclude. One implementation, so segment-level
     * skipping can never diverge from per-dir skipping on a rule. */
   private[sources] def partitionDirsTree(dirs: Seq[String],
-      stats: Map[String, String], bloomsRaw: Map[String, String],
-      partsRaw: Map[String, String], tree: PredTree):
+      dirMeta: Map[String, DirMeta], tree: PredTree):
       (Seq[String], Seq[String]) =
     dirs.partition { d =>
       // per-dir evidence, parsed lazily once and shared by every leaf:
@@ -674,9 +673,10 @@ private[graft] trait LakeReads { this: Lake.type =>
       // can't answer. A leaf excludes when ANY evidence source proves
       // it; the tree combines leaves (OR keeps a dir unless BOTH
       // disjuncts exclude it).
-      lazy val pv = partsRaw.get(d).map(parsePartJson)
-      lazy val st = stats.get(d).map(parseStatsJson)
-      lazy val bf = bloomsRaw.get(d).map(parseBloomJson)
+      val m = dirMeta.getOrElse(d, DirMeta.empty)
+      lazy val pv = m.part.map(parsePartJson)
+      lazy val st = m.stats.map(parseStatsJson)
+      lazy val bf = m.bloom.map(parseBloomJson)
       def leafExcl(p: Pred): Boolean =
         pv.exists(m => m.get(p.col).exists(partValueExcludes(_, p))) ||
         st.exists(m => m.get(p.col).exists {
@@ -691,9 +691,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     val r = new Path(root)
     val dirs = manifestDirs(fs, r, version)
     if (!treeHasLeaves(tree)) return (dirs, Nil)
-    partitionDirsTree(dirs, manifestStatsRaw(fs, r, version),
-      manifestBloomsRaw(fs, r, version), manifestPartsRaw(fs, r, version),
-      tree)
+    partitionDirsTree(dirs, dirMeta(fs, r, version), tree)
   }
 
   /** Scan-planning prune with SEGMENT-LEVEL skipping: on a tiered
@@ -706,12 +704,12 @@ private[graft] trait LakeReads { this: Lake.type =>
     * exactly dirs the full expansion would also have excluded
     * (LakeSegSpec pins partial ≡ full with random predicates).
     * Returns kept/named-skipped dirs, the unread-skipped dir count,
-    * and the per-dir maps the scan still needs (file stats + deletion
-    * vectors) RESTRICTED to the partial body — excluded segments'
-    * metadata is never materialized. */
+    * and the per-dir metadata the scan still needs (file stats +
+    * deletion vectors) RESTRICTED to the partial body — excluded
+    * segments' metadata is never materialized. */
   private[sources] final case class ScanPrune(kept: Seq[String],
       skippedNamed: Seq[String], unreadSkippedDirs: Long,
-      fstats: Map[String, Map[String, String]], dvs: Map[String, String])
+      dirMeta: Map[String, DirMeta])
 
   private[sources] def scanPruneAt(spark: SparkSession, root: String,
       version: Long, tree: PredTree): ScanPrune = {
@@ -719,25 +717,21 @@ private[graft] trait LakeReads { this: Lake.type =>
     val r = new Path(root)
     def full(): ScanPrune = {
       val (kept, skipped) = pruneDirsTreeAt(spark, root, version, tree)
-      ScanPrune(kept, skipped, 0L,
-        if (treeHasLeaves(tree)) manifestFileStatsRaw(fs, r, version)
-        else Map.empty,
-        manifestDvsRaw(fs, r, version))
+      ScanPrune(kept, skipped, 0L, dirMeta(fs, r, version))
     }
     if (!treeHasLeaves(tree)) return full()
     def segExcl(sum: Map[String, (NormVal, NormVal)]): Boolean =
       treeExcludes(tree, p => sum.get(p.col).exists {
         case (lo, hi) => predExcludes(lo, hi, p) })
     val (lines, unread) = manifestBodyPartial(fs, r, version, segExcl)
-    // nothing skippable: the memoized whole-snapshot maps are the
+    // nothing skippable: the memoized whole-snapshot map is the
     // cheaper evidence (warm across queries; the partial body would
     // rebuild per call)
     if (unread == 0L) return full()
     val dirs = lines.filterNot(_.startsWith("#"))
-    val (kept, skippedNamed) = partitionDirsTree(dirs, statsOfBody(lines),
-      bloomsOfBody(lines), partsOfBody(lines), tree)
-    ScanPrune(kept, skippedNamed, unread, fstatsOfBody(lines),
-      dvsOfBody(lines))
+    val partial = DirMeta.parse(lines)
+    val (kept, skippedNamed) = partitionDirsTree(dirs, partial, tree)
+    ScanPrune(kept, skippedNamed, unread, partial)
   }
 
   /** Partition a kept dir's parquet files by its manifest file-level
@@ -792,7 +786,7 @@ private[graft] trait LakeReads { this: Lake.type =>
     val paths = Seq.newBuilder[String]
     val skippedFiles = Seq.newBuilder[String]
     sp.kept.foreach { d =>
-      sp.fstats.get(d) match {
+      sp.dirMeta.get(d).map(_.files) match {
         case Some(byFile) if byFile.nonEmpty && prunable =>
           val (keep, skip) = splitDirFilesTree(fs, r, d, byFile, tree)
           if (skip.isEmpty) paths += new Path(r, d).toString
@@ -803,7 +797,8 @@ private[graft] trait LakeReads { this: Lake.type =>
         case _ => paths += new Path(r, d).toString
       }
     }
-    (paths.result(), sp.skippedNamed, skippedFiles.result(), sp.dvs)
+    (paths.result(), sp.skippedNamed, skippedFiles.result(),
+      DirMeta.dvs(sp.dirMeta))
   }
 
   /** The pruned FILE set of snapshot `version` for catalyst predicate
@@ -953,7 +948,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       // lines and the total soft-deleted position count — what REORG
       // … APPLY (PURGE) exists to pay down; surfaced so the cost is
       // visible instead of silently taxing every read
-      val dvs = manifestDvsRaw(fs, r, v)
+      val dvs = DirMeta.dvs(dirMeta(fs, r, v))
       val dvRows = dvs.values.iterator
         .map(j => parseDvJson(j).values.iterator.map(_.length.toLong).sum)
         .sum
@@ -1004,7 +999,7 @@ private[graft] trait LakeReads { this: Lake.type =>
         }
       }
     }
-    val dvs = manifestDvsRaw(fs, r, v)
+    val dvs = DirMeta.dvs(dirMeta(fs, r, v))
     val dvRows = dvs.values.iterator
       .map(j => parseDvJson(j).values.iterator.map(_.length.toLong).sum)
       .sum
@@ -1132,7 +1127,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       // pre-schema table can be DV-deleted like any other)
       case None =>
         val df = spark.read.parquet(dirs.map(d => new Path(r, d).toString): _*)
-        dvColumn(spark, manifestDvsRaw(fs, r, version),
+        dvColumn(spark, DirMeta.dvs(dirMeta(fs, r, version)),
             Some((r.toString, version)))
           .map(df.where).getOrElse(df)
     }
@@ -1237,24 +1232,18 @@ private[graft] trait LakeReads { this: Lake.type =>
     // clone root at read time
     val abs = dirs.map(d => fs.makeQualified(new Path(sr, d)).toString)
     val toAbs = dirs.zip(abs).toMap
-    val srcStats = manifestStatsRaw(fs, sr, v)
-    val srcBlooms = manifestBloomsRaw(fs, sr, v)
     val dr = new Path(dstRoot)
     dfs.mkdirs(dr)
     val src = tableMeta(fs, sr, v)
     if (!commitManifest(dfs, dr, 0L, abs, retain,
         schema = src.schema,
         rows = src.rows,
-        newStats = srcStats.map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        newBlooms = srcBlooms.map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        newParts = manifestPartsRaw(fs, sr, v)
-          .map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        // the source snapshot's deletion vectors carry under the
-        // absolute dir names (read-side keys are dir BASEnames, so
-        // relative/absolute entries resolve alike)
-        newDvs = manifestDvsRaw(fs, sr, v)
-          .map { case (d, j) => toAbs.getOrElse(d, d) -> j },
-        dvsReplace = true,
+        // the source snapshot's per-dir lines carry under the absolute
+        // dir names — deletion vectors included (read-side keys are dir
+        // BASEnames, so relative/absolute entries resolve alike); file
+        // stats do not
+        dirMeta = dirMeta(fs, sr, v).map { case (d, m) =>
+          toAbs.getOrElse(d, d) -> m.copy(files = Map.empty) },
         // the source's layout and mapping carry: the referenced dirs
         // store the SOURCE's physical names and ARE bucket-named
         // (written through the bucketed writer), so the clone keeps
@@ -1383,15 +1372,26 @@ private[graft] trait LakeReads { this: Lake.type =>
         "read contract; re-layout with commitOverwrite instead")
     val dirs = manifestDirs(fs, r, version)
     val next = pinSlot(fs, r, cur)
+    // per-dir lines restore with their dirs: the target's over the
+    // previous snapshot's (the one the commit carries from), except
+    // deletion vectors, which restore AUTHORITATIVELY — carrying a
+    // live vector would re-kill rows the restore revives — so every
+    // dir carrying one gets an entry too
+    val targetMeta = dirMeta(fs, r, version)
+    val prevMeta = committedVersions(fs, r).lastOption
+      .map(dirMeta(fs, r, _)).getOrElse(Map.empty[String, DirMeta])
+    val restored = (targetMeta.keySet ++
+        prevMeta.iterator.collect { case (d, m) if m.dv.isDefined => d })
+      .iterator.map { d =>
+        val t = targetMeta.getOrElse(d, DirMeta.empty)
+        val p = prevMeta.getOrElse(d, DirMeta.empty)
+        d -> DirMeta(t.stats.orElse(p.stats),
+          if (t.files.nonEmpty) t.files else p.files,
+          t.bloom.orElse(p.bloom), t.part.orElse(p.part), t.dv)
+      }.toMap
     if (!commitManifest(fs, r, next, dirs, retain,
         Some(schema), target.rows,
-        newStats = manifestStatsRaw(fs, r, version),
-        newFileStats = manifestFileStatsRaw(fs, r, version),
-        newBlooms = manifestBloomsRaw(fs, r, version),
-        newParts = manifestPartsRaw(fs, r, version),
-        // deletion vectors restore AUTHORITATIVELY: carrying the live
-        // version's vectors would re-kill rows the restore revives
-        newDvs = manifestDvsRaw(fs, r, version), dvsReplace = true,
+        dirMeta = restored,
         // table-level state restores to the TARGET's (Delta restores
         // metadata with data):
         //  - CHECK constraints: one added after `version` was never
@@ -1702,12 +1702,13 @@ private[graft] trait LakeReads { this: Lake.type =>
     // renaming it — such a dir joins both sides (old rows under the
     // old vector, new rows under the new), unchanged rows pair up and
     // drop out, and the newly soft-deleted rows surface as deletes
-    val fromDvs = manifestDvsRaw(fs, r, fromVersion)
-    val toDvs = manifestDvsRaw(fs, r, toVersion)
-    val fromPairs = manifestDirs(fs, r, fromVersion)
-      .map(d => d -> fromDvs.getOrElse(d, "")).toSet
-    val toPairs = manifestDirs(fs, r, toVersion)
-      .map(d => d -> toDvs.getOrElse(d, "")).toSet
+    def dirDvPairs(v: Long) = {
+      val meta = dirMeta(fs, r, v)
+      manifestDirs(fs, r, v)
+        .map(d => d -> meta.get(d).flatMap(_.dv).getOrElse("")).toSet
+    }
+    val fromPairs = dirDvPairs(fromVersion)
+    val toPairs = dirDvPairs(toVersion)
     val removed = (fromPairs -- toPairs).map(_._1).toSeq.sorted
     val added = (toPairs -- fromPairs).map(_._1).toSeq.sorted
     def readDirs(dirs: Seq[String], version: Long) =

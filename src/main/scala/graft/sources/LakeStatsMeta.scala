@@ -35,7 +35,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
   // with executor-side semantics on non-ASCII data. NaN/Infinity
   // refuse normalization and simply drop that column's stats for the
   // dir (conservative, never wrong).
-  private[sources] val StatsPrefix = "#stats_"
 
   private[graft] sealed trait NormVal
   private[graft] final case class NumV(v: BigDecimal) extends NormVal
@@ -281,56 +280,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
     out.result()
   }
 
-  /** `#stats_` lines of a body, keyed by dir — named (not inlined in
-    * the memoized accessor) so the PARTIAL scan expansion parses
-    * surviving segments' lines with the exact same logic. */
-  private[sources] def statsOfBody(body: Seq[String]): Map[String, String] =
-    body.collect {
-      case l if l.startsWith(StatsPrefix) && !l.startsWith(FileStatsPrefix) &&
-          l.indexOf('=') > StatsPrefix.length =>
-        val i = l.indexOf('=')
-        l.substring(StatsPrefix.length, i) -> l.substring(i + 1)
-    }.toMap
-
-  /** Raw `#stats_<dir>=<json>` lines of a manifest, keyed by dir. */
-  private[sources] def manifestStatsRaw(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Map[String, String] =
-    derivedOf(fs, r, v, "stats")(statsOfBody)
-
-  // `#fstats_<dir>/<file>=<json>` — FILE-level ranges inside a dir,
-  // written by commits that can pay one column-pruned pass over their
-  // fresh dir (notably [[clusterCommitted]], whose whole point is
-  // tight per-file ranges). File skipping composes under dir skipping
-  // in [[readCommittedWhere]]: surviving dirs with file stats read an
-  // explicit pruned file list. A file on disk absent from the lines
-  // is always kept (only zero-row files can be absent from a full
-  // stats pass, but a reader must not have to trust that).
-  private[sources] val FileStatsPrefix = "#fstats_"
-
-  /** `#fstats_` lines of a body: dir -> (file -> json). */
-  private[sources] def fstatsOfBody(body: Seq[String]): Map[String, Map[String, String]] =
-    body.collect {
-      case l if l.startsWith(FileStatsPrefix) && l.indexOf('=') > FileStatsPrefix.length =>
-        val i = l.indexOf('=')
-        val dirFile = l.substring(FileStatsPrefix.length, i)
-        dirFile -> l.substring(i + 1)
-    }.groupBy { case (df, _) => df.takeWhile(_ != '/') }
-      .map { case (dir, entries) =>
-        dir -> entries.collect {
-          case (df, j) if df.startsWith(dir + "/") =>
-            df.stripPrefix(dir + "/") -> j
-        }.toMap
-      }
-
-  /** file-stats lines of a manifest: dir -> (file -> json). */
-  private[sources] def manifestFileStatsRaw(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Map[String, Map[String, String]] =
-    derivedOf(fs, r, v, "fstats")(fstatsOfBody)
-
-  /** Per-FILE min/max of a freshly-written dir on `cols`, plus the
-    * dir-level merge — ONE column-pruned pass over the dir
-    * (`groupBy(input_file_name)`), O(this dir) like the write that
-    * produced it. Returns (dirJson, fileName -> json). */
   /** Resolve a possibly-dotted NESTED path against `schema` — stats
     * and bloom columns accept struct-field paths (`meta.v`) so
     * struct-heavy event schemas skip like flat ones. An exact
@@ -347,74 +296,32 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
       })
     }
 
-  private[sources] def fileStatsJson(spark: SparkSession, dirPath: String,
-      cols: Seq[String]): Option[(String, Map[String, String])] =
-    fileStatsJsonN(spark, dirPath, cols).map { case (d, f, _) => (d, f) }
-
-  /** [[fileStatsJson]] plus the dir's TOTAL row count folded into the
-    * same single pass — callers that also build Bloom filters reuse it
-    * instead of paying a separate count job per staged dir. */
-  private[sources] def fileStatsJsonN(spark: SparkSession, dirPath: String,
-      cols: Seq[String]): Option[(String, Map[String, String], Long)] = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    if (cols.isEmpty) return None
-    val df = spark.read.parquet(dirPath)
-    val present = cols.filter(c => resolveField(df.schema, c).isDefined)
-    if (present.isEmpty) return Some(("{}", Map.empty, -1L))
-    val aggs = count(lit(1)) +: present.flatMap(c => Seq(min(df(c)), max(df(c))))
-    val rows = df.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.drop(1): _*).collect()
-    val nRows = rows.map(_.getLong(1)).sum
-    val perFile = rows.map { row =>
-      val name = new Path(row.getString(0)).getName
-      val m = present.zipWithIndex.flatMap { case (c, i) =>
-        for {
-          lo <- normExternal(row.get(2 + 2 * i))
-          hi <- normExternal(row.get(3 + 2 * i))
-          if cmpNorm(lo, hi).isDefined
-          bounded <- boundedStat(lo, hi)
-        } yield c -> bounded
-      }.toMap
-      name -> m
-    }.toMap
-    // dir range = merge of file ranges (min of lows, max of highs)
-    val dirStats = perFile.values.flatten
-      .groupBy(_._1)
-      .collect { case (c, vs) if vs.size == perFile.size =>
-        // only when EVERY rowful file carries the col's stats: a file
-        // whose extreme refused normalization (NaN/∞) or was all-NULL
-        // may still hold rows a predicate matches (NaN sorts greatest
-        // in Spark), so a dir range built without it could prune
-        // wrongly — drop the col at dir level, file level stays exact
-        val los = vs.map(_._2._1); val his = vs.map(_._2._2)
-        c -> ((los.reduce((a, b) => if (cmpNorm(a, b).exists(_ <= 0)) a else b),
-               his.reduce((a, b) => if (cmpNorm(a, b).exists(_ >= 0)) a else b)))
-      }.toMap
-    Some((statsJson(dirStats), perFile.map { case (f, m) => f -> statsJson(m) },
-      nRows))
-  }
-
-  /** [[fileStatsJsonN]] for SEVERAL freshly-written sibling dirs in ONE
-    * column-pruned pass. PRECONDITION: the dirs share one schema
-    * (`present` resolves once, against the merged schema, where the
-    * per-dir pass resolves per dir); under it the per-dir semantics
-    * (per-file ranges, dir merge rule, row counts) are identical and
-    * only the job count changes: a partitioned OPTIMIZE that staged T
-    * tuple dirs pays one stats job instead of T (each a fixed-overhead
-    * scan of a fresh tiny-to-medium dir). Keys of the returned map are
-    * the `dirs` entries (names under `r`, writer-unique, so grouping
-    * collected rows by parent-dir name is unambiguous). Dirs with no
-    * data rows map to ("{}", empty, 0) exactly as the per-dir pass
-    * would report them. An empty `cols` returns an empty map (caller
-    * treats absence as [[fileStatsJsonN]]'s None). */
-  private[sources] def fileStatsJsonBatched(spark: SparkSession, r: Path,
+  // `#fstats_<dir>/<file>=<json>` — FILE-level ranges inside a dir,
+  // written by commits that can pay one column-pruned pass over their
+  // fresh dir (notably [[clusterCommitted]], whose whole point is
+  // tight per-file ranges). File skipping composes under dir skipping
+  // in [[readCommittedWhere]]: surviving dirs with file stats read an
+  // explicit pruned file list. A file on disk absent from the lines
+  // is always kept (only zero-row files can be absent from a full
+  // stats pass, but a reader must not have to trust that).
+  /** Per-FILE min/max on `cols` of freshly-written dirs under `r`,
+    * plus each dir's merged range and TOTAL row count — ONE
+    * column-pruned pass (`groupBy(input_file_name)`) over all of them,
+    * O(these dirs) like the writes that produced them, so a
+    * partitioned OPTIMIZE that staged T tuple dirs pays one stats job
+    * instead of T. PRECONDITION: the dirs share one schema (`cols`
+    * resolve once, against the merged schema) — trivially true for one
+    * dir. Keys are the `dirs` entries (names under `r`, writer-unique,
+    * so grouping rows by parent-dir name is unambiguous); a dir with
+    * no data rows maps to ("{}", empty, 0), and every dir maps to
+    * ("{}", empty, -1) when no column resolves. An empty `cols` (or
+    * `dirs`) returns an empty map. Returns dir -> (dirJson, fileName
+    * -> json, rows). */
+  private[sources] def dirFileStats(spark: SparkSession, r: Path,
       dirs: Seq[String], cols: Seq[String]):
       Map[String, (String, Map[String, String], Long)] = {
     import org.apache.spark.sql.functions.{count, input_file_name, lit, max, min}
     if (cols.isEmpty || dirs.isEmpty) return Map.empty
-    if (dirs.lengthCompare(1) == 0)
-      return fileStatsJsonN(spark, new Path(r, dirs.head).toString, cols)
-        .map(dirs.head -> _).toMap
     val df = spark.read.parquet(dirs.map(d => new Path(r, d).toString): _*)
     val present = cols.filter(c => resolveField(df.schema, c).isDefined)
     if (present.isEmpty)
@@ -439,11 +346,15 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
         }.toMap
         name -> m
       }.toMap
-      // dir range = merge of file ranges, the fileStatsJsonN rule: a
-      // column folds only when EVERY rowful file carries its stats
+      // dir range = merge of file ranges (min of lows, max of highs)
       val dirStats = perFile.values.flatten
         .groupBy(_._1)
         .collect { case (c, vs) if vs.size == perFile.size =>
+          // only when EVERY rowful file carries the col's stats: a file
+          // whose extreme refused normalization (NaN/∞) or was all-NULL
+          // may still hold rows a predicate matches (NaN sorts greatest
+          // in Spark), so a dir range built without it could prune
+          // wrongly — drop the col at dir level, file level stays exact
           val los = vs.map(_._2._1); val his = vs.map(_._2._2)
           c -> ((los.reduce((a, b) => if (cmpNorm(a, b).exists(_ <= 0)) a else b),
                  his.reduce((a, b) => if (cmpNorm(a, b).exists(_ >= 0)) a else b)))
@@ -471,7 +382,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
   // ~100k expected items (≈15 KB of bits at 2% FPP) per (dir, col) so
   // manifests stay planning-readable; beyond the cap the FPP rises
   // gracefully.
-  private[sources] val BloomPrefix = "#bloom_"
   private[sources] val BloomMaxItems = 100000L
   private[sources] val BloomFpp = 0.02
 
@@ -481,19 +391,6 @@ private[graft] trait LakeStatsMeta { this: Lake.type =>
       s"bloom column name '$c' may not contain '=', ',', '#', or newline"))
     if (bloomCols.nonEmpty) bloomCols else prev.bloomCols
   }
-
-  /** `#bloom_` lines of a body, keyed by dir. */
-  private[sources] def bloomsOfBody(body: Seq[String]): Map[String, String] =
-    body.collect {
-      case l if l.startsWith(BloomPrefix) && l.indexOf('=') > BloomPrefix.length =>
-        val i = l.indexOf('=')
-        l.substring(BloomPrefix.length, i) -> l.substring(i + 1)
-    }.toMap
-
-  /** Raw `#bloom_<dir>=<json>` lines of a manifest, keyed by dir. */
-  private[sources] def manifestBloomsRaw(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Map[String, String] =
-    derivedOf(fs, r, v, "blooms")(bloomsOfBody)
 
   /** Bloom filters of one dir's manifest line, deserialized. */
   private[sources] def parseBloomJson(json: String):

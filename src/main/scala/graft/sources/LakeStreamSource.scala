@@ -336,12 +336,13 @@ final class LakeStreamSource(
     // deletion-vector lines tracked alongside the dir set: a DV
     // delete changes a dir's LIVE rows without renaming it, so it is
     // a delete the removed-dirs test cannot see
-    var prevDvs: Map[String, String] = anchor
-      .map(v => Lake.snapshotDvs(spark, root, v)).getOrElse(Map.empty)
+    def dvsAt(v: Long) = DirMeta.dvs(
+      Lake.dirMeta(Lake.fsFor(spark, root), new Path(root), v))
+    var prevDvs: Map[String, String] = anchor.map(dvsAt).getOrElse(Map.empty)
     val fresh = Seq.newBuilder[String]
     versions.foreach { v =>
       val cur = Lake.snapshotDirNames(spark, root, v).toSet
-      val curDvs = Lake.snapshotDvs(spark, root, v)
+      val curDvs = dvsAt(v)
       // row-PRESERVING maintenance (compaction, z-order) rewrites
       // layout, not contents: its added dirs carry exactly the rows
       // already streamed, so the step contributes NOTHING — the

@@ -32,7 +32,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // metadata, not hive path encoding), so every reader — time travel,
   // clone, compaction, COW rewrites — composes unchanged: a rewrite's
   // fresh dir simply carries no #part_ line and is always scanned.
-  private[sources] val PartPrefix = "#part_"
 
   /** Per-BATCH distinct-partition-tuple cap for [[stageBatch]] (a dir
     * per tuple is the layout contract, so a batch staging thousands of
@@ -2392,18 +2391,6 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     }
   }
 
-  /** `#part_<dir>=<json>` lines of a body, keyed by dir. */
-  private[sources] def partsOfBody(body: Seq[String]): Map[String, String] =
-    body.collect {
-      case l if l.startsWith(PartPrefix) && l.indexOf('=') > PartPrefix.length =>
-        val i = l.indexOf('=')
-        l.substring(PartPrefix.length, i) -> l.substring(i + 1)
-    }.toMap
-
-  private[sources] def manifestPartsRaw(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      v: Long): Map[String, String] =
-    derivedOf(fs, r, v, "parts")(partsOfBody)
-
   /** One dir's exact partition values: `{"c":{"n":"123"}}` numeric,
     * `{"c":{"s":"abc"}}` string, `{"c":{"z":true}}` NULL. */
   private[sources] def partJson(m: Seq[(String, Option[NormVal])]): String = {
@@ -2507,11 +2494,12 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     if (fields.length == schema.length) return None // no data columns left
     if (meta.bucketBy
         .exists(_._2.exists(partCols.contains))) return None
-    val partsRaw = manifestPartsRaw(fs, r, version)
+    val perDir = dirMeta(fs, r, version)
     val dirs = manifestDirs(fs, r, version)
     val tuples = Map.newBuilder[String, org.apache.spark.sql.catalyst.InternalRow]
     dirs.foreach { d =>
-      val j = partsRaw.getOrElse(d, return None) // un-tupled dir: no layout
+      // un-tupled dir: no layout
+      val j = perDir.get(d).flatMap(_.part).getOrElse(return None)
       val m = parsePartJson(j)
       val vals = fields.map { case (phys, f) =>
         if (!m.contains(phys)) return None
@@ -2544,9 +2532,8 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // planning pays O(matching segments) metadata reads too
     val sp = scanPruneAt(spark, root, version, tree)
     val prunable = treeHasLeaves(tree)
-    val fstats = sp.fstats
     sp.kept.map { d =>
-      val files = fstats.get(d) match {
+      val files = sp.dirMeta.get(d).map(_.files) match {
         case Some(byFile) if byFile.nonEmpty && prunable =>
           splitDirFilesTree(fs, r, d, byFile, tree)._1
         case _ =>

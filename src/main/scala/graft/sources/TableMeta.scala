@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * ([[Lake.manifestBodyRaw]]), which keeps metadata lookups
   * O(batch + log n) on tiered tables instead of forcing the O(dirs)
   * segment expansion [[Lake.manifestBody]] pays. Per-dir lines
-  * (`#stats_`, `#fstats_`, `#bloom_`, `#part_`, `#dv_`) and the tiered
-  * bookkeeping (`#seg=`, `#segdrop=`, `#segsum_`) are not part of it.
+  * (`#stats_`, `#fstats_`, `#bloom_`, `#part_`, `#dv_` — [[DirMeta]])
+  * and the tiered bookkeeping (`#seg=`, `#segdrop=`, `#segsum_`) are
+  * not part of it.
   *
   * INHERITANCE: every field except `schema`, `rows`, `op`, `ts` and
   * `requires` is table state — a commit starts from the previous

@@ -366,7 +366,7 @@ class LakeSegSpec extends SparkSpec {
     Lake.SegPlanLedger.reset()
     assert(rows(Lake.readCommittedWhere(spark, root, col("k") >= 150L))
       .map(_.head) === (150L until 160L).toSet)
-    // restore across the DV (dvsReplace): summaries still carried
+    // restore across the DV (vectors restore to the target's): summaries still carried
     Lake.restoreCommitted(spark, root, vPre, retain = 64)
     val rawR = liveRaw(root)
     val refsR = segRefsOf(root).toSet
@@ -416,6 +416,35 @@ class LakeSegSpec extends SparkSpec {
     val warmF = Lake.derivedViewsForTest(spark, flat, vf)
     Lake.clearMetaCaches()
     assert(warmF === Lake.derivedViewsForTest(spark, flat, vf))
+  }
+
+  test("restore reviving a dir its segment recorded a vector for serves the target's rows") {
+    // no stat columns: the target snapshot holds no per-dir line for the
+    // revived dir, so only the segment's (stale) vector could describe it
+    val root = tmpTable("graft-seg-revive")
+    Lake.commitOverwrite(df(Seq(0L)), root, retain = 64)
+    Lake.setTableProperties(spark, root, Map("graft.seg.threshold" -> "4",
+      "graft.dvMaxRows" -> "1000", "graft.seg.waste" -> "0.1"))
+    (1 to 6).foreach(i =>
+      Lake.commitAppend(df(Seq(2L * i, 2L * i + 1)), root, retain = 64))
+    val vPre = Lake.currentVersion(spark, root).get
+    Lake.deleteWhere(spark, root, col("k") === 5L, retain = 64)
+    val d = Lake.derivedViewsForTest(spark, root,
+      Lake.currentVersion(spark, root).get)._2
+      .collectFirst { case (dir, m) if m.dv.isDefined => dir }.get
+    // the vector lands in a segment (the override folded it), then the
+    // dir leaves the snapshot while that segment carries on
+    Lake.setTableProperties(spark, root, Map("graft.seg.waste" -> "0.9"),
+      retain = 64)
+    Lake.reorgCommitted(spark, root, retain = 64)
+    assert(liveRaw(root).contains("#segdrop=" + d),
+      "the purged dir must be dropped from a carried segment")
+    Lake.restoreCommitted(spark, root, vPre, retain = 64)
+    assert(rows(Lake.readCommitted(spark, root)).map(_.head) ===
+      (0L to 13L).toSet - 1L)
+    Lake.clearMetaCaches()
+    assert(rows(Lake.readCommitted(spark, root)).map(_.head) ===
+      (0L to 13L).toSet - 1L)
   }
 
   test("tiered-manifest property knobs validate at SET time") {

@@ -6,15 +6,18 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** A scripted history that commits every kind of lake operation, so
-  * that the manifests it leaves carry every table-level line kind:
+  * that the manifests it leaves carry every table-level and per-dir
+  * line kind:
   * stats / bloom / partition appends, CHECK add and drop, properties,
-  * DV delete, update, MERGE, REORG purge, compaction, z-order, rename
+  * DV delete, update, MERGE, REORG purge, compaction, z-order (per
+  * partition and unpartitioned), rename
   * (v1 map), added / widened / defaulted columns, schema evolution,
   * CDC merges, restore, identity BY DEFAULT, row tracking, generated partition and
   * plain columns, id-mode upgrade and drop (`#colmap2` + `#colretired`),
   * nested DDL, COPY INTO, a bucketed shallow clone, a streaming fold
   * commit, CONVERT, a SQL CREATE with an identity start, and a tiered
-  * table. `TableMetaSpec` round-trips every manifest it writes.
+  * table with restores across its deletion vector. `TableMetaSpec` and
+  * `DirMetaSpec` round-trip every manifest (and segment) it writes.
   *
   * As a main it also dumps every manifest and segment, normalized, for
   * comparing two builds byte for byte:
@@ -151,7 +154,10 @@ object ManifestHistory {
     (1 to 6).foreach(k => Lake.commitAppend(Seq((k.toLong, s"t$k")).toDF("k", "t"),
       i, retain = retain, rowCount = Some(1L)))
     Lake.deleteWhere(spark, i, col("k") === 2L, retain = retain)
+    val iDv = Lake.currentVersion(spark, i).get
     Lake.compactCommitted(spark, i, retain = retain, minBytes = 1L << 30)
+    Lake.restoreCommitted(spark, i, iDv, retain = retain)
+    Lake.restoreCommitted(spark, i, iDv - 1, retain = retain)
 
     // -- j: CDC-shaped MERGE, copy-on-write and deletion-vector paths
     val j = root("j")
@@ -164,6 +170,7 @@ object ManifestHistory {
       Seq("k"), "ver", "is_del", retain = retain, dvMaxRows = 0L)
     Lake.mergeCommitted(spark, j, changes((1L, 11L, "A", false)),
       Seq("k"), "ver", "is_del", retain = retain)
+    Lake.clusterCommitted(spark, j, Seq("k"), retain = retain)
 
     Seq(a, b, c, d, e, f, g, h, i, j)
   }
