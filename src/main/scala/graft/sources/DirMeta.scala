@@ -139,4 +139,9 @@ private[graft] object DirMeta {
   /** The deletion vectors of a per-dir map: dir -> `#dv_` json. */
   def dvs(dirMeta: Map[String, DirMeta]): Map[String, String] =
     dirMeta.flatMap { case (d, m) => m.dv.map(d -> _) }
+
+  /** The deletion vectors of `dirs` only — a scan that opens a subset
+    * of the snapshot needs no other dir's vector. */
+  def dvs(dirMeta: Map[String, DirMeta], dirs: Iterable[String]): Map[String, String] =
+    dirs.iterator.flatMap(d => dirMeta.get(d).flatMap(_.dv).map(d -> _)).toMap
 }

@@ -904,6 +904,52 @@ private[graft] trait LakeCommits { this: Lake.type =>
     true
   }
 
+  /** The live version of `root` and its table-level state; a root
+    * without a commit refuses. */
+  private[sources] def liveSnapshot(spark: SparkSession,
+      root: String): (Long, TableMeta) = {
+    val cur = currentVersion(spark, root).getOrElse(
+      throw new java.util.NoSuchElementException(s"no committed table at $root"))
+    (cur, tableMeta(fsFor(spark, root), new Path(root), cur))
+  }
+
+  /** What a metadata-only (DDL) commit changes on top of its base
+    * snapshot: the committed schema, the table-level update, the
+    * `#op=` text, and the id-tree reconcile flags of
+    * [[commitManifest]]. */
+  private[sources] final case class DdlPlan(
+      schema: Option[org.apache.spark.sql.types.StructType], op: String,
+      meta: TableMeta => TableMeta = identity,
+      colMap2Carry: Map[String, String] = Map.empty,
+      colMap2Establish: Boolean = false)
+
+  /** The one commit path of every metadata-only op (constraints,
+    * properties, column DDL): resolve the live version `cur`, let
+    * `plan` validate against its [[TableMeta]] (`None` is a no-op that
+    * returns `cur`), pin slot `cur + 1`, and republish `cur`'s dirs and
+    * row count under the plan. Delta's metadata commit: the op derives
+    * from ONE read snapshot, and a concurrent commit taking the slot
+    * refuses it loudly (`what` names the op). */
+  private[sources] def commitDdl(spark: SparkSession, root: String,
+      retain: Int, what: String)(
+      plan: (Long, TableMeta) => Option[DdlPlan]): Long = {
+    val (cur, meta) = liveSnapshot(spark, root)
+    plan(cur, meta) match {
+      case None => cur
+      case Some(p) =>
+        val fs = fsFor(spark, root)
+        val r = new Path(root)
+        val next = pinSlot(fs, r, cur)
+        if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
+            p.schema, meta.rows, meta = p.meta, colMap2Carry = p.colMap2Carry,
+            colMap2Establish = p.colMap2Establish, op = p.op))
+          throw new java.util.ConcurrentModificationException(
+            s"$what on $root lost version $next to a concurrent commit — " +
+              "retry against the current table")
+        next
+    }
+  }
+
   /** The table-level state a layout-only rewrite's staged files
     * FREEZE under: column map and id tree, retired names, stat / bloom
     * / partition column lists, bucket layout, generated columns — and
@@ -914,14 +960,20 @@ private[graft] trait LakeCommits { this: Lake.type =>
     (m.colMap, m.colMap2, m.retired, m.statsCols, m.bloomCols, m.partCols,
       m.bucketBy, m.genParts, m.genCols, m.rowId.isDefined, m.identity.isDefined)
 
-  /** Layout-only maintenance OCC rebase (Delta's disjoint-file
-    * conflict rule): a compaction / z-order / REORG purge that lost
-    * its version slot may RETRY on top of the interleaved commits —
-    * instead of discarding a rewrite that may have moved terabytes —
-    * PROVIDED the race never touched what the rewrite read or froze:
+  /** Publish a layout-only maintenance rewrite (compaction, z-order,
+    * REORG purge) staged against snapshot `baseV` into slot `slot`,
+    * and return the committed version. The snapshot is `kept` + the
+    * rewrite's `newDirs` under `schema` / `rows`, with `stagedMeta` for
+    * the fresh dirs and `meta` for the table-level update.
     *
-    *  - every SOURCE dir is still live (an interloper that removed or
-    *    rewrote one superseded rows our output would resurrect);
+    * A lost slot REBASES (Delta's disjoint-file conflict rule) and
+    * retries on top of the interleaved commits — instead of discarding
+    * a rewrite that may have moved terabytes — PROVIDED the race never
+    * touched what the rewrite read or froze:
+    *
+    *  - every SOURCE dir (`srcDirs`) is still live (an interloper that
+    *    removed or rewrote one superseded rows our output would
+    *    resurrect);
     *  - the source dirs' deletion vectors are unchanged (the rewrite
     *    materialized the vector it READ);
     *  - the table-level metadata the staged files froze under is
@@ -931,46 +983,64 @@ private[graft] trait LakeCommits { this: Lake.type =>
     * maintenance — composes: the retry publishes (current live dirs −
     * source dirs) + the rewrite's output, under the CURRENT schema
     * and row count (an interloping append may have evolved/extended
-    * both; the rewrite is row-preserving so they stay exact).
-    * @return (next slot, current live dirs, current schema, rows) */
+    * both; the rewrite is row-preserving so they stay exact). A
+    * refusal, or 100 consecutive losses, deletes the staged dirs. */
   private[sources] def maintenanceRebase(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, root: String, baseV: Long, srcDirs: Set[String],
-      what: String):
-      (Long, Seq[String], Option[org.apache.spark.sql.types.StructType],
-        Option[Long]) = {
+      r: Path, root: String, baseV: Long, slot: Long, srcDirs: Set[String],
+      kept: Seq[String], newDirs: Seq[String], retain: Int,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      rows: Option[Long], stagedMeta: Map[String, DirMeta],
+      meta: TableMeta => TableMeta, op: String, what: String): Long = {
     def cme(msg: String) =
       new java.util.ConcurrentModificationException(s"$what of $root $msg")
-    try {
-      val curV = committedVersions(fs, r).maxOption.getOrElse(
-        throw cme("raced the table's last manifest away mid-commit"))
-      val live = manifestDirs(fs, r, curV)
-      val missing = srcDirs -- live.toSet
-      if (missing.nonEmpty) throw cme(
-        "raced a commit that removed or rewrote its source dirs " +
-          missing.toSeq.sorted.mkString("[", ", ", "]") +
-          " — retrying would resurrect superseded rows; re-run against " +
-          "the current table")
-      def srcDvs(v: Long) = {
-        val meta = dirMeta(fs, r, v)
-        srcDirs.iterator.flatMap(d => meta.get(d).flatMap(_.dv).map(d -> _)).toMap
-      }
-      if (srcDvs(curV) != srcDvs(baseV)) throw cme(
-        "raced a deletion-vector commit on its source dirs — the " +
-          "rewrite materialized a vector that is no longer current; " +
-          "re-run against the current table")
-      val curMeta = tableMeta(fs, r, curV)
-      val metaSame = frozenLayout(curMeta) == frozenLayout(tableMeta(fs, r, baseV))
-      if (!metaSame) throw cme(
-        "raced a metadata commit (mapping/layout DDL) — the staged " +
-          "files froze under the previous metadata; re-run against the " +
-          "current table")
-      (curV + 1, live, curMeta.schema, curMeta.rows)
-    } catch {
-      case _: java.io.FileNotFoundException => throw cme(
-        "raced a retention prune past its base snapshot — the " +
-          "interleaving cannot be proven safe; re-run against the " +
-          "current table (or commit with a larger `retain`)")
+    def refuse(t: Throwable): Nothing = {
+      newDirs.foreach(d => fs.delete(new Path(r, d), true)); throw t
     }
+    def srcDvs(v: Long) = DirMeta.dvs(dirMeta(fs, r, v), srcDirs)
+    var nextV = slot
+    var pubDirs = kept
+    var pubSchema = schema
+    var pubRows = rows
+    var attempt = 0
+    while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
+        pubSchema, pubRows, stagedMeta, meta = meta, op = op)) {
+      attempt += 1
+      try {
+        val curV = committedVersions(fs, r).maxOption.getOrElse(
+          throw cme("raced the table's last manifest away mid-commit"))
+        val live = manifestDirs(fs, r, curV)
+        val missing = srcDirs -- live.toSet
+        if (missing.nonEmpty) throw cme(
+          "raced a commit that removed or rewrote its source dirs " +
+            missing.toSeq.sorted.mkString("[", ", ", "]") +
+            " — retrying would resurrect superseded rows; re-run against " +
+            "the current table")
+        if (srcDvs(curV) != srcDvs(baseV)) throw cme(
+          "raced a deletion-vector commit on its source dirs — the " +
+            "rewrite materialized a vector that is no longer current; " +
+            "re-run against the current table")
+        val curMeta = tableMeta(fs, r, curV)
+        if (frozenLayout(curMeta) != frozenLayout(tableMeta(fs, r, baseV)))
+          throw cme(
+            "raced a metadata commit (mapping/layout DDL) — the staged " +
+              "files froze under the previous metadata; re-run against the " +
+              "current table")
+        nextV = curV + 1
+        pubDirs = live.filterNot(srcDirs)
+        pubSchema = curMeta.schema.orElse(pubSchema)
+        pubRows = curMeta.rows
+      } catch {
+        case _: java.io.FileNotFoundException => refuse(cme(
+          "raced a retention prune past its base snapshot — the " +
+            "interleaving cannot be proven safe; re-run against the " +
+            "current table (or commit with a larger `retain`)"))
+        case t: Throwable => refuse(t)
+      }
+      if (attempt >= 100) refuse(cme(
+        s"lost $attempt consecutive commit races — pathological " +
+          "contention; back off and retry"))
+    }
+    nextV
   }
 
   /** The retention prune every commit runs: keep the live snapshot
@@ -1062,6 +1132,36 @@ private[graft] trait LakeCommits { this: Lake.type =>
     (stale, swept.result())
   }
 
+  /** The BY DEFAULT identity probe: ONE aggregate over the batch's
+    * identity column `c` → (rows the allocator fills, the largest
+    * explicit key — `Long.MinValue` when there is none). A commit
+    * advances the mark to `max(start + nNull, maxExplicit + 1)`, so
+    * the allocator never reuses a key the batch wrote explicitly.
+    * Explicit values whose BIGINT cast is NULL (bad strings,
+    * overflowing values) would be silently allocator-filled PAST the
+    * reserved block (the fill splits on the post-cast column) —
+    * refused instead. */
+  private def probeIdentityByDefault(df: org.apache.spark.sql.DataFrame,
+      c: String): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, expr, max, sum, when}
+    // try_cast: the probe itself must not abort the job under ANSI — a
+    // malformed value gets OUR refusal below, uniformly
+    val tryLong = expr(s"try_cast(`${c.replace("`", "``")}` as bigint)")
+    val agg = df.agg(
+      sum(when(col(c).isNull, 1L).otherwise(0L)),
+      max(tryLong),
+      sum(when(col(c).isNotNull && tryLong.isNull, 1L).otherwise(0L)))
+      .collect().head
+    val nBad = if (agg.isNullAt(2)) 0L else agg.getLong(2)
+    require(nBad == 0L,
+      s"identity column '$c' carries $nBad explicit value(s) that " +
+        "cast to BIGINT as NULL — an explicit identity key must be " +
+        "a valid BIGINT (the allocator would otherwise fill it " +
+        "beyond the block this commit reserved)")
+    (if (agg.isNullAt(0)) 0L else agg.getLong(0),
+      if (agg.isNullAt(1)) Long.MinValue else agg.getLong(1))
+  }
+
   /** Replace the table at `root` with `df`, committing via one atomic
     * manifest publish — no reader-visible gap at any crash point (see
     * protocol above). Optimistically concurrent: the batch stages
@@ -1128,29 +1228,8 @@ private[graft] trait LakeCommits { this: Lake.type =>
         // (uniqueness against explicit keys is NOT guaranteed —
         // Delta's documented BY DEFAULT rule)
         case Some(c) if idByDefault && dfPre.columns.contains(c) =>
-          import org.apache.spark.sql.functions.{col => fcol, max => fmax, sum, when, lit => flit}
           val start = prevHwm.getOrElse(1L)
-          // try_cast: the probe itself must not abort the job under
-          // ANSI — a malformed value gets OUR refusal below, uniformly
-          val tryLong = org.apache.spark.sql.functions.expr(
-            s"try_cast(`${c.replace("`", "``")}` as bigint)")
-          val agg = dfPre.agg(
-            sum(when(fcol(c).isNull, 1L).otherwise(0L)),
-            fmax(tryLong),
-            // explicit values whose BIGINT cast is NULL (bad strings,
-            // overflowing values) would be silently allocator-filled
-            // PAST the reserved block (the fill splits on the post-cast
-            // column) — refuse them instead
-            sum(when(fcol(c).isNotNull && tryLong.isNull, 1L)
-              .otherwise(0L))).collect().head
-          val nBad = if (agg.isNullAt(2)) 0L else agg.getLong(2)
-          require(nBad == 0L,
-            s"identity column '$c' carries $nBad explicit value(s) that " +
-              "cast to BIGINT as NULL — an explicit identity key must be " +
-              "a valid BIGINT (the allocator would otherwise fill it " +
-              "beyond the block this commit reserved)")
-          val nNull = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-          val maxExp = if (agg.isNullAt(1)) start - 1L else agg.getLong(1)
+          val (nNull, maxExp) = probeIdentityByDefault(dfPre, c)
           (fillIdentityNulls(dfPre, c, start, nNull),
             Some(math.max(start + nNull, maxExp + 1L)))
         case Some(c) if dfPre.columns.contains(c) =>
@@ -1208,7 +1287,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, liveMap)) })
     // CHECK constraints gate every row-introducing commit: one
     // aggregate job over the batch, BEFORE anything stages
-    validateChecks(fs, r, df, "overwrite", effGen)
+    validateChecks(pre, r, df, "overwrite", effGen)
     val allocV = preV.maxOption.map(_ + 1).getOrElse(0L)
     val newMap = allocPhysical(df.schema,
       liveMap.filter { case (l, _) => df.columns.contains(l) },
@@ -1224,7 +1303,19 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // overwrite REPLACES the table — it carries no prior-snapshot
     // state — so (unlike the pinSlot commits) a freshest-marker
     // allocation loses nothing to an interleaved commit it supersedes.
-    val next = committedVersions(fs, r).maxOption.map(_ + 1).getOrElse(0L)
+    val lastV = committedVersions(fs, r).maxOption
+    val next = lastV.map(_ + 1).getOrElse(0L)
+    // the batch was validated against `pre`'s CHECK constraints; the
+    // new snapshot inherits the live ones, so a constraint a concurrent
+    // commit added since would be declared over rows it never checked
+    if (lastV.exists(v =>
+        tableMeta(fs, r, v).checks.exists(!pre.checks.contains(_)))) {
+      staged.foreach(d => fs.delete(new Path(r, d), true))
+      throw new java.util.ConcurrentModificationException(
+        s"overwrite of $root raced a concurrent commit that added a CHECK " +
+          "constraint the batch was not validated against — re-derive " +
+          "against the current table and retry")
+    }
     val (genParts, genCols) =
       effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     if (!commitManifest(fs, r, next, staged, retain, Some(df.schema),
@@ -1323,30 +1414,9 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // idN = rows the allocator fills; idMaxExplicit bounds the mark
     // past explicitly-written keys (BY DEFAULT only)
     val (idN, idMaxExplicit): (Long, Long) =
-      if (effId.isEmpty) (0L, -1L)
-      else if (idCarried) {
-        import org.apache.spark.sql.functions.{col, max => fmax, sum, when}
-        val c = effId.get._1
-        // try_cast: the probe must not abort under ANSI — a malformed
-        // value gets OUR refusal below, uniformly across ANSI modes
-        val tryLong = org.apache.spark.sql.functions.expr(
-          s"try_cast(`${c.replace("`", "``")}` as bigint)")
-        val agg = dfIn.agg(
-          sum(when(col(c).isNull, 1L).otherwise(0L)),
-          fmax(tryLong),
-          // see commitOverwrite: an explicit value whose BIGINT cast is
-          // NULL would be allocator-filled past the reserved block
-          sum(when(col(c).isNotNull && tryLong.isNull, 1L)
-            .otherwise(0L))).collect().head
-        val nBad = if (agg.isNullAt(2)) 0L else agg.getLong(2)
-        require(nBad == 0L,
-          s"identity column '$c' carries $nBad explicit value(s) that " +
-            "cast to BIGINT as NULL — an explicit identity key must be " +
-            "a valid BIGINT (the allocator would otherwise fill it " +
-            "beyond the block this commit reserved)")
-        (if (agg.isNullAt(0)) 0L else agg.getLong(0),
-          if (agg.isNullAt(1)) -1L else agg.getLong(1))
-      } else (dfIn.count(), -1L)
+      if (effId.isEmpty) (0L, Long.MinValue)
+      else if (idCarried) probeIdentityByDefault(dfIn, effId.get._1)
+      else (dfIn.count(), Long.MinValue)
     // row tracking: stamp the hidden id block like the identity block
     // (same allocator protocol, same OCC rebase below)
     val ridMark0 = pre.rowId
@@ -1374,7 +1444,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // committed columns with a CURRENT_DEFAULT that this batch omits
     // materialize here (before CHECK validation sees the batch) — an
     // omitting append writes the default physically, never NULL
-    val df = materializeDefaults(fs, r, withIds(idStart, ridStart))
+    val df = materializeDefaults(pre, withIds(idStart, ridStart))
     // user column args name LOGICAL columns; property lines are
     // physical — and a batch adding NEW columns allocates them
     // physical names that can never collide with a mapped or retired
@@ -1400,7 +1470,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
           "naming; re-layout with commitOverwrite(bucketBy = …)")
     val effBucket = effectiveBucketBy(r, pre,
       bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, newMap)) })
-    validateChecks(fs, r, df, "append", effGen)
+    validateChecks(pre, r, df, "append", effGen)
     val (genParts, genCols) =
       effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
     // O(batch): stats only for the new dirs; reused dirs' lines carry
@@ -1543,6 +1613,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
             "built under the previous allocator state; re-run the " +
             "append against the current table")
       }
+      // CHECK constraints: the batch was validated against `pre`'s; a
+      // constraint a concurrent commit added since would be declared
+      // over rows it never checked
+      if (curMeta.checks.exists(!pre.checks.contains(_))) {
+        dropStaged()
+        throw new java.util.ConcurrentModificationException(
+          s"append to $root: a concurrent commit added a CHECK constraint " +
+            "while this append was staging — the batch was not validated " +
+            "against it; re-run the append against the current table")
+      }
       val idMoved = effId.isDefined && curMark.exists(_ != idStart)
       val ridMoved = ridMark0.isDefined && curRidMark.exists(_ != ridStart)
       if (idMoved || ridMoved) {
@@ -1550,7 +1630,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
         if (idMoved) idStart = curMark.get
         if (ridMoved) ridStart = curRidMark.get
         val restaged = stageBatch(spark, fs, r,
-          materializeDefaults(fs, r, withIds(idStart, ridStart)), curMeta,
+          materializeDefaults(curMeta, withIds(idStart, ridStart)), curMeta,
           effStats, effBloom, effPart, bucketBy = effBucket, colMap = newMap)
         staged = restaged._1; stagedMeta = restaged._2
       }

@@ -226,9 +226,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     val snapDirs = manifestDirs(fs, r, cur)
     // maintenance OCC: slot pinned before any job (see deleteWhere)
     val next = pinSlot(fs, r, cur)
@@ -308,8 +306,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // DV-aware read: the rewrite MATERIALIZES the vectors (this is
     // the whole point) and re-stages layout-preserving
     val base = readDirsWithDv(spark, fs, r, cur, scoped, carried)
-    val effStats = liveMeta(fs, r).statsCols
-    val effBloom = liveMeta(fs, r).bloomCols
+    val effStats = curMeta.statsCols
+    val effBloom = curMeta.bloomCols
     val effPart = curMeta.partCols
     val (newDirs, stagedMeta) =
       stageBatch(spark, fs, r, base, curMeta, effStats, effBloom, effPart,
@@ -321,32 +319,10 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // unchanged: the DV commit already decremented the count. Slot
     // loss rebases across disjoint interlopers (maintenanceRebase).
     val srcSet = scoped.toSet
-    var nextV = next
-    var pubDirs = snapDirs.filterNot(srcSet)
-    var pubSchema = carried
-    var pubRows = curMeta.rows
-    var attempt = 0
-    while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stagedMeta,
-        meta = _.declaring(effStats, effBloom), op = "reorg purge")) {
-      attempt += 1
-      val rb =
-        try maintenanceRebase(fs, r, root, cur, srcSet, "REORG purge")
-        catch { case t: Throwable =>
-          newDirs.foreach(d => fs.delete(new Path(r, d), true)); throw t
-        }
-      if (attempt >= 100) {
-        newDirs.foreach(d => fs.delete(new Path(r, d), true))
-        throw new java.util.ConcurrentModificationException(
-          s"REORG on $root lost $attempt consecutive commit races — " +
-            "pathological contention; back off and retry")
-      }
-      nextV = rb._1
-      pubDirs = rb._2.filterNot(srcSet)
-      pubSchema = rb._3.orElse(pubSchema)
-      pubRows = rb._4
-    }
-    nextV
+    maintenanceRebase(fs, r, root, cur, next, srcSet,
+      snapDirs.filterNot(srcSet), newDirs, retain, carried,
+      curMeta.rows, stagedMeta, _.declaring(effStats, effBloom),
+      "reorg purge", "REORG purge")
   }
 
   /** `CONVERT TO GRAFT` (Delta's CONVERT TO DELTA): adopt a plain
@@ -439,9 +415,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     require(minBytes >= 0, s"minBytes must be >= 0, got $minBytes")
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     val liveDirs = manifestDirs(fs, r, cur)
     def dirBytes(d: String): Long =
       fs.listStatus(new Path(r, d)).toSeq
@@ -468,8 +442,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
       else readDirsWithDv(narrow, fs, r, cur, smallDirs, carried)
     val df = base.repartition(n)
     val next = pinSlot(fs, r, cur)
-    val effStats = liveMeta(fs, r).statsCols
-    val effBloom = liveMeta(fs, r).bloomCols
+    val effStats = curMeta.statsCols
+    val effBloom = curMeta.bloomCols
     // compaction PRESERVES the declared partition layout: on a
     // partitioned table the collapse is per-value-tuple (small-files
     // cleanup within each partition; a partition hotter than
@@ -491,33 +465,9 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // other maintenance) instead of discarding the rewrite — see
     // maintenanceRebase; only a race that touched the collapsed dirs
     // (or table metadata) refuses.
-    val srcSet = smallDirs.toSet
-    var nextV = next
-    var pubDirs = carriedDirs
-    var pubSchema = carried.orElse(Some(df.schema))
-    var pubRows = curMeta.rows
-    var attempt = 0
-    while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-        pubSchema, pubRows, stagedMeta,
-        meta = _.declaring(effStats, effBloom), op = "compact")) {
-      attempt += 1
-      val rb =
-        try maintenanceRebase(fs, r, root, cur, srcSet, "compaction")
-        catch { case t: Throwable =>
-          newDirs.foreach(d => fs.delete(new Path(r, d), true)); throw t
-        }
-      if (attempt >= 100) {
-        newDirs.foreach(d => fs.delete(new Path(r, d), true))
-        throw new java.util.ConcurrentModificationException(
-          s"compaction of $root lost $attempt consecutive commit races — " +
-            "pathological contention; back off and retry")
-      }
-      nextV = rb._1
-      pubDirs = rb._2.filterNot(srcSet)
-      pubSchema = rb._3.orElse(pubSchema)
-      pubRows = rb._4
-    }
-    nextV
+    maintenanceRebase(fs, r, root, cur, next, smallDirs.toSet, carriedDirs,
+      newDirs, retain, carried.orElse(Some(df.schema)), curMeta.rows,
+      stagedMeta, _.declaring(effStats, effBloom), "compact", "compaction")
   }
 
   /** CLUSTER the live snapshot for data skipping: rewrite it into one
@@ -573,9 +523,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     require(curMeta.bucketBy.isEmpty,
       s"table at $root is hash-bucketed — a clustered rewrite would " +
         "destroy the bucket placement and file naming the co-located-join " +
@@ -683,8 +631,8 @@ private[graft] trait LakeMaint { this: Lake.type =>
           .drop("__graft_z")
       }
     val next = pinSlot(fs, r, cur)
-    val effStats = (liveMeta(fs, r).statsCols ++ cols0).distinct
-    val effBloom = liveMeta(fs, r).bloomCols
+    val effStats = (curMeta.statsCols ++ cols0).distinct
+    val effBloom = curMeta.bloomCols
     val effPart = curMeta.partCols
     /** Write one clustered dir for `slice`; returns it and its
       * [[DirMeta]]. ONE column-pruned pass over the fresh dir yields
@@ -806,34 +754,9 @@ private[graft] trait LakeMaint { this: Lake.type =>
       preserveMarkers(fs, r, rewriteDirs, newDirs)
       // slot loss rebases across disjoint interlopers instead of
       // discarding the clustered rewrite — see maintenanceRebase
-      val srcSet = rewriteDirs.toSet
-      var nextV = next
-      var pubDirs = carriedDirs
-      var pubSchema: Option[org.apache.spark.sql.types.StructType] =
-        Some(logicalSchema)
-      var pubRows = curMeta.rows
-      var attempt = 0
-      while (!commitManifest(fs, r, nextV, pubDirs ++ newDirs, retain,
-          pubSchema, pubRows, newMeta, meta = _.declaring(effStats, effBloom),
-          op = "zorder")) {
-        attempt += 1
-        val rb =
-          try maintenanceRebase(fs, r, root, cur, srcSet, "clustering")
-          catch { case t: Throwable =>
-            newDirs.foreach(d => fs.delete(new Path(r, d), true)); throw t
-          }
-        if (attempt >= 100) {
-          newDirs.foreach(d => fs.delete(new Path(r, d), true))
-          throw new java.util.ConcurrentModificationException(
-            s"clustering of $root lost $attempt consecutive commit races — " +
-              "pathological contention; back off and retry")
-        }
-        nextV = rb._1
-        pubDirs = rb._2.filterNot(srcSet)
-        pubSchema = rb._3.orElse(pubSchema)
-        pubRows = rb._4
-      }
-      nextV
+      maintenanceRebase(fs, r, root, cur, next, rewriteDirs.toSet,
+        carriedDirs, newDirs, retain, Some(logicalSchema), curMeta.rows,
+        newMeta, _.declaring(effStats, effBloom), "zorder", "clustering")
     } catch {
       case t: Throwable if !t.isInstanceOf[java.util.ConcurrentModificationException] =>
         staged.foreach(d => scala.util.Try(fs.delete(new Path(r, d), true)))

@@ -68,7 +68,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // interloper's dirs and vectors — fails loudly instead
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
-    val dvEff = effDvMaxRows(fs, r, dvMaxRows)
+    val dvEff = effDvMaxRows(curMeta, dvMaxRows)
     val base0 = readCommittedAt(spark, root, cur)
     // the merge's internal jobs (empty/key probes, CDC fold, rewrite
     // staging) plan at the base+batch estimate's width; a 100 TB base
@@ -160,16 +160,16 @@ private[graft] trait LakeMutations { this: Lake.type =>
           // consumers pair by key; the keyless feed sees them as
           // delete+insert, the honest reading of a key-replacing merge)
           val (winners, ridNextDv) =
-            assignFreshRowIds(fs, r, aligned(upserts))
-          val effStats = liveMeta(fs, r).statsCols
-          val effBloom = liveMeta(fs, r).bloomCols
+            assignFreshRowIds(curMeta, aligned(upserts))
+          val effStats = curMeta.statsCols
+          val effBloom = curMeta.bloomCols
           val stageMap = allocPhysical(evolved, curMeta.colMap,
             curMeta.retired, next)
           // a pure-delete batch appends nothing — only vectors commit
           val (newDirs, stagedMeta) =
             if (winners.isEmpty) (Nil, Map.empty[String, DirMeta])
             else {
-              validateChecks(fs, r, winners, "merge")
+              validateChecks(curMeta, r, winners, "merge")
               stageBatch(narrow, fs, r, winners, curMeta, effStats, effBloom,
                 curMeta.partCols,
                 bucketBy = curMeta.bucketBy, colMap = stageMap)
@@ -207,22 +207,22 @@ private[graft] trait LakeMutations { this: Lake.type =>
         else touchedBase
           .join(touchedKeys, keyCols, "left_anti")
           .unionByName(upsertsRid)
-      val (rewritten, ridNext) = assignFreshRowIds(fs, r, rewritten0)
+      val (rewritten, ridNext) = assignFreshRowIds(curMeta, rewritten0)
       // the slot was pinned at entry, BEFORE the probe and the
       // rewrite: a concurrent commit landing during any of those jobs
       // takes the pinned number and our publish must then lose
       // (computing `next` later would let us publish a dirs list that
       // silently drops the interloper's data)
-      val effStats = liveMeta(fs, r).statsCols
+      val effStats = curMeta.statsCols
       // the rewrite stages under writer-unique dirs like every other
       // data write (one per partition tuple on a partitioned table —
       // COW maintenance preserves the declared layout): concurrent
       // writers never contest them, the version slot is claimed by the
       // manifest publish alone
-      val effBloom = liveMeta(fs, r).bloomCols
+      val effBloom = curMeta.bloomCols
       val effPart = curMeta.partCols
       val effBucket = curMeta.bucketBy
-      validateChecks(fs, r, rewritten, "merge")
+      validateChecks(curMeta, r, rewritten, "merge")
       // evolution may introduce columns whose names collide with a
       // mapped or retired physical name — allocate like appends do
       val stageMap = allocPhysical(evolved, curMeta.colMap,
@@ -299,9 +299,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     val snapDirs = manifestDirs(fs, r, cur)
     // the slot is pinned HERE, before the classify/hits/staging jobs
     // run: a concurrent commit landing during those jobs takes this
@@ -310,7 +308,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // (lost update) — the COW invariant, shared by the DV fast path
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
-    val dvEff = effDvMaxRows(fs, r, dvMaxRows)
+    val dvEff = effDvMaxRows(curMeta, dvMaxRows)
     val perDir = dirMeta(fs, r, cur)
     val carried = curMeta.schema
     // user predicates name LOGICAL columns; per-dir lines are physical
@@ -409,7 +407,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       }
       // over the bound: fall through to the copy-on-write rewrite
     }
-    val effStats = liveMeta(fs, r).statsCols
+    val effStats = curMeta.statsCols
     // a dropped dir may hold streaming-fold replay markers: they must
     // survive the delete or a checkpoint replay double-folds. A
     // rewrite dir gives them a home; a pure-drop commit writes an
@@ -417,7 +415,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     def hasMarkers(dirs: Seq[String]): Boolean =
       dirs.map(d => new Path(r, d)).filter(fs.exists)
         .exists(d => fs.listStatus(d).exists(_.getPath.getName.startsWith("_applied_")))
-    val effBloom = liveMeta(fs, r).bloomCols
+    val effBloom = curMeta.bloomCols
     // rewrites PRESERVE the table's declared partition layout: on a
     // partitioned table the surviving rows re-stage one dir per value
     // tuple with fresh #part_ lines, so partition pruning never
@@ -485,9 +483,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     require(set.nonEmpty, "updateWhere needs at least one SET assignment")
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     val snapDirs = manifestDirs(fs, r, cur)
     // slot pinned before any job runs — see deleteWhere: a concurrent
     // commit during the hits/staging jobs takes this number and our
@@ -495,7 +491,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // share the invariant)
     val next = pinSlot(fs, r, cur)
     afterSlotPin()
-    val dvEff = effDvMaxRows(fs, r, dvMaxRows)
+    val dvEff = effDvMaxRows(curMeta, dvMaxRows)
     val carried = curMeta.schema
     val schema = carried.getOrElse(spark.read.parquet(
       snapDirs.map(d => new Path(r, d).toString): _*).schema)
@@ -571,9 +567,9 @@ private[graft] trait LakeMutations { this: Lake.type =>
           df.withColumn(c, expr.cast(
             org.apache.spark.sql.graft.Shim.asNullableType(schema(c).dataType)))
         }
-        validateChecks(fs, r, copies, "update")
-        val effStatsDv = liveMeta(fs, r).statsCols
-        val effBloomDv = liveMeta(fs, r).bloomCols
+        validateChecks(curMeta, r, copies, "update")
+        val effStatsDv = curMeta.statsCols
+        val effBloomDv = curMeta.bloomCols
         val (newDirs, stagedMeta) =
           stageBatch(narrow, fs, r, copies, curMeta, effStatsDv, effBloomDv,
             curMeta.partCols,
@@ -601,14 +597,14 @@ private[graft] trait LakeMutations { this: Lake.type =>
         org.apache.spark.sql.graft.Shim.asNullableType(field.dataType)))
         .otherwise(col(c)))
     }
-    val effStats = liveMeta(fs, r).statsCols
-    val effBloom = liveMeta(fs, r).bloomCols
+    val effStats = curMeta.statsCols
+    val effBloom = curMeta.bloomCols
     // layout-preserving rewrite (see deleteWhere): note an UPDATE may
     // move rows BETWEEN partitions (SET on a partition column) — the
     // re-staging splits by the post-update values, so the layout stays
     // exact either way
     val effPart = curMeta.partCols
-    validateChecks(fs, r, updated, "update")
+    validateChecks(curMeta, r, updated, "update")
     val (newDirs, stagedMeta) =
       stageBatch(narrow, fs, r, updated, curMeta, effStats, effBloom, effPart,
           maintenance = true, bucketBy = curMeta.bucketBy,
@@ -834,16 +830,16 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // take the next block here (update stability + fresh inserts —
       // what the keyless change feed pairs on)
       val (rewritten, ridNext) =
-        assignFreshRowIds(fs, r, keptRewritten.unionByName(inserts))
+        assignFreshRowIds(curMeta, keptRewritten.unionByName(inserts))
       // nothing matched, nothing to insert → the table is unchanged
       if (touchedDirs.isEmpty && rewritten.isEmpty) return cur
-      val effStats = liveMeta(fs, r).statsCols
-      val effBloom = liveMeta(fs, r).bloomCols
+      val effStats = curMeta.statsCols
+      val effBloom = curMeta.bloomCols
       // layout-preserving (see deleteWhere): partitioned tables
       // re-stage the rewrite one dir per value tuple
       val effPart = curMeta.partCols
       val effBucket = curMeta.bucketBy
-      validateChecks(fs, r, rewritten, "merge")
+      validateChecks(curMeta, r, rewritten, "merge")
       val (newDirs, stagedMeta) =
         stageBatch(narrow, fs, r, rewritten, curMeta, effStats, effBloom,
           effPart, maintenance = true, bucketBy = effBucket,

@@ -764,10 +764,11 @@ private[graft] trait LakeReads { this: Lake.type =>
   }
 
   /** [[resolveWhere]] plus the kept dirs' deletion-vector lines — the
-    * read path consumes the vectors of the PARTIAL expansion (skipped
-    * segments' vectors belong to dirs the scan never opens), so a
-    * selective read of a tiered table plans without materializing the
-    * whole snapshot's metadata. */
+    * read path consumes only the vectors of the dirs it opens (skipped
+    * dirs' and skipped segments' vectors belong to dirs the scan never
+    * opens), so a selective read of a tiered table plans without
+    * materializing the whole snapshot's metadata, and the vector walk
+    * is O(kept dirs). */
   private[sources] def resolveWhereWithDvs(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column):
       (Seq[String], Seq[String], Seq[String], Map[String, String]) = {
@@ -798,7 +799,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       }
     }
     (paths.result(), sp.skippedNamed, skippedFiles.result(),
-      DirMeta.dvs(sp.dirMeta))
+      DirMeta.dvs(sp.dirMeta, sp.kept))
   }
 
   /** The pruned FILE set of snapshot `version` for catalyst predicate
@@ -827,9 +828,7 @@ private[graft] trait LakeReads { this: Lake.type =>
       predicate: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
     val fs = fsFor(spark, root)
     val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     val (paths, _, _, dvs) = resolveWhereWithDvs(spark, root, predicate)
     val schemaOpt = curMeta.schema
     val map = curMeta.colMap

@@ -81,10 +81,11 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   // row that did not already exist.
 
   /** ONE aggregate job over `df`: refuse (naming every violated
-    * constraint and its row count) if any live CHECK constraint fails.
-    * O(batch) — the validation scans what the commit was going to
-    * write anyway, never the table. */
-  private[sources] def validateChecks(fs: org.apache.hadoop.fs.FileSystem, r: Path,
+    * constraint and its row count) if any CHECK constraint of the
+    * commit's base snapshot `base` (the table at `r`) fails. O(batch) —
+    * the validation scans what the commit was going to write anyway,
+    * never the table. */
+  private[sources] def validateChecks(base: TableMeta, r: Path,
       df: org.apache.spark.sql.DataFrame, what: String,
       gens: Seq[(String, String)] = Nil): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
@@ -92,11 +93,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // SUPPLYING a generated column must agree with the expression
     // row-for-row (`<=>`: exact, never NULL), or the layout the
     // readers prune by would lie
-    val live = liveMeta(fs, r)
-    val effGens = if (gens.nonEmpty) gens else live.genAll
+    val effGens = if (gens.nonEmpty) gens else base.genAll
     val genChecks = effGens.map { case (c, e) =>
       s"gen_$c" -> s"`$c` <=> ($e)" }
-    val cs = live.checks ++ genChecks
+    val cs = base.checks ++ genChecks
     if (cs.isEmpty) return
     // a batch OMITTING a committed column evolves it NULL-backfilled
     // (mergeSchemas marks it nullable, old readers see NULL) — so the
@@ -106,7 +106,7 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     // to hold over rows that read NULL. This IS the engine's NOT NULL
     // enforcement: declare `ADD CONSTRAINT … CHECK (c IS NOT NULL)`
     // and neither a NULL-carrying nor a column-omitting batch commits.
-    val widened = live.schema match {
+    val widened = base.schema match {
       case Some(s) =>
         s.fields.filterNot(f => df.columns.contains(f.name))
           .foldLeft(df)((d, f) =>
@@ -139,57 +139,32 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       s"constraint name '$name' may not contain ':', '=', ',', '#', or newline")
     require(!sqlExpr.contains("\n"),
       "constraint expression must be a single manifest line")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val prev = curMeta.checks
-    require(!prev.exists(_._1 == name),
-      s"constraint '$name' already exists on $root — drop it first")
-    // the new constraint must hold on the existing rows
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val bad = readCommittedAt(spark, root, cur)
-      .agg(sum(when(!coalesce(expr(sqlExpr), lit(true)), 1L).otherwise(0L)))
-      .collect().head.getLong(0)
-    require(bad == 0,
-      s"cannot add constraint '$name': $bad existing rows violate " +
-        s"`$sqlExpr` — clean the table first (Delta's ADD CONSTRAINT rule)")
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        curMeta.schema, curMeta.rows,
-        meta = _.copy(checks = prev :+ (name -> sqlExpr)),
-        op = s"add constraint $name"))
-      throw new java.util.ConcurrentModificationException(
-        s"adding constraint '$name' on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
+    commitDdl(spark, root, retain, s"adding constraint '$name'") { (cur, m) =>
+      require(!m.checks.exists(_._1 == name),
+        s"constraint '$name' already exists on $root — drop it first")
+      // the new constraint must hold on the existing rows
+      import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
+      val bad = readCommittedAt(spark, root, cur)
+        .agg(sum(when(!coalesce(expr(sqlExpr), lit(true)), 1L).otherwise(0L)))
+        .collect().head.getLong(0)
+      require(bad == 0,
+        s"cannot add constraint '$name': $bad existing rows violate " +
+          s"`$sqlExpr` — clean the table first (Delta's ADD CONSTRAINT rule)")
+      Some(DdlPlan(m.schema, s"add constraint $name",
+        _.copy(checks = m.checks :+ (name -> sqlExpr))))
+    }
   }
 
   /** DROP a CHECK constraint — same dirs, one manifest write. */
   def dropCheckConstraint(spark: SparkSession, root: String,
-      name: String, retain: Int = -1): Long = {
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val prev = curMeta.checks
-    require(prev.exists(_._1 == name),
-      s"no constraint '$name' on $root (have: " +
-        prev.map(_._1).mkString("[", ", ", "]") + ")")
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        curMeta.schema, curMeta.rows,
-        meta = _.copy(checks = prev.filterNot(_._1 == name)),
-        op = s"drop constraint $name"))
-      throw new java.util.ConcurrentModificationException(
-        s"dropping constraint '$name' on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
-  }
+      name: String, retain: Int = -1): Long =
+    commitDdl(spark, root, retain, s"dropping constraint '$name'") { (_, m) =>
+      require(m.checks.exists(_._1 == name),
+        s"no constraint '$name' on $root (have: " +
+          m.checks.map(_._1).mkString("[", ", ", "]") + ")")
+      Some(DdlPlan(m.schema, s"drop constraint $name",
+        _.copy(checks = m.checks.filterNot(_._1 == name))))
+    }
 
   /** The live CHECK constraints of a table: (name, sql expression). */
   def checkConstraints(spark: SparkSession, root: String): Seq[(String, String)] =
@@ -240,15 +215,14 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     liveMeta(fsFor(spark, root), new Path(root)).props
 
   /** Effective dvMaxRows: an explicit per-call value (>= 0) wins; the
-    * omitted-arg sentinel -1 inherits the table's `graft.dvMaxRows`
-    * property, defaulting to 10000. */
-  private[sources] def effDvMaxRows(fs: org.apache.hadoop.fs.FileSystem, r: Path,
-      arg: Long): Long = {
+    * omitted-arg sentinel -1 inherits the `graft.dvMaxRows` property of
+    * the commit's base snapshot `base`, defaulting to 10000. */
+  private[sources] def effDvMaxRows(base: TableMeta, arg: Long): Long = {
     require(arg >= -1L,
       s"dvMaxRows must be >= 0 (or -1 = inherit $PropDvMaxRows), got $arg")
     val v =
       if (arg >= 0L) arg
-      else liveMeta(fs, r).props.get(PropDvMaxRows).map { s =>
+      else base.props.get(PropDvMaxRows).map { s =>
         s.toLongOption.filter(_ >= 0L).getOrElse(
           throw new IllegalArgumentException(
             s"table property $PropDvMaxRows='$s' is not a non-negative long"))
@@ -296,22 +270,11 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       props: Map[String, String], retain: Int = -1): Long = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one pair")
     props.foreach { case (k, v) => validateProp(k, v) }
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val merged = curMeta.props ++ props
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        curMeta.schema, curMeta.rows,
-        meta = _.copy(props = merged),
-        op = "set tblproperties " + props.keys.toSeq.sorted.mkString(",")))
-      throw new java.util.ConcurrentModificationException(
-        s"SET TBLPROPERTIES on $root lost version $next to a concurrent " +
-          "commit — retry against the current table")
-    next
+    commitDdl(spark, root, retain, "SET TBLPROPERTIES") { (_, m) =>
+      Some(DdlPlan(m.schema,
+        "set tblproperties " + props.keys.toSeq.sorted.mkString(","),
+        _.copy(props = m.props ++ props)))
+    }
   }
 
   /** `ALTER TABLE t UNSET TBLPROPERTIES [IF EXISTS] (…)`. Absent keys
@@ -320,26 +283,14 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       keys: Seq[String], ifExists: Boolean = false,
       retain: Int = -1): Long = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val have = curMeta.props
-    val missing = keys.filterNot(have.contains)
-    if (!ifExists) require(missing.isEmpty,
-      s"cannot UNSET absent table properties on $root: " +
-        missing.sorted.mkString("[", ", ", "]") + " (use IF EXISTS)")
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        curMeta.schema, curMeta.rows,
-        meta = _.copy(props = have -- keys),
-        op = "unset tblproperties " + keys.sorted.mkString(",")))
-      throw new java.util.ConcurrentModificationException(
-        s"UNSET TBLPROPERTIES on $root lost version $next to a concurrent " +
-          "commit — retry against the current table")
-    next
+    commitDdl(spark, root, retain, "UNSET TBLPROPERTIES") { (_, m) =>
+      val missing = keys.filterNot(m.props.contains)
+      if (!ifExists) require(missing.isEmpty,
+        s"cannot UNSET absent table properties on $root: " +
+          missing.sorted.mkString("[", ", ", "]") + " (use IF EXISTS)")
+      Some(DdlPlan(m.schema, "unset tblproperties " + keys.sorted.mkString(","),
+        _.copy(props = m.props -- keys)))
+    }
   }
 
   // ---- generated columns (derived partition keys) ------------------
@@ -457,16 +408,10 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * resolution. No-op if already enabled. */
   def enableRowTracking(spark: SparkSession, root: String,
       retain: Int = -1): Long = {
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
+    val (cur, curMeta) = liveSnapshot(spark, root)
     if (curMeta.rowId.isDefined) return cur
-    requireNotFoldTable(fs, r, "enable row tracking on")
-    require(curMeta.schema.isDefined,
-      s"the table at $root predates carried schemas — commit once " +
-        "(any append) to establish a #schema line, then enable row tracking")
+    requireNotFoldTable(curMeta, root, "enable row tracking on")
+    carriedSchema(curMeta, root, "enable row tracking")
     commitOverwrite(readCommittedAt(spark, root, cur), root,
       retain = retain, rowTracking = true)
   }
@@ -475,15 +420,13 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * genuinely NEW (a MERGE insert, a CDC upsert) and take the next
     * block; rows carrying an id keep it (the stability contract).
     * Returns the frame plus the advanced mark to commit — None when
-    * the table is untracked (frame untouched). One count job over the
-    * new rows only, and only on tracked tables. */
-  private[sources] def assignFreshRowIds(
-      fs: org.apache.hadoop.fs.FileSystem, r: Path,
+    * the base snapshot `base` is untracked (frame untouched). One count
+    * job over the new rows only, and only on tracked tables. */
+  private[sources] def assignFreshRowIds(base: TableMeta,
       df: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, Option[Long]) = {
     import org.apache.spark.sql.functions.col
-    val mark = liveMeta(fs, r).rowId
-    mark match {
+    base.rowId match {
       case None => (df, None)
       case Some(m) if !df.columns.contains(RowIdCol) =>
         val n = df.count()
@@ -1313,36 +1256,23 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * at execution. */
   def evolveSchema(spark: SparkSession, root: String,
       incoming: org.apache.spark.sql.types.StructType,
-      retain: Int = -1): Long = {
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then evolve"))
-    require(!incoming.fieldNames.contains(RowIdCol),
-      s"'$RowIdCol' is engine-owned under row tracking — the incoming " +
-        "schema must omit it")
-    val merged = mergeSchemas(schema, incoming)
-    if (merged == schema) return cur
-    requireNotFoldTable(fs, r, "evolve the schema of")
-    // new top-level names allocate physical names that can never
-    // collide with a mapped or retired one, exactly like an evolving
-    // append's staging would
-    val newMap = allocPhysical(merged, curMeta.colMap,
-      curMeta.retired, cur + 1)
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(merged), curMeta.rows,
-        meta = _.copy(colMap = newMap), op = "evolve schema"))
-      throw new java.util.ConcurrentModificationException(
-        s"evolving the schema of $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
-  }
+      retain: Int = -1): Long =
+    commitDdl(spark, root, retain, "evolving the schema") { (cur, m) =>
+      val schema = carriedSchema(m, root, "evolve")
+      require(!incoming.fieldNames.contains(RowIdCol),
+        s"'$RowIdCol' is engine-owned under row tracking — the incoming " +
+          "schema must omit it")
+      val merged = mergeSchemas(schema, incoming)
+      if (merged == schema) None
+      else {
+        requireNotFoldTable(m, root, "evolve the schema of")
+        // new top-level names allocate physical names that can never
+        // collide with a mapped or retired one, exactly like an
+        // evolving append's staging would
+        val newMap = allocPhysical(merged, m.colMap, m.retired, cur + 1)
+        Some(DdlPlan(Some(merged), "evolve schema", _.copy(colMap = newMap)))
+      }
+    }
 
   /** TEST SEAM: runs after a nested-DDL statement validates against its
     * snapshot and BEFORE its auto id-mode upgrade commit — the window a
@@ -1359,26 +1289,43 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     * upgraded. Stamps `#require=colmap2` — older builds refuse the
     * table rather than silently dropping the tree. */
   def upgradeColumnMapping(spark: SparkSession, root: String,
-      retain: Int = -1): Long = {
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    if (curMeta.colMap2.isDefined) return cur
-    require(curMeta.schema.isDefined,
-      s"the table at $root predates carried schemas — commit once " +
-        "(any append) to establish a #schema line, then upgrade")
-    requireNotFoldTable(fs, r, "upgrade column mapping on")
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        curMeta.schema, curMeta.rows,
-        colMap2Establish = true,
-        op = "upgrade column mapping"))
-      throw new java.util.ConcurrentModificationException(
-        s"upgrading column mapping on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
+      retain: Int = -1): Long =
+    commitDdl(spark, root, retain, "upgrading column mapping") { (_, m) =>
+      if (m.colMap2.isDefined) None
+      else {
+        carriedSchema(m, root, "upgrade")
+        requireNotFoldTable(m, root, "upgrade column mapping on")
+        Some(DdlPlan(m.schema, "upgrade column mapping",
+          colMap2Establish = true))
+      }
+    }
+
+  /** [[commitDdl]] for the nested rename and drop. `validate` checks
+    * the statement against the live snapshot and returns the op's name
+    * (for refusals) and its plan against a base snapshot. Ids must
+    * assign to the PRE-DDL names, so the table first upgrades to
+    * id-mode as its own commit (a no-op when done), and the DDL then
+    * commits against the post-upgrade base. A commit landing between
+    * validation and the upgrade (an evolving append, a DDL) would
+    * otherwise be silently folded over — its schema republished stale,
+    * its new columns tombstoned by the reconcile — so drift in anything
+    * the validation read refuses; the upgrade itself changes none of
+    * it (it only assigns ids to the EXISTING names). */
+  private def commitNestedDdl(spark: SparkSession, root: String,
+      retain: Int)(validate: TableMeta => (String, TableMeta => DdlPlan)): Long = {
+    val (cur, curMeta) = liveSnapshot(spark, root)
+    val (what, plan) = validate(curMeta)
+    beforeColMapUpgrade()
+    upgradeColumnMapping(spark, root, retain)
+    def validated(m: TableMeta) = (m.schema, m.colMap, m.checks, m.genAll)
+    commitDdl(spark, root, retain, what) { (base, baseMeta) =>
+      if (base != cur && validated(baseMeta) != validated(curMeta))
+        throw new java.util.ConcurrentModificationException(
+          s"$what on $root raced a concurrent commit that changed the " +
+            "table's schema or constraints between validation and the " +
+            "id-mode upgrade — retry against the current table")
+      Some(plan(baseMeta))
+    }
   }
 
   /** Attribute paths (dotted, as written) referenced by stored
@@ -1500,60 +1447,28 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     require(newName.nonEmpty && !newName.exists("=,:\n#.".contains(_)),
       s"field name '$newName' may not contain '=', ',', ':', '#', '.', " +
         "or newline")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then rename"))
-    requireNotFoldTable(fs, r, "rename a nested column of")
-    val (newSchema, oldCanon, newCanon) =
-      try renameFieldAt(schema, path, newName)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"cannot rename ${path.mkString(".")} at $root: ${e.getMessage}")
-      }
-    val refs = refsOverlapping(spark, curMeta.checks, oldCanon)
-    require(refs.isEmpty,
-      s"cannot rename ${oldCanon.mkString(".")}: CHECK constraint(s) " +
-        refs.mkString("[", ", ", "]") + " reference it — drop them, " +
-        "rename, and re-add them under the new name")
-    val genRefs = refsOverlapping(spark, curMeta.genAll, oldCanon)
-    require(genRefs.isEmpty,
-      s"cannot rename ${oldCanon.mkString(".")}: generated column(s) " +
-        genRefs.mkString("[", ", ", "]") + " derive from (or through) it")
-    // ids must be assigned to the PRE-rename names (the carry re-keys
-    // one of them) — upgrade first as its own commit; no-op when done
-    beforeColMapUpgrade()
-    upgradeColumnMapping(spark, root, retain)
-    val base = currentVersion(spark, root).get
-    val baseMeta = tableMeta(fs, r, base)
-    // the rename was validated against snapshot `cur`; a commit landing
-    // before the upgrade would be silently folded over (stale schema
-    // republished, its columns tombstoned) — refuse drift with the same
-    // CME contract as the single-version pinSlot paths (the upgrade
-    // itself changes none of the validated state)
-    if (base != cur && (baseMeta.schema != Some(schema) ||
-        baseMeta.checks != curMeta.checks ||
-        baseMeta.genAll != curMeta.genAll))
-      throw new java.util.ConcurrentModificationException(
-        s"renaming ${oldCanon.mkString(".")} on $root raced a concurrent " +
-          "commit that changed the table's schema or constraints between " +
-          "validation and the id-mode upgrade — retry against the " +
-          "current table")
-    val next = pinSlot(fs, r, base)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, base), retain,
-        Some(newSchema), baseMeta.rows,
-        colMap2Carry = Map(newCanon.mkString(".") -> oldCanon.mkString(".")),
-        op = s"rename column ${oldCanon.mkString(".")} -> " +
-          newCanon.mkString(".")))
-      throw new java.util.ConcurrentModificationException(
-        s"renaming ${oldCanon.mkString(".")} on $root lost version $next " +
-          "to a concurrent commit — retry against the current table")
-    next
+    commitNestedDdl(spark, root, retain) { m =>
+      val schema = carriedSchema(m, root, "rename")
+      requireNotFoldTable(m, root, "rename a nested column of")
+      val (newSchema, oldCanon, newCanon) =
+        try renameFieldAt(schema, path, newName)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"cannot rename ${path.mkString(".")} at $root: ${e.getMessage}")
+        }
+      val refs = refsOverlapping(spark, m.checks, oldCanon)
+      require(refs.isEmpty,
+        s"cannot rename ${oldCanon.mkString(".")}: CHECK constraint(s) " +
+          refs.mkString("[", ", ", "]") + " reference it — drop them, " +
+          "rename, and re-add them under the new name")
+      val genRefs = refsOverlapping(spark, m.genAll, oldCanon)
+      require(genRefs.isEmpty,
+        s"cannot rename ${oldCanon.mkString(".")}: generated column(s) " +
+          genRefs.mkString("[", ", ", "]") + " derive from (or through) it")
+      (s"renaming ${oldCanon.mkString(".")}", _ => DdlPlan(Some(newSchema),
+        s"rename column ${oldCanon.mkString(".")} -> " + newCanon.mkString("."),
+        colMap2Carry = Map(newCanon.mkString(".") -> oldCanon.mkString("."))))
+    }
   }
 
   /** RENAME a column as METADATA (Delta's column mapping): one
@@ -1573,51 +1488,37 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       oldName: String, newName: String, retain: Int = -1): Long = {
     require(newName.nonEmpty && !newName.exists("=,:\n#".contains(_)),
       s"column name '$newName' may not contain '=', ',', ':', '#', or newline")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then rename"))
-    require(schema.fieldNames.contains(oldName),
-      s"no column '$oldName' at $root (have: " +
-        schema.fieldNames.mkString("[", ", ", "]") + ")")
-    require(!schema.fieldNames.contains(newName),
-      s"column '$newName' already exists at $root")
-    requireNotFoldTable(fs, r, "rename a column of")
-    val refs = checksReferencing(spark, curMeta.checks, oldName)
-    require(refs.isEmpty,
-      s"cannot rename '$oldName': CHECK constraint(s) " +
-        refs.mkString("[", ", ", "]") + " reference it — drop them, " +
-        "rename, and re-add them under the new name")
-    val genRefs = curMeta.genAll.collect {
-      case (c, _) if c == oldName => c
-    } ++ checksReferencing(spark, curMeta.genAll, oldName)
-    require(genRefs.isEmpty,
-      s"cannot rename '$oldName': generated column(s) " +
-        genRefs.distinct.mkString("[", ", ", "]") + " are (or derive " +
-        "from) it — the stored generation expression would stop binding")
-    val map = curMeta.colMap
-    val phys = physName(map, oldName)
-    val newMap = (map - oldName) ++
-      (if (phys == newName) Nil else Seq(newName -> phys))
-    val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
-      f => if (f.name == oldName) f.copy(name = newName) else f))
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), curMeta.rows,
-        meta = _.copy(colMap = newMap),
+    commitDdl(spark, root, retain, s"renaming '$oldName'") { (_, m) =>
+      val schema = carriedSchema(m, root, "rename")
+      require(schema.fieldNames.contains(oldName),
+        s"no column '$oldName' at $root (have: " +
+          schema.fieldNames.mkString("[", ", ", "]") + ")")
+      require(!schema.fieldNames.contains(newName),
+        s"column '$newName' already exists at $root")
+      requireNotFoldTable(m, root, "rename a column of")
+      val refs = checksReferencing(spark, m.checks, oldName)
+      require(refs.isEmpty,
+        s"cannot rename '$oldName': CHECK constraint(s) " +
+          refs.mkString("[", ", ", "]") + " reference it — drop them, " +
+          "rename, and re-add them under the new name")
+      val genRefs = m.genAll.collect {
+        case (c, _) if c == oldName => c
+      } ++ checksReferencing(spark, m.genAll, oldName)
+      require(genRefs.isEmpty,
+        s"cannot rename '$oldName': generated column(s) " +
+          genRefs.distinct.mkString("[", ", ", "]") + " are (or derive " +
+          "from) it — the stored generation expression would stop binding")
+      val phys = physName(m.colMap, oldName)
+      val newMap = (m.colMap - oldName) ++
+        (if (phys == newName) Nil else Seq(newName -> phys))
+      val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
+        f => if (f.name == oldName) f.copy(name = newName) else f))
+      Some(DdlPlan(Some(newSchema), s"rename column $oldName -> $newName",
+        _.copy(colMap = newMap),
         // id-mode: the renamed column KEEPS its id (the carry tells
         // the reconcile which previous path it came from)
-        colMap2Carry = Map(newName -> oldName),
-        op = s"rename column $oldName -> $newName"))
-      throw new java.util.ConcurrentModificationException(
-        s"renaming '$oldName' on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
+        colMap2Carry = Map(newName -> oldName)))
+    }
   }
 
   /** DROP a column as METADATA: one manifest write, zero data I/O —
@@ -1645,124 +1546,89 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   def dropColumnsAtPaths(spark: SparkSession, root: String,
       paths: Seq[Seq[String]], retain: Int = -1): Long = {
     require(paths.nonEmpty, "dropColumnsAtPaths needs at least one column")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    def cur0 = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    def schemaAt(v: Long) = tableMeta(fs, r, v).schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then drop"))
-    requireNotFoldTable(fs, r, if (paths.exists(_.length >= 2))
-      "drop a nested column of" else "drop a column of")
-    // ALL validation runs against the pre-upgrade state FIRST, so a
-    // refused statement applies nothing — not even the id-mode
-    // upgrade commit (the upgrade changes neither the schema nor the
-    // flat map, so the fold below stays valid across it)
-    val cur = cur0
-    val schema = schemaAt(cur)
-    val curMeta = tableMeta(fs, r, cur)
-    val map = curMeta.colMap
-    val checks = curMeta.checks
-    val gens = curMeta.genAll
-    var folded = schema
-    val droppedPhys = Seq.newBuilder[String] // full dotted phys paths
-    val retiredTop = Seq.newBuilder[String]
-    var newMap = map
-    paths.foreach { path =>
-      require(path.nonEmpty, "empty column path")
-      if (path.length == 1) {
-        val name = path.head
-        require(folded.fieldNames.contains(name),
-          s"no column '$name' at $root (have: " +
-            folded.fieldNames.mkString("[", ", ", "]") + ")")
-        require(folded.length > 1, s"cannot drop the only column of $root")
-        val phys = physName(map, name)
-        require(!curMeta.partCols.contains(phys),
-          s"cannot drop partition column '$name' — the partition layout is " +
-            "a table property; re-layout with commitOverwrite to change it")
-        require(!curMeta.bucketBy.exists(_._2.contains(phys)),
-          s"cannot drop bucket column '$name' — the bucket layout is a " +
-            "table property; re-layout with commitOverwrite to change it")
-        val refs = checksReferencing(spark, checks, name)
-        require(refs.isEmpty,
-          s"cannot drop '$name': CHECK constraint(s) " +
-            refs.mkString("[", ", ", "]") + " reference it — drop them first")
-        val genRefs = gens.collect { case (c, _) if c == name => c } ++
-          checksReferencing(spark, gens, name)
-        require(genRefs.isEmpty,
-          s"cannot drop '$name': generated column(s) " +
-            genRefs.distinct.mkString("[", ", ", "]") + " are (or derive " +
-            "from) it")
-        require(!phys.exists("=,\n#".contains(_)),
-          s"physical column name '$phys' cannot ride the #colretired line")
-        folded = org.apache.spark.sql.types.StructType(
-          folded.fields.filterNot(_.name == name))
-        droppedPhys += phys
-        retiredTop += phys
-        newMap -= name
-      } else {
-        val (next, canon) =
-          try dropFieldAt(folded, path)
-          catch { case e: IllegalArgumentException =>
-            throw new IllegalArgumentException(
-              s"cannot drop ${path.mkString(".")} at $root: ${e.getMessage}")
-          }
-        val refs = refsOverlapping(spark, checks, canon)
-        require(refs.isEmpty,
-          s"cannot drop ${canon.mkString(".")}: CHECK constraint(s) " +
-            refs.mkString("[", ", ", "]") + " reference it — drop them first")
-        val genRefs = refsOverlapping(spark, gens, canon)
-        require(genRefs.isEmpty,
-          s"cannot drop ${canon.mkString(".")}: generated column(s) " +
-            genRefs.mkString("[", ", ", "]") + " derive from (or through) it")
-        folded = next
-        droppedPhys += physName(map, canon.mkString("."))
-        newMap -= canon.mkString(".")
+    val names = paths.map(_.mkString(".")).mkString(", ")
+    val nested = paths.exists(_.length >= 2)
+    // ALL validation runs against one snapshot FIRST, so a refused
+    // statement applies nothing — not even the id-mode upgrade commit
+    def validate(m: TableMeta): TableMeta => DdlPlan = {
+      requireNotFoldTable(m, root,
+        if (nested) "drop a nested column of" else "drop a column of")
+      val schema = carriedSchema(m, root, "drop")
+      val map = m.colMap
+      val checks = m.checks
+      val gens = m.genAll
+      var folded = schema
+      val droppedPhys = Seq.newBuilder[String] // full dotted phys paths
+      val retiredTop = Seq.newBuilder[String]
+      var newMap = map
+      paths.foreach { path =>
+        require(path.nonEmpty, "empty column path")
+        if (path.length == 1) {
+          val name = path.head
+          require(folded.fieldNames.contains(name),
+            s"no column '$name' at $root (have: " +
+              folded.fieldNames.mkString("[", ", ", "]") + ")")
+          require(folded.length > 1, s"cannot drop the only column of $root")
+          val phys = physName(map, name)
+          require(!m.partCols.contains(phys),
+            s"cannot drop partition column '$name' — the partition layout is " +
+              "a table property; re-layout with commitOverwrite to change it")
+          require(!m.bucketBy.exists(_._2.contains(phys)),
+            s"cannot drop bucket column '$name' — the bucket layout is a " +
+              "table property; re-layout with commitOverwrite to change it")
+          val refs = checksReferencing(spark, checks, name)
+          require(refs.isEmpty,
+            s"cannot drop '$name': CHECK constraint(s) " +
+              refs.mkString("[", ", ", "]") + " reference it — drop them first")
+          val genRefs = gens.collect { case (c, _) if c == name => c } ++
+            checksReferencing(spark, gens, name)
+          require(genRefs.isEmpty,
+            s"cannot drop '$name': generated column(s) " +
+              genRefs.distinct.mkString("[", ", ", "]") + " are (or derive " +
+              "from) it")
+          require(!phys.exists("=,\n#".contains(_)),
+            s"physical column name '$phys' cannot ride the #colretired line")
+          folded = org.apache.spark.sql.types.StructType(
+            folded.fields.filterNot(_.name == name))
+          droppedPhys += phys
+          retiredTop += phys
+          newMap -= name
+        } else {
+          val (next, canon) =
+            try dropFieldAt(folded, path)
+            catch { case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(
+                s"cannot drop ${path.mkString(".")} at $root: ${e.getMessage}")
+            }
+          val refs = refsOverlapping(spark, checks, canon)
+          require(refs.isEmpty,
+            s"cannot drop ${canon.mkString(".")}: CHECK constraint(s) " +
+              refs.mkString("[", ", ", "]") + " reference it — drop them first")
+          val genRefs = refsOverlapping(spark, gens, canon)
+          require(genRefs.isEmpty,
+            s"cannot drop ${canon.mkString(".")}: generated column(s) " +
+              genRefs.mkString("[", ", ", "]") + " derive from (or through) it")
+          folded = next
+          droppedPhys += physName(map, canon.mkString("."))
+          newMap -= canon.mkString(".")
+        }
       }
+      val droppedSet = droppedPhys.result().toSet
+      val retired = retiredTop.result()
+      val (schemaOut, mapOut) = (folded, newMap)
+      base => DdlPlan(Some(schemaOut), s"drop column $names",
+        _.copy(colMap = mapOut,
+          retired = (base.retired ++ retired).distinct,
+          statsCols = base.statsCols.filterNot(droppedSet),
+          bloomCols = base.bloomCols.filterNot(droppedSet)))
     }
-    val droppedSet = droppedPhys.result().toSet
     // nested paths need the id tree (ids assign to the PRE-drop names,
-    // tombstones key on them) — own commit, no-op when already
-    // upgraded, and only AFTER every guard above passed
-    val base =
-      if (paths.exists(_.length >= 2)) {
-        beforeColMapUpgrade()
-        upgradeColumnMapping(spark, root, retain)
-        val b = currentVersion(spark, root).get
-        // the fold above ran against snapshot `cur`; a commit landing
-        // between that read and the upgrade (an evolving append, a DDL)
-        // would otherwise be silently clobbered — its schema changes
-        // folded over and its new columns tombstoned by the reconcile.
-        // The upgrade itself changes none of the state validated above
-        // (it only assigns ids to the EXISTING names), so any drift
-        // here is a real interleaved commit: refuse with the same CME
-        // contract as the single-version pinSlot paths.
-        if (b != cur && (schemaAt(b) != schema ||
-            tableMeta(fs, r, b).colMap != map ||
-            tableMeta(fs, r, b).checks != checks ||
-            tableMeta(fs, r, b).genAll != gens))
-          throw new java.util.ConcurrentModificationException(
-            s"dropping ${paths.map(_.mkString(".")).mkString(", ")} on " +
-              s"$root raced a concurrent commit that changed the " +
-              "table's schema or constraints between validation and " +
-              "the id-mode upgrade — retry against the current table")
-        b
-      } else cur
-    val baseMeta = tableMeta(fs, r, base)
-    val slot = pinSlot(fs, r, base)
-    if (!commitManifest(fs, r, slot, manifestDirs(fs, r, base), retain,
-        Some(folded), baseMeta.rows,
-        meta = _.copy(colMap = newMap,
-          retired = (baseMeta.retired ++ retiredTop.result()).distinct,
-          statsCols = baseMeta.statsCols.filterNot(droppedSet),
-          bloomCols = baseMeta.bloomCols.filterNot(droppedSet)),
-        op = s"drop column ${paths.map(_.mkString(".")).mkString(", ")}"))
-      throw new java.util.ConcurrentModificationException(
-        s"dropping ${paths.map(_.mkString(".")).mkString(", ")} on $root " +
-          s"lost version $slot to a concurrent commit — retry against " +
-          "the current table")
-    slot
+    // tombstones key on them)
+    if (nested)
+      commitNestedDdl(spark, root, retain)(m => (s"dropping $names", validate(m)))
+    else
+      commitDdl(spark, root, retain, s"dropping $names")((_, m) =>
+        Some(validate(m)(m)))
   }
 
   // -- column DEFAULT values ------------------------------------------
@@ -1839,18 +1705,16 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
     org.apache.spark.sql.catalyst.expressions.Literal.create(folded, dt).sql
   }
 
-  /** Fields of the live committed schema that declare a
+  /** Fields of the committed schema of `base` that declare a
     * CURRENT_DEFAULT and are ABSENT from `df` get materialized into
     * the batch — an omitting append writes the default physically
     * (never NULL), so post-add files always carry the column and the
     * per-file EXISTS_DEFAULT backfill applies exactly to pre-add
     * files. */
-  private[sources] def materializeDefaults(
-      fs: org.apache.hadoop.fs.FileSystem, r: Path,
+  private[sources] def materializeDefaults(base: TableMeta,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val committed = liveMeta(fs, r).schema
     val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    committed match {
+    base.schema match {
       case Some(s) =>
         s.fields.filter(f => f.metadata.contains(DefaultCurrentKey) &&
             !df.columns.exists(res(_, f.name)))
@@ -1892,51 +1756,39 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   def alterColumnDefaults(spark: SparkSession, root: String,
       cols: Seq[(String, Option[String])], retain: Int = -1): Long = {
     require(cols.nonEmpty, "alterColumnDefaults needs at least one column")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then alter defaults"))
-    requireNotFoldTable(fs, r, "alter column defaults on")
-    val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    val identityDecl = curMeta.identity
-    val gens = curMeta.genAll
-    var fields = schema.fields
-    cols.foreach { case (name, defOpt) =>
-      val i = fields.indexWhere(f => res(f.name, name))
-      require(i >= 0, s"no column '$name' at $root (have: " +
-        fields.map(_.name).mkString("[", ", ", "]") + ")")
-      require(!identityDecl.exists(d => res(d._1, name)) &&
-          !gens.exists(g => res(g._1, name)),
-        s"cannot set a DEFAULT on '$name' — identity/generated columns " +
-          "are engine-owned (GENERATED ALWAYS)")
-      val f = fields(i)
-      val mb = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata)
-      defOpt match {
-        case Some(text) =>
-          mb.putString(DefaultCurrentKey,
-            validateDefaultLiteral(spark, name, f.dataType, text))
-        case None =>
-          mb.remove(DefaultCurrentKey)
+    commitDdl(spark, root, retain, "altering column defaults") { (_, m) =>
+      val schema = carriedSchema(m, root, "alter defaults")
+      requireNotFoldTable(m, root, "alter column defaults on")
+      val res = org.apache.spark.sql.internal.SQLConf.get.resolver
+      val identityDecl = m.identity
+      val gens = m.genAll
+      var fields = schema.fields
+      cols.foreach { case (name, defOpt) =>
+        val i = fields.indexWhere(f => res(f.name, name))
+        require(i >= 0, s"no column '$name' at $root (have: " +
+          fields.map(_.name).mkString("[", ", ", "]") + ")")
+        require(!identityDecl.exists(d => res(d._1, name)) &&
+            !gens.exists(g => res(g._1, name)),
+          s"cannot set a DEFAULT on '$name' — identity/generated columns " +
+            "are engine-owned (GENERATED ALWAYS)")
+        val f = fields(i)
+        val mb = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata)
+        defOpt match {
+          case Some(text) =>
+            mb.putString(DefaultCurrentKey,
+              validateDefaultLiteral(spark, name, f.dataType, text))
+          case None =>
+            mb.remove(DefaultCurrentKey)
+        }
+        fields = fields.updated(i, f.copy(metadata = mb.build()))
       }
-      fields = fields.updated(i, f.copy(metadata = mb.build()))
-    }
-    val newSchema = org.apache.spark.sql.types.StructType(fields)
-    if (newSchema == schema) return cur
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), curMeta.rows,
-        op = "alter column defaults " + cols.map { case (n, d) =>
+      val newSchema = org.apache.spark.sql.types.StructType(fields)
+      if (newSchema == schema) None
+      else Some(DdlPlan(Some(newSchema),
+        "alter column defaults " + cols.map { case (n, d) =>
           n + d.map(" = " + _).getOrElse(" drop") }.mkString(", ")))
-      throw new java.util.ConcurrentModificationException(
-        s"altering column defaults on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
+    }
   }
 
   /** ADD nullable columns as METADATA: one manifest write, zero data
@@ -1959,44 +1811,31 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         org.apache.spark.sql.types.Metadata)],
       retain: Int = -1): Long = {
     require(cols.nonEmpty, "addColumns needs at least one column")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then add columns"))
-    // duplicate checks run under the SESSION resolver, like addFieldAt
-    // and the ALTER paths: under the default case-insensitive analysis
-    // `ADD COLUMNS (Score INT)` on a table with 'score' must refuse —
-    // an exact-only check would commit a case-duplicate column the
-    // analyzer can then no longer resolve unambiguously
-    val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    cols.foreach { case (n, _, _) =>
-      require(n.nonEmpty && !schema.fieldNames.exists(res(_, n)),
-        s"column '$n' already exists at $root (or is empty)")
+    commitDdl(spark, root, retain, "adding columns") { (cur, m) =>
+      val schema = carriedSchema(m, root, "add columns")
+      // duplicate checks run under the SESSION resolver, like addFieldAt
+      // and the ALTER paths: under the default case-insensitive analysis
+      // `ADD COLUMNS (Score INT)` on a table with 'score' must refuse —
+      // an exact-only check would commit a case-duplicate column the
+      // analyzer can then no longer resolve unambiguously
+      val res = org.apache.spark.sql.internal.SQLConf.get.resolver
+      cols.foreach { case (n, _, _) =>
+        require(n.nonEmpty && !schema.fieldNames.exists(res(_, n)),
+          s"column '$n' already exists at $root (or is empty)")
+      }
+      for (i <- cols.indices; j <- cols.indices if i < j)
+        require(!res(cols(i)._1, cols(j)._1),
+          "duplicate names in the added column list")
+      requireNotFoldTable(m, root, "add columns to")
+      val newSchema = org.apache.spark.sql.types.StructType(
+        schema.fields ++ cols.map { case (n, dt, md) =>
+          org.apache.spark.sql.types.StructField(n, dt, nullable = true,
+            metadata = md) })
+      val newMap = allocPhysical(newSchema, m.colMap,
+        m.retired, cur + 1)
+      Some(DdlPlan(Some(newSchema), s"add columns ${cols.map(_._1).mkString(", ")}",
+        _.copy(colMap = newMap)))
     }
-    for (i <- cols.indices; j <- cols.indices if i < j)
-      require(!res(cols(i)._1, cols(j)._1),
-        "duplicate names in the added column list")
-    requireNotFoldTable(fs, r, "add columns to")
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.fields ++ cols.map { case (n, dt, md) =>
-        org.apache.spark.sql.types.StructField(n, dt, nullable = true,
-          metadata = md) })
-    val newMap = allocPhysical(newSchema, curMeta.colMap,
-      curMeta.retired, cur + 1)
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), curMeta.rows,
-        meta = _.copy(colMap = newMap),
-        op = s"add columns ${cols.map(_._1).mkString(", ")}"))
-      throw new java.util.ConcurrentModificationException(
-        s"adding columns on $root lost version $next to a concurrent " +
-          "commit — retry against the current table")
-    next
   }
 
   /** Insert a nullable field named `path.last` into the struct at
@@ -2147,61 +1986,49 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
         retain)
     require(cols.forall(c => c._1.length == 1 || c._3.isEmpty),
       "DEFAULT is a top-level-column construct")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then add columns"))
-    requireNotFoldTable(fs, r, "add columns to")
-    cols.foreach { case (path, _, _) =>
-      require(path.nonEmpty, "empty column path")
-      if (path.length >= 2) path.foreach(seg => require(
-        seg.nonEmpty && !seg.exists("=,\n#:.".contains(_)),
-        s"column path segment '$seg' may not be empty or contain " +
-          "'=', ',', ':', '#', '.', or newline"))
-      else require(path.head.nonEmpty, "empty column name")
-    }
-    // fold in declaration order — a later nested add may target a
-    // struct column added earlier in the SAME statement
-    val newSchema0 = cols.foldLeft(schema) { case (acc, (path, dt, _)) =>
-      try addFieldAt(acc, path, dt)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"cannot add ${path.mkString(".")} at $root: ${e.getMessage}")
+    commitDdl(spark, root, retain, "adding columns") { (cur, m) =>
+      val schema = carriedSchema(m, root, "add columns")
+      requireNotFoldTable(m, root, "add columns to")
+      cols.foreach { case (path, _, _) =>
+        require(path.nonEmpty, "empty column path")
+        if (path.length >= 2) path.foreach(seg => require(
+          seg.nonEmpty && !seg.exists("=,\n#:.".contains(_)),
+          s"column path segment '$seg' may not be empty or contain " +
+            "'=', ',', ':', '#', '.', or newline"))
+        else require(path.head.nonEmpty, "empty column name")
       }
+      // fold in declaration order — a later nested add may target a
+      // struct column added earlier in the SAME statement
+      val newSchema0 = cols.foldLeft(schema) { case (acc, (path, dt, _)) =>
+        try addFieldAt(acc, path, dt)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"cannot add ${path.mkString(".")} at $root: ${e.getMessage}")
+        }
+      }
+      // top-level adds carrying a DEFAULT gain their metadata
+      val defaults = cols.collect {
+        case (Seq(n), dt, Some(text)) => n -> mdOf(n, dt, Some(text)) }.toMap
+      val newSchema =
+        if (defaults.isEmpty) newSchema0
+        else org.apache.spark.sql.types.StructType(newSchema0.fields.map(f =>
+          defaults.get(f.name).map(md => f.copy(metadata = md)).getOrElse(f)))
+      // new TOP-LEVEL names need fresh physical allocations under
+      // column mapping; nested adds ride inside their container's frozen
+      // physical name — EXCEPT, under id-mode, a leaf name the container
+      // tombstoned (dropped-then-re-added), which allocates fresh so the
+      // dropped bytes stay unreachable
+      val flat0 = m.colMap
+      val withTop =
+        if (cols.exists(_._1.length == 1))
+          allocPhysical(newSchema, flat0, m.retired, cur + 1)
+        else flat0
+      val newMap = allocNestedPhys(m.colMap2,
+        withTop, schema, cols.map(_._1), cur + 1)
+      Some(DdlPlan(Some(newSchema),
+        s"add columns ${cols.map(_._1.mkString(".")).mkString(", ")}",
+        _.copy(colMap = newMap)))
     }
-    // top-level adds carrying a DEFAULT gain their metadata
-    val defaults = cols.collect {
-      case (Seq(n), dt, Some(text)) => n -> mdOf(n, dt, Some(text)) }.toMap
-    val newSchema =
-      if (defaults.isEmpty) newSchema0
-      else org.apache.spark.sql.types.StructType(newSchema0.fields.map(f =>
-        defaults.get(f.name).map(md => f.copy(metadata = md)).getOrElse(f)))
-    // new TOP-LEVEL names need fresh physical allocations under
-    // column mapping; nested adds ride inside their container's frozen
-    // physical name — EXCEPT, under id-mode, a leaf name the container
-    // tombstoned (dropped-then-re-added), which allocates fresh so the
-    // dropped bytes stay unreachable
-    val flat0 = curMeta.colMap
-    val withTop =
-      if (cols.exists(_._1.length == 1))
-        allocPhysical(newSchema, flat0, curMeta.retired, cur + 1)
-      else flat0
-    val newMap = allocNestedPhys(curMeta.colMap2,
-      withTop, schema, cols.map(_._1), cur + 1)
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(newSchema), curMeta.rows,
-        meta = _.copy(colMap = newMap),
-        op = s"add columns ${cols.map(_._1.mkString(".")).mkString(", ")}"))
-      throw new java.util.ConcurrentModificationException(
-        s"adding columns on $root lost version $next to a concurrent " +
-          "commit — retry against the current table")
-    next
   }
 
   /** `ALTER TABLE t ALTER COLUMN c TYPE <wider>`: LOSSLESS type
@@ -2240,106 +2067,95 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
       cols: Seq[(Seq[String], org.apache.spark.sql.types.DataType)],
       retain: Int = -1): Long = {
     require(cols.nonEmpty, "alterColumnTypes needs at least one column")
-    val fs = fsFor(spark, root)
-    val r = new Path(root)
-    val cur = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed table at $root"))
-    val curMeta = tableMeta(fs, r, cur)
-    val schema0 = curMeta.schema.getOrElse(
-      throw new IllegalArgumentException(
-        s"the table at $root predates carried schemas — commit once " +
-          "(any append) to establish a #schema line, then alter types"))
-    // session-resolver lookup: `ALTER COLUMN Meta.V` must find
-    // `meta.v` under the default case-insensitive resolver
-    val res = org.apache.spark.sql.internal.SQLConf.get.resolver
-    val identityDecl = curMeta.identity
-    val bucketDecl = curMeta.bucketBy
-    val gens = curMeta.genAll
-    var schema = schema0
-    var changed = false
-    cols.foreach { case (path, newType) =>
-      require(path.nonEmpty, "empty column path")
-      def widenAt(st: org.apache.spark.sql.types.StructType,
-          p: Seq[String]): (org.apache.spark.sql.types.StructType, Boolean) = {
-        val i = st.fieldNames.indexWhere(res(_, p.head))
-        require(i >= 0,
-          if (p.length == path.length && path.length == 1)
-            s"no column '${p.head}' at $root (have: " +
-              st.fieldNames.mkString("[", ", ", "]") + ")"
-          else s"no field '${p.head}' under ${path.mkString(".")}")
-        val f = st.fields(i)
-        if (p.length == 1) {
-          if (f.dataType == newType) return (st, false) // idempotent no-op
-          require(widenedType(f.dataType, newType).contains(newType),
-            s"ALTER COLUMN TYPE supports lossless widening only; " +
-              s"'${path.mkString(".")}' cannot change " +
-              s"${f.dataType.simpleString} -> ${newType.simpleString}. " +
-              "Rewrite the table (commitOverwrite) to change a column's type.")
-          val rebuilt = st.fields.clone()
-          rebuilt(i) = f.copy(dataType = newType)
-          (org.apache.spark.sql.types.StructType(rebuilt), true)
-        } else f.dataType match {
-          case inner: org.apache.spark.sql.types.StructType =>
-            val (widened, ch) = widenAt(inner, p.tail)
+    commitDdl(spark, root, retain, "altering column type") { (_, m) =>
+      val schema0 = carriedSchema(m, root, "alter types")
+      // session-resolver lookup: `ALTER COLUMN Meta.V` must find
+      // `meta.v` under the default case-insensitive resolver
+      val res = org.apache.spark.sql.internal.SQLConf.get.resolver
+      val identityDecl = m.identity
+      val bucketDecl = m.bucketBy
+      val gens = m.genAll
+      var schema = schema0
+      var changed = false
+      cols.foreach { case (path, newType) =>
+        require(path.nonEmpty, "empty column path")
+        def widenAt(st: org.apache.spark.sql.types.StructType,
+            p: Seq[String]): (org.apache.spark.sql.types.StructType, Boolean) = {
+          val i = st.fieldNames.indexWhere(res(_, p.head))
+          require(i >= 0,
+            if (p.length == path.length && path.length == 1)
+              s"no column '${p.head}' at $root (have: " +
+                st.fieldNames.mkString("[", ", ", "]") + ")"
+            else s"no field '${p.head}' under ${path.mkString(".")}")
+          val f = st.fields(i)
+          if (p.length == 1) {
+            if (f.dataType == newType) return (st, false) // idempotent no-op
+            require(widenedType(f.dataType, newType).contains(newType),
+              s"ALTER COLUMN TYPE supports lossless widening only; " +
+                s"'${path.mkString(".")}' cannot change " +
+                s"${f.dataType.simpleString} -> ${newType.simpleString}. " +
+                "Rewrite the table (commitOverwrite) to change a column's type.")
             val rebuilt = st.fields.clone()
-            rebuilt(i) = f.copy(dataType = widened)
-            (org.apache.spark.sql.types.StructType(rebuilt), ch)
-          case other => throw new IllegalArgumentException(
-            s"'${p.head}' is ${other.simpleString}, not a struct — cannot " +
-              "alter a field inside it")
+            rebuilt(i) = f.copy(dataType = newType)
+            (org.apache.spark.sql.types.StructType(rebuilt), true)
+          } else f.dataType match {
+            case inner: org.apache.spark.sql.types.StructType =>
+              val (widened, ch) = widenAt(inner, p.tail)
+              val rebuilt = st.fields.clone()
+              rebuilt(i) = f.copy(dataType = widened)
+              (org.apache.spark.sql.types.StructType(rebuilt), ch)
+            case other => throw new IllegalArgumentException(
+              s"'${p.head}' is ${other.simpleString}, not a struct — cannot " +
+                "alter a field inside it")
+          }
+        }
+        if (path.length == 1) {
+          val name = path.head
+          // identity refusal comes FIRST — even a same-type no-op on the
+          // identity column is a declaration error worth surfacing
+          require(!identityDecl.exists(d => res(d._1, name)),
+            s"cannot alter the identity column '$name' — its domain is " +
+              "fixed LongType")
+          val (s2, ch) = widenAt(schema, path)
+          if (ch) {
+            // guards that only matter when the type actually changes
+            // (same-type stays a silent no-op, like the original)
+            bucketDecl.foreach { case (_, bcols) =>
+              require(!bcols.exists(res(_, name)),
+                s"cannot widen bucket column '$name': bucket assignment hashes " +
+                  "the stored width, so existing dirs would stop satisfying " +
+                  "the bucketed read contract — re-layout with commitOverwrite")
+            }
+            require(!gens.exists(g => res(g._1, name)),
+              s"cannot alter generated column '$name' — its stored dir values " +
+                "froze under the generation expression")
+            // reference check parses the stored text directly (classification
+            // may refuse an expression that still references the column)
+            val genSrcRefs = gens.collect {
+              case (c, text) if scala.util.Try(
+                  spark.sessionState.sqlParser.parseExpression(text).collect {
+                    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+                      a.nameParts.head
+                  }).getOrElse(Seq(name)).exists(res(_, name)) => c
+            }
+            require(genSrcRefs.isEmpty,
+              s"cannot widen '$name': generated column(s) " +
+                genSrcRefs.mkString("[", ", ", "]") + " derive from it and " +
+                "their stored dir values froze at the narrow type")
+          }
+          schema = s2; changed = changed || ch
+        } else {
+          val (s2, ch) = widenAt(schema, path)
+          schema = s2; changed = changed || ch
         }
       }
-      if (path.length == 1) {
-        val name = path.head
-        // identity refusal comes FIRST — even a same-type no-op on the
-        // identity column is a declaration error worth surfacing
-        require(!identityDecl.exists(d => res(d._1, name)),
-          s"cannot alter the identity column '$name' — its domain is " +
-            "fixed LongType")
-        val (s2, ch) = widenAt(schema, path)
-        if (ch) {
-          // guards that only matter when the type actually changes
-          // (same-type stays a silent no-op, like the original)
-          bucketDecl.foreach { case (_, bcols) =>
-            require(!bcols.exists(res(_, name)),
-              s"cannot widen bucket column '$name': bucket assignment hashes " +
-                "the stored width, so existing dirs would stop satisfying " +
-                "the bucketed read contract — re-layout with commitOverwrite")
-          }
-          require(!gens.exists(g => res(g._1, name)),
-            s"cannot alter generated column '$name' — its stored dir values " +
-              "froze under the generation expression")
-          // reference check parses the stored text directly (classification
-          // may refuse an expression that still references the column)
-          val genSrcRefs = gens.collect {
-            case (c, text) if scala.util.Try(
-                spark.sessionState.sqlParser.parseExpression(text).collect {
-                  case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-                    a.nameParts.head
-                }).getOrElse(Seq(name)).exists(res(_, name)) => c
-          }
-          require(genSrcRefs.isEmpty,
-            s"cannot widen '$name': generated column(s) " +
-              genSrcRefs.mkString("[", ", ", "]") + " derive from it and " +
-              "their stored dir values froze at the narrow type")
-        }
-        schema = s2; changed = changed || ch
-      } else {
-        val (s2, ch) = widenAt(schema, path)
-        schema = s2; changed = changed || ch
+      if (!changed) None
+      else {
+        requireNotFoldTable(m, root, "alter a column type on")
+        Some(DdlPlan(Some(schema), "alter column " + cols.map { case (p, dt) =>
+          s"${p.mkString(".")} type ${dt.simpleString}" }.mkString(", ")))
       }
     }
-    if (!changed) return cur
-    requireNotFoldTable(fs, r, "alter a column type on")
-    val next = pinSlot(fs, r, cur)
-    if (!commitManifest(fs, r, next, manifestDirs(fs, r, cur), retain,
-        Some(schema), curMeta.rows,
-        op = "alter column " + cols.map { case (p, dt) =>
-          s"${p.mkString(".")} type ${dt.simpleString}" }.mkString(", ")))
-      throw new java.util.ConcurrentModificationException(
-        s"altering column type on $root lost version $next to a " +
-          "concurrent commit — retry against the current table")
-    next
   }
 
   /** Nested spelling of [[alterColumnType]]:
@@ -2361,13 +2177,22 @@ private[graft] trait LakeTableMeta { this: Lake.type =>
   }
 
   /** Fold-maintained tables write data dirs outside the staging choke
-    * point that applies the column map — refuse mapping DDL on them. */
-  private[sources] def requireNotFoldTable(fs: org.apache.hadoop.fs.FileSystem,
-      r: Path, what: String): Unit =
-    liveMeta(fs, r).op.foreach(op =>
+    * point that applies the column map — refuse mapping DDL on them
+    * (`base` is the snapshot of the table at `root` the DDL edits). */
+  private[sources] def requireNotFoldTable(base: TableMeta, root: String,
+      what: String): Unit =
+    base.op.foreach(op =>
         require(!op.startsWith("fold"),
-          s"cannot $what a fold-maintained table at $r — the fold sink " +
+          s"cannot $what a fold-maintained table at $root — the fold sink " +
             "pre-writes data dirs under the stream's own column names"))
+
+  /** The committed schema a DDL op edits; a table predating carried
+    * schemas refuses, naming what the op would do next (`verb`). */
+  private[sources] def carriedSchema(base: TableMeta, root: String,
+      verb: String): org.apache.spark.sql.types.StructType =
+    base.schema.getOrElse(throw new IllegalArgumentException(
+      s"the table at $root predates carried schemas — commit once " +
+        s"(any append) to establish a #schema line, then $verb"))
 
   /** The table's established bucket layout: `want` when this commit
     * declares one, else inherited — a divergent re-declaration
