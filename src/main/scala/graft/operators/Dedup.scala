@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -377,44 +377,66 @@ object Dedup {
     * than returning a partially-propagated (wrong) labeling.
     * ADAPTIVE EXECUTION: the candidate-pair graph of a dedup run is
     * orders of magnitude smaller than the corpus (only ids that
-    * collided in some band appear, as fixed-width id pairs), and the
-    * edge count is already measured before the loop starts. When it
-    * fits comfortably on the driver (`localEdgeLimit`, default 2M
-    * edges = ~32 MB of long pairs) the component labeling is finished
-    * there with one exact union-find pass over a single collect — the
-    * same bounded model-state-sync shape as the k-means centroid
-    * collect — instead of paying ~log(n) driver-scheduled rounds of
-    * fixed job overhead on a graph a laptop could fold. The iterative
-    * distributed path below remains the scale path (a billion-edge
-    * crawl graph never collects) and both paths produce IDENTICAL
-    * labels (min member id per component; equivalence is
-    * property-checked in DedupSpec).
+    * collided in some band appear, as fixed-width id pairs). The pairs
+    * are first collected as given, at most `localEdgeLimit + 1` rows in
+    * one SQL execution: when they fit (default 2M pairs = ~32 MB of long
+    * pairs) the component labeling is finished on the driver with one
+    * exact union-find pass — the same bounded model-state-sync shape as
+    * the k-means centroid collect — instead of paying ~log(n)
+    * driver-scheduled rounds of fixed job overhead on a graph a laptop
+    * could fold. Union-find needs neither both edge directions nor
+    * distinct edges, so that path schedules no shuffle of its own. The
+    * iterative distributed path below remains the scale path (a
+    * billion-edge crawl graph never collects). The pairs are persisted
+    * before the bounded collect, so when it overflows the loop reads
+    * the partitions the collect already cached and computes the rest
+    * from the same shuffle outputs: the pair plan runs once on either
+    * path. Both paths produce IDENTICAL labels (min member id per
+    * component; equivalence is property-checked in DedupSpec).
+    *
+    * A pair with a NULL end (or an id that casts to NULL) links nothing
+    * and is dropped on both paths: its other end gets a label only
+    * through another pair.
     *
     * @param pairs candidate pairs (idACol, idBCol), undirected
-    * @param localEdgeLimit finish on the driver when the deduped
-    *        directed edge count is at or below this; 0 forces the
+    * @param localEdgeLimit finish on the driver when `pairs` has at
+    *        most this many rows with both ends non-NULL, counted as
+    *        given (duplicates and both directions count); 0 forces the
     *        distributed loop (specs use it to pin that path)
-    * @return (id, cluster_id) for every id appearing in `pairs` */
+    * @return (id, cluster_id) for every id in a pair of `pairs` with
+    *         both ends non-NULL */
   def connectedComponents(
       pairs: DataFrame, idACol: String = "id_a", idBCol: String = "id_b",
       maxIter: Int = 40, localEdgeLimit: Long = 2000000L): DataFrame = {
     val spark = pairs.sparkSession
-    val edgesWide = pairs
+    // persisted so that an overflowing bounded collect hands the loop
+    // the pairs it already computed instead of re-running the pair plan
+    // (q71's pair plan at sf0.1, 4 cores, medians of 5: the loop path
+    // takes 4.4 s re-running it and 2.8 s reading the cache; the driver
+    // path takes 1.0 s either way)
+    val linked = pairs
       .select(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))
-      .union(pairs.select(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")))
-      .distinct()
+      .where(col("src").isNotNull && col("dst").isNotNull)
       .persist()
-    // Loop shuffle-width hygiene is the shared [[ShuffleWidth]] policy
-    // (measured here at sf0.1: 4.5s → 2.7s for the loop); the
-    // repartitioned edge cache is built on the narrowed session so its
-    // partitioning matches the loop's exchanges.
-    val m = ShuffleWidth.narrowedCount(edgesWide)
-    // strict sentinel: localEdgeLimit = 0 pins the distributed loop
-    // even for an empty edge set (specs rely on it)
-    if (localEdgeLimit > 0 && m <= localEdgeLimit) {
-      try return localComponents(spark, edgesWide)
-      finally edgesWide.unpersist()
-    }
+    val (edgesWide, m) = try {
+      // strict sentinel: localEdgeLimit = 0 pins the distributed loop
+      // even for an empty pair set (specs rely on it)
+      if (localEdgeLimit > 0) {
+        // one SQL execution (take may scan the partitions in several
+        // jobs); toLocalIterator would schedule a job per partition
+        val rows = linked.limit(math.min(localEdgeLimit, Int.MaxValue - 1L).toInt + 1).collect()
+        if (rows.length <= localEdgeLimit) return localComponents(spark, rows)
+      }
+      val e = linked
+        .union(linked.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .persist()
+      // Loop shuffle-width hygiene is the shared [[ShuffleWidth]] policy
+      // (measured here at sf0.1: 4.5s → 2.7s for the loop); the
+      // repartitioned edge cache is built on the narrowed session so its
+      // partitioning matches the loop's exchanges.
+      (e, ShuffleWidth.narrowedCount(e))
+    } finally linked.unpersist()
     val loop = ShuffleWidth.narrowed(spark, ShuffleWidth.rowsWidth(m))
     // unpersisted in the finally — a mid-loop job failure must not
     // strand the repartitioned copy in the block manager for the
@@ -517,8 +539,10 @@ object Dedup {
     }
   }
 
-  /** Driver-side exact union-find over a pre-counted small edge set —
-    * the [[connectedComponents]] fast path. Union-by-min-root keeps
+  /** Driver-side exact union-find over a collected small pair set —
+    * the [[connectedComponents]] fast path. Each row is one undirected
+    * (src, dst) link; repeats and either direction are harmless.
+    * Union-by-min-root keeps
     * every tree rooted at its component's minimum id (attaching the
     * larger root under the smaller preserves the invariant
     * inductively), so `find` IS the cluster label; path halving keeps
@@ -527,17 +551,14 @@ object Dedup {
     *
     * Steady state is PRIMITIVE arrays (an open-addressing long→index
     * table + int parent links — no boxed Long per node): ~24 bytes ×
-    * nodes, ~100 MB at the default 2M-edge / 4M-node ceiling. The
-    * collect of the edge Rows and the construction of the result
+    * nodes, ~100 MB at the default 2M-pair / 4M-node ceiling. The
+    * collect of the pair Rows and the construction of the result
     * relation are additionally transient object overhead of the same
     * order — callers sizing `localEdgeLimit` should budget a few
     * hundred MB of driver heap at the default, not the raw 16 bytes ×
     * edges. */
   private def localComponents(
-      spark: SparkSession, edges: DataFrame): DataFrame = {
-    // one collect job (bounded by localEdgeLimit at the call site) —
-    // toLocalIterator would schedule a job per partition instead
-    val rows = edges.collect()
+      spark: SparkSession, rows: Array[Row]): DataFrame = {
     val maxNodes = 2 * rows.length + 1
     var cap = 16
     while (cap < maxNodes * 2) cap <<= 1 // load factor <= 0.5
@@ -590,7 +611,9 @@ object Dedup {
     * machinery — candidate generation and clustering move only (id,
     * hash)/(id, label) rows, and the full-width corpus appears exactly
     * twice, both times scanned: once feeding the shingle explode, once
-    * as the left side of the final anti-join. The dropped-id set is NOT
+    * as the left side of the final anti-join ([[connectedComponents]]
+    * persists the pairs, so its loop fallback does not re-run the
+    * shingle pipeline). The dropped-id set is NOT
     * broadcast by construction: on a dup-heavy crawl it approaches
     * corpus size, so the anti-join hash-partitions both sides on id
     * (AQE demotes it to broadcast when it measures small).

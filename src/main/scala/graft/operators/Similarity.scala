@@ -17,9 +17,12 @@ import graft.functions.VectorFns
   *    on the corpus side until the final per-query top-k (which moves
   *    only k·|queries| rows). This is the right plan even at 100 TB as
   *    long as |queries| is bounded.
-  *  - [[lshTopK]] — random-hyperplane LSH bucketing for query sets too
-  *    large to broadcast-cross: both sides are hashed to sign-pattern
-  *    buckets and only bucket-collisions are scored.
+  *  - [[lshTopK]] (top-k) and [[bandedCosinePairs]] (pairs over a
+  *    threshold) — axis-sign band LSH for query sets too large to
+  *    broadcast-cross: every vector is filed under one sign-pattern
+  *    bucket per band and only bucket-collisions are scored, inside
+  *    the bucket. The vectors ride the one bucket shuffle; no join
+  *    brings them back for the rescore.
   */
 object Similarity {
 
@@ -85,12 +88,12 @@ object Similarity {
     * axis-aligned hyperplanes on md5-chosen dimensions ([[planeDim]]).
     * A vector pair is a candidate if it collides in ANY band (union),
     * which recovers the recall a single AND-only pattern of b·r planes
-    * throws away, while each band still bounds its candidate join by
-    * bucket. Hot buckets (skew) are dropped by `maxBucketFreq` — the
-    * count window partitions on the same (band, bkey) key the self-join
-    * shuffles on, so the cap rides the join's own exchange. Candidates
-    * are distinct-ed on the id pair before the exact rescore so a pair
-    * colliding in several bands is scored once.
+    * throws away, while each band still bounds its candidates by
+    * bucket. Candidates are scored inside their bucket
+    * ([[bucketPairs]]); buckets above `maxBucketFreq` members (skew)
+    * are dropped. A pair colliding in several bands is kept once, and
+    * one exchange on `query_id` serves both that dedup and the top-k
+    * window, so the plan has no join and two shuffles.
     *
     * Axis-aligned planes (sign tests on stored components) instead of
     * random float hyperplanes make candidate generation INTEGER-ONLY:
@@ -102,41 +105,26 @@ object Similarity {
     * mining). Classic Charikar random-projection LSH trades this
     * reproducibility for rotation-invariance; for normalized embedding
     * corpora the axis-sign family has equivalent collision behavior.
+    *
+    * Ids are expected unique. A repeated id is not joined back to
+    * every vector filed under it: a pair scores the vectors that
+    * collided, and when one (query, neighbor) pair collides through
+    * several vectors the highest score is kept. NULL ids never pair;
+    * a zero vector scores NULL and ranks after every scored neighbor.
     * @return (query_id, neighbor_id, cosine, rank) — approximate */
   def lshTopK(
       df: DataFrame, idCol: String, vecCol: String,
       dims: Int, planesPerBand: Int, k: Int,
       bands: Int = 4, maxBucketFreq: Int = 200, roundTo: Int = 4): DataFrame = {
     val planeDims = bandPlaneDims(bands, planesPerBand, dims)
-    val bandKeys = (0 until bands).map { b =>
-      val key = (0 until planesPerBand).map { j =>
-        val d = planeDims(b)(j)
-        when(element_at(col(vecCol), d + 1) >= 0, lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }
-    // short-vector exclusion, same rationale as [[bandedCosinePairs]]:
-    // ANSI element_at past the end throws; non-ANSI would collapse keys
-    val bucketed = df
-      .where(size(col(vecCol)) >= dims)
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
-      .select(col(idCol), col("bk.band"), col("bk.bkey"))
-      .withColumn("f", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      .where(col("f") <= maxBucketFreq)
-      .drop("f")
-    val a = bucketed.select(col("band"), col("bkey"), col(idCol).as("query_id"))
-    val b = bucketed.select(col("band"), col("bkey"), col(idCol).as("neighbor_id"))
-    val cand = a.join(b, Seq("band", "bkey"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    val qv = df.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cv = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = cand.join(qv, Seq("query_id")).join(cv, Seq("neighbor_id"))
-      .withColumn("cosine", round(VectorFns.cosine(col("qv"), col("cv")), roundTo))
+    val bandKeys = (0 until bands).map(b => signKey(b, vecCol, planeDims(b)))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("cosine"), asc("neighbor_id"))
-    scored
+    bucketPairs(df, idCol, vecCol, dims, bandKeys, maxBucketFreq, roundTo)(_ =!= _)
+      .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"), col("cosine"))
+      .repartition(col("query_id"))
+      .groupBy(col("query_id"), col("neighbor_id"))
+      .agg(max(col("cosine")).as("cosine"))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
@@ -153,49 +141,79 @@ object Similarity {
     * DuckDB oracle twin reproduces the candidate set bit-exactly, and
     * the rescore reuses the rounded-cosine policy of [[cosinePairs]].
     *
-    * At 100 TB: the bucket joins move (band, key, id) triples — never
-    * the vectors; vectors are joined back only for the |candidates|
-    * rescore rows. Recall depends on the threshold: sign agreement per
-    * component is 1 − θ/π, so high-similarity pairs (θ small) collide
-    * with high probability while random pairs almost never do.
+    * Candidates are scored inside their bucket ([[bucketPairs]]), so
+    * the vectors ride the one bucket shuffle instead of being joined
+    * back per candidate; the threshold applies before the pair dedup,
+    * so only passing pairs reach its exchange. Recall depends on the
+    * threshold: sign agreement per component is 1 − θ/π, so
+    * high-similarity pairs (θ small) collide with high probability
+    * while random pairs almost never do. Same repeated-id contract as
+    * [[lshTopK]].
     * @return (id_a, id_b, cosine) with id_a < id_b, cosine ≥ threshold */
   def bandedCosinePairs(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bands: Int = 8, bitsPerBand: Int = 8,
       maxBandFreq: Int = 200, roundTo: Int = 4): DataFrame = {
     val bandKeys = (0 until bands).map { b =>
-      val key = (0 until bitsPerBand).map { j =>
-        when(element_at(col(vecCol), b * bitsPerBand + j + 1) >= 0, lit(1L << j))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), key.as("bkey"))
+      signKey(b, vecCol, (0 until bitsPerBand).map(b * bitsPerBand + _))
     }
-    // Vectors shorter than bands·bitsPerBand cannot be sign-keyed:
-    // under ANSI (Spark 4 default) element_at past the end THROWS, and
-    // with ANSI off the missing dims would silently read as negative
-    // signs, collapsing band keys. Excluding them is explicit: a short
-    // vector generates no candidates through this index (use a config
-    // with bands·bitsPerBand ≤ dims to cover the whole corpus).
-    val bucketed = df
-      .where(size(col(vecCol)) >= bands * bitsPerBand)
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
-      .select(col(idCol), col("bk.band"), col("bk.bkey"))
-      .withColumn("f", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      .where(col("f") <= maxBandFreq)
-      .drop("f")
-    val a = bucketed.select(col("band"), col("bkey"), col(idCol).as("id_a"))
-    val b = bucketed.select(col("band"), col("bkey"), col(idCol).as("id_b"))
-    val cand = a.join(b, Seq("band", "bkey"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    val va = df.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-    val vb = df.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
-    cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .withColumn("cosine", round(VectorFns.cosine(col("va"), col("vb")), roundTo))
+    bucketPairs(df, idCol, vecCol, bands * bitsPerBand, bandKeys, maxBandFreq, roundTo)(_ < _)
       .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(max(col("cosine")).as("cosine"))
   }
+
+  /** Band `b`'s bucket as a `(band, bkey)` struct: bit j of `bkey` is
+    * set when the (0-based) component `dims(j)` is >= 0. */
+  private def signKey(b: Int, vecCol: String, dims: Seq[Int]): Column = {
+    val key = dims.zipWithIndex.map { case (d, j) =>
+      when(element_at(col(vecCol), d + 1) >= 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    struct(lit(b).as("band"), key.as("bkey"))
+  }
+
+  /** Bucket-local candidate scoring for the sign-band operators: each
+    * vector is filed under its `bandKeys` (one `(band, bkey)` struct
+    * per band), buckets over `cap` members are dropped, each remaining
+    * bucket becomes ONE row carrying its members' `(id, vector)`
+    * structs, and the member pairs that `keep(a.id, b.id)` admits are
+    * exploded in place and scored with the native cosine, rounded to
+    * `roundTo` decimals.
+    *
+    * One shuffle, no join: the vectors move with their bucket instead
+    * of (band, bkey, id) triples moving first and two vectors being
+    * joined onto every candidate afterwards. The shuffle therefore
+    * carries bands × the keyed vectors' bytes (more bytes than the
+    * triples on a small corpus, in fewer stages), against two vectors
+    * per candidate row for the join. The cap is a window count on the
+    * bucket key, so it rides that same exchange and its row buffer can
+    * spill: a hot bucket (every all-zero vector, and every vector of a
+    * non-negative corpus, keys to all ones in every band) is dropped
+    * before any array is built, and no collected bucket exceeds `cap`
+    * members.
+    *
+    * Vectors shorter than `minDims` cannot be sign-keyed: under ANSI
+    * (Spark 4 default) `element_at` past the end THROWS, and with ANSI
+    * off the missing dims would silently read as negative signs,
+    * collapsing band keys. Excluding them is explicit: a short (or
+    * NULL) vector generates no candidates through this index.
+    * @return (id_a, id_b, cosine), one row per bucket collision */
+  private def bucketPairs(
+      df: DataFrame, idCol: String, vecCol: String, minDims: Int,
+      bandKeys: Seq[Column], cap: Int, roundTo: Int)(
+      keep: (Column, Column) => Column): DataFrame =
+    df.where(size(col(vecCol)) >= minDims)
+      .select(explode(array(bandKeys: _*)).as("bk"),
+        struct(col(idCol).as("id"), col(vecCol).as("v")).as("m"))
+      .withColumn("f", count(lit(1)).over(Window.partitionBy(col("bk"))))
+      .where(col("f") <= cap)
+      .groupBy(col("bk"))
+      .agg(collect_list(col("m")).as("ms"))
+      .select(col("ms"), explode(col("ms")).as("a"))
+      .select(col("a"), explode(col("ms")).as("b"))
+      .where(keep(col("a.id"), col("b.id")))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        round(VectorFns.cosine(col("a.v"), col("b.v")), roundTo).as("cosine"))
 
   /** Embedding-cosine near-duplicate pairs: all (a, b) with
     * cosine ≥ threshold, a < b. Exact all-pairs scoring — the

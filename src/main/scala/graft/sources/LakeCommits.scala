@@ -1300,21 +1300,29 @@ private[graft] trait LakeCommits { this: Lake.type =>
     // allocate past EVERY committed marker, not just the live one: a
     // defensively-ignored manifest (data dirs lost) still owns its
     // number, and publishing onto it would conflict forever. An
-    // overwrite REPLACES the table — it carries no prior-snapshot
-    // state — so (unlike the pinSlot commits) a freshest-marker
-    // allocation loses nothing to an interleaved commit it supersedes.
+    // overwrite REPLACES the table's rows, so (unlike the pinSlot
+    // commits) taking the slot after the freshest marker loses no rows
+    // to an interleaved commit it supersedes; the state the batch did
+    // take from `pre` (CHECK constraints, row-id and identity marks) is
+    // re-checked against that marker below.
     val lastV = committedVersions(fs, r).maxOption
     val next = lastV.map(_ + 1).getOrElse(0L)
-    // the batch was validated against `pre`'s CHECK constraints; the
-    // new snapshot inherits the live ones, so a constraint a concurrent
-    // commit added since would be declared over rows it never checked
-    if (lastV.exists(v =>
-        tableMeta(fs, r, v).checks.exists(!pre.checks.contains(_)))) {
+    // The batch was validated against `pre`'s CHECK constraints and
+    // took its row-id and identity blocks from `pre`'s marks. A commit
+    // landing since can add a constraint the new snapshot would declare
+    // over rows it never checked, or advance a mark, after which the
+    // two commits share ids ("ids never reuse across history").
+    val raced = lastV.map(tableMeta(fs, r, _)).collect {
+      case m if m.checks.exists(!pre.checks.contains(_)) =>
+        "added a CHECK constraint the batch was not validated against"
+      case m if m.rowId != pre.rowId || m.identity != pre.identity =>
+        "advanced the row-id or identity mark the batch allocated from"
+    }
+    raced.foreach { why =>
       staged.foreach(d => fs.delete(new Path(r, d), true))
       throw new java.util.ConcurrentModificationException(
-        s"overwrite of $root raced a concurrent commit that added a CHECK " +
-          "constraint the batch was not validated against — re-derive " +
-          "against the current table and retry")
+        s"overwrite of $root raced a concurrent commit that $why — " +
+          "re-derive against the current table and retry")
     }
     val (genParts, genCols) =
       effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }

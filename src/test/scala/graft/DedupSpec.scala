@@ -267,10 +267,64 @@ class DedupSpec extends SparkSpec {
     val dist = Dedup.connectedComponents(pairs, localEdgeLimit = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local === dist)
+    // a bound below the pair count falls back to the loop after the
+    // bounded collect overflows
+    val bounded = Dedup.connectedComponents(pairs, localEdgeLimit = 1L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(local === bounded)
     // spot semantics: star+triangle fused through the cross link,
     // labeled by the min member across BOTH
     assert(local(202L) === 100L && local(100L) === 100L)
     assert(local(60L) === 1L)
+  }
+
+  /** SQL executions `body` runs, counted by a listener. */
+  private def executions(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = n.incrementAndGet()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    n.get
+  }
+
+  test("connectedComponents: the driver path runs one execution; over the bound it takes the loop") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
+    var res: org.apache.spark.sql.DataFrame = null
+    def run(p: org.apache.spark.sql.DataFrame, limit: Long): Int =
+      executions { res = Dedup.connectedComponents(p, localEdgeLimit = limit) }
+    def out = res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(run(pairs, 3L) === 1)
+    assert(out === want)
+    assert(run(Seq.empty[(Long, Long)].toDF("id_a", "id_b"), 3L) === 1)
+    assert(out.isEmpty)
+    // 3 pairs over a bound of 1: the collect overflows, the loop runs
+    assert(run(pairs, 1L) > 3)
+    assert(out === want)
+  }
+
+  test("connectedComponents: an overflowing bounded collect hands the loop the pairs it computed") {
+    // every evaluation of the pair plan bumps the accumulator once per
+    // row; nondeterministic so the optimizer neither folds nor copies it
+    val evals = spark.sparkContext.longAccumulator("pairEvals")
+    val tick = udf { (a: Long) => evals.add(1); a }.asNondeterministic()
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
+      .repartition(1)
+      .select(tick(col("id_a")).as("id_a"), col("id_b"))
+    val got = Dedup.connectedComponents(pairs, localEdgeLimit = 1L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    assert(evals.value === 3L)
   }
 
   test("simhashHammingPairs: identical docs pair at distance 0; unrelated docs don't pair") {

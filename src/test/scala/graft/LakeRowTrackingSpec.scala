@@ -291,4 +291,62 @@ class LakeRowTrackingSpec extends SparkSpec {
     // nothing above committed: the table is untouched
     assert(rows(Lake.readCommitted(spark, root)) === Set(Seq(1L, "a")))
   }
+
+  test("an overwrite racing an append refuses instead of reusing the append's row ids or identity keys") {
+    // The overwrite allocates its blocks from the marks of the snapshot
+    // it read first; the gate holds its first batch evaluation (the
+    // allocation count) while an append advances those marks.
+    def race(root: String, batch: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        append: => Unit): Unit = {
+      val gated = batch(spark.range(7L, 8L, 1L, 1).toDF()
+        .where(udf((k: Long) => OverwriteGate.pass(k)).apply(col("id"))))
+      OverwriteGate.arm()
+      val overwrite = scala.concurrent.Future(Lake.commitOverwrite(gated, root, retain = 8))(
+        scala.concurrent.ExecutionContext.global)
+      try {
+        assert(OverwriteGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        append
+      } finally OverwriteGate.release.countDown()
+      val e = intercept[java.util.ConcurrentModificationException] {
+        scala.concurrent.Await.result(overwrite, scala.concurrent.duration.Duration(120, "s"))
+      }
+      assert(e.getMessage.contains("row-id or identity mark"))
+      assert(Lake.currentVersion(spark, root) === Some(1L))
+      // the refused overwrite leaves no staged dir behind: the data
+      // dirs are the establishing commit's and the append's
+      assert(new java.io.File(root).list().count(n => !n.startsWith("_") &&
+        !n.startsWith(".")) === 2, new java.io.File(root).list().toSeq)
+    }
+    val rid = tmpTable("graft-rid-race-overwrite")
+    Lake.commitOverwrite(Seq((1L, "a")).toDF("k", "t"), rid,
+      retain = 8, rowTracking = true)
+    race(rid, _.select(col("id").as("k"), lit("o").as("t")),
+      Lake.commitAppend(Seq((2L, "b")).toDF("k", "t"), rid, retain = 8))
+    assert(ridsOf(rid).sorted === Seq(0L, 1L))
+    // the re-run allocates past the append's block
+    Lake.commitOverwrite(Seq((7L, "o")).toDF("k", "t"), rid, retain = 8)
+    assert(ridsOf(rid) === Seq(2L))
+
+    val ids = tmpTable("graft-id-race-overwrite")
+    Lake.commitOverwrite(Seq("a").toDF("t"), ids, retain = 8, identity = Some("id"))
+    race(ids, _.select(lit("o").as("t")),
+      Lake.commitAppend(Seq("b").toDF("t"), ids, retain = 8))
+    assert(Lake.identityColumn(spark, ids) === Some(("id", 3L)))
+  }
+}
+
+/** Holds the first evaluation of a gated batch until the test thread
+  * releases it (a Scala object, so the UDF reaches it without being
+  * serialized with it). */
+private object OverwriteGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def arm(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(k: Long): Boolean = {
+    entered.countDown()
+    release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+  }
 }

@@ -71,6 +71,16 @@ class RobustnessSpec extends SparkSpec {
       k = 4, iters = 2, threshold = 0.9).count() === 0)
   }
 
+  test("connectedComponents: a pair with a NULL end links nothing, on both paths") {
+    val pairs = Seq((Some(1L), Some(2L)), (None, Some(3L)), (Some(3L), Some(4L)))
+      .toDF("id_a", "id_b")
+    for (limit <- Seq(2000000L, 0L)) {
+      val out = Dedup.connectedComponents(pairs, localEdgeLimit = limit)
+        .collect().map(r => (r.get(0), r.get(1))).toSet
+      assert(out === Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L)), s"localEdgeLimit=$limit")
+    }
+  }
+
   test("ranking operators survive empty, single-row, and all-tied input") {
     val empty = Seq.empty[(Long, String, Long)].toDF("id", "g", "score")
     assert(Ranking.rankByScore(empty, Seq.empty, "score", "id", "rank").count() === 0)

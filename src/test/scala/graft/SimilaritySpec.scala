@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.functions.VectorFns
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSpec {
@@ -71,6 +78,162 @@ class SimilaritySpec extends SparkSpec {
     val allPairs = Similarity.cosinePairs(emb, "vec_id", "embedding", threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(banded.subsetOf(allPairs)) // banded candidates never invent pairs
+  }
+
+  /** The join-based sign-band operators that bucket-local scoring
+    * replaced: capped window count, self-join on (band, bkey),
+    * distinct, and two joins bringing the vectors back. */
+  private object JoinBased {
+    def lshTopK(
+        df: DataFrame, idCol: String, vecCol: String,
+        dims: Int, planesPerBand: Int, k: Int,
+        bands: Int = 4, maxBucketFreq: Int = 200, roundTo: Int = 4): DataFrame = {
+      val planeDims = Similarity.bandPlaneDims(bands, planesPerBand, dims)
+      val bandKeys = (0 until bands).map { b =>
+        val key = (0 until planesPerBand).map { j =>
+          val d = planeDims(b)(j)
+          when(element_at(col(vecCol), d + 1) >= 0, lit(1L << j)).otherwise(lit(0L))
+        }.reduce(_ + _)
+        struct(lit(b).as("band"), key.as("bkey"))
+      }
+      val bucketed = df
+        .where(size(col(vecCol)) >= dims)
+        .select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
+        .select(col(idCol), col("bk.band"), col("bk.bkey"))
+        .withColumn("f", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
+        .where(col("f") <= maxBucketFreq)
+        .drop("f")
+      val a = bucketed.select(col("band"), col("bkey"), col(idCol).as("query_id"))
+      val b = bucketed.select(col("band"), col("bkey"), col(idCol).as("neighbor_id"))
+      val cand = a.join(b, Seq("band", "bkey"))
+        .where(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"))
+        .distinct()
+      val qv = df.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      val cv = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+      val scored = cand.join(qv, Seq("query_id")).join(cv, Seq("neighbor_id"))
+        .withColumn("cosine", round(VectorFns.cosine(col("qv"), col("cv")), roundTo))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(desc("cosine"), asc("neighbor_id"))
+      scored
+        .withColumn("rank", row_number().over(w))
+        .where(col("rank") <= k)
+        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    }
+
+    def bandedCosinePairs(
+        df: DataFrame, idCol: String, vecCol: String,
+        threshold: Double, bands: Int = 8, bitsPerBand: Int = 8,
+        maxBandFreq: Int = 200, roundTo: Int = 4): DataFrame = {
+      val bandKeys = (0 until bands).map { b =>
+        val key = (0 until bitsPerBand).map { j =>
+          when(element_at(col(vecCol), b * bitsPerBand + j + 1) >= 0, lit(1L << j))
+            .otherwise(lit(0L))
+        }.reduce(_ + _)
+        struct(lit(b).as("band"), key.as("bkey"))
+      }
+      val bucketed = df
+        .where(size(col(vecCol)) >= bands * bitsPerBand)
+        .select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
+        .select(col(idCol), col("bk.band"), col("bk.bkey"))
+        .withColumn("f", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
+        .where(col("f") <= maxBandFreq)
+        .drop("f")
+      val a = bucketed.select(col("band"), col("bkey"), col(idCol).as("id_a"))
+      val b = bucketed.select(col("band"), col("bkey"), col(idCol).as("id_b"))
+      val cand = a.join(b, Seq("band", "bkey"))
+        .where(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"))
+        .distinct()
+      val va = df.select(col(idCol).as("id_a"), col(vecCol).as("va"))
+      val vb = df.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
+      cand.join(va, Seq("id_a")).join(vb, Seq("id_b"))
+        .withColumn("cosine", round(VectorFns.cosine(col("va"), col("vb")), roundTo))
+        .where(col("cosine") >= threshold)
+        .select(col("id_a"), col("id_b"), col("cosine"))
+    }
+  }
+
+  /** Seeded unique-id 8-dim vectors over the sign-band edge cases:
+    * components on a five-point grid (many cosine ties), exact copies
+    * and scaled copies (cosine-1 ties), all-zero vectors and one with
+    * a NULL component (NULL cosine), and short and NULL vectors (never
+    * keyed). */
+  private lazy val edgeVecs: DataFrame = {
+    val rnd = new scala.util.Random(17)
+    val grid = Seq(-2f, -1f, 0f, 1f, 2f)
+    val base = (1L to 90L).map(i => i -> Seq.fill(8)(grid(rnd.nextInt(grid.size))))
+    val rs: Seq[Row] =
+      base.map { case (i, v) => Row(i, v) } ++
+        base.take(10).map { case (i, v) => Row(1000L + i, v) } ++
+        base.slice(10, 15).map { case (i, v) => Row(2000L + i, v.map(_ * 2f)) } ++
+        (0 until 4).map(j => Row(3000L + j, Seq.fill(8)(0f))) ++
+        Seq(Row(4000L, Seq(1f, null, 1f, 1f, -1f, 1f, 1f, 1f)),
+          Row(5000L, Seq(1f, 1f, 1f)), Row(5001L, null))
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    spark.createDataFrame(spark.sparkContext.parallelize(rs, 3), schema)
+  }
+
+  /** All rows of `df`, duplicates kept, in a fixed order. */
+  private def bag(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq).sortBy(_.mkString(","))
+
+  private def assertBucketLocalMatchesJoinBased(): Unit = {
+    for (cap <- Seq(10, 200); k <- Seq(3, 200)) {
+      val got = bag(Similarity.lshTopK(edgeVecs, "vec_id", "embedding",
+        dims = 8, planesPerBand = 3, k = k, bands = 3, maxBucketFreq = cap))
+      assert(got === bag(JoinBased.lshTopK(edgeVecs, "vec_id", "embedding",
+        dims = 8, planesPerBand = 3, k = k, bands = 3, maxBucketFreq = cap)),
+        s"lshTopK cap=$cap k=$k")
+      assert(got.nonEmpty)
+    }
+    for (cap <- Seq(10, 200); threshold <- Seq(-1.0, 0.5)) {
+      val got = bag(Similarity.bandedCosinePairs(edgeVecs, "vec_id", "embedding",
+        threshold, bands = 2, bitsPerBand = 4, maxBandFreq = cap))
+      assert(got === bag(JoinBased.bandedCosinePairs(edgeVecs, "vec_id", "embedding",
+        threshold, bands = 2, bitsPerBand = 4, maxBandFreq = cap)),
+        s"bandedCosinePairs cap=$cap threshold=$threshold")
+      assert(got.nonEmpty)
+    }
+  }
+
+  test("edge vectors cover the cap, NULL cosines, ties and k above the candidate count") {
+    def topK(cap: Int, k: Int) = Similarity.lshTopK(edgeVecs, "vec_id", "embedding",
+      dims = 8, planesPerBand = 3, k = k, bands = 3, maxBucketFreq = cap).collect().toSeq
+    val all = topK(200, 200)
+    assert(topK(10, 200).size < all.size, "no bucket above the cap")
+    assert(all.exists(_.isNullAt(2)), "no NULL cosine")
+    assert(all.groupBy(r => (r.getLong(0), r.get(2))).values.exists(_.size > 1), "no tie")
+    assert(all.groupBy(_.getLong(0)).values.forall(_.size < 200))
+    // NULL scores rank after every scored neighbor
+    all.groupBy(_.getLong(0)).values.foreach { rs =>
+      val byRank = rs.sortBy(_.getInt(3))
+      assert(byRank.dropWhile(!_.isNullAt(2)).forall(_.isNullAt(2)))
+    }
+    // short and NULL vectors are never keyed
+    assert(!all.exists(r => Set(5000L, 5001L)(r.getLong(0)) || Set(5000L, 5001L)(r.getLong(1))))
+  }
+
+  test("bucket-local lshTopK/bandedCosinePairs equal the join-based form (whole-stage codegen)") {
+    withConfs("spark.sql.codegen.wholeStage" -> "true") { assertBucketLocalMatchesJoinBased() }
+  }
+
+  test("bucket-local lshTopK/bandedCosinePairs equal the join-based form (interpreted)") {
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { assertBucketLocalMatchesJoinBased() }
+  }
+
+  test("lshTopK plans no join and at most two shuffles") {
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val df = Similarity.lshTopK(edgeVecs, "vec_id", "embedding",
+        dims = 8, planesPerBand = 3, k = 3, bands = 3)
+      val qe = df.queryExecution
+      assert(qe.optimizedPlan.collect { case j: Join => j }.isEmpty, qe.optimizedPlan)
+      val plan = qe.executedPlan
+      assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan)
+      assert(plan.collect { case e: ShuffleExchangeLike => e }.size <= 2, plan)
+    }
   }
 
   test("cosinePairs refuses inputs over the maxRows guard (recall-oracle only)") {
