@@ -297,44 +297,19 @@ object Newsmaper {
     * anti-join vs the live snapshot, append only the fresh rows) with
     * the append committed as a NEW SNAPSHOT —
     * [[graft.sources.Lake.commitAppend]] writes O(batch) data, never
-    * rewrites the base, and readers flip atomically. A zero-fresh
+    * rewrites the base, and readers flip atomically. Dedup, anti-join
+    * and staging write run as one execution (on an unpartitioned table
+    * without CHECK constraints, generated columns, identity or row
+    * tracking; see [[graft.sources.Lake.appendAbsent]]): nothing is
+    * cached, no separate count runs, and the appended count is the
+    * staging write's own observed row count (which also becomes the
+    * manifest's row count, so `count(*)` answers from metadata). A zero-fresh
     * batch commits nothing (no snapshot churn); `load ∘ load ≡ load`
-    * holds like the path form. Returns the appended row count. */
-  def loadToCommitted(incoming: DataFrame, root: String): Long = {
-    val spark = incoming.sparkSession
-    val guarded = guardDates(incoming)
-    val hasManifest = graft.sources.Lake.currentVersion(spark, root).isDefined
-    if (!hasManifest) {
-      // a plain-parquet table at `root` (a loadTo target) must not be
-      // silently treated as empty: its keys would re-append and its
-      // rows become invisible to readCommitted. Fail with the
-      // migration path instead.
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-      val rp = new org.apache.hadoop.fs.Path(root)
-      val legacy = fs.exists(rp) && fs.listStatus(rp).exists { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      require(!legacy,
-        s"$root holds a plain parquet table (no manifest); migrate it first — " +
-          "Lake.commitOverwrite(spark.read.parquet(root), root) after moving the " +
-          "files aside — or keep using loadTo for this path")
-    }
-    val existing =
-      if (hasManifest) graft.sources.Lake.readCommitted(spark, root)
-      else guarded.limit(0)
-    val fresh = Dedup.newRows(guarded.dropDuplicates(naturalKey), existing, naturalKey)
-      .persist()
-    try {
-      val appended = fresh.count()
-      // the count is already paid — carry it so the committed table
-      // answers count(*) from the manifest alone
-      if (appended > 0)
-        graft.sources.Lake.commitAppend(fresh, root, rowCount = Some(appended))
-      appended
-    } finally { fresh.unpersist(); () }
-  }
+    * holds like the path form. A plain-parquet table at `root` (a
+    * [[loadTo]] target) is refused with the migration path. Returns
+    * the appended row count. */
+  def loadToCommitted(incoming: DataFrame, root: String): Long =
+    graft.sources.Lake.appendAbsent(guardDates(incoming), naturalKey, root)
 
   /** K3 on a manifest-committed table root: the dedup repair
     * ([[maintenance]]) folded through [[graft.sources.Lake]]'s

@@ -32,12 +32,20 @@ import org.apache.spark.sql.graft.Shim
 private[graft] object ShuffleWidth {
 
   /** Width from the inputs' optimizer byte estimates at ~64 MB per
-    * post-shuffle partition (AQE's own advisory target). An input
-    * whose plan cannot be estimated means no narrowing. */
+    * post-shuffle partition (AQE's own advisory target). Each input
+    * counts what its plan reads: the larger of the root estimate and
+    * the sum of the optimized plan's leaf estimates. The root alone
+    * under-counts a plan that consumes more than it emits — a left
+    * anti or semi join estimates as its left side only, so a small
+    * batch anti-joined against a large snapshot would otherwise plan
+    * the snapshot's whole scan and shuffle at width 1. An input whose
+    * plan cannot be estimated means no narrowing. */
   def bytesWidth(inputs: Seq[DataFrame]): Int =
     bytesWidth(inputs.foldLeft(BigInt(0)) { (acc, df) =>
-      acc + (try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) })
+      acc + (try {
+        val p = df.queryExecution.optimizedPlan
+        p.stats.sizeInBytes.max(p.collectLeaves().map(_.stats.sizeInBytes).sum)
+      } catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) })
     })
 
   /** [[bytesWidth]] of a known byte count (a commit's on-disk bytes). */

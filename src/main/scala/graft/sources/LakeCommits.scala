@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.Shim
-import graft.operators.ShuffleWidth
+import graft.operators.{Dedup, ShuffleWidth}
 
 /** Commit engines: batch staging, the manifest writer (one atomic put-if-absent publish), append/overwrite with their OCC rebase rules, and retention pruning.
   *
@@ -124,10 +124,12 @@ private[graft] trait LakeCommits { this: Lake.type =>
 
   /** Stage a batch under writer-unique dirs: ONE dir when `partCols`
     * is empty, one dir PER distinct partition-value tuple otherwise.
-    * Returns (dirs, their [[DirMeta]] entries) ready for
-    * [[commitManifest]]. `base` is the table state the caller derived
-    * the batch against; the id tree and the optimize-write property
-    * are read from it.
+    * Returns (dirs, their [[DirMeta]] entries, rows staged): the dirs
+    * and entries ready for [[commitManifest]], and the row count the
+    * staging writes observed themselves, summed over the partition
+    * slices (no extra job; an empty bucketed batch counts 0). `base`
+    * is the table state the caller derived the batch against; the id
+    * tree and the optimize-write property are read from it.
     * The distinct-tuple collect is partition-count-sized (metadata
     * scale, like the k-means centroid sync) and capped — a batch with
     * thousands of distinct values wants a coarser partition key.
@@ -155,7 +157,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       maintenance: Boolean = false,
       bucketBy: Option[(Int, Seq[String])] = None,
       colMap: Map[String, String] = Map.empty):
-      (Seq[String], Map[String, DirMeta]) = {
+      (Seq[String], Map[String, DirMeta], Long) = {
     import org.apache.spark.sql.functions.{col, lit}
     // batches arrive under LOGICAL names; files (and therefore every
     // per-dir stat/bloom/part key, and the partCols/effStats/effBloom/
@@ -195,29 +197,25 @@ private[graft] trait LakeCommits { this: Lake.type =>
         s"bucket column '$c' is not in the batch schema " +
           df.columns.mkString("[", ", ", "]")))
     }
-    // Per-dir min/max stats (and the bloom builder's row count) ride
-    // the staging write itself as `observe` metrics — the write job
-    // computes them streaming, so staging a dir costs ONE job instead
-    // of write + stats-agg + bloom-count (measured: the metadata jobs
-    // doubled-to-tripled every lake scenario commit's job count at
-    // bench scale, each a ~60-150 ms fixed-overhead 1-task job). The
+    // Per-dir min/max stats and the row count (the bloom builder's
+    // and the caller's) ride the staging write itself as `observe`
+    // metrics — the write job computes them streaming, so staging a
+    // dir costs ONE job instead of write + stats-agg + count
+    // (measured: the metadata jobs doubled-to-tripled every lake
+    // scenario commit's job count at bench scale, each a ~60-150 ms
+    // fixed-overhead 1-task job). The
     // JSON comes from the SAME statsJsonFromMinMax normalization the
     // read-back path uses, over the same rows the write emits, so the
     // manifest line is byte-identical to the re-read form.
     val statsPresent = effStats.filter(c => resolveField(df.schema, c).isDefined)
-    def stageOne(slice: org.apache.spark.sql.DataFrame): (String, DirMeta) = {
+    def stageOne(slice: org.apache.spark.sql.DataFrame): (String, DirMeta, Long) = {
       val staged = stagedDirName()
       import org.apache.spark.sql.functions.{count => fcount, lit => flit, max => fmax, min => fmin}
-      val wantObs = statsPresent.nonEmpty || effBloom.nonEmpty
       val obs = new org.apache.spark.sql.Observation()
       def observed(d: org.apache.spark.sql.DataFrame) =
-        if (!wantObs) d
-        else {
-          val aggs = fcount(flit(1)).as("__n") +:
-            statsPresent.zipWithIndex.flatMap { case (c, i) =>
-              Seq(fmin(col(c)).as(s"__lo_$i"), fmax(col(c)).as(s"__hi_$i")) }
-          d.observe(obs, aggs.head, aggs.tail: _*)
-        }
+        d.observe(obs, fcount(flit(1)).as("__n"),
+          statsPresent.zipWithIndex.flatMap { case (c, i) =>
+            Seq(fmin(col(c)).as(s"__lo_$i"), fmax(col(c)).as(s"__hi_$i")) }: _*)
       bucketBy match {
         case Some((n, cols)) =>
           // Spark's OWN bucketed writer is the only public path that
@@ -242,24 +240,24 @@ private[graft] trait LakeCommits { this: Lake.type =>
               f.isFile && f.getPath.getName.endsWith(".parquet")))
             return (staged, DirMeta(
               stats = if (effStats.isEmpty) None else Some("{}"),
-              bloom = if (effBloom.isEmpty) None else Some("{}")))
+              bloom = if (effBloom.isEmpty) None else Some("{}")), 0L)
         case None =>
           observed(sized(slice)).write.mode("overwrite")
             .parquet(new Path(r, staged).toString)
       }
-      val metrics: Map[String, Any] = if (wantObs) obs.get else Map.empty
+      val metrics = obs.get
       val stats =
         if (effStats.isEmpty) None
         else if (statsPresent.isEmpty) Some("{}")
         else Some(statsJsonFromMinMax(statsPresent, i =>
           metrics(if (i % 2 == 0) s"__lo_${i / 2}" else s"__hi_${i / 2}")))
-      val nRows = metrics.get("__n").map(_.asInstanceOf[Long])
+      val nRows = metrics("__n").asInstanceOf[Long]
       (staged, DirMeta(stats = stats, bloom =
-        dirBloomJson(spark, new Path(r, staged).toString, effBloom, nRows)))
+        dirBloomJson(spark, new Path(r, staged).toString, effBloom, Some(nRows))), nRows)
     }
     def single(slice: org.apache.spark.sql.DataFrame) = {
-      val (d, m) = stageOne(slice)
-      (Seq(d), Map(d -> m))
+      val (d, m, n) = stageOne(slice)
+      (Seq(d), Map(d -> m), n)
     }
     if (partCols.isEmpty) single(df)
     else {
@@ -323,15 +321,16 @@ private[graft] trait LakeCommits { this: Lake.type =>
           val failure = results.collectFirst { case Left(t) => t }
           if (failure.isDefined) {
             results.foreach {
-              case Right((d, _)) =>
+              case Right((d, _, _)) =>
                 scala.util.Try(fs.delete(new Path(r, d), true)); ()
               case _ => ()
             }
             throw failure.get
           }
-          val staged = results.map(_.toOption.get).zip(tupleJsons)
-            .map { case ((d, m), json) => d -> m.copy(part = Some(json)) }
-          (staged.map(_._1), staged.toMap)
+          val slices = results.map(_.toOption.get)
+          val staged = slices.zip(tupleJsons)
+            .map { case ((d, m, _), json) => d -> m.copy(part = Some(json)) }
+          (staged.map(_._1), staged.toMap, slices.map(_._3).sum)
         }
       } finally { batch.unpersist(); () }
     }
@@ -1294,7 +1293,7 @@ private[graft] trait LakeCommits { this: Lake.type =>
       pre.retired, allocV)
     // data first, completely, under dirs no other writer contests
     // (one per partition-value tuple when the table is partitioned)
-    val (staged, stagedMeta) =
+    val (staged, stagedMeta, _) =
       stageBatch(spark, fs, r, df, pre, effStats, effBloom, effPart,
         bucketBy = effBucket, colMap = newMap)
     // allocate past EVERY committed marker, not just the live one: a
@@ -1369,14 +1368,88 @@ private[graft] trait LakeCommits { this: Lake.type =>
       bucketBy: Option[(Int, Seq[String])] = None,
       generatedColumns: Map[String, String] = Map.empty,
       ingested: Option[Seq[String]] = None,
-      requireBase: Option[Long] = None): Long = {
+      requireBase: Option[Long] = None): Long =
+    appendStaged(df0, root, retain, rowCount, statsCols, bloomCols, op,
+      partitionBy, bucketBy, generatedColumns, ingested, requireBase,
+      countStaged = false)._1
+
+  /** Insert-if-absent append, the lake form of the reference's load
+    * step (`Load.is_in_base`, then append) and the one body behind
+    * [[graft.newsmaper.Newsmaper.loadToCommitted]] and
+    * [[graft.streaming.Streams.dedupAppendSinkCommitted]]: dedup
+    * `batch` within itself on `keys`, anti-join it against the live
+    * snapshot, append what is left. On an unpartitioned table without
+    * CHECK constraints, generated columns, identity or row tracking,
+    * dedup, anti-join, count and staging write run as ONE execution at
+    * the width of both join sides' bytes ([[ShuffleWidth.bytesWidth]]):
+    * nothing is persisted, and the count is the staging write's
+    * observed row count. A partitioned table first collects the
+    * batch's distinct partition tuples ([[stageBatch]]); a table whose
+    * commit reads the batch more than once persists it, so validation
+    * and the write see the same rows. A batch with nothing fresh drops
+    * its staged dir, and the root dirs the staging created, and
+    * commits nothing (no snapshot churn, so `load ∘ load ≡ load`
+    * leaves the version put). A plain-parquet table at `root` (a
+    * path-form sink's target) is refused, not read as empty: its keys
+    * would re-append and its rows vanish from `readCommitted`. Returns
+    * the rows appended. */
+  private[graft] def appendAbsent(batch: org.apache.spark.sql.DataFrame,
+      keys: Seq[String], root: String): Long = {
+    val spark = batch.sparkSession
+    val fs = fsFor(spark, root)
+    val r = new Path(root)
+    val cur = currentVersion(spark, root)
+    // the root and its ancestors that do not exist yet: a first batch
+    // with nothing fresh takes back what its staging write created
+    val absent =
+      if (cur.isDefined) Nil
+      else Iterator.iterate(r)(_.getParent)
+        .takeWhile(p => p != null && !fs.exists(p)).toList
+    if (cur.isEmpty && absent.isEmpty) {
+      val legacy = fs.listStatus(r).exists { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      require(!legacy,
+        s"$root holds a plain parquet table (no manifest); migrate it first — " +
+          "Lake.commitOverwrite(spark.read.parquet(root), root) after moving the " +
+          "files aside — or keep using the path-form sink (Newsmaper.loadTo, " +
+          "Streams.dedupAppendSink) for this path")
+    }
+    val existing = cur.map(readCommittedAt(spark, root, _)).getOrElse(batch.limit(0))
+    val appended = appendStaged(Dedup.newRows(batch.dropDuplicates(keys), existing, keys),
+      root, retain = -1, rowCount = None, statsCols = Nil, bloomCols = Nil,
+      op = "append", partitionBy = Nil, bucketBy = None,
+      generatedColumns = Map.empty, ingested = None, requireBase = None,
+      countStaged = true)._2
+    // deepest first, and only while empty: a concurrent writer's dirs stay
+    if (appended == 0)
+      absent.foreach(p => scala.util.Try(
+        if (fs.exists(p) && fs.listStatus(p).isEmpty) fs.delete(p, false)))
+    appended
+  }
+
+  /** [[commitAppend]]'s engine, returning (version, rows staged).
+    * With `countStaged` the staging writes' observed row count stands
+    * in for `rowCount`: zero drops the staged dirs and commits nothing
+    * (version -1), anything else is counted into the manifest's rows;
+    * a batch the commit reads more than once is persisted for the
+    * commit's length. */
+  private def appendStaged(df0: org.apache.spark.sql.DataFrame, root: String,
+      retain: Int, rowCount: Option[Long],
+      statsCols: Seq[String], bloomCols: Seq[String],
+      op: String, partitionBy: Seq[String],
+      bucketBy: Option[(Int, Seq[String])],
+      generatedColumns: Map[String, String],
+      ingested: Option[Seq[String]],
+      requireBase: Option[Long],
+      countStaged: Boolean): (Long, Long) = {
     require(retain >= -1,
       s"retain must be >= 0 (or -1 = inherit $PropRetain), got $retain")
     require(!op.contains("\n"), "op must be a single manifest line")
     // internal probe/staging jobs plan at the batch estimate's width
     val spark = ShuffleWidth.narrowed(df0.sparkSession,
       ShuffleWidth.bytesWidth(Seq(df0)))
-    val batch = Shim.rebind(spark, df0)
     val fs = fsFor(spark, root)
     val r = new Path(root)
     // ONE root listing serves every pre-staging metadata-inheritance
@@ -1387,316 +1460,340 @@ private[graft] trait LakeCommits { this: Lake.type =>
     val preV: Seq[Long] = committedVersions(fs, r)
     val pre = preV.lastOption.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
     val effGen = effectiveGenParts(r, pre, generatedColumns)
-    val genTzEst =
-      if (generatedColumns.nonEmpty && pre.genAll.isEmpty)
-        Some(spark.sessionState.conf.sessionLocalTimeZone)
-      else None
-    // IDENTITY: a declared table allocates [mark, mark + n) here and
-    // advances the mark in the SAME manifest write; the batch must
-    // omit the column (GENERATED ALWAYS)
-    val effId = pre.identity
-    // SQL `INSERT INTO t (named, cols)` pads every unnamed column
-    // with NULL — an all-NULL identity/generated column therefore
-    // means OMITTED (recompute/allocate, Delta's rule), while any
-    // non-NULL identity value refuses (GENERATED ALWAYS). One probe
-    // job covers all such columns the batch carries.
-    // BY DEFAULT mode (Delta's GENERATED BY DEFAULT AS IDENTITY): a
-    // batch MAY carry the column — explicit values pass through
-    // verbatim, NULL values take the next block, and the mark advances
-    // past both, so the allocator never reuses an explicit key
-    // (uniqueness against explicit values is NOT guaranteed — the
-    // documented BY DEFAULT rule; it exists for migrations seeding
-    // existing SERIAL keys)
-    val idByDefault = effId.isDefined && pre.idMode.contains("bydefault")
-    val dfDropped = dropAllNullSpecials(batch, effGen, effId,
-      establishing = preV.isEmpty)
-    effId.foreach { case (c, _) =>
-      require(idByDefault || !dfDropped.columns.contains(c),
-        s"identity column '$c' is GENERATED ALWAYS — the append batch " +
-          "must omit it (keys allocate atomically at commit); declare " +
-          "the column GENERATED BY DEFAULT to write explicit keys")
-    }
-    val dfIn = dfDropped
-    val idCarried = idByDefault && effId.exists(i => dfIn.columns.contains(i._1))
-    var idStart: Long = effId.map(_._2).getOrElse(0L)
-    // idN = rows the allocator fills; idMaxExplicit bounds the mark
-    // past explicitly-written keys (BY DEFAULT only)
-    val (idN, idMaxExplicit): (Long, Long) =
-      if (effId.isEmpty) (0L, Long.MinValue)
-      else if (idCarried) probeIdentityByDefault(dfIn, effId.get._1)
-      else (dfIn.count(), Long.MinValue)
-    // row tracking: stamp the hidden id block like the identity block
-    // (same allocator protocol, same OCC rebase below)
-    val ridMark0 = pre.rowId
-    if (ridMark0.isDefined) require(!dfIn.columns.contains(RowIdCol),
-      s"'$RowIdCol' is engine-owned under row tracking — the append " +
-        "batch must omit it")
-    var ridStart: Long = ridMark0.getOrElse(0L)
-    val ridN: Long =
-      if (!ridMark0.isDefined) 0L
-      // identity already counted the FULL batch (omitted column); a
-      // BY DEFAULT carried column counted only its NULL rows
-      else if (effId.isDefined && !idCarried) idN
-      else dfIn.count()
-    def withIds(idS: Long, ridS: Long): org.apache.spark.sql.DataFrame = {
-      val base = effId match {
-        case Some((c, _)) if idCarried => fillIdentityNulls(dfIn, c, idS, idN)
-        case Some((c, _)) => materializeIdentity(dfIn, c, idS)
-        case None => dfIn
+    // an insert-if-absent batch is a dedup (which row a key keeps is
+    // arbitrary, and may differ between two evaluations) anti-joined
+    // against the snapshot. Where this commit reads the batch more
+    // than once (the all-NULL special-column probe, the CHECK and
+    // generated-column validation, the identity and row-id counts and
+    // allocation, a rebase's re-stage), it pins ONE evaluation, so
+    // validation and the staging write see the same rows. Otherwise
+    // it stays un-persisted: dedup, anti-join, count and staging
+    // write run as one execution.
+    val pinBatch = countStaged && (pre.checks.nonEmpty || effGen.nonEmpty ||
+      pre.identity.isDefined || pre.rowId.isDefined)
+    val batch = Shim.rebind(spark, df0)
+    if (pinBatch) batch.persist()
+    try {
+      val genTzEst =
+        if (generatedColumns.nonEmpty && pre.genAll.isEmpty)
+          Some(spark.sessionState.conf.sessionLocalTimeZone)
+        else None
+      // IDENTITY: a declared table allocates [mark, mark + n) here and
+      // advances the mark in the SAME manifest write; the batch must
+      // omit the column (GENERATED ALWAYS)
+      val effId = pre.identity
+      // SQL `INSERT INTO t (named, cols)` pads every unnamed column
+      // with NULL — an all-NULL identity/generated column therefore
+      // means OMITTED (recompute/allocate, Delta's rule), while any
+      // non-NULL identity value refuses (GENERATED ALWAYS). One probe
+      // job covers all such columns the batch carries.
+      // BY DEFAULT mode (Delta's GENERATED BY DEFAULT AS IDENTITY): a
+      // batch MAY carry the column — explicit values pass through
+      // verbatim, NULL values take the next block, and the mark advances
+      // past both, so the allocator never reuses an explicit key
+      // (uniqueness against explicit values is NOT guaranteed — the
+      // documented BY DEFAULT rule; it exists for migrations seeding
+      // existing SERIAL keys)
+      val idByDefault = effId.isDefined && pre.idMode.contains("bydefault")
+      val dfDropped = dropAllNullSpecials(batch, effGen, effId,
+        establishing = preV.isEmpty)
+      effId.foreach { case (c, _) =>
+        require(idByDefault || !dfDropped.columns.contains(c),
+          s"identity column '$c' is GENERATED ALWAYS — the append batch " +
+            "must omit it (keys allocate atomically at commit); declare " +
+            "the column GENERATED BY DEFAULT to write explicit keys")
       }
-      val rid =
-        if (ridMark0.isDefined) materializeIdentity(base, RowIdCol, ridS)
-        else base
-      materializeGenerated(rid, effGen)
-    }
-    // committed columns with a CURRENT_DEFAULT that this batch omits
-    // materialize here (before CHECK validation sees the batch) — an
-    // omitting append writes the default physically, never NULL
-    val df = materializeDefaults(pre, withIds(idStart, ridStart))
-    // user column args name LOGICAL columns; property lines are
-    // physical — and a batch adding NEW columns allocates them
-    // physical names that can never collide with a mapped or retired
-    // one (a re-add after rename/drop must not read old bytes)
-    val liveMap = pre.colMap
-    val newMap = allocPhysical(df.schema, liveMap, pre.retired,
-      preV.maxOption.map(_ + 1).getOrElse(0L))
-    val effStats = effectiveStatsCols(pre, colsToPhysical(statsCols, newMap))
-    val effBloom = effectiveBloomCols(pre, colsToPhysical(bloomCols, newMap))
-    // a partitioned table's layout is a TABLE property: appends
-    // inherit it and stage one dir per partition-value tuple
-    val effPart = effectivePartCols(pre, colsToPhysical(partitionBy, newMap))
-    // the bucket layout is a table property too: appends inherit it
-    // and stage through the bucketed writer. A NEW declaration on an
-    // append to an existing UNBUCKETED table refuses: earlier dirs
-    // lack the bucket file naming, so the declared layout would lie
-    // to every bucketed scan — declare bucketBy on the table's first
-    // commit, or re-layout the whole snapshot with commitOverwrite
-    if (bucketBy.isDefined && preV.nonEmpty)
-      require(pre.bucketBy.isDefined,
-        s"an append cannot declare a bucket layout on the existing " +
-          s"unbucketed table at $root — earlier dirs lack bucket file " +
-          "naming; re-layout with commitOverwrite(bucketBy = …)")
-    val effBucket = effectiveBucketBy(r, pre,
-      bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, newMap)) })
-    validateChecks(pre, r, df, "append", effGen)
-    val (genParts, genCols) =
-      effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
-    // O(batch): stats only for the new dirs; reused dirs' lines carry
-    var (staged, stagedMeta) =
-      stageBatch(spark, fs, r, df, pre, effStats, effBloom, effPart,
-        bucketBy = effBucket, colMap = newMap)
-    def dropStaged(): Unit = staged.foreach(d => fs.delete(new Path(r, d), true))
-    afterAppendStage()
-    // the snapshot this append staged against; every retry re-checks
-    // that the commits landing after it were all append-shaped
-    val base = committedVersions(fs, r).maxOption.getOrElse(-1L)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val committed = committedVersions(fs, r)
-      // ledger-carrying commits (COPY INTO) must extend EXACTLY the
-      // snapshot whose ledger they read: any interleaved commit means
-      // the merged `ingested` list may be stale, so refuse loudly and
-      // let the re-run re-read it (idempotence skips the loaded files)
-      requireBase.foreach { b =>
-        if (committed.lastOption != Some(b)) {
-          dropStaged()
-          throw new java.util.ConcurrentModificationException(
-            s"COPY INTO $root raced a concurrent commit past its base " +
-              s"v$b — re-run; files the winner already recorded will " +
-              "be skipped")
+      val dfIn = dfDropped
+      val idCarried = idByDefault && effId.exists(i => dfIn.columns.contains(i._1))
+      var idStart: Long = effId.map(_._2).getOrElse(0L)
+      // idN = rows the allocator fills; idMaxExplicit bounds the mark
+      // past explicitly-written keys (BY DEFAULT only)
+      val (idN, idMaxExplicit): (Long, Long) =
+        if (effId.isEmpty) (0L, Long.MinValue)
+        else if (idCarried) probeIdentityByDefault(dfIn, effId.get._1)
+        else (dfIn.count(), Long.MinValue)
+      // row tracking: stamp the hidden id block like the identity block
+      // (same allocator protocol, same OCC rebase below)
+      val ridMark0 = pre.rowId
+      if (ridMark0.isDefined) require(!dfIn.columns.contains(RowIdCol),
+        s"'$RowIdCol' is engine-owned under row tracking — the append " +
+          "batch must omit it")
+      var ridStart: Long = ridMark0.getOrElse(0L)
+      val ridN: Long =
+        if (!ridMark0.isDefined) 0L
+        // identity already counted the FULL batch (omitted column); a
+        // BY DEFAULT carried column counted only its NULL rows
+        else if (effId.isDefined && !idCarried) idN
+        else dfIn.count()
+      def withIds(idS: Long, ridS: Long): org.apache.spark.sql.DataFrame = {
+        val base = effId match {
+          case Some((c, _)) if idCarried => fillIdentityNulls(dfIn, c, idS, idN)
+          case Some((c, _)) => materializeIdentity(dfIn, c, idS)
+          case None => dfIn
         }
+        val rid =
+          if (ridMark0.isDefined) materializeIdentity(base, RowIdCol, ridS)
+          else base
+        materializeGenerated(rid, effGen)
       }
-      if (base >= 0 && !committed.contains(base)) {
+      // committed columns with a CURRENT_DEFAULT that this batch omits
+      // materialize here (before CHECK validation sees the batch) — an
+      // omitting append writes the default physically, never NULL
+      val df = materializeDefaults(pre, withIds(idStart, ridStart))
+      // user column args name LOGICAL columns; property lines are
+      // physical — and a batch adding NEW columns allocates them
+      // physical names that can never collide with a mapped or retired
+      // one (a re-add after rename/drop must not read old bytes)
+      val liveMap = pre.colMap
+      val newMap = allocPhysical(df.schema, liveMap, pre.retired,
+        preV.maxOption.map(_ + 1).getOrElse(0L))
+      val effStats = effectiveStatsCols(pre, colsToPhysical(statsCols, newMap))
+      val effBloom = effectiveBloomCols(pre, colsToPhysical(bloomCols, newMap))
+      // a partitioned table's layout is a TABLE property: appends
+      // inherit it and stage one dir per partition-value tuple
+      val effPart = effectivePartCols(pre, colsToPhysical(partitionBy, newMap))
+      // the bucket layout is a table property too: appends inherit it
+      // and stage through the bucketed writer. A NEW declaration on an
+      // append to an existing UNBUCKETED table refuses: earlier dirs
+      // lack the bucket file naming, so the declared layout would lie
+      // to every bucketed scan — declare bucketBy on the table's first
+      // commit, or re-layout the whole snapshot with commitOverwrite
+      if (bucketBy.isDefined && preV.nonEmpty)
+        require(pre.bucketBy.isDefined,
+          s"an append cannot declare a bucket layout on the existing " +
+            s"unbucketed table at $root — earlier dirs lack bucket file " +
+            "naming; re-layout with commitOverwrite(bucketBy = …)")
+      val effBucket = effectiveBucketBy(r, pre,
+        bucketBy.map { case (n, cs) => (n, colsToPhysical(cs, newMap)) })
+      validateChecks(pre, r, df, "append", effGen)
+      val (genParts, genCols) =
+        effGen.partition { case (c, _) => effPart.contains(physName(newMap, c)) }
+      // O(batch): stats only for the new dirs; reused dirs' lines carry
+      var (staged, stagedMeta, stagedRows) =
+        stageBatch(spark, fs, r, df, pre, effStats, effBloom, effPart,
+          bucketBy = effBucket, colMap = newMap)
+      def dropStaged(): Unit = staged.foreach(d => fs.delete(new Path(r, d), true))
+      if (countStaged && stagedRows == 0) {
         dropStaged()
-        throw new java.util.ConcurrentModificationException(
-          s"append to $root: the base version $base this append staged " +
-            "against was retention-pruned during the commit race — the " +
-            "append-only interleaving cannot be proven; re-derive and retry " +
-            "(or commit with a larger `retain`)")
+        return (-1L, 0L)
       }
-      // rebase validation: every commit that landed since `base` must
-      // itself be append-shaped (dirs only added) for a blind rebase
-      // to be sound. A concurrent winner's pruneRetention can delete a
-      // manifest between the committedVersions listing above and these
-      // per-version reads (TOCTOU) — that race IS the retention-pruned
-      // case, so it gets the same refusal, not a raw FileNotFound.
-      try {
-        (base +: committed.filter(_ > base)).filter(_ >= 0)
-          .sliding(2).foreach {
-            case Seq(a, b) =>
-              val removed = manifestDirs(fs, r, a).toSet -- manifestDirs(fs, r, b)
-              // a ROW-PRESERVING layout commit (compaction / z-order /
-              // REORG purge) removes dirs without changing contents:
-              // the snapshot this batch was derived against is
-              // semantically intact, so the blind rebase stays sound —
-              // appends compose with the standing OPTIMIZE cadence
-              // (Delta's rule) instead of failing for it. Anything
-              // else that removed dirs (overwrite/merge/delete/
-              // restore) changed ROWS this append may have derived
-              // from: refuse.
-              lazy val rowPreserving = tableMeta(fs, r, b).op.exists(o =>
-                o.startsWith("compact") || o.startsWith("zorder") ||
-                  o.startsWith("reorg"))
-              if (removed.nonEmpty && !rowPreserving) {
-                dropStaged()
-                throw new java.util.ConcurrentModificationException(
-                  s"append to $root: concurrent commit v$b removed dirs " +
-                    s"${removed.toSeq.sorted.mkString(", ")} " +
-                    "(overwrite/merge/delete/restore) while this append " +
-                    "was staging — a blind-append rebase is only sound " +
-                    "across appends and row-preserving maintenance; " +
-                    "re-derive the batch against the current snapshot " +
-                    "and retry")
-              }
-            case _ => // single element: nothing landed since base
+      afterAppendStage()
+      // the snapshot this append staged against; every retry re-checks
+      // that the commits landing after it were all append-shaped. The
+      // first attempt reuses this listing: a commit landing after it
+      // takes the slot this attempt publishes to, and the next attempt
+      // re-lists and validates it.
+      var committed = committedVersions(fs, r)
+      val base = committed.maxOption.getOrElse(-1L)
+      var attempt = 0
+      while (true) {
+        attempt += 1
+        if (attempt > 1) committed = committedVersions(fs, r)
+        // ledger-carrying commits (COPY INTO) must extend EXACTLY the
+        // snapshot whose ledger they read: any interleaved commit means
+        // the merged `ingested` list may be stale, so refuse loudly and
+        // let the re-run re-read it (idempotence skips the loaded files)
+        requireBase.foreach { b =>
+          if (committed.lastOption != Some(b)) {
+            dropStaged()
+            throw new java.util.ConcurrentModificationException(
+              s"COPY INTO $root raced a concurrent commit past its base " +
+                s"v$b — re-run; files the winner already recorded will " +
+                "be skipped")
           }
-      } catch {
-        case _: java.io.FileNotFoundException =>
+        }
+        if (base >= 0 && !committed.contains(base)) {
           dropStaged()
           throw new java.util.ConcurrentModificationException(
-            s"append to $root: a manifest in the rebase window was " +
-              "retention-pruned by a concurrent commit mid-validation — " +
-              "the append-only interleaving cannot be proven; re-derive " +
-              "and retry (or commit with a larger `retain`)")
-      }
-      val cur = committed.lastOption
-      // column-map rebase: this batch's file names froze under the map
-      // read at staging time. A concurrent append that merely ADDED
-      // entries merges; a concurrent rename/drop that moved a name
-      // this batch staged under — or retired/claimed a physical name
-      // this batch allocated — refuses (the staged bytes would lie).
-      val curMeta = cur.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
-      val curMap = curMeta.colMap
-      val curRetired = curMeta.retired
-      val ourNew = newMap -- liveMap.keys
-      val mergedMap = curMap ++ ourNew
-      // every staged column's PHYSICAL name — including identity-
-      // mapped ones — must still be OURS under the concurrent
-      // snapshot: a first-ever rename of an identity column claims
-      // our physical name for a DIFFERENT logical column (mergeSchemas
-      // would re-add the old logical name over the same bytes), and a
-      // first-ever drop retires it (a commit would resurrect the
-      // dropped column's bytes). Both were invisible to the ourNew
-      // checks alone because identity names never appear in the map.
-      val stagedPhys = df.columns.toSeq.map(c => c -> physName(newMap, c))
-      if (df.columns.exists(c => physName(mergedMap, c) != physName(newMap, c)) ||
-          stagedPhys.exists { case (_, pc) => curRetired.contains(pc) } ||
-          stagedPhys.exists { case (lc, pc) =>
-            curMap.exists { case (clc, cpc) => cpc == pc && clc != lc } } ||
-          ourNew.exists { case (lc, pc) => curMap.get(lc).exists(_ != pc) } ||
-          ourNew.values.toSet.intersect(
-            (curMap -- newMap.keys).values.toSet).nonEmpty) {
-        dropStaged()
-        throw new java.util.ConcurrentModificationException(
-          s"append to $root: a concurrent commit changed the column " +
-            "mapping while this append was staging — re-derive the batch " +
-            "against the current table and retry")
-      }
-      // IDENTITY rebase: a concurrent allocator advanced the mark
-      // past the block this batch staged under — the staged ids would
-      // collide, so RE-STAGE the same rows under the new block (only
-      // the key column moves; this is what makes concurrent appends
-      // to an identity table allocate disjoint ranges instead of
-      // refusing)
-      val curMark = curMeta.identity.map(_._2)
-      val curRidMark = curMeta.rowId
-      // allocator PRESENCE must match what this append staged under:
-      // an enableRowTracking / identity-declaring overwrite (or a
-      // RESTORE dropping either) that lands between this append's
-      // entry reads and `base` is invisible to the removed-dirs check
-      // above, and committing would inherit the live mark while the
-      // staged rows carry no ids (or vice versa) — a silently
-      // half-tracked table whose NULL ids mis-pair in the keyless
-      // change feed. Refuse loudly; the re-run stages under the
-      // current declaration.
-      if (effId.isDefined != curMark.isDefined ||
-          ridMark0.isDefined != curRidMark.isDefined) {
-        dropStaged()
-        throw new java.util.ConcurrentModificationException(
-          s"append to $root: a concurrent commit " +
-            (if (ridMark0.isDefined != curRidMark.isDefined)
-              "changed row tracking" else "changed the identity declaration") +
-            " while this append was staging — the staged rows were " +
-            "built under the previous allocator state; re-run the " +
-            "append against the current table")
-      }
-      // CHECK constraints: the batch was validated against `pre`'s; a
-      // constraint a concurrent commit added since would be declared
-      // over rows it never checked
-      if (curMeta.checks.exists(!pre.checks.contains(_))) {
-        dropStaged()
-        throw new java.util.ConcurrentModificationException(
-          s"append to $root: a concurrent commit added a CHECK constraint " +
-            "while this append was staging — the batch was not validated " +
-            "against it; re-run the append against the current table")
-      }
-      val idMoved = effId.isDefined && curMark.exists(_ != idStart)
-      val ridMoved = ridMark0.isDefined && curRidMark.exists(_ != ridStart)
-      if (idMoved || ridMoved) {
-        dropStaged()
-        if (idMoved) idStart = curMark.get
-        if (ridMoved) ridStart = curRidMark.get
-        val restaged = stageBatch(spark, fs, r,
-          materializeDefaults(curMeta, withIds(idStart, ridStart)), curMeta,
-          effStats, effBloom, effPart, bucketBy = effBucket, colMap = newMap)
-        staged = restaged._1; stagedMeta = restaged._2
-      }
-      // number allocation vs committedVersions (see commitOverwrite);
-      // the snapshot to extend is the LIVE one
-      val next = cur.map(_ + 1).getOrElse(0L)
-      val prevDirs = cur.map(v => manifestDirs(fs, r, v)).getOrElse(Nil)
-      // the committed schema evolves by MERGE (add-nullable-column;
-      // type changes refused — see mergeSchemas). A legacy manifest
-      // without a schema line infers its schema once here, so its
-      // first post-upgrade append migrates the table to
-      // carried-schema reads.
-      val prevSchema = curMeta.schema
-        .orElse(cur.map(v => spark.read.parquet(
-          manifestDirs(fs, r, v).map(d => new Path(r, d).toString): _*).schema))
-      val schema = prevSchema.map(mergeSchemas(_, df.schema)).getOrElse(df.schema)
-      // the appended snapshot's count = previous + batch, when the
-      // caller supplied the batch count AND the chain carried one
-      // (bootstrap: the batch count alone)
-      val rows = rowCount.flatMap { n =>
-        cur match {
-          case Some(_) => curMeta.rows.map(_ + n)
-          case None    => Some(n)
+            s"append to $root: the base version $base this append staged " +
+              "against was retention-pruned during the commit race — the " +
+              "append-only interleaving cannot be proven; re-derive and retry " +
+              "(or commit with a larger `retain`)")
+        }
+        // rebase validation: every commit that landed since `base` must
+        // itself be append-shaped (dirs only added) for a blind rebase
+        // to be sound. A concurrent winner's pruneRetention can delete a
+        // manifest between the committedVersions listing above and these
+        // per-version reads (TOCTOU) — that race IS the retention-pruned
+        // case, so it gets the same refusal, not a raw FileNotFound.
+        try {
+          (base +: committed.filter(_ > base)).filter(_ >= 0)
+            .sliding(2).foreach {
+              case Seq(a, b) =>
+                val removed = manifestDirs(fs, r, a).toSet -- manifestDirs(fs, r, b)
+                // a ROW-PRESERVING layout commit (compaction / z-order /
+                // REORG purge) removes dirs without changing contents:
+                // the snapshot this batch was derived against is
+                // semantically intact, so the blind rebase stays sound —
+                // appends compose with the standing OPTIMIZE cadence
+                // (Delta's rule) instead of failing for it. Anything
+                // else that removed dirs (overwrite/merge/delete/
+                // restore) changed ROWS this append may have derived
+                // from: refuse.
+                lazy val rowPreserving = tableMeta(fs, r, b).op.exists(o =>
+                  o.startsWith("compact") || o.startsWith("zorder") ||
+                    o.startsWith("reorg"))
+                if (removed.nonEmpty && !rowPreserving) {
+                  dropStaged()
+                  throw new java.util.ConcurrentModificationException(
+                    s"append to $root: concurrent commit v$b removed dirs " +
+                      s"${removed.toSeq.sorted.mkString(", ")} " +
+                      "(overwrite/merge/delete/restore) while this append " +
+                      "was staging — a blind-append rebase is only sound " +
+                      "across appends and row-preserving maintenance; " +
+                      "re-derive the batch against the current snapshot " +
+                      "and retry")
+                }
+              case _ => // single element: nothing landed since base
+            }
+        } catch {
+          case _: java.io.FileNotFoundException =>
+            dropStaged()
+            throw new java.util.ConcurrentModificationException(
+              s"append to $root: a manifest in the rebase window was " +
+                "retention-pruned by a concurrent commit mid-validation — " +
+                "the append-only interleaving cannot be proven; re-derive " +
+                "and retry (or commit with a larger `retain`)")
+        }
+        val cur = committed.lastOption
+        // column-map rebase: this batch's file names froze under the map
+        // read at staging time. A concurrent append that merely ADDED
+        // entries merges; a concurrent rename/drop that moved a name
+        // this batch staged under — or retired/claimed a physical name
+        // this batch allocated — refuses (the staged bytes would lie).
+        val curMeta = cur.map(tableMeta(fs, r, _)).getOrElse(TableMeta.empty)
+        val curMap = curMeta.colMap
+        val curRetired = curMeta.retired
+        val ourNew = newMap -- liveMap.keys
+        val mergedMap = curMap ++ ourNew
+        // every staged column's PHYSICAL name — including identity-
+        // mapped ones — must still be OURS under the concurrent
+        // snapshot: a first-ever rename of an identity column claims
+        // our physical name for a DIFFERENT logical column (mergeSchemas
+        // would re-add the old logical name over the same bytes), and a
+        // first-ever drop retires it (a commit would resurrect the
+        // dropped column's bytes). Both were invisible to the ourNew
+        // checks alone because identity names never appear in the map.
+        val stagedPhys = df.columns.toSeq.map(c => c -> physName(newMap, c))
+        if (df.columns.exists(c => physName(mergedMap, c) != physName(newMap, c)) ||
+            stagedPhys.exists { case (_, pc) => curRetired.contains(pc) } ||
+            stagedPhys.exists { case (lc, pc) =>
+              curMap.exists { case (clc, cpc) => cpc == pc && clc != lc } } ||
+            ourNew.exists { case (lc, pc) => curMap.get(lc).exists(_ != pc) } ||
+            ourNew.values.toSet.intersect(
+              (curMap -- newMap.keys).values.toSet).nonEmpty) {
+          dropStaged()
+          throw new java.util.ConcurrentModificationException(
+            s"append to $root: a concurrent commit changed the column " +
+              "mapping while this append was staging — re-derive the batch " +
+              "against the current table and retry")
+        }
+        // IDENTITY rebase: a concurrent allocator advanced the mark
+        // past the block this batch staged under — the staged ids would
+        // collide, so RE-STAGE the same rows under the new block (only
+        // the key column moves; this is what makes concurrent appends
+        // to an identity table allocate disjoint ranges instead of
+        // refusing)
+        val curMark = curMeta.identity.map(_._2)
+        val curRidMark = curMeta.rowId
+        // allocator PRESENCE must match what this append staged under:
+        // an enableRowTracking / identity-declaring overwrite (or a
+        // RESTORE dropping either) that lands between this append's
+        // entry reads and `base` is invisible to the removed-dirs check
+        // above, and committing would inherit the live mark while the
+        // staged rows carry no ids (or vice versa) — a silently
+        // half-tracked table whose NULL ids mis-pair in the keyless
+        // change feed. Refuse loudly; the re-run stages under the
+        // current declaration.
+        if (effId.isDefined != curMark.isDefined ||
+            ridMark0.isDefined != curRidMark.isDefined) {
+          dropStaged()
+          throw new java.util.ConcurrentModificationException(
+            s"append to $root: a concurrent commit " +
+              (if (ridMark0.isDefined != curRidMark.isDefined)
+                "changed row tracking" else "changed the identity declaration") +
+              " while this append was staging — the staged rows were " +
+              "built under the previous allocator state; re-run the " +
+              "append against the current table")
+        }
+        // CHECK constraints: the batch was validated against `pre`'s; a
+        // constraint a concurrent commit added since would be declared
+        // over rows it never checked
+        if (curMeta.checks.exists(!pre.checks.contains(_))) {
+          dropStaged()
+          throw new java.util.ConcurrentModificationException(
+            s"append to $root: a concurrent commit added a CHECK constraint " +
+              "while this append was staging — the batch was not validated " +
+              "against it; re-run the append against the current table")
+        }
+        val idMoved = effId.isDefined && curMark.exists(_ != idStart)
+        val ridMoved = ridMark0.isDefined && curRidMark.exists(_ != ridStart)
+        if (idMoved || ridMoved) {
+          dropStaged()
+          if (idMoved) idStart = curMark.get
+          if (ridMoved) ridStart = curRidMark.get
+          val restaged = stageBatch(spark, fs, r,
+            materializeDefaults(curMeta, withIds(idStart, ridStart)), curMeta,
+            effStats, effBloom, effPart, bucketBy = effBucket, colMap = newMap)
+          staged = restaged._1; stagedMeta = restaged._2; stagedRows = restaged._3
+        }
+        // number allocation vs committedVersions (see commitOverwrite);
+        // the snapshot to extend is the LIVE one
+        val next = cur.map(_ + 1).getOrElse(0L)
+        val prevDirs = cur.map(v => manifestDirs(fs, r, v)).getOrElse(Nil)
+        // the committed schema evolves by MERGE (add-nullable-column;
+        // type changes refused — see mergeSchemas). A legacy manifest
+        // without a schema line infers its schema once here, so its
+        // first post-upgrade append migrates the table to
+        // carried-schema reads.
+        val prevSchema = curMeta.schema
+          .orElse(cur.map(v => spark.read.parquet(
+            manifestDirs(fs, r, v).map(d => new Path(r, d).toString): _*).schema))
+        val schema = prevSchema.map(mergeSchemas(_, df.schema)).getOrElse(df.schema)
+        // the appended snapshot's count = previous + batch, when the
+        // batch count is known (the caller's, or the staged one) AND the
+        // chain carried one (bootstrap: the batch count alone)
+        val batchRows = if (countStaged) Some(stagedRows) else rowCount
+        val rows = batchRows.flatMap { n =>
+          cur match {
+            case Some(_) => curMeta.rows.map(_ + n)
+            case None    => Some(n)
+          }
+        }
+        // an id-mode reconcile conflict (the batch's schema evolution
+        // re-introduces a field a concurrent or earlier commit dropped)
+        // throws before the publish — clean up the staged dirs and
+        // surface it (the remedy is ALTER TABLE ADD COLUMN)
+        def publishOrClean(commit: => Boolean): Boolean =
+          try commit catch {
+            case e: IllegalStateException => dropStaged(); throw e
+          }
+        val idMark = effId.map { case (c, _) =>
+          (c, math.max(idStart + idN, idMaxExplicit + 1L)) }
+        val ridMark = if (ridMark0.isDefined) Some(ridStart + ridN) else None
+        if (publishOrClean(commitManifest(fs, r, next, prevDirs ++ staged, retain, Some(schema),
+            rows, stagedMeta,
+            meta = m => m.declaring(effStats, effBloom, effPart).copy(
+              colMap = mergedMap, genParts = genParts, genCols = genCols,
+              genTz = genTzEst.orElse(m.genTz),
+              identity = idMark.orElse(m.identity),
+              ingested = ingested.getOrElse(m.ingested),
+              rowId = ridMark.orElse(m.rowId)),
+            op = op))) {
+          maybeAutoCompact(spark, fs, r, root)
+          return (next, stagedRows)
+        }
+        // lost the slot: a concurrent writer committed `next` first.
+        // Loop — the next pass validates what landed and rebases.
+        if (attempt >= 100) {
+          dropStaged()
+          throw new java.util.ConcurrentModificationException(
+            s"append to $root lost $attempt consecutive commit races — " +
+              "pathological contention; back off and retry")
         }
       }
-      // an id-mode reconcile conflict (the batch's schema evolution
-      // re-introduces a field a concurrent or earlier commit dropped)
-      // throws before the publish — clean up the staged dirs and
-      // surface it (the remedy is ALTER TABLE ADD COLUMN)
-      def publishOrClean(commit: => Boolean): Boolean =
-        try commit catch {
-          case e: IllegalStateException => dropStaged(); throw e
-        }
-      val idMark = effId.map { case (c, _) =>
-        (c, math.max(idStart + idN, idMaxExplicit + 1L)) }
-      val ridMark = if (ridMark0.isDefined) Some(ridStart + ridN) else None
-      if (publishOrClean(commitManifest(fs, r, next, prevDirs ++ staged, retain, Some(schema),
-          rows, stagedMeta,
-          meta = m => m.declaring(effStats, effBloom, effPart).copy(
-            colMap = mergedMap, genParts = genParts, genCols = genCols,
-            genTz = genTzEst.orElse(m.genTz),
-            identity = idMark.orElse(m.identity),
-            ingested = ingested.getOrElse(m.ingested),
-            rowId = ridMark.orElse(m.rowId)),
-          op = op))) {
-        maybeAutoCompact(spark, fs, r, root)
-        return next
-      }
-      // lost the slot: a concurrent writer committed `next` first.
-      // Loop — the next pass validates what landed and rebases.
-      if (attempt >= 100) {
-        dropStaged()
-        throw new java.util.ConcurrentModificationException(
-          s"append to $root lost $attempt consecutive commit races — " +
-            "pathological contention; back off and retry")
-      }
-    }
-    -1L // unreachable
+      (-1L, 0L) // unreachable
+    } finally if (pinBatch) { batch.unpersist(); () }
   }
 
   /** Distinct PARENT-DIR names behind a probe's `__file` column,

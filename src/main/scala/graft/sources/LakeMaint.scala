@@ -309,7 +309,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     val effStats = curMeta.statsCols
     val effBloom = curMeta.bloomCols
     val effPart = curMeta.partCols
-    val (newDirs, stagedMeta) =
+    val (newDirs, stagedMeta, _) =
       stageBatch(spark, fs, r, base, curMeta, effStats, effBloom, effPart,
         maintenance = true, bucketBy = curMeta.bucketBy,
         colMap = cmap)
@@ -451,7 +451,7 @@ private[graft] trait LakeMaint { this: Lake.type =>
     // table key, not by breaking the layout), so partition pruning
     // survives maintenance instead of degrading to a full scan
     val effPart = curMeta.partCols
-    val (newDirs, stagedMeta) =
+    val (newDirs, stagedMeta, _) =
       stageBatch(narrow, fs, r, df, curMeta, effStats, effBloom, effPart,
         maintenance = true, bucketBy = curMeta.bucketBy,
         colMap = curMeta.colMap)

@@ -166,8 +166,8 @@ private[graft] trait LakeMutations { this: Lake.type =>
           val stageMap = allocPhysical(evolved, curMeta.colMap,
             curMeta.retired, next)
           // a pure-delete batch appends nothing — only vectors commit
-          val (newDirs, stagedMeta) =
-            if (winners.isEmpty) (Nil, Map.empty[String, DirMeta])
+          val (newDirs, stagedMeta, _) =
+            if (winners.isEmpty) (Nil, Map.empty[String, DirMeta], 0L)
             else {
               validateChecks(curMeta, r, winners, "merge")
               stageBatch(narrow, fs, r, winners, curMeta, effStats, effBloom,
@@ -227,7 +227,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       // mapped or retired physical name — allocate like appends do
       val stageMap = allocPhysical(evolved, curMeta.colMap,
         curMeta.retired, next)
-      val (newDirs, stagedMeta) =
+      val (newDirs, stagedMeta, _) =
         stageBatch(narrow, fs, r, rewritten, curMeta, effStats, effBloom, effPart,
           maintenance = true, bucketBy = effBucket,
           colMap = stageMap)
@@ -423,7 +423,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     val effPart = curMeta.partCols
     // staged writer-unique dirs (see mergeCommitted): the slot is
     // claimed by the publish, never by the dir names
-    val (newDirs, stagedMeta) =
+    val (newDirs, stagedMeta, _) =
       if (rewrite.nonEmpty) {
         // DV-aware read: a rewrite MATERIALIZES any existing vector
         // (soft-deleted rows excluded here never reach the new dir)
@@ -449,7 +449,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         preserveMarkers(fs, r, dropped, staged._1)
         staged
       } else // the metadata-only partition drop: no job at all
-        (Nil, Map.empty[String, DirMeta])
+        (Nil, Map.empty[String, DirMeta], 0L)
     if (!commitManifest(fs, r, next, kept ++ newDirs, retain,
         carried, None, stagedMeta, meta = _.declaring(effStats, effBloom),
         op = "delete")) {
@@ -570,7 +570,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
         validateChecks(curMeta, r, copies, "update")
         val effStatsDv = curMeta.statsCols
         val effBloomDv = curMeta.bloomCols
-        val (newDirs, stagedMeta) =
+        val (newDirs, stagedMeta, _) =
           stageBatch(narrow, fs, r, copies, curMeta, effStatsDv, effBloomDv,
             curMeta.partCols,
             bucketBy = curMeta.bucketBy, colMap = cmap)
@@ -605,7 +605,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
     // exact either way
     val effPart = curMeta.partCols
     validateChecks(curMeta, r, updated, "update")
-    val (newDirs, stagedMeta) =
+    val (newDirs, stagedMeta, _) =
       stageBatch(narrow, fs, r, updated, curMeta, effStats, effBloom, effPart,
           maintenance = true, bucketBy = curMeta.bucketBy,
           colMap = cmap)
@@ -840,7 +840,7 @@ private[graft] trait LakeMutations { this: Lake.type =>
       val effPart = curMeta.partCols
       val effBucket = curMeta.bucketBy
       validateChecks(curMeta, r, rewritten, "merge")
-      val (newDirs, stagedMeta) =
+      val (newDirs, stagedMeta, _) =
         stageBatch(narrow, fs, r, rewritten, curMeta, effStats, effBloom,
           effPart, maintenance = true, bucketBy = effBucket,
           colMap = curMeta.colMap)

@@ -366,13 +366,19 @@ object Streams {
     * the anti-join against the live snapshot makes a replayed batch
     * commit nothing. Read the table with `Lake.readCommitted`.
     *
+    * Each micro-batch is one call to the lake's insert-if-absent
+    * append (the body `Newsmaper.loadToCommitted` uses): dedup,
+    * anti-join, count and staging write run as one execution, with
+    * nothing cached, on an unpartitioned table without CHECK
+    * constraints, generated columns, identity or row tracking. A
+    * zero-fresh batch commits nothing.
+    *
     * A plain-parquet table at `root` (a [[dedupAppendSink]] target
-    * being migrated) is REFUSED, not treated as empty — the same
-    * guard as `Newsmaper.loadToCommitted`: silently ignoring it would
-    * re-append its keys into v0 and hide its rows from
-    * `readCommitted`. The check runs in each micro-batch before the
-    * manifest exists (cheap: one listStatus) and fails the query with
-    * the migration instructions.
+    * being migrated) is REFUSED, not treated as empty: silently
+    * ignoring it would re-append its keys into v0 and hide its rows
+    * from `readCommitted`. The check runs in each micro-batch before
+    * the manifest exists (cheap: one listStatus) and fails the query
+    * with the migration instructions.
     * @return the started query; caller manages lifecycle */
   def dedupAppendSinkCommitted(
       incoming: DataFrame, keys: Seq[String], root: String,
@@ -381,34 +387,8 @@ object Streams {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val hasManifest = graft.sources.Lake.currentVersion(spark, root).isDefined
-        if (!hasManifest) {
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-          val rp = new org.apache.hadoop.fs.Path(root)
-          val legacy = fs.exists(rp) && fs.listStatus(rp).exists { f =>
-            val n = f.getPath.getName
-            f.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          require(!legacy,
-            s"$root holds a plain parquet table (no manifest); migrate it first — " +
-              "Lake.commitOverwrite(spark.read.parquet(root), root) after moving the " +
-              "files aside — or keep using dedupAppendSink for this path")
-        }
-        val existing =
-          if (hasManifest)
-            graft.sources.Lake.readCommitted(spark, root)
-          else batch.limit(0)
-        val fresh = graft.operators.Dedup
-          .newRows(batch.dropDuplicates(keys), existing, keys)
-          .persist()
-        try {
-          val n = fresh.count()
-          if (n > 0)
-            graft.sources.Lake.commitAppend(fresh, root, rowCount = Some(n))
-          ()
-        } finally { fresh.unpersist(); () }
+        graft.sources.Lake.appendAbsent(batch, keys, root)
+        ()
       }
       .start()
 

@@ -278,25 +278,6 @@ class DedupSpec extends SparkSpec {
     assert(local(60L) === 1L)
   }
 
-  /** SQL executions `body` runs, counted by a listener. */
-  private def executions(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = n.incrementAndGet()
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try body
-    finally {
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
-    n.get
-  }
-
   test("connectedComponents: the driver path runs one execution; over the bound it takes the loop") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)

@@ -179,6 +179,104 @@ class LakeSpec extends SparkSpec {
     assert(Lake.readCommitted(spark, root).count() === 3L)
   }
 
+  test("loadToCommitted: fresh rows commit in one narrowed, non-adaptive execution") {
+    val root = tmpTable("graft-lake-load-one")
+    val b1 = Seq((1L, 10L, 100L, "t1"), (2L, 11L, 101L, "t2"))
+      .toDF("id", "id_source", "id_date", "title")
+    assert(graft.newsmaper.Newsmaper.loadToCommitted(b1, root) === 2L)
+    val b2 = Seq(
+      (3L, 11L, 101L, "t2"), // key already loaded
+      (4L, 12L, 102L, "t3"),
+      (5L, 12L, 102L, "t3") // intra-batch dup on the natural key
+    ).toDF("id", "id_source", "id_date", "title")
+    var appended = -1L
+    val (plans, failed) =
+      capture { appended = graft.newsmaper.Newsmaper.loadToCommitted(b2, root) }
+    assert(appended === 1L)
+    assert(failed === 0)
+    assert(plans.size === 1, plans.mkString("\n"))
+    assert(!plans.exists(adaptive), plans.head)
+    assert(plans.flatMap(shuffleWidths).forall(_ <= 1), plans.head)
+    // the staged count is the manifest's row count
+    assert(Lake.countCommitted(spark, root) === Some(3L))
+    assert(Lake.readCommitted(spark, root).count() === 3L)
+  }
+
+  test("loadToCommitted: an all-duplicate batch commits nothing and leaves no staged dir") {
+    val root = tmpTable("graft-lake-load-dup")
+    val b = Seq((1L, 10L, 100L, "t1"), (2L, 11L, 101L, "t2"))
+      .toDF("id", "id_source", "id_date", "title")
+    assert(graft.newsmaper.Newsmaper.loadToCommitted(b, root) === 2L)
+    val version = Lake.currentVersion(spark, root)
+    val listing = dirListing(root)
+    val replay = Seq((3L, 10L, 100L, "t1"), (4L, 10L, 100L, "t1"), (5L, 11L, 101L, "t2"))
+      .toDF("id", "id_source", "id_date", "title")
+    assert(graft.newsmaper.Newsmaper.loadToCommitted(replay, root) === 0L)
+    assert(Lake.currentVersion(spark, root) === version)
+    assert(dirListing(root) === listing)
+    // a first batch with nothing fresh on a root that does not exist
+    // yet leaves no root (nor the missing dirs above it) behind
+    val parent = new java.io.File(tmpTable("graft-lake-load-none")).getParentFile
+    val none = new java.io.File(parent, "t/nested/news").toString
+    assert(graft.newsmaper.Newsmaper.loadToCommitted(b.limit(0), none) === 0L)
+    assert(Lake.currentVersion(spark, none) === None)
+    assert(dirListing(parent.toString).isEmpty)
+  }
+
+  test("appendAbsent: a CHECK-constrained table validates and stages the same rows") {
+    val root = tmpTable("graft-lake-absent-check")
+    Lake.commitAppend(Seq((1L, 5L)).toDF("k", "v"), root, rowCount = Some(1L))
+    Lake.addCheckConstraint(spark, root, "v_pos", "v > 0")
+    val version = Lake.currentVersion(spark, root)
+    // key 2 twice: the intra-batch dedup keeps either row, and only
+    // one of them violates the constraint
+    val batch = Seq((2L, 7L), (2L, -1L)).toDF("k", "v")
+    var outcome: scala.util.Try[Long] = null
+    val (plans, failed) = capture {
+      outcome = scala.util.Try(Lake.appendAbsent(batch, Seq("k"), root))
+    }
+    assert(failed === 0)
+    outcome match {
+      case scala.util.Success(n) =>
+        assert(n === 1L)
+        assert(rows(Lake.readCommitted(spark, root)) === Set(Seq(1L, 5L), Seq(2L, 7L)))
+        assert(Lake.countCommitted(spark, root) === Some(2L))
+      case scala.util.Failure(e) =>
+        assert(e.isInstanceOf[IllegalArgumentException], e)
+        assert(e.getMessage.contains("v_pos"), e.getMessage)
+        assert(Lake.currentVersion(spark, root) === version)
+    }
+    // validation and the staging write read ONE evaluation of the
+    // batch: no two executions each run the dedup and snapshot anti-join
+    val joins = plans.count(p => planNodes(p).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]))
+    assert(joins <= 1, plans.mkString("\n"))
+  }
+
+  test("appendAbsent: the staged count is the fresh count on partitioned and bucketed tables") {
+    val part = tmpTable("graft-lake-absent-part")
+    Lake.commitAppend(Seq((1L, "a", 1), (2L, "b", 2)).toDF("k", "t", "p"), part,
+      partitionBy = Seq("p"), rowCount = Some(2L))
+    // fresh keys 3, 4, 5 over three partition tuples; 2 is loaded, 4 repeats
+    val batch = Seq((2L, "b", 2), (3L, "c", 1), (4L, "d", 2), (4L, "d", 2), (5L, "e", 3))
+      .toDF("k", "t", "p")
+    assert(Lake.appendAbsent(batch, Seq("k"), part) === 3L)
+    assert(Lake.readCommitted(spark, part).count() === 5L)
+    assert(Lake.countCommitted(spark, part) === Some(5L))
+    val bucketed = tmpTable("graft-lake-absent-bucket")
+    Lake.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "t"), bucketed,
+      bucketBy = Some((2, Seq("k"))), rowCount = Some(2L))
+    val version = Lake.currentVersion(spark, bucketed)
+    val listing = dirListing(bucketed)
+    assert(Lake.appendAbsent(Seq((2L, "b")).toDF("k", "t"), Seq("k"), bucketed) === 0L)
+    assert(Lake.currentVersion(spark, bucketed) === version)
+    assert(dirListing(bucketed) === listing)
+    assert(Lake.appendAbsent(Seq((2L, "b"), (3L, "c")).toDF("k", "t"), Seq("k"),
+      bucketed) === 1L)
+    assert(Lake.countCommitted(spark, bucketed) ===
+      Some(Lake.readCommitted(spark, bucketed).count()))
+  }
+
   test("loadToCommitted and the path-form loadTo agree batch for batch") {
     val root = tmpTable("graft-lake-parity")
     val path = tmpTable("graft-lake-parity-path") + "/news.parquet"

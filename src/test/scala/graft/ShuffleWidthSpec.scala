@@ -5,11 +5,8 @@ import java.util.concurrent.{CountDownLatch, FutureTask, TimeUnit}
 import graft.operators.{Dedup, Graph, ShuffleWidth}
 import graft.sources.{HadoopLogStore, Lake, LakeLogStore}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** [[ShuffleWidth]]: narrowed jobs plan on a cloned session, so the
   * caller's session never changes — not for a query planned on it
@@ -56,39 +53,6 @@ class ShuffleWidthSpec extends SparkSpec {
       holds.values.foreach(_.release.countDown())
       Lake.logStore = HadoopLogStore
     }
-  }
-
-  /** Every plan node, descending into adaptive plans and query stages
-    * (neither exposes its plan as a child). */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-    case q: QueryStageExec => q +: nodes(q.plan)
-    case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
-  }
-
-  private def shuffleWidths(p: SparkPlan): Seq[Int] =
-    nodes(p).collect { case e: ShuffleExchangeExec => e.numPartitions }
-
-  private def adaptive(p: SparkPlan): Boolean =
-    nodes(p).exists(_.isInstanceOf[AdaptiveSparkPlanExec])
-
-  /** Physical plans of every query `body` runs. A listener registered
-    * on the session reaches its clones too: cloning copies listeners. */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
-    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try body
-    finally {
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
   }
 
   /** Queries on `df` plan as on the caller's session: a groupBy
@@ -157,6 +121,16 @@ class ShuffleWidthSpec extends SparkSpec {
     assert(spark.conf.getAll === before)
     assert(rows(Lake.readCommitted(spark, rootA)) === Set(Seq(0L), Seq(1L), Seq(2L)))
     assert(rows(Lake.readCommitted(spark, rootB)) === Set(Seq(7L)))
+  }
+
+  test("bytesWidth counts what a plan reads: both sides of an anti-join") {
+    val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "t")
+    // planned, never run: the Range estimates 80 GB, while the
+    // anti-join's root estimate is its left side alone
+    val snapshot = spark.range(10000000000L).toDF("id")
+    assert(ShuffleWidth.bytesWidth(Seq(batch.join(snapshot, Seq("id"), "left_anti"))) >=
+      sessionWidth)
+    assert(ShuffleWidth.bytesWidth(Seq(batch)) === 1)
   }
 
   test("plan audit: a KB-sized commit's internal shuffles plan non-adaptive at the computed width") {

@@ -342,10 +342,12 @@ class StreamingSpec extends SparkSpec {
       val afterOverlap = graft.sources.Lake.currentVersion(spark, root)
       assert(graft.sources.Lake.readCommitted(spark, root).count() === 3)
       // a fully-duplicate batch appends nothing AND commits no
-      // snapshot — no churn under replay
+      // snapshot — no churn under replay, and no orphan staged dir
+      val listing = dirListing(root)
       input.addData(Event(3L, ts("2025-01-01 10:02:00"), 2L, "click", 3.0))
       query.processAllAvailable()
       assert(graft.sources.Lake.currentVersion(spark, root) === afterOverlap)
+      assert(dirListing(root) === listing)
       assert(graft.sources.Lake.readCommitted(spark, root)
         .select("event_id").distinct().count() === 3)
     } finally query.stop()
