@@ -144,7 +144,7 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(numHashes <= minhashCoeffs.size, s"at most ${minhashCoeffs.size} hashes")
     val rows = numHashes / bands
-    val signed = graft.sources.Tables.widen(df)
+    val signed = ShuffleWidth.widen(df)
       .where(col(textCol).isNotNull)
       .select(col(idCol), GraftExtensions.minhashSignature(TextFns.normalize(col(textCol)),
         shingleN, minhashCoeffs.take(numHashes), minhashP).as("__sig"))
@@ -294,7 +294,7 @@ object Dedup {
     // every token "votes -1" on the high bits and they silently come out
     // 0, skewing fingerprints and Hamming distances
     require(bits >= 1 && bits <= 32, s"bits must be in [1, 32], got $bits")
-    val toks = graft.sources.Tables.widen(df)
+    val toks = ShuffleWidth.widen(df)
       .select(col(idCol),
         explode_outer(TextFns.tokens(TextFns.normalize(col(textCol)))).as("__tok"))
       .select(col(idCol),
@@ -670,7 +670,7 @@ object Dedup {
     * identically, so even that matches. */
   private def shingleHashes(
       df: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
-    graft.sources.Tables.widen(df)
+    ShuffleWidth.widen(df)
       .select(col(idCol).as("id"),
         TextFns.tokens(TextFns.normalize(col(textCol))).as("__toks"))
       .where(size(col("__toks")) >= shingleN)

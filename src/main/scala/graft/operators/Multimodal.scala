@@ -60,12 +60,10 @@ object Multimodal {
     * Generated in `mapPartitions` like a real blob-store fetch would
     * be; NULL text → NULL payload+mime (nothing to fetch).
     *
-    * The (id, text) rows are repartitioned to full parallelism BEFORE
-    * payload generation: codec/fetch stages are per-row CPU-bound, so
-    * their parallelism must not inherit the scan's byte-based splits
-    * (a small parquet file is one split — which would serialize every
-    * decode downstream). The shuffle moves only pre-payload text rows;
-    * payload bytes still never shuffle. */
+    * Codec/fetch stages are per-row CPU-bound, so the (id, text) rows
+    * are spread to [[ShuffleWidth.cpuWidth]] tasks BEFORE payload
+    * generation. The shuffle moves only pre-payload text rows; payload
+    * bytes never shuffle. */
   def imagesFromDocuments(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val enc = org.apache.spark.sql.Encoders.row(mediaSchema)
     codecParallel(docs.select(col(idCol).cast("long"), col(textCol).cast("string")))
@@ -302,12 +300,12 @@ object Multimodal {
     }(enc)
   }
 
-  /** Spread pre-payload rows across every core before CPU-bound codec
-    * work — see the parallelism note on [[imagesFromDocuments]]. A
-    * round-robin repartition (no key: the rows have no skew to manage,
-    * and hash-partitioning by id would just burn CPU on hashing). */
+  /** Spread pre-payload rows across [[ShuffleWidth.cpuWidth]] tasks
+    * before CPU-bound codec work. A round-robin repartition (no key:
+    * the rows have no skew to manage, and hash-partitioning by id would
+    * just burn CPU on hashing). */
   private def codecParallel(preMedia: DataFrame): DataFrame =
-    preMedia.repartition(preMedia.sparkSession.sparkContext.defaultParallelism)
+    preMedia.repartition(ShuffleWidth.cpuWidth(preMedia))
 
   /** Column-order normalization shared by the partitioned operators —
     * see the schema-less-row note in [[resizePartitioned]]. */

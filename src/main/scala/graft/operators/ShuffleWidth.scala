@@ -1,10 +1,19 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.Shim
 
-/** Scale-adaptive shuffle width for the engine's latency-bound jobs:
-  * the lake commits' internal probes/staging and the iterative loops
+/** Scale-adaptive widths, one policy for two kinds of job.
+  *
+  * CPU-bound stages (scoring, hashing, codecs) run at [[cpuWidth]]:
+  * at least one task per core, however small the input. [[widen]]
+  * spreads a narrow scan before such a stage, and an operator whose
+  * heavy stage sits behind its own exchange gives that exchange the
+  * width explicitly.
+  *
+  * Latency-bound jobs narrow instead: the lake commits' internal
+  * probes/staging and the iterative loops
   * ([[Dedup.connectedComponents]], [[Graph.pageRank]] and kin). At
   * sizes far below one shuffle partition's worth of data, full-width
   * exchanges are dozens of near-empty tasks, and AQE's stage-by-stage
@@ -53,6 +62,64 @@ private[graft] object ShuffleWidth {
     val perPart = BigInt(64L << 20)
     if (bytes < 0) Int.MaxValue
     else ((bytes + perPart - 1) / perPart).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** Width of a CPU-bound stage: `max(defaultParallelism,
+    * min(bytesWidth(df), numShufflePartitions))` — at least one task
+    * per core, and about 64 MB per task beyond that, up to the width
+    * the session would give the stage's exchange anyway. That floor is
+    * the one AQE's own `parallelismFirst` coalescing uses. The cap
+    * matters because estimates are upper bounds that can be far off:
+    * an RDD-backed plan estimates at `spark.sql.defaultSizeInBytes`
+    * (Long.MaxValue), a join at the product of its sides.
+    *
+    * A CPU-bound stage must not inherit a width chosen for bytes. A
+    * small parquet file is one scan split, so a stage fed straight
+    * from it runs in a single task (measured: an N² cosine loop at
+    * sf0.1 took 8.5 s in one task, ~0.6 s spread). Behind an exchange
+    * AQE does the same: with the default 1 MB `minPartitionSize` it
+    * coalesces a 1.6 MB shuffle into one partition. So a CPU-bound
+    * stage sits behind an explicit `repartition(cpuWidth(df), …)`, a
+    * `REPARTITION_BY_NUM` exchange AQE never coalesces. Row placement
+    * is physical only: outputs do not depend on the width. */
+  def cpuWidth(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    math.max(spark.sparkContext.defaultParallelism,
+      math.min(bytesWidth(Seq(df)), spark.sessionState.conf.numShufflePartitions))
+  }
+
+  /** `df`, round-robined to [[cpuWidth]] when its scan would run fewer
+    * tasks: the scan-side half of [[cpuWidth]], for a CPU-heavy
+    * derivation (shingling, hashing, scoring) that would otherwise run
+    * at the scan's split count up to its first exchange. A no-op when
+    * the scan is already wide: at real scale inputs have thousands of
+    * splits and must NOT be shrunk to the local core count.
+    *
+    * Decided from the optimized plan, never from
+    * `df.rdd.getNumPartitions`, which plans the physical query on the
+    * driver per call and bypasses AQE's view of the scan. A scan
+    * reaches `defaultParallelism` splits when it holds at least that
+    * many × `openCostInBytes` bytes (Spark lower-bounds a split by the
+    * open cost), or at least that many files (each small file is its
+    * own split); only an input with neither is round-robined. */
+  def widen(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val target = spark.sparkContext.defaultParallelism
+    val plan = df.queryExecution.optimizedPlan
+    // sessionState.conf exposes the conf as a Long; `spark.conf.get`
+    // returns the display string with a byte-unit suffix ("4194304b")
+    // that .toLong cannot parse.
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    def inputFiles: Int = plan.collectLeaves().map {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => fs.location.inputFiles.length
+        case _ => 0
+      }
+      case _ => 0
+    }.sum
+    if (plan.stats.sizeInBytes < BigInt(target.toLong * openCost) && inputFiles < target)
+      df.repartition(target)
+    else df
   }
 
   /** Width for a loop's working set at ~64k fixed-width rows per

@@ -93,7 +93,10 @@ object Similarity {
     * ([[bucketPairs]]); buckets above `maxBucketFreq` members (skew)
     * are dropped. A pair colliding in several bands is kept once, and
     * one exchange on `query_id` serves both that dedup and the top-k
-    * window, so the plan has no join and two shuffles.
+    * window, so the plan has no join and two shuffles. Both are
+    * explicit-width repartitions at [[ShuffleWidth.cpuWidth]] of the
+    * input: the bucket scoring and the top-k are CPU-bound, and AQE
+    * would coalesce either small shuffle into a single task.
     *
     * Axis-aligned planes (sign tests on stored components) instead of
     * random float hyperplanes make candidate generation INTEGER-ONLY:
@@ -120,9 +123,10 @@ object Similarity {
     val bandKeys = (0 until bands).map(b => signKey(b, vecCol, planeDims(b)))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(desc("cosine"), asc("neighbor_id"))
-    bucketPairs(df, idCol, vecCol, dims, bandKeys, maxBucketFreq, roundTo)(_ =!= _)
+    val width = ShuffleWidth.cpuWidth(df)
+    bucketPairs(df, idCol, vecCol, dims, bandKeys, maxBucketFreq, roundTo, width)(_ =!= _)
       .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"), col("cosine"))
-      .repartition(col("query_id"))
+      .repartition(width, col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
       .withColumn("rank", row_number().over(w))
@@ -144,7 +148,10 @@ object Similarity {
     * Candidates are scored inside their bucket ([[bucketPairs]]), so
     * the vectors ride the one bucket shuffle instead of being joined
     * back per candidate; the threshold applies before the pair dedup,
-    * so only passing pairs reach its exchange. Recall depends on the
+    * so only passing pairs reach its exchange. Both exchanges are
+    * explicit-width repartitions at [[ShuffleWidth.cpuWidth]], as in
+    * [[lshTopK]]: pairs dedup after the `(id_a, id_b)` exchange, with
+    * no map-side partial. Recall depends on the
     * threshold: sign agreement per component is 1 − θ/π, so
     * high-similarity pairs (θ small) collide with high probability
     * while random pairs almost never do. Same repeated-id contract as
@@ -157,8 +164,10 @@ object Similarity {
     val bandKeys = (0 until bands).map { b =>
       signKey(b, vecCol, (0 until bitsPerBand).map(b * bitsPerBand + _))
     }
-    bucketPairs(df, idCol, vecCol, bands * bitsPerBand, bandKeys, maxBandFreq, roundTo)(_ < _)
+    val width = ShuffleWidth.cpuWidth(df)
+    bucketPairs(df, idCol, vecCol, bands * bitsPerBand, bandKeys, maxBandFreq, roundTo, width)(_ < _)
       .where(col("cosine") >= threshold)
+      .repartition(width, col("id_a"), col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("cosine")).as("cosine"))
   }
@@ -180,7 +189,10 @@ object Similarity {
     * exploded in place and scored with the native cosine, rounded to
     * `roundTo` decimals.
     *
-    * One shuffle, no join: the vectors move with their bucket instead
+    * One shuffle, no join: a `(band, bkey)` repartition at `width`
+    * (the caller's [[ShuffleWidth.cpuWidth]]; AQE never coalesces it,
+    * so the scoring runs on every core), and the vectors move with
+    * their bucket instead
     * of (band, bkey, id) triples moving first and two vectors being
     * joined onto every candidate afterwards. The shuffle therefore
     * carries bands × the keyed vectors' bytes (more bytes than the
@@ -200,11 +212,12 @@ object Similarity {
     * @return (id_a, id_b, cosine), one row per bucket collision */
   private def bucketPairs(
       df: DataFrame, idCol: String, vecCol: String, minDims: Int,
-      bandKeys: Seq[Column], cap: Int, roundTo: Int)(
+      bandKeys: Seq[Column], cap: Int, roundTo: Int, width: Int)(
       keep: (Column, Column) => Column): DataFrame =
     df.where(size(col(vecCol)) >= minDims)
       .select(explode(array(bandKeys: _*)).as("bk"),
         struct(col(idCol).as("id"), col(vecCol).as("v")).as("m"))
+      .repartition(width, col("bk"))
       .withColumn("f", count(lit(1)).over(Window.partitionBy(col("bk"))))
       .where(col("f") <= cap)
       .groupBy(col("bk"))
@@ -222,6 +235,8 @@ object Similarity {
     * policy, candidates bounded by sign-band buckets instead of N².
     * The threshold is applied to the ROUNDED score so a sub-1e-4 float
     * difference between engines cannot change the selected pair set.
+    * One side is round-robined to [[ShuffleWidth.cpuWidth]] tasks, so
+    * the quadratic loop runs on every core.
     *
     * `maxRows` is a hard input-size guard: the quadratic baseline is a
     * recall oracle, never a production path, and must not be invokable
@@ -239,15 +254,9 @@ object Similarity {
       s"cosinePairs is the O(N²) recall-oracle baseline and refuses inputs over " +
         s"$maxRows rows (got >= $n); use bandedCosinePairs/semanticDedup — same " +
         "scorer and rounding policy — as the scale path")
-    // The N² scoring streams one side through a broadcast nested-loop
-    // join; a small-file input arrives as ONE scan partition, so
-    // without an explicit round-robin the whole quadratic loop runs in
-    // a single task (measured 8.5 s single-task at sf0.1 vs ~0.6 s
-    // spread). defaultParallelism keeps it scale-adaptive (core count,
-    // not a constant). Pair SET is unchanged — purely physical.
-    val par = df.sparkSession.sparkContext.defaultParallelism
+    // the N² scoring streams this side through a broadcast nested-loop join
     val a = df.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-      .repartition(par)
+      .repartition(ShuffleWidth.cpuWidth(df))
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
     a.join(b, col("id_a") < col("id_b"))
       .withColumn("cosine", round(VectorFns.cosine(col("va"), col("vb")), roundTo))
@@ -568,7 +577,8 @@ object Similarity {
     * against ANY benchmark vector reaches `threshold` (paraphrased
     * eval leakage that exact n-gram overlap misses). The benchmark
     * set broadcasts (eval suites are thousands of rows, never
-    * corpus-scale) and the corpus streams past it map-side — the q50
+    * corpus-scale) and the corpus, round-robined to
+    * [[ShuffleWidth.cpuWidth]] tasks, streams past it — the q50
     * brute-force scoring shape — then one key-grouped max and a
     * filter; the corpus never shuffles its payloads. Cosines round to
     * `roundTo` BEFORE the max/threshold (the q50 cross-engine float
@@ -580,13 +590,9 @@ object Similarity {
       threshold: Double, roundTo: Int = 4): DataFrame = {
     val b = broadcast(bench
       .select(col(vecCol).cast("array<double>").as("__bv")))
-    // round-robin the corpus side before the broadcast cross: a small-
-    // file input is ONE scan partition, which would run the whole
-    // |corpus|·|bench| scoring loop in a single task (same fix as
-    // [[cosinePairs]]; purely physical, the scored set is unchanged)
     val scored = corpus
       .select(col(idCol), col(vecCol).cast("array<double>").as("__cv"))
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+      .repartition(ShuffleWidth.cpuWidth(corpus))
       .join(b)
       .select(col(idCol),
         round(VectorFns.cosine(col("__cv"), col("__bv")), roundTo).as("__cos"))

@@ -4,16 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
+import graft.plans.GraftExtensions
 
 /** Corpus-level text analysis: quality scoring, language ID, token
   * statistics — the LLM-pipeline generalization of the reference's
   * text handling (normalize/tokenize at
   * /root/reference/dags/Transform.py:15-17).
   *
-  * Everything is built-in-function composition (zero UDFs), and the
-  * hot per-token paths run as codegen'd explode + HashAggregate rather
-  * than interpreted array HOFs — shuffles move per-doc counters, never
-  * tokens or document bytes.
+  * Everything is built-in-function composition or a native
+  * expression (zero UDFs). [[quality]] runs one per-document kernel;
+  * the other hot per-token paths run as codegen'd explode +
+  * HashAggregate rather than interpreted array HOFs — shuffles move
+  * per-doc counters, never tokens or document bytes.
   */
 object TextAnalysis {
 
@@ -26,8 +28,18 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist", "ein", "eine", "nicht", "mit", "von"),
     "es" -> Seq("el", "la", "los", "de", "y", "un", "una", "es", "en", "que"))
 
-  /** Quality metrics per document: length, word stats, punctuation and
-    * stopword ratios, and a composite [0,1] score.
+  /** Quality metrics per row: length, word stats, punctuation and
+    * stopword ratios, and a composite [0,1] score. Tokens are
+    * `TextFns.tokens(TextFns.normalize(text))`; NULL text has no
+    * tokens and NULL `n_chars` and `punct_ratio`.
+    *
+    * One projection over the [[graft.plans.QualityStats]] kernel, which
+    * counts a document's characters, punctuation, tokens, token
+    * lengths and stopwords in one pass and scores them: no row per
+    * token, no aggregate, no shuffle, so the output keeps the input's
+    * partitioning. Each row is scored on its own; when ids are unique
+    * (every catalog caller keys on a unique `doc_id`) that equals
+    * pooling the text that shares an id.
     *
     * All rounded ratios use exact integer arithmetic (half-up rational
     * rounding: floor((20000·num + den) / (2·den)) / 10⁴) rather than
@@ -39,81 +51,13 @@ object TextAnalysis {
   def quality(df: DataFrame, idCol: String, textCol: String): DataFrame =
     qualityWith(df, idCol, textCol)
 
-  /** [[quality]], with `carry` — document-row columns, functions of the
-    * row — grouped beside the id and passed through to the output. */
+  /** [[quality]], with `extra` columns of the document row appended. */
   private def qualityWith(
-      df: DataFrame, idCol: String, textCol: String, carry: String*): DataFrame = {
-    // Per-token metrics via explode + HashAggregate, not array HOFs:
-    // the single-projection form computed `toks = tokens(normalize(t))`
-    // and then referenced it from ~6 derived expressions — and
-    // CollapseProject re-inlines the whole split/normalize chain into
-    // EACH reference (the measured-30× mechanism documented at
-    // Dedup.simhashFingerprints), with the summed-length and stopword
-    // counts running as interpreted `aggregate`/`filter` lambdas.
-    //
-    // The doc-level metrics (n_chars, punct count) ride INSIDE the
-    // exploded array on a marker row, not as sibling projection columns:
-    // a column computed beside a Generate is re-evaluated per GENERATED
-    // row, not per input row (measured: carrying the punct-regexp as a
-    // projection column or first()-aggregate costs 2.1s at sf0.1 vs
-    // 0.49s with the marker row — the same re-inlining trap, one
-    // operator further down). Values materialized in the array data are
-    // computed exactly once per document.
-    //
-    // One codegen'd projection builds [marker ++ token structs], the
-    // per-token sums are a codegen'd HashAggregate (map-side partial
-    // combine: the shuffle moves one (id, 5 longs) row per doc, never
-    // tokens), and the aggregate is an optimizer barrier so the final
-    // ratio projection cannot re-inline the tokenizer. The marker also
-    // keeps token-less docs (empty or NULL text): every doc emits ≥1
-    // row, aggregating to nw=sl=ns=0 rather than dropping out. Like
-    // simhashFingerprints, output is one row per distinct id — ids are
-    // expected unique.
-    val t = col(textCol)
-    val toks = TextFns.tokens(TextFns.normalize(t))
-    val marker = struct(
-      lit(null).cast("string").as("tok"),
-      length(t).cast("long").as("nc"),
-      (length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))).cast("long").as("np"))
-    val tokRows = transform(
-      coalesce(toks, array().cast("array<string>")),
-      tok => struct(tok.as("tok"),
-        lit(null).cast("long").as("nc"), lit(null).cast("long").as("np")))
-    val keys = (idCol +: carry).map(col)
-    val agg = df.select(keys :+ explode(concat(array(marker), tokRows)).as("__e"): _*)
-      .select(keys ++ Seq(col("__e.tok").as("__tok"),
-        col("__e.nc").as("__enc"), col("__e.np").as("__enp")): _*)
-      .groupBy(keys: _*)
-      .agg(
-        max(col("__enc")).as("__nc"),
-        max(col("__enp")).as("__np"),
-        sum(when(col("__tok").isNotNull, 1L).otherwise(0L)).as("__nw"),
-        coalesce(sum(length(col("__tok")).cast("long")), lit(0L)).as("__sl"),
-        sum(when(col("__tok").isin(stopwords("en").map(lit): _*), 1L)
-          .otherwise(0L)).as("__ns"))
-    val nw = col("__nw"); val sl = col("__sl"); val nc = col("__nc")
-    val np = col("__np"); val ns = col("__ns")
-    // composite = min(nw,100)/100·0.4 + [3 ≤ sl/nw ≤ 10]·0.3
-    //           + min(3·ns/nw, 1)·0.3  — as one rational N / (500·nw):
-    val wordShaped = sl >= nw * 3 && sl <= nw * 10
-    val scoreNum = nw * least(nw, lit(100L)) * 2 +
-      when(wordShaped, nw * 150).otherwise(lit(0L)) +
-      least(ns * 3, nw) * 150
-    agg.select(Seq(
-      col(idCol),
-      nc.as("n_chars"),
-      nw.as("n_words"),
-      r4(sl, nw).as("mean_word_len"),
-      r4(np, nc).as("punct_ratio"),
-      r4(ns, nw).as("stopword_ratio"),
-      r4(scoreNum, nw * 500).as("quality_score")) ++ carry.map(col): _*)
+      df: DataFrame, idCol: String, textCol: String, extra: Column*): DataFrame = {
+    val q = df.select(Seq(col(idCol),
+      GraftExtensions.qualityStats(col(textCol), stopwords("en")).as("__q")) ++ extra: _*)
+    q.select(Seq(col(idCol), col("__q.*")) ++ q.columns.drop(2).map(col): _*)
   }
-
-  /** round(num/den, 4) half-up, exact: numerators stay < 2^53 so the
-    * single double division is correctly rounded and floor is exact. */
-  private def r4(num: Column, den: Column): Column =
-    when(den === lit(0L), lit(0.0))
-      .otherwise(floor((num * 20000 + den) / (den * 2)).cast("double") / 10000.0)
 
   /** Quality metrics AND keyword-vote label in ONE scan — the corpus
     * gate a preprocessing pipeline runs before anything else. Running
@@ -122,11 +66,8 @@ object TextAnalysis {
     * pays it once.
     *
     * The label is [[Classify.vote]] on the document row (the same
-    * per-row kernel as byKeywords), computed below the explode and
-    * carried through [[quality]]'s explode and per-doc aggregate as a
-    * grouping column — a function of the row, so it adds no group.
-    * The quality sums see each token exactly once, whatever the
-    * dictionary holds.
+    * per-row kernel as byKeywords), evaluated in the same projection as
+    * [[quality]]'s kernel: map-only, one row per input row.
     *
     * Output: [[quality]]'s columns plus `label`; equal to
     * quality ⋈ byKeywords on a unique id (q70's oracle is the proof).
@@ -135,8 +76,7 @@ object TextAnalysis {
       df: DataFrame, idCol: String, textCol: String,
       dict: DataFrame, // columns: word STRING, label STRING
       default: String): DataFrame =
-    qualityWith(df.withColumn("label", Classify.vote(col(textCol), dict, default)),
-      idCol, textCol, "label")
+    qualityWith(df, idCol, textCol, Classify.vote(col(textCol), dict, default).as("label"))
 
   /** Overlapping fixed-size token chunks — the passage-extraction step
     * a retrieval/embedding pipeline runs before encoding (windows of
@@ -172,7 +112,7 @@ object TextAnalysis {
     val lastK = expr(s"(greatest(cast(size(__toks) AS BIGINT) - $chunkTokens, 0)"
       + s" + ${strideTokens - 1}) div $strideTokens")
     val start = (col("__k") * strideTokens + 1).cast("long")
-    graft.sources.Tables.widen(df)
+    ShuffleWidth.widen(df)
       .select(col(idCol), toks.as("__toks"))
       .where(size(col("__toks")) >= 1)
       .select(col(idCol), col("__toks"),
@@ -211,7 +151,7 @@ object TextAnalysis {
     *
     * @return (id, n_tokens, nll_micro, mean_nll) */
   def unigramNll(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = graft.sources.Tables.widen(df)
+    val toks = ShuffleWidth.widen(df)
       .select(col(idCol),
         explode(TextFns.tokens(TextFns.normalize(col(textCol)))).as("__tok"))
     val vocab = toks.groupBy(col("__tok")).agg(count(lit(1)).as("__cnt"))
@@ -258,7 +198,7 @@ object TextAnalysis {
       df: DataFrame, idCol: String, textCol: String,
       lambda: Double = 0.75): DataFrame = {
     require(lambda > 0.0 && lambda < 1.0, s"lambda must be in (0,1): $lambda")
-    val t = graft.sources.Tables.widen(df)
+    val t = ShuffleWidth.widen(df)
       .select(col(idCol),
         TextFns.tokens(TextFns.normalize(col(textCol))).as("__t"))
     val uni = t.select(explode(col("__t")).as("__tok"))
@@ -351,7 +291,7 @@ object TextAnalysis {
     * @return (idCol, max_ngram_cnt, n_ngrams, repetition_ratio) */
   def repetitionRatio(
       df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val grams = graft.sources.Tables.widen(df)
+    val grams = ShuffleWidth.widen(df)
       .select(col(idCol),
         TextFns.tokens(TextFns.normalize(col(textCol))).as("__toks"))
       .where(size(col("__toks")) >= n)
@@ -510,7 +450,7 @@ object TextAnalysis {
     * asc) ranking. Deterministic, oracle = plain row_number SQL.
     * @return (token, cnt, token_id) with token_id dense from 1 */
   def vocabulary(df: DataFrame, textCol: String): DataFrame = {
-    val toks = graft.sources.Tables.widen(df)
+    val toks = ShuffleWidth.widen(df)
       .select(explode(TextFns.tokens(TextFns.normalize(col(textCol)))).as("token"))
     Ranking.rankByScore(
       toks.groupBy(col("token")).agg(count(lit(1)).as("cnt")),
@@ -539,7 +479,7 @@ object TextAnalysis {
       df: DataFrame, idCol: String, textCol: String,
       vocab: DataFrame, // columns: token STRING, token_id LONG
       unkId: Long = -1L): DataFrame = {
-    graft.sources.Tables.widen(df)
+    ShuffleWidth.widen(df)
       .select(col(idCol),
         posexplode(TextFns.tokens(TextFns.normalize(col(textCol))))
           .as(Seq("__p", "token")))
@@ -594,7 +534,7 @@ object TextAnalysis {
   def bpeMerges(df: DataFrame, textCol: String, nMerges: Int,
       localTypeLimit: Int = 200000): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var words = graft.sources.Tables.widen(df)
+    var words = ShuffleWidth.widen(df)
       .select(explode(TextFns.tokens(TextFns.normalize(col(textCol)))).as("token"))
       .where(col("token").rlike("^[a-z0-9]+$"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -789,7 +729,7 @@ object TextAnalysis {
       merges: Seq[(String, String)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val toks = graft.sources.Tables.widen(df)
+    val toks = ShuffleWidth.widen(df)
       .select(col(idCol),
         posexplode(TextFns.tokens(TextFns.normalize(col(textCol))))
           .as(Seq("__p", "token")))
@@ -1127,7 +1067,7 @@ object TextAnalysis {
     require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
     require(minDocFreq >= 2,
       s"minDocFreq must be >= 2 (at 1 every segment is boilerplate), got $minDocFreq")
-    val base = graft.sources.Tables.widen(df)
+    val base = ShuffleWidth.widen(df)
       .select(col(idCol),
         TextFns.tokens(TextFns.normalize(col(textCol))).as("__toks"))
     // size() is -1 for a NULL array (non-ANSI default): fold NULL text
@@ -1198,7 +1138,7 @@ object TextAnalysis {
     val k = denom / num + 1
     val spark = df.sparkSession
     import spark.implicits._
-    val stream = graft.sources.Tables.widen(df)
+    val stream = ShuffleWidth.widen(df)
       .select(TextFns.tokens(TextFns.normalize(col(textCol))).as("__toks"))
       .where(size(col("__toks")) >= n)
       .select(col("__toks"),
@@ -1249,7 +1189,7 @@ object TextAnalysis {
     // checkpointed: `segs` is referenced THREE times below (winner agg,
     // winner join, per-doc counts), and each plan-level reference would
     // re-tokenize the corpus — the semanticDedup lineage discipline
-    val segs = graft.sources.Tables.widen(df.where(col(textCol).isNotNull))
+    val segs = ShuffleWidth.widen(df.where(col(textCol).isNotNull))
       .select(col(idCol).cast("long").as("doc_id"),
         TextFns.tokens(TextFns.normalize(col(textCol))).as("__tk"))
       .where(size(col("__tk")) > 0)

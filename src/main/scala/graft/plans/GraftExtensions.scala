@@ -252,6 +252,10 @@ object GraftExtensions {
     Shim.column(RollingHash(Shim.expression(c)))
   def minhashSignature(c: Column, shingleN: Int, coeffs: Seq[(Long, Long)], modulus: Long): Column =
     Shim.column(MinHashSignature(Shim.expression(c), shingleN, coeffs, modulus))
+  /** [[QualityStats]] of `text`, tokenized as `TextFns.tokens(TextFns.normalize(text))`. */
+  def qualityStats(text: Column, stopwords: Seq[String]): Column =
+    Shim.column(QualityStats(Shim.expression(text),
+      Shim.expression(graft.functions.TextFns.normalize(text)), stopwords))
   def ln(c: Column): Column =
     Shim.column(LibmLn(Shim.expression(c)))
 }

@@ -2,8 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -249,4 +250,179 @@ final class KeywordVoteKernel(entries: Seq[(String, String)], default: String) {
     while (j < nTouched) { counts(touched(j)) = 0; j += 1 }
     if (best < 0 || labels(best) == null) dflt else labels(best)
   }
+}
+
+/** Per-document quality metrics in one pass: `(n_chars, n_words,
+  * mean_word_len, punct_ratio, stopword_ratio, quality_score)`,
+  * exactly as the SQL derivation computes them per row from five
+  * counts —
+  *
+  *  - `nc = length(text)`, `np = length(text) −
+  *    length(regexp_replace(text, '[\p{Punct}]', ''))`, both NULL for
+  *    NULL text;
+  *  - over `tokens = TextFns.tokens(normalized)` (NULL counts as no
+  *    tokens): `nw = size(tokens)`, `sl = Σ length(tok)` and
+  *    `ns = size(filter(tokens, tok IN stopwords))`;
+  *
+  * and the ratios `sl/nw`, `np/nc`, `ns/nw` and the composite score
+  * rounded by [[QualityStatsKernel.r4]].
+  *
+  * `normalized` is `TextFns.normalize(text)`, evaluated by Spark's own
+  * `translate` and `lower`, so case mapping (`İ`, `ß`, `Σ`) is Spark's
+  * by construction. The rest needs no Unicode tables: `\s` in Java's
+  * default regex dialect and `\p{Punct}` are both ASCII-only, and an
+  * ASCII byte never occurs inside a multi-byte UTF-8 sequence. So a
+  * token is a maximal run of bytes outside `[ \t\n\x0B\f\r]` (the
+  * space-only `trim` cannot change the tokens, since the split drops
+  * the empty edges it would have trimmed), lengths count code points
+  * as `length` does, and punctuation is a byte class. The struct is
+  * never NULL. Valid UTF-8 is assumed, as `length` assumes it.
+  *
+  * The kernel scores as well as counts because a filter on a metric is
+  * pushed below the projection that reads the struct, with the
+  * metric's expression substituted in, and a filter does not share
+  * common subexpressions: each struct reference in that expression
+  * becomes one more kernel evaluation per row. Scored here, a filter
+  * on one metric costs one evaluation.
+  */
+case class QualityStats(text: Expression, normalized: Expression, stopwords: Seq[String])
+    extends BinaryExpression {
+  override def left: Expression = text
+  override def right: Expression = normalized
+  override def nullable: Boolean = false
+  override def dataType: DataType = QualityStats.schema
+  override def prettyName: String = "graft_quality_stats"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (text.dataType == StringType && normalized.dataType == StringType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires STRING inputs, got ${text.dataType.simpleString}, " +
+        normalized.dataType.simpleString)
+
+  private def stopBytes: Array[Array[Byte]] = stopwords.map(_.getBytes("UTF-8")).toArray
+
+  // one kernel (reused byte buffer) per deserialized task copy
+  @transient private lazy val kernel = new QualityStatsKernel(stopBytes)
+
+  override def eval(input: InternalRow): Any = kernel.stats(
+    text.eval(input).asInstanceOf[UTF8String], normalized.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = classOf[QualityStatsKernel].getName
+    val words = stopBytes.map(_.mkString("{", ", ", "}")).mkString("new byte[][]{", ", ", "}")
+    // one kernel per generated-class instance, i.e. per task
+    val k = ctx.addMutableState(cls, "qstats", v => s"$v = new $cls($words);")
+    val t = text.genCode(ctx)
+    val n = normalized.genCode(ctx)
+    ev.copy(code = code"""
+      |${t.code}
+      |${n.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = $k.stats(${t.isNull} ? null : ${t.value},
+      |  ${n.isNull} ? null : ${n.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(text = newLeft, normalized = newRight)
+}
+
+object QualityStats {
+  val schema: StructType = StructType(Seq(
+    StructField("n_chars", LongType),
+    StructField("n_words", LongType, nullable = false),
+    StructField("mean_word_len", DoubleType, nullable = false),
+    StructField("punct_ratio", DoubleType),
+    StructField("stopword_ratio", DoubleType, nullable = false),
+    StructField("quality_score", DoubleType, nullable = false)))
+}
+
+/** The loop behind [[QualityStats]], with a reused buffer for the
+  * normalized text's bytes. The only allocation per document is the
+  * result row. */
+final class QualityStatsKernel(stops: Array[Array[Byte]]) {
+  private val maxStop = if (stops.isEmpty) 0 else stops.map(_.length).max
+  private var bytes = new Array[Byte](256)
+
+  def stats(text: UTF8String, normalized: UTF8String): InternalRow = {
+    var nw, sl, ns = 0L
+    if (normalized != null) {
+      val nb = normalized.numBytes
+      if (bytes.length < nb) bytes = new Array[Byte](nb)
+      normalized.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+      var i = 0
+      while (i < nb) {
+        while (i < nb && QualityStatsKernel.isSpace(bytes(i))) i += 1
+        if (i < nb) {
+          val from = i
+          var cps = 0
+          while (i < nb && !QualityStatsKernel.isSpace(bytes(i))) {
+            cps += 1
+            i += UTF8String.numBytesForFirstByte(bytes(i))
+          }
+          i = math.min(i, nb)
+          nw += 1
+          sl += cps
+          if (i - from <= maxStop && isStopword(from, i - from)) ns += 1
+        }
+      }
+    }
+    import QualityStatsKernel.r4
+    // composite = min(nw,100)/100·0.4 + [3 ≤ sl/nw ≤ 10]·0.3
+    //           + min(3·ns/nw, 1)·0.3  — as one rational N / (500·nw):
+    val score = nw * math.min(nw, 100L) * 2 + (if (sl >= nw * 3 && sl <= nw * 10) nw * 150 else 0L) +
+      math.min(ns * 3, nw) * 150
+    val row = new GenericInternalRow(
+      Array[Any](null, nw, r4(sl, nw), null, r4(ns, nw), r4(score, nw * 500)))
+    if (text != null) {
+      val nc = text.numChars.toLong
+      row.update(0, nc)
+      row.update(3, r4(punct(text), nc))
+    }
+    row
+  }
+
+  private def isStopword(from: Int, len: Int): Boolean = {
+    var s = 0
+    while (s < stops.length) {
+      val w = stops(s)
+      if (w.length == len) {
+        var j = 0
+        while (j < len && bytes(from + j) == w(j)) j += 1
+        if (j == len) return true
+      }
+      s += 1
+    }
+    false
+  }
+
+  private def punct(text: UTF8String): Long = {
+    val base = text.getBaseObject
+    val off = text.getBaseOffset
+    var n = 0L
+    var i = 0
+    while (i < text.numBytes) {
+      if (QualityStatsKernel.isPunct(Platform.getByte(base, off + i))) n += 1
+      i += 1
+    }
+    n
+  }
+}
+
+object QualityStatsKernel {
+  /** round(num/den, 4) half-up, exact, as the SQL `floor((num·20000 +
+    * den) / (den·2)) / 10⁴` evaluates it (see `TextAnalysis.quality`
+    * for why not `round`): numerators stay < 2^53, so the one double
+    * division is correctly rounded and floor is exact. 0 for a zero
+    * denominator. */
+  def r4(num: Long, den: Long): Double =
+    if (den == 0) 0.0 else math.floor((num * 20000 + den).toDouble / (den * 2).toDouble).toLong / 10000.0
+
+  /** Java's `\s`: `[ \t\n\x0B\f\r]`. */
+  def isSpace(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+  /** POSIX `\p{Punct}`: the 32 ASCII punctuation characters. */
+  def isPunct(b: Byte): Boolean =
+    (b >= '!' && b <= '/') || (b >= ':' && b <= '@') || (b >= '[' && b <= '`') ||
+      (b >= '{' && b <= '~')
 }

@@ -494,7 +494,7 @@ object Relational {
       // widen: two exact distincts + two HLL sketches Expand the scan
       // 4x before the first exchange; a one-row-group input would run
       // that whole map side in a single task (guide §2.5 input skew)
-      Tables.widen(Tables.lineitem(s, d))
+      graft.operators.ShuffleWidth.widen(Tables.lineitem(s, d))
         .groupBy(col("l_returnflag"))
         .agg(
           countDistinct(col("l_partkey")).as("exact_parts"),

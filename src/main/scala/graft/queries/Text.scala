@@ -117,9 +117,9 @@ object Text {
     },
 
     // The fused corpus gate: q32's quality metrics AND a keyword-vote
-    // language label from ONE explode (separate quality + classify
-    // passes scan the corpus twice; the fused aggregate ships per-doc
-    // counters over the wire). Oracle = quality CTE ⋈ vote-argmax CTE.
+    // language label from ONE map-only projection (separate quality +
+    // classify passes scan the corpus twice). Oracle = quality CTE ⋈
+    // vote-argmax CTE.
     Q("q72_corpus_gate",
       s"""WITH t AS (SELECT doc_id, text, $oTok AS toks FROM documents),
          |m AS (

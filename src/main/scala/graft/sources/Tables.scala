@@ -17,30 +17,6 @@ object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
-  /** Ensure at least default-parallelism partitions before a CPU-heavy
-    * derivation (shingling, hashing, scoring). A compact parquet scan
-    * (one small file = one split) would otherwise pin the whole
-    * pipeline up to its first exchange on a single core. No-op when
-    * the scan is already wide — at real scale inputs have thousands of
-    * splits and must NOT be shrunk to local core count.
-    *
-    * Width is estimated from logical-plan statistics (file bytes), not
-    * `df.rdd.getNumPartitions`: converting to an RDD materializes the
-    * physical plan on the driver per call and bypasses AQE's view of
-    * the scan. A scan can only reach `target` splits when the input
-    * holds at least target × openCostInBytes bytes (Spark lower-bounds
-    * split size by the open cost), so below that we repartition. */
-  def widen(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    // sessionState.conf exposes the conf as a Long; `spark.conf.get`
-    // returns the display string with a byte-unit suffix ("4194304b")
-    // that .toLong cannot parse.
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes < BigInt(target.toLong * openCost)) df.repartition(target) else df
-  }
-
   def region(s: SparkSession, d: String): DataFrame = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = read(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = read(s, d, "customer")

@@ -130,7 +130,7 @@ class RobustnessSpec extends SparkSpec {
     // chunking: NULL/empty docs emit no chunks; the real doc still chunks
     val chunks = TextAnalysis.chunkDocuments(nullDocs, "doc_id", "text", 2, 1)
     assert(chunks.select("doc_id").distinct().as[Long].collect().toSeq === Seq(2L))
-    // fused gate: every doc keeps a row (marker path), NULL text scores 0
+    // fused gate: every doc keeps a row, NULL text scores 0
     val gate = TextAnalysis.corpusGate(nullDocs, "doc_id", "text",
       Seq(("real", "en")).toDF("word", "label"), "und")
     assert(gate.count() === 3)

@@ -5,7 +5,9 @@ import java.util.concurrent.{CountDownLatch, FutureTask, TimeUnit}
 import graft.operators.{Dedup, Graph, ShuffleWidth}
 import graft.sources.{HadoopLogStore, Lake, LakeLogStore}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** [[ShuffleWidth]]: narrowed jobs plan on a cloned session, so the
@@ -131,6 +133,43 @@ class ShuffleWidthSpec extends SparkSpec {
     assert(ShuffleWidth.bytesWidth(Seq(batch.join(snapshot, Seq("id"), "left_anti"))) >=
       sessionWidth)
     assert(ShuffleWidth.bytesWidth(Seq(batch)) === 1)
+  }
+
+  test("cpuWidth: one task per core at least, ~64 MB per task beyond that, at most the session width") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(ShuffleWidth.cpuWidth(Seq(1, 2, 3).toDF("x")) === cores)
+    // 80 GB estimated, planned only
+    val big = spark.range(10000000000L).toDF("id")
+    val bytes = big.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perTask = BigInt(64L << 20)
+    val byBytes = ((bytes + perTask - 1) / perTask).toInt
+    assert(byBytes > cores)
+    withConfs("spark.sql.shuffle.partitions" -> "100000") {
+      assert(ShuffleWidth.cpuWidth(big) === byBytes)
+    }
+    withConfs("spark.sql.shuffle.partitions" -> (byBytes - 1).toString) {
+      assert(ShuffleWidth.cpuWidth(big) === byBytes - 1)
+    }
+    // an RDD estimates at Long.MaxValue: the session width, never 2^31 tasks
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Tuple1(1L)), 1)).toDF("x")
+    assert(ShuffleWidth.cpuWidth(rdd) === math.max(cores, sessionWidth))
+  }
+
+  test("widen: a small scan of defaultParallelism files plans no round-robin; a one-file scan still does") {
+    val cores = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen")
+    val many = dir.resolve("many").toString
+    val one = dir.resolve("one").toString
+    spark.range(100).repartition(cores).write.parquet(many)
+    spark.range(100).coalesce(1).write.parquet(one)
+    assert(new java.io.File(many).list().count(_.endsWith(".parquet")) === cores)
+    def roundRobins(path: String): Seq[Int] =
+      planNodes(ShuffleWidth.widen(spark.read.parquet(path)).queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+          e.numPartitions
+      }
+    assert(roundRobins(many) === Nil)
+    assert(roundRobins(one) === Seq(cores))
   }
 
   test("plan audit: a KB-sized commit's internal shuffles plan non-adaptive at the computed width") {

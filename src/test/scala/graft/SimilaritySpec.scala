@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFns
-import graft.operators.Similarity
+import graft.operators.{ShuffleWidth, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -234,6 +235,49 @@ class SimilaritySpec extends SparkSpec {
       assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan)
       assert(plan.collect { case e: ShuffleExchangeLike => e }.size <= 2, plan)
     }
+  }
+
+  test("lshTopK and bandedCosinePairs plan exactly two explicit-width exchanges at cpuWidth") {
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      val width = ShuffleWidth.cpuWidth(edgeVecs)
+      assert(width >= spark.sparkContext.defaultParallelism)
+      for (df <- Seq(
+          Similarity.lshTopK(edgeVecs, "vec_id", "embedding",
+            dims = 8, planesPerBand = 3, k = 3, bands = 3),
+          Similarity.bandedCosinePairs(edgeVecs, "vec_id", "embedding",
+            0.5, bands = 2, bitsPerBand = 4))) {
+        val plan = df.queryExecution.executedPlan
+        val exchanges = plan.collect { case e: ShuffleExchangeLike => (e.shuffleOrigin, e.numPartitions) }
+        assert(exchanges === Seq.fill(2)((REPARTITION_BY_NUM, width)), plan)
+      }
+    }
+  }
+
+  test("with AQE on, no stage of a 2,000-vector lshTopK runs fewer tasks than defaultParallelism") {
+    val rnd = new scala.util.Random(20261020L)
+    val vecs = (0 until 2000).map(i => (i.toLong, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        tasks.add(e.stageInfo.numTasks); ()
+      }
+    }
+    withConfs("spark.sql.adaptive.enabled" -> "true") {
+      val sc = spark.sparkContext
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try Similarity.lshTopK(vecs, "vec_id", "embedding", dims = 64, planesPerBand = 8, k = 10)
+        .write.format("noop").mode("overwrite").save()
+      finally {
+        org.apache.spark.graft.ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    val counts = tasks.asScala.toSeq
+    assert(counts.size >= 3 && counts.forall(_ >= spark.sparkContext.defaultParallelism),
+      counts.mkString(", "))
   }
 
   test("cosinePairs refuses inputs over the maxRows guard (recall-oracle only)") {

@@ -25,8 +25,11 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = Seq(
       (1L, "the cat sat on the mat."),
       (2L, "de la de un o."),        // overlap-heavy: every word in fr AND es
-      (3L, ""),                      // token-less: marker row path
-      (4L, "zz qq xx")               // no dict hits: default label
+      (3L, ""),                      // token-less
+      (4L, "zz qq xx"),              // no dict hits: default label
+      (5L, null),                    // NULL text: no tokens, NULL n_chars
+      (6L, " \t\n "),                // whitespace only
+      (7L, "İL EST the\tLA")         // non-ASCII case mapping, tab split
     ).toDF("doc_id", "text")
     val dict = graft.queries.Text.langDict.toDF("word", "label")
     val gate = TextAnalysis.corpusGate(docs, "doc_id", "text", dict, "und")
@@ -37,20 +40,36 @@ class TextAnalysisSpec extends SparkSpec {
     assert(rows(gate) === rows(expected))
   }
 
-  test("corpusGate plan: the keyword vote runs once per document, below the explode") {
-    import org.apache.spark.sql.catalyst.plans.logical.Generate
-    import graft.plans.KeywordVote
-    // repartitioned: over a local relation the optimizer would fold the vote away
-    val docs = Seq((1L, "de la de un o."), (2L, "the cat")).toDF("doc_id", "text").repartition(2)
+  test("quality and corpusGate plans: map-only, each kernel once per row") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, LogicalPlan, RepartitionOperation}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.plans.{KeywordVote, QualityStats}
+    // a parquet scan: over a local relation the optimizer would fold the kernels away
+    val dir = java.nio.file.Files.createTempDirectory("graft-quality").resolve("docs").toString
+    Seq((1L, "de la de un o."), (2L, "the cat"), (3L, null)).toDF("doc_id", "text")
+      .write.parquet(dir)
+    val docs = spark.read.parquet(dir)
     val dict = graft.queries.Text.langDict.toDF("word", "label")
-    val plan = TextAnalysis.corpusGate(docs, "doc_id", "text", dict, "und")
-      .queryExecution.optimizedPlan
-    val voting = plan.collect {
-      case n if n.expressions.exists(_.find(_.isInstanceOf[KeywordVote]).isDefined) => n
+    def count(plan: LogicalPlan, p: Expression => Boolean): Int =
+      plan.collect { case n => n.expressions.map(_.collect { case e if p(e) => e }.size).sum }.sum
+    for (df <- Seq(TextAnalysis.quality(docs, "doc_id", "text"),
+        TextAnalysis.corpusGate(docs, "doc_id", "text", dict, "und"))) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.collect {
+        case n @ (_: Generate | _: Aggregate | _: RepartitionOperation) => n
+      }.isEmpty, plan.toString)
+      assert(count(plan, _.isInstanceOf[QualityStats]) === 1, plan.toString)
+      val physical = df.queryExecution.executedPlan
+      assert(planNodes(physical).collect { case e: Exchange => e }.isEmpty, physical.toString)
     }
-    assert(voting.size === 1, plan.toString)
-    val explode = plan.collectFirst { case g: Generate => g }.get
-    assert(explode.child.find(_ eq voting.head).isDefined, plan.toString)
+    val gate = TextAnalysis.corpusGate(docs, "doc_id", "text", dict, "und").queryExecution.optimizedPlan
+    assert(count(gate, _.isInstanceOf[KeywordVote]) === 1, gate.toString)
+    // a filter on a metric is pushed below the kernel's projection with the
+    // metric substituted in: one more kernel evaluation, not one per count
+    val gated = TextAnalysis.quality(docs, "doc_id", "text")
+      .where(col("quality_score") >= 0.5).queryExecution.optimizedPlan
+    assert(count(gated, _.isInstanceOf[QualityStats]) <= 2, gated.toString)
   }
 
   test("chunkDocuments: overlap grid covers every token; short tail; empty docs drop") {
